@@ -64,11 +64,11 @@ object Md5Prefix64 {
     * NO-INTERLEAVING INVARIANT: the returned instance is THE thread's
     * digest — `hash`/`hashHi`/`hashPair` and every other `md5Instance()`
     * caller share it. A caller that holds it across a long-running read
-    * loop (e.g. `TarWalk.streamMd5Hex` updating per 64 KiB chunk) must
-    * not invoke any other digest helper on the same thread until it has
-    * called `digest()`, or both digests are silently corrupted. Current
-    * call sites are straight-line loops with no nested hashing; keep it
-    * that way, or give the streaming caller its own thread-local. */
+    * loop must not invoke any other digest helper on the same thread
+    * until it has called `digest()`, or both digests are silently
+    * corrupted. Current call sites are straight-line loops with no nested
+    * hashing; a streaming caller keeps its own thread-local, as
+    * `TarWalk.streamMd5Hex` does. */
   def md5Instance(): MessageDigest = {
     val md = digests.get()
     md.reset()

@@ -1,11 +1,10 @@
 package graft.operators
 
 import java.nio.charset.StandardCharsets
-import java.util.regex.Pattern
 
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 
-import graft.sources.FsIO
+import graft.sources.{Formats, FsIO, Sheet, Split}
 
 /** Distributed bulk ingestion — the reference's single-file `parse()`
   * semantics (`/root/reference/main.py:118-168`) scaled to a CORPUS of
@@ -13,8 +12,9 @@ import graft.sources.FsIO
   * problem where the unit of parallelism is the FILE, not the byte range.
   * `AnyFile.parse` keeps the reference's one-file driver-side contract;
   * this operator distributes that work — each executor task runs the same
-  * pure parsers (xlsx/ods/xls/xlsb/SpreadsheetML/text/PDF) over its slice
-  * of the file list and emits uniform all-string cell rows:
+  * sheet decodes ([[graft.sources.Formats]], the one registry both entry
+  * points project) over its slice of the file list and emits uniform
+  * all-string cell rows:
   *
   *   (path, engine, sheet, parse_info, row_idx, cells: array<string>)
   *
@@ -150,16 +150,9 @@ object BulkIngest {
       else math.max(1, spark.sparkContext.defaultParallelism)
     val props = FsIO.captureProps(spark)
 
-    def isBig(p: String, len: Long): Boolean = {
-      val l = p.toLowerCase
-      len >= bigBytes &&
-        (l.endsWith(".xlsx") || l.endsWith(".xlsb") || l.endsWith(".xml") ||
-          l.endsWith(".ods") || l.endsWith(".odf") || l.endsWith(".odt") ||
-          l.endsWith(".warc.gz") || l.endsWith(".tar") ||
-          l.endsWith(".tar.zst") || l.endsWith(".tar.zstd") ||
-          l.endsWith(".jsonl.zst") || l.endsWith(".ndjson.zst") ||
-          l.endsWith(".jsonl.zstd") || l.endsWith(".ndjson.zstd"))
-    }
+    // a big file with a split road for its format and codec
+    def isBig(p: String, len: Long): Boolean =
+      len >= bigBytes && Formats.route(p).exists(_.split.nonEmpty)
 
     // Distributed listing with lengths: one listStatus on the driver
     // (immediate children only), subtree sweeps inside executor tasks.
@@ -178,24 +171,20 @@ object BulkIngest {
     }
 
     // The ONE driver-side materialization: big splittable files.
-    val big: Seq[String] = listedWithLen
+    val big: Map[Split, Seq[String]] = listedWithLen
       .filter((e: (String, Long)) => isBig(e._1, e._2))
       .map(_._1)(Encoders.STRING)
       .collect().toSeq.sorted
-    val (bigZstJsonl, restZ) = big.partition { p =>
-      val l = p.toLowerCase
-      l.endsWith(".jsonl.zst") || l.endsWith(".ndjson.zst") ||
-        l.endsWith(".jsonl.zstd") || l.endsWith(".ndjson.zstd")
-    }
-    val (bigTarZst, restTz) = restZ.partition { p =>
-      val l = p.toLowerCase
-      l.endsWith(".tar.zst") || l.endsWith(".tar.zstd")
-    }
-    val (bigWarcGz, restW) = restTz.partition(_.toLowerCase.endsWith(".warc.gz"))
-    val (bigTar, restT) = restW.partition(_.toLowerCase.endsWith(".tar"))
-    val (bigXlsx, rest0) = restT.partition(_.toLowerCase.endsWith(".xlsx"))
-    val (bigXlsb, rest1) = rest0.partition(_.toLowerCase.endsWith(".xlsb"))
-    val (bigXml, bigOds) = rest1.partition(_.toLowerCase.endsWith(".xml"))
+      .groupBy(p => Formats.route(p).flatMap(_.split).get)
+    def bigOn(road: Split): Seq[String] = big.getOrElse(road, Nil)
+    val bigXlsx = bigOn(Split.Xlsx)
+    val bigXlsb = bigOn(Split.Xlsb)
+    val bigXml = bigOn(Split.Xmlss)
+    val bigOds = bigOn(Split.Ods)
+    val bigWarcGz = bigOn(Split.WarcGz)
+    val bigTar = bigOn(Split.Tar)
+    val bigTarZst = bigOn(Split.TarZst)
+    val bigZstJsonl = bigOn(Split.JsonlZst)
 
     // Small road: listing output flows straight into the file-grain
     // parse — never collected.
@@ -254,9 +243,8 @@ object BulkIngest {
           ((p, name), w)
         }
         .collect().toMap
-    def failedRow(p: String, engine: String): DataFrame =
-      spark.createDataset(Seq(
-        CellRow(p, engine, "None", "Failed", -1L, Seq.empty))).toDF()
+    def failedDf(p: String, engine: String, sheet: String = "None"): DataFrame =
+      spark.createDataset(Seq(failedRow(p, engine, sheet))).toDF()
     def toCellRows(df: DataFrame, p: String, engine: String): DataFrame = {
       val cells =
         if (df.columns.isEmpty) typedLit(Seq.empty[String])
@@ -269,15 +257,16 @@ object BulkIngest {
         cells.as("cells"))
     }
     val bigDfs: Seq[DataFrame] = sheetLists.flatMap {
-      case (p, _, None) => Seq(failedRow(p, "ImportExcel"))
+      case (p, _, None) => Seq(failedDf(p, Formats.Xlsx.engine))
       case (p, _, Some(list)) if list.exists(sh => widths((p, sh.name)).isEmpty) =>
-        Seq(failedRow(p, "ImportExcel")) // a broken sheet fails its file
+        Seq(failedDf(p, Formats.Xlsx.engine)) // a broken sheet fails its file
       case (p, isXlsx, Some(list)) => list.map { sh =>
         val width = widths((p, sh.name)).get
-        toCellRows(spark.read
+        if (width == 0) failedDf(p, Formats.Xlsx.engine, sh.name)
+        else toCellRows(spark.read
           .format(if (isXlsx) "graft-excel" else "graft-xlsb")
           .schema(graft.sources.TextImporter.positionalSchema(width))
-          .option("sheet", sh.name).load(p), p, "ImportExcel")
+          .option("sheet", sh.name).load(p), p, Formats.Xlsx.engine)
       }
     }
     // big SpreadsheetML files: same road through graft-xmlss — the
@@ -302,14 +291,16 @@ object BulkIngest {
         .collect().toMap
     val xmlDfs: Seq[DataFrame] = bigXml.flatMap { p =>
       xmlShapes(p) match {
-        case None | Some((_, Seq())) => Seq(failedRow(p, "ImportXML"))
-        case Some((ws, shapes)) => shapes.map { case (idx, name, width) =>
-          toCellRows(spark.read.format("graft-xmlss")
-            .schema(graft.sources.TextImporter.positionalSchema(width))
-            .option("table", idx.toString)
-            .option("mode", if (ws) "worksheet" else "standalone")
-            .option("sheetname", name)
-            .load(p), p, "ImportXML")
+        case None | Some((_, Seq())) => Seq(failedDf(p, Formats.Xmlss.engine))
+        case Some((ws, shapes)) => shapes.map {
+          case (_, name, 0) => failedDf(p, Formats.Xmlss.engine, name)
+          case (idx, name, width) =>
+            toCellRows(spark.read.format("graft-xmlss")
+              .schema(graft.sources.TextImporter.positionalSchema(width))
+              .option("table", idx.toString)
+              .option("mode", if (ws) "worksheet" else "standalone")
+              .option("sheetname", name)
+              .load(p), p, Formats.Xmlss.engine)
         }
       }
     }
@@ -331,13 +322,15 @@ object BulkIngest {
         .collect().toMap
     val odsDfs: Seq[DataFrame] = bigOds.flatMap { p =>
       odsShapes(p) match {
-        case None | Some(Seq()) => Seq(failedRow(p, "ImportExcel"))
-        case Some(shapes) => shapes.map { case (idx, name, width) =>
-          toCellRows(spark.read.format("graft-ods")
-            .schema(graft.sources.TextImporter.positionalSchema(width))
-            .option("table", idx.toString)
-            .option("sheetname", name)
-            .load(p), p, "ImportExcel")
+        case None | Some(Seq()) => Seq(failedDf(p, Formats.Ods.engine))
+        case Some(shapes) => shapes.map {
+          case (_, name, 0) => failedDf(p, Formats.Ods.engine, name)
+          case (idx, name, width) =>
+            toCellRows(spark.read.format("graft-ods")
+              .schema(graft.sources.TextImporter.positionalSchema(width))
+              .option("table", idx.toString)
+              .option("sheetname", name)
+              .load(p), p, Formats.Ods.engine)
         }
       }
     }
@@ -364,11 +357,11 @@ object BulkIngest {
         .collect().toMap
     val warcDfs: Seq[DataFrame] = bigWarcGz.map { p =>
       warcBatches(p) match {
-        case None | Some(Seq()) => failedRow(p, "ImportWARC")
+        case None | Some(Seq()) => failedDf(p, Formats.Warc.engine)
         // a single member past Int.MaxValue compressed bytes cannot ride
         // the ranged read — refuse (one Failed row) rather than truncate
         case Some(batches) if batches.exists(_.length > Int.MaxValue.toLong) =>
-          failedRow(p, "ImportWARC")
+          failedDf(p, Formats.Warc.engine)
         case Some(batches) =>
           implicit val e3 = Encoders.product[(Long, Long, Long)]
           val units = batches.map(b => (b.offset, b.length, b.firstMember))
@@ -381,11 +374,8 @@ object BulkIngest {
                 val recs = WarcReader.records(WarcReader.gunzipIfNeeded(
                   FsIO.readRange(p, off, len.toInt)))
                 recs.zipWithIndex.map { case (r, i) =>
-                  CellRow(p, "ImportWARC", "WARC records", "OK",
-                    firstMember + i,
-                    Seq(r.header("warc-target-uri").getOrElse(""),
-                      r.header("warc-type").getOrElse(""),
-                      r.payload.length.toString))
+                  CellRow(p, Formats.Warc.engine, Formats.Warc.sheet, "OK",
+                    firstMember + i, Formats.warcCells(r))
                 }
               }
             }.toDF()
@@ -415,7 +405,7 @@ object BulkIngest {
         .collect().toMap
     val tarDfs: Seq[DataFrame] = bigTar.map { p =>
       tarBatches(p) match {
-        case None => failedRow(p, "ImportTar")
+        case None => failedDf(p, Formats.Tar.engine)
         case Some(Seq()) => parseFiles(spark, Seq(p), partitions = 1)
         case Some(batches) =>
           implicit val e3 = Encoders.product[(Long, Long, Long)]
@@ -439,7 +429,7 @@ object BulkIngest {
                   val range = new TarWalk.RangeStream(raw, len)
                   val rows = TarWalk.walk(range)(TarWalk.memberCells)
                     .zipWithIndex.map { case (cells, i) =>
-                      CellRow(p, "ImportTar", "TAR members", "OK",
+                      CellRow(p, Formats.Tar.engine, Formats.Tar.sheet, "OK",
                         firstMember + i, cells)
                     }
                   if (range.remaining > 0)
@@ -495,7 +485,7 @@ object BulkIngest {
         .collect().toMap
     val tarZstDfs: Seq[DataFrame] = bigTarZst.map { p =>
       tarZstIdx(p) match {
-        case None => failedRow(p, "ImportTar")
+        case None => failedDf(p, Formats.Tar.engine)
         case Some(None) => parseFiles(spark, Seq(p), partitions = 1)
         // no regular members: only the file-grain road answers the
         // documented Failed semantics
@@ -535,7 +525,7 @@ object BulkIngest {
           if (memBatches.length <= 1) parseFiles(spark, Seq(p), partitions = 1)
           // an FCS that maps a member outside the declared decoded total
           // is corruption — refuse up front
-          else if (units.contains(null)) failedRow(p, "ImportTar")
+          else if (units.contains(null)) failedDf(p, Formats.Tar.engine)
           else {
             implicit val e5 = Encoders.product[(Long, Long, Long, Long, Long)]
             spark.createDataset(units)
@@ -562,7 +552,7 @@ object BulkIngest {
                     val range = new TarWalk.RangeStream(dec, dLen)
                     val rows = TarWalk.walk(range)(TarWalk.memberCells)
                       .zipWithIndex.map { case (cells, i) =>
-                        CellRow(p, "ImportTar", "TAR members", "OK",
+                        CellRow(p, Formats.Tar.engine, Formats.Tar.sheet, "OK",
                           firstMember + i, cells)
                       }
                     if (range.remaining > 0)
@@ -607,11 +597,11 @@ object BulkIngest {
         .collect().toMap
     val zstDfs: Seq[DataFrame] = bigZstJsonl.map { p =>
       zstBatches(p) match {
-        case None | Some(Seq()) => failedRow(p, "ImportJSONL")
+        case None | Some(Seq()) => failedDf(p, Formats.JsonLines.engine)
         // a batch past Int.MaxValue compressed bytes cannot ride the
         // ranged read — refuse (one Failed row) rather than truncate
         case Some(bs) if bs.exists(_.length > Int.MaxValue.toLong) =>
-          failedRow(p, "ImportJSONL")
+          failedDf(p, Formats.JsonLines.engine)
         // one frame ⇒ one batch ⇒ the split machinery (count pass + the
         // ownership protocol) is pure overhead over the identical
         // one-task file-grain parse — including its Failed semantics
@@ -637,7 +627,7 @@ object BulkIngest {
               }
               .collect().toMap
           }
-          if (counts.valuesIterator.exists(_ < 0L)) failedRow(p, "ImportJSONL")
+          if (counts.valuesIterator.exists(_ < 0L)) failedDf(p, Formats.JsonLines.engine)
           else if (counts.valuesIterator.sum < 2L) {
             // fewer than two newlines ⇒ at most two lines: the split
             // machinery buys nothing (one line is one task's work either
@@ -709,7 +699,7 @@ object BulkIngest {
     var idx = firstLine
     val acc = new java.io.ByteArrayOutputStream()
     def row(): Unit = {
-      rows += CellRow(path, "ImportJSONL", "JSON lines content", "OK", idx,
+      rows += CellRow(path, Formats.JsonLines.engine, Formats.JsonLines.sheet, "OK", idx,
         Seq(new String(acc.toByteArray, StandardCharsets.UTF_8)))
       idx += 1
       acc.reset()
@@ -813,448 +803,38 @@ object BulkIngest {
       .toDF()
   }
 
-  /** One file → cell rows; pure, runs inside executor tasks. Exposed for
-    * the per-format parity tests against `AnyFile.parse`. */
+  /** One file → cell rows; pure, runs inside executor tasks: the bulk
+    * projection of [[graft.sources.Formats]], cell-for-cell the cells of
+    * `AnyFile.parse` (BulkIngestSpec pins every extension × codec).
+    * Natively scanned formats are one `Native` row. */
   private[graft] def parseOne(path: String): Seq[CellRow] = {
-    val (suffix, zstd) = {
-      val name = FsIO.fileName(path).toLowerCase
-      def extOf(n: String): String = {
-        val dot = n.lastIndexOf('.')
-        if (dot < 0) "" else n.substring(dot)
-      }
-      val last = extOf(name)
-      // AnyFile's compression-suffix peel: `.gz`/`.bz2` route on the inner
-      // extension for the stream-decodable regimes (Hadoop codec layer);
-      // compressed container formats stay unknown → Failed.
-      if (last == ".gz" || last == ".bz2") {
-        extOf(name.dropRight(last.length)) match {
-          case inner @ (".txt" | ".csv" | ".ini" | ".tsv" | ".ant" |
-              ".jsonl" | ".ndjson" | ".json" | ".warc" | ".tar") =>
-            (inner, false)
-          case _ => (last, false)
-        }
-      } else if (last == ".tgz") {
-        // the conventional contraction of .tar.gz; tar() decodes through
-        // an explicit gzip stream (no codec claims the .tgz suffix)
-        (".tar", false)
-      } else if (last == ".zst" || last == ".zstd") {
-        // `.zst` peel (The Pile and most modern corpora ship `.jsonl.zst`):
-        // zstd decodes through zstd-jni in FsIO.openDecoded, so every
-        // BYTE-ROAD parser here works unchanged. Spark's native json/text
-        // scans cannot decode zstd in this container (Hadoop's
-        // ZStandardCodec needs a native lib), so jsonl/ndjson leave the
-        // Native-marker road for a decoded line road; sqlite — whose
-        // pages need random access gzip/zstd can't give — and `.json`
-        // (one JSON DOCUMENT, not lines) decode to a capped byte image;
-        // `.tar.zst` streams through the member walk like `.tar.gz`.
-        extOf(name.dropRight(last.length)) match {
-          case inner @ (".txt" | ".csv" | ".ini" | ".tsv" | ".ant" |
-              ".jsonl" | ".ndjson" | ".json" | ".warc" | ".tar" |
-              ".sqlite" | ".sqlite3" | ".db") => (inner, true)
-          case _ => (last, false)
-        }
-      } else (last, false)
-    }
-    def failed(engine: String) =
-      Seq(CellRow(path, engine, "None", "Failed", -1L, Seq.empty))
+    val route = Formats.route(path)
+    val engine = route.fold("")(_.format.engine)
     try {
-      if (!FsIO.isFile(path)) return failed("")
-      suffix match {
-        case ".xlsx" => xlsx(path)
-        case ".ods" | ".odf" | ".odt" => ods(path)
-        case ".xls" => xls(path)
-        case ".xlsb" => xlsb(path)
-        case ".xml" => xmlss(path)
-        case ".txt" | ".csv" | ".ini" => text(path, None)
-        case ".ant" =>
-          text(path, Some(graft.sources.TextImporter.AntDelimiter))
-        case ".pdf" => pdf(path)
-        case ".html" | ".htm" => html(path)
-        case ".docx" => docx(path)
-        case ".pptx" => pptx(path)
-        case ".sqlite" | ".sqlite3" | ".db" => sqlite(path, decoded = zstd)
-        case ".warc" => warc(path)
-        case ".tar" => tar(path)
-        case ".parquet" =>
-          Seq(CellRow(path, "ImportParquet", "Parquet file content",
-            "Native", -1L, Seq.empty))
-        case ".json" if zstd => jsonDocBytes(path)
-        case ".json" =>
-          Seq(CellRow(path, "ImportJSON", "JSON file content",
-            "Native", -1L, Seq.empty))
-        case ".jsonl" | ".ndjson" if zstd => jsonLinesBytes(path)
-        case ".jsonl" | ".ndjson" =>
-          Seq(CellRow(path, "ImportJSONL", "JSON lines content",
-            "Native", -1L, Seq.empty))
-        case ".tsv" => text(path, Some("\t"))
-        case ".pk1" | ".pickle" => failed("ImportPickle")
-        case _ => failed("")
+      if (!FsIO.isFile(path)) return Seq(failedRow(path, ""))
+      route match {
+        case None => Seq(failedRow(path, engine))
+        case Some(r) if r.format.nativeScan && !r.zstd =>
+          Seq(CellRow(path, engine, r.format.sheet, "Native", -1L, Seq.empty))
+        case Some(r) =>
+          val sheets = r.format.decode(r)
+          if (sheets.isEmpty) Seq(failedRow(path, engine))
+          else sheets.flatMap(cellRows(path, engine, _))
       }
-    } catch { case _: Exception => failed(engineFor(suffix)) }
+    } catch { case _: Exception => Seq(failedRow(path, engine)) }
   }
 
-  private def engineFor(suffix: String): String = suffix match {
-    case ".xlsx" | ".ods" | ".odf" | ".odt" | ".xls" | ".xlsb" => "ImportExcel"
-    case ".xml" => "ImportXML"
-    case ".txt" | ".csv" | ".ini" | ".ant" | ".tsv" => "ImportText"
-    case ".pdf" => "ImportPDF"
-    case ".html" | ".htm" => "ImportHTML"
-    case ".docx" => "ImportDocx"
-    case ".pptx" => "ImportPptx"
-    case ".sqlite" | ".sqlite3" | ".db" => "ImportSqlite"
-    case ".warc" => "ImportWARC"
-    case ".tar" => "ImportTar"
-    // byte roads that can throw mid-decode (truncated .jsonl.zst)
-    case ".jsonl" | ".ndjson" => "ImportJSONL"
-    case ".json" => "ImportJSON"
-    case _ => ""
-  }
-
-  /** Decoded-image cap for the compressed byte roads that must
-    * materialize a whole decoded stream in one task (`.jsonl.zst` lines,
-    * `.sqlite.zst` page images, `.json.zst` documents): refuse (one
-    * Failed row) past [[FsIO.DecodedCapBytes]] rather than drive the
-    * allocation (ADVICE r14 #2) — the shared reader keeps the threshold
-    * identical across every format, AnyFile importers included. */
-  private def readDecodedCapped(path: String): Option[Array[Byte]] =
-    FsIO.readAllBytesDecodedCapped(path)
-
-  /** JSON-lines BYTE road — only for codec suffixes Spark's native json
-    * scan cannot decode in this container (`.jsonl.zst`): one OK row per
-    * line, the raw JSON text as the single cell, the same
-    * strip-trailing-newline law as [[text]]. Plain/gz forms keep the
-    * Native marker (the scan decodes those inline and stays splittable);
-    * this road is one task per file, the shape gzip already forces.
-    * Lines split on the '\n' BYTE (unambiguous in UTF-8) straight off the
-    * decoded image — one copy per line, no whole-file String or split
-    * array; decoded size past the cap refuses into one Failed row (a big
-    * CONFORMING corpus takes the frame-split road in [[parseTreeAuto]]). */
-  private def jsonLinesBytes(path: String): Seq[CellRow] = {
-    def failed = Seq(CellRow(path, "ImportJSONL", "None", "Failed", -1L, Seq.empty))
-    val bytes = readDecodedCapped(path).getOrElse(return failed)
-    if (bytes.isEmpty) return failed
-    val rows = Seq.newBuilder[CellRow]
-    var idx = 0L
-    var pos = 0
-    while (pos <= bytes.length) {
-      var k = pos
-      while (k < bytes.length && bytes(k) != '\n') k += 1
-      // trailing newline: no phantom last row (pos == length with nothing
-      // pending only happens after a final '\n')
-      if (k < bytes.length || pos < bytes.length) {
-        rows += CellRow(path, "ImportJSONL", "JSON lines content", "OK", idx,
-          Seq(new String(bytes, pos, k - pos, StandardCharsets.UTF_8)))
-        idx += 1
-      }
-      pos = k + 1
-    }
-    val out = rows.result()
-    // a lone "\n" (one empty line) answers Failed, matching the text
-    // road's no-content law — same answer the file gave before round 15
-    if (out.isEmpty ||
-      (out.lengthIs == 1 && out.head.cells.headOption.forall(_.isEmpty)))
-      failed
-    else out
-  }
-
-  private def sheetRows(
-      path: String, engine: String, sheet: String,
-      rows: Seq[IndexedSeq[String]]): Seq[CellRow] = {
-    val width = if (rows.isEmpty) 0 else rows.map(_.length).max
-    rows.zipWithIndex.map { case (r, i) =>
-      CellRow(path, engine, sheet, "OK", i.toLong,
-        r.padTo(width, null))
+  /** Sheet → cell rows: null-padded to the sheet's width, numbered from
+    * 0; an empty sheet is one Failed row carrying its name, so every sheet
+    * of every file lands in the catalog. */
+  private def cellRows(path: String, engine: String, s: Sheet): Seq[CellRow] = {
+    val width = s.width
+    if (width == 0 || s.rows.isEmpty) Seq(failedRow(path, engine, s.name))
+    else s.rows.zipWithIndex.map { case (r, i) =>
+      CellRow(path, engine, s.name, "OK", i.toLong, r.padTo(width, null))
     }
   }
 
-  private def xlsx(path: String): Seq[CellRow] = {
-    import graft.sources.xlsx.XlsxParser
-    XlsxParser.openWorkbook(path) match {
-      case None => Seq(CellRow(path, "ImportExcel", "None", "Failed", -1L, Seq.empty))
-      case Some(wb) if wb.sheets.isEmpty =>
-        Seq(CellRow(path, "ImportExcel", "None", "Failed", -1L, Seq.empty))
-      case Some(wb) =>
-        wb.sheets.flatMap { s =>
-          sheetRows(path, "ImportExcel", s.name,
-            XlsxParser.sheetRows(path, s.target, wb.shared).map(_.toIndexedSeq))
-        }
-    }
-  }
-
-  private def ods(path: String): Seq[CellRow] =
-    graft.sources.ods.OdsParser.sheets(path) match {
-      case None => Seq(CellRow(path, "ImportExcel", "None", "Failed", -1L, Seq.empty))
-      case Some(sheets) =>
-        sheets.flatMap { case (name, rows) =>
-          sheetRows(path, "ImportExcel", name, rows.map(_.toIndexedSeq))
-        }
-    }
-
-  private def xls(path: String): Seq[CellRow] =
-    graft.sources.xls.XlsParser.parse(FsIO.readAllBytes(path)) match {
-      case None => Seq(CellRow(path, "ImportExcel", "None", "Failed", -1L, Seq.empty))
-      case Some(sheets) if sheets.isEmpty =>
-        Seq(CellRow(path, "ImportExcel", "None", "Failed", -1L, Seq.empty))
-      case Some(sheets) =>
-        sheets.flatMap(s => sheetRows(path, "ImportExcel", s.name, s.rows.map(_.toIndexedSeq)))
-    }
-
-  private def xlsb(path: String): Seq[CellRow] =
-    graft.sources.xlsb.XlsbParser.parse(path) match {
-      case None => Seq(CellRow(path, "ImportExcel", "None", "Failed", -1L, Seq.empty))
-      case Some(sheets) if sheets.isEmpty =>
-        Seq(CellRow(path, "ImportExcel", "None", "Failed", -1L, Seq.empty))
-      case Some(sheets) =>
-        sheets.flatMap(s => sheetRows(path, "ImportExcel", s.name, s.rows.map(_.toIndexedSeq)))
-    }
-
-  private def xmlss(path: String): Seq[CellRow] = {
-    import graft.sources.xmlss.{XmlSpreadsheetParser, XmlssRowIterator}
-    val (mode, shapes) = XmlSpreadsheetParser.tableShapes(path)
-    if (shapes.isEmpty)
-      return Seq(CellRow(path, "ImportXML", "None", "Failed", -1L, Seq.empty))
-    shapes.flatMap { sh =>
-      val it = new XmlssRowIterator(path, mode == "worksheet", sh.index)
-      val rows =
-        try it.map(_.toIndexedSeq).toIndexedSeq
-        finally it.close()
-      sheetRows(path, "ImportXML", sh.sheetName, rows)
-    }
-  }
-
-  /** The reference's three-pass text pipeline, in one task: delimiter vote
-    * (comma-only-strip quirk included via Sniffers), line-end `\t` strip,
-    * literal-quote strip, right-pad to the file's max arity
-    * (`main.py:327-358` semantics; TextImporter is the Spark-plan twin
-    * for files too large to decode in one task). */
-  private def text(path: String, fixedDelim: Option[String]): Seq[CellRow] = {
-    import graft.sources.Sniffers
-    val delim = fixedDelim.getOrElse(Sniffers.detectDelimiter(path))
-    // UTF-8 explicitly: the driver-side TextImporter twin reads through
-    // spark.read.text (always UTF-8); decoding with the executor JVM's
-    // default charset would silently diverge on non-UTF-8 locales.
-    // Decoded read: codec-suffixed files (x.csv.gz) inflate inline, the
-    // same bytes the Spark text scan would see.
-    val raw = new String(FsIO.readAllBytesDecoded(path), StandardCharsets.UTF_8)
-    val lines = raw.split("\n", -1).toSeq match {
-      case init :+ "" => init // trailing newline: no phantom last row
-      case ls => ls
-    }
-    val splitter = Pattern.compile(Pattern.quote(delim))
-    val cells = lines.map { l =>
-      val stripped = l.replaceAll("^\t+", "").replaceAll("\t+$", "")
-      splitter.split(stripped, -1).toIndexedSeq
-        .map(c => c.replaceAll("^\"+|\"+$", "").replaceAll("^'+|'+$", ""))
-    }
-    if (cells.isEmpty)
-      return Seq(CellRow(path, "ImportText", "None", "Failed", -1L, Seq.empty))
-    val arity = cells.map(_.length).max
-    cells.zipWithIndex.map { case (r, i) =>
-      CellRow(path, "ImportText", "Text file content", "OK", i.toLong,
-        r.padTo(arity, ""))
-    }
-  }
-
-  /** HTML: `<table>` frames when present (the read_html shape), else
-    * boilerplate-classified main-content blocks, one per row — the same
-    * two roads as the driver-side [[graft.sources.HtmlImporter]]. */
-  private def html(path: String): Seq[CellRow] = {
-    import graft.sources.html.HtmlParser
-    val doc = new String(FsIO.readAllBytes(path), StandardCharsets.UTF_8)
-    val tables = HtmlParser.tables(doc)
-    if (tables.nonEmpty)
-      tables.zipWithIndex.flatMap { case (rows, t) =>
-        sheetRows(path, "ImportHTML", s"table$t", rows)
-      }
-    else {
-      val main = HtmlParser.blocks(doc).filterNot(HtmlParser.isBoiler(_))
-      if (main.isEmpty)
-        Seq(CellRow(path, "ImportHTML", "None", "Failed", -1L, Seq.empty))
-      else main.zipWithIndex.map { case (b, i) =>
-        CellRow(path, "ImportHTML", "HTML main content", "OK", i.toLong,
-          Seq(b.text))
-      }
-    }
-  }
-
-  /** WordprocessingML: table frames when present (the AnyFile parity
-    * shape), else one row per body paragraph. */
-  private def docx(path: String): Seq[CellRow] = {
-    import graft.sources.docx.DocxParser
-    DocxParser.parse(path) match {
-      case None => Seq(CellRow(path, "ImportDocx", "None", "Failed", -1L, Seq.empty))
-      case Some(doc) if doc.tables.nonEmpty =>
-        doc.tables.zipWithIndex.flatMap { case (rows, t) =>
-          sheetRows(path, "ImportDocx", s"table$t", rows)
-        }
-      case Some(doc) if doc.paragraphs.nonEmpty =>
-        doc.paragraphs.zipWithIndex.map { case (p, i) =>
-          CellRow(path, "ImportDocx", "document text", "OK", i.toLong, Seq(p))
-        }
-      case _ =>
-        Seq(CellRow(path, "ImportDocx", "None", "Failed", -1L, Seq.empty))
-    }
-  }
-
-  /** PresentationML: per slide, DrawingML table frames when present,
-    * else one row per text paragraph (sheet = slide part name). */
-  private def pptx(path: String): Seq[CellRow] = {
-    import graft.sources.pptx.PptxParser
-    PptxParser.parse(path) match {
-      case None => Seq(CellRow(path, "ImportPptx", "None", "Failed", -1L, Seq.empty))
-      case Some(slides) =>
-        val out = slides.flatMap { sl =>
-          if (sl.tables.nonEmpty)
-            sl.tables.zipWithIndex.flatMap { case (rows, t) =>
-              sheetRows(path, "ImportPptx", s"${sl.name}_table$t", rows)
-            }
-          else sl.paragraphs.zipWithIndex.map { case (p, i) =>
-            CellRow(path, "ImportPptx", sl.name, "OK", i.toLong, Seq(p))
-          }
-        }
-        if (out.isEmpty)
-          Seq(CellRow(path, "ImportPptx", "None", "Failed", -1L, Seq.empty))
-        else out
-    }
-  }
-
-  /** SQLite: one row per table row, sheet = table name, values rendered
-    * like [[graft.sources.SqliteImporter]] (rowid substituted for the
-    * INTEGER PRIMARY KEY alias). Unreadable tables answer Failed rows.
-    * Page access is ranged, so the task heap holds one page at a time. */
-  private def sqlite(path: String, decoded: Boolean = false): Seq[CellRow] = {
-    import graft.sources.sqlite.SqliteParser
-    // small files (the common catalog case) decode from one byte image;
-    // per-page FS opens on tiny files cost more than the decode itself.
-    // `decoded` = a codec suffix (.sqlite.zst): the page tree needs
-    // random access a zstd stream can't give, so materialize the decoded
-    // image — capped at 256 MiB (a compressed db hiding a larger image
-    // must refuse, not drive a task-heap allocation; the ranged
-    // PathSource road covers big PLAIN files, and a >256 MiB db belongs
-    // uncompressed where pages read ranged).
-    val src: SqliteParser.Source =
-      if (decoded) {
-        val bytes = readDecodedCapped(path).getOrElse(
-          return Seq(CellRow(path, "ImportSqlite", "None", "Failed", -1L, Seq.empty)))
-        SqliteParser.BytesSource(bytes)
-      } else {
-        val fileLen = try FsIO.len(path) catch { case _: Exception => -1L }
-        if (fileLen >= 512 && fileLen <= (4L << 20))
-          SqliteParser.BytesSource(FsIO.readAllBytes(path))
-        else SqliteParser.PathSource(path)
-      }
-    SqliteParser.header(src) match {
-      case None => Seq(CellRow(path, "ImportSqlite", "None", "Failed", -1L, Seq.empty))
-      case Some(h) =>
-        val tables = SqliteParser.tables(src, h)
-        if (tables.isEmpty)
-          return Seq(CellRow(path, "ImportSqlite", "None", "Failed", -1L, Seq.empty))
-        tables.flatMap { t =>
-          def bad = Seq(CellRow(path, "ImportSqlite", t.name, "Failed", -1L, Seq.empty))
-          if (t.virtual || t.withoutRowid || t.rootPage < 1 || t.cols.isEmpty) bad
-          else try {
-            SqliteParser.leafPages(src, h, t.rootPage) match {
-              case None => bad
-              case Some(leaves) =>
-                var idx = -1L
-                leaves.flatMap(SqliteParser.leafRows(src, h, _)).map {
-                  case (rowid, cells) =>
-                    idx += 1
-                    val vals = (0 until t.cols.length).map { i =>
-                      val c = if (i < cells.length) cells(i) else SqliteParser.NullCell
-                      if (i == t.ipk && c == SqliteParser.NullCell) rowid.toString
-                      else SqliteParser.render(c)
-                    }
-                    CellRow(path, "ImportSqlite", t.name, "OK", idx, vals)
-                }
-            }
-          } catch { case _: Exception => bad }
-        }
-    }
-  }
-
-  /** Whole-document JSON BYTE road — only for codec suffixes Spark's
-    * multiLine json scan cannot decode in this container (`.json.zst`):
-    * the decoded document (capped, see [[readDecodedCapped]]) as ONE OK
-    * row whose single cell is the raw JSON text, after the same
-    * first-structural-char gate the AnyFile importer applies (`[` records
-    * orient or `{` columns orient; anything else answers Failed). */
-  private def jsonDocBytes(path: String): Seq[CellRow] = {
-    def failed = Seq(CellRow(path, "ImportJSON", "None", "Failed", -1L, Seq.empty))
-    val bytes = readDecodedCapped(path).getOrElse(return failed)
-    var i = 0
-    while (i < bytes.length &&
-      Character.isWhitespace((bytes(i) & 0xff).toChar)) i += 1
-    if (i >= bytes.length || (bytes(i) != '[' && bytes(i) != '{')) return failed
-    Seq(CellRow(path, "ImportJSON", "JSON file content", "OK", 0L,
-      Seq(new String(bytes, StandardCharsets.UTF_8))))
-  }
-
-  /** Tar member catalog (WebDataset shard layout — the dominant container
-    * multimodal training corpora ship in: `key.jpg` + `key.txt` +
-    * `key.json` member groups): one row per REGULAR member — name,
-    * typeflag, size, payload md5 — via the from-spec ustar walk
-    * ([[graft.sources.tar.TarWalk]]: 512-byte headers, octal/base-256
-    * sizes, checksum verification, GNU 'L' longnames, PAX 'x' path/size
-    * overrides). Payloads stream through the digest without ever being
-    * materialized, so the task heap holds one 64 KiB chunk regardless of
-    * member size. Compressed forms (`.tar.gz`/`.tgz`/`.tar.bz2`/
-    * `.tar.zst`) decode inline; `.tgz` needs the explicit gzip stream (no
-    * Hadoop codec claims that contraction). An archive with no members,
-    * or one whose header walk breaks (truncated header, bad checksum,
-    * short payload), answers ONE Failed row — the reference's per-file
-    * isolation contract. Member PAIRING into samples is the consumer's
-    * job ([[WebDataset.samples]]; q188 runs the image decode + caption
-    * stats over paired groups). */
-  private def tar(path: String): Seq[CellRow] = {
-    import graft.sources.tar.TarWalk
-    // openDecoded covers every codec form, the .tgz contraction included
-    val in = FsIO.openDecoded(path)
-    val rows =
-      try TarWalk.walk(in)(TarWalk.memberCells) finally in.close()
-    if (rows.isEmpty)
-      Seq(CellRow(path, "ImportTar", "None", "Failed", -1L, Seq.empty))
-    else rows.zipWithIndex.map { case (cells, i) =>
-      CellRow(path, "ImportTar", "TAR members", "OK", i.toLong, cells)
-    }
-  }
-
-  /** WARC (ISO 28500): one row per record — target URI, record type,
-    * block length — the CommonCrawl catalog pass; payload decoding is the
-    * consumer's job (q179 runs the HTML extraction on response blocks). */
-  private def warc(path: String): Seq[CellRow] = {
-    import graft.sources.warc.WarcReader
-    // decoded read handles any codec suffix (.warc.gz, .warc.bz2);
-    // gunzipIfNeeded stays as the net for gzip bytes behind a plain name
-    val recs = WarcReader.records(WarcReader.gunzipIfNeeded(
-      FsIO.readAllBytesDecoded(path)))
-    if (recs.isEmpty)
-      Seq(CellRow(path, "ImportWARC", "None", "Failed", -1L, Seq.empty))
-    else recs.zipWithIndex.map { case (r, i) =>
-      CellRow(path, "ImportWARC", "WARC records", "OK", i.toLong,
-        Seq(r.header("warc-target-uri").getOrElse(""),
-          r.header("warc-type").getOrElse(""),
-          r.payload.length.toString))
-    }
-  }
-
-  private def pdf(path: String): Seq[CellRow] = {
-    import graft.sources.pdf.{PdfParser, PdfTextExtractor}
-    val bytes = FsIO.readAllBytes(path)
-    val tables: Seq[Seq[IndexedSeq[String]]] = PdfParser.parse(bytes) match {
-      case None => Nil
-      case Some(doc) =>
-        doc.pages.flatMap { page =>
-          val fonts = doc.pageFonts(page)
-          doc.pageContent(page).toSeq
-            .flatMap(c => PdfTextExtractor.tables(PdfTextExtractor.page(c, fonts)))
-            .filter(_.nonEmpty)
-        }
-    }
-    if (tables.isEmpty)
-      return Seq(CellRow(path, "ImportPDF", "None", "Failed", -1L, Seq.empty))
-    tables.zipWithIndex.flatMap { case (rows, t) =>
-      sheetRows(path, "ImportPDF", s"PDF table $t", rows)
-    }
-  }
+  private def failedRow(path: String, engine: String, sheet: String = "None"): CellRow =
+    CellRow(path, engine, sheet, "Failed", -1L, Seq.empty)
 }

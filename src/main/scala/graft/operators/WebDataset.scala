@@ -4,7 +4,7 @@ import java.io.InputStream
 
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 
-import graft.sources.FsIO
+import graft.sources.{Formats, FsIO}
 import graft.sources.tar.TarWalk
 
 /** WebDataset sample pairing — the consumption side of the tar shard
@@ -63,12 +63,10 @@ object WebDataset {
       md5: String,
       status: String)
 
-  private val ShardSuffixes =
-    Seq(".tar", ".tar.gz", ".tgz", ".tar.bz2", ".tar.zst", ".tar.zstd")
-
   /** The distributed sample catalog over a TREE of WebDataset shards —
     * what a training pipeline runs first against a corpus root: every
-    * `.tar`/`.tar.gz`/`.tgz`/`.tar.bz2`/`.tar.zst` under `root` is
+    * `.tar`/`.tar.gz`/`.tgz`/`.tar.bz2`/`.tar.zst` under `root` (every
+    * name [[graft.sources.Formats]] routes to tar) is
     * paired in its consuming executor task (streaming walk, payloads
     * digested in 64 KiB chunks, never materialized) and emits one
     * [[CatalogRow]] per member with contiguous-run `sample_idx`
@@ -89,9 +87,6 @@ object WebDataset {
     val children = FsIO.listChildren(root)
     val seedDirs = children.collect { case (p, true) => p }
     val rootFiles = children.collect { case (p, false) => p }
-    // a plain val so the filter closure ships only the suffix list, not
-    // the enclosing method frame
-    val suffixes = ShardSuffixes
     val parts =
       if (partitions > 0) partitions
       else math.max(1, spark.sparkContext.defaultParallelism)
@@ -104,7 +99,7 @@ object WebDataset {
         dirs.flatMap(FsIO.listFilesRecursive)
       }(Encoders.STRING)
       .union(spark.createDataset(rootFiles)(Encoders.STRING))
-      .filter((p: String) => suffixes.exists(p.toLowerCase.endsWith))
+      .filter((p: String) => Formats.route(p).exists(_.format eq Formats.Tar))
       .repartition(parts)
       .mapPartitions { it =>
         FsIO.install(props)

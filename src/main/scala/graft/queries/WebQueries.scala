@@ -434,8 +434,8 @@ object WebQueries {
           val catOk = catalog.length == members.length &&
             catalog.zip(members).zipWithIndex.forall {
               case ((r, (n, d)), i) =>
-                r.engine == "ImportTar" && r.parse_info == "OK" &&
-                  r.sheet == "TAR members" && r.row_idx == i.toLong &&
+                r.engine == graft.sources.Formats.Tar.engine && r.parse_info == "OK" &&
+                  r.sheet == graft.sources.Formats.Tar.sheet && r.row_idx == i.toLong &&
                   r.cells.length == 4 && r.cells.head == n &&
                   r.cells(1) == "0" && r.cells(2) == d.length.toString
             }

@@ -202,11 +202,11 @@ object FsIO {
     // native libhadoop this layer can't assume — the branch must come
     // BEFORE the codec-factory lookup, or the factory claims the suffix
     // and fails at read time. This is the byte-road zstd door: everything
-    // that reads via readAllBytesDecoded/readHeadDecoded (BulkIngest's
-    // text/warc/sqlite/jsonl parsers, the sniffers, WarcImporter) gets
-    // `.jsonl.zst`-style corpora for free. Spark's own text/json SCANS
-    // still can't split or decode zstd here, so the AnyFile Spark-plan
-    // roads stay gz/bz2-only (documented on AnyFile).
+    // that reads via readAllBytesDecoded/readHeadDecoded (the shared
+    // text/warc/sqlite/jsonl decodes, the sniffers) gets `.jsonl.zst`-style
+    // corpora for free. Spark's own text/json SCANS can't split or decode
+    // zstd without that native library, so the AnyFile Spark-plan roads
+    // take zstd through the graft-zstd-lines source (documented on Formats).
     val lower = path.toLowerCase
     if (lower.endsWith(".zst") || lower.endsWith(".zstd"))
       return new java.io.BufferedInputStream(

@@ -3,7 +3,7 @@ package graft.sources
 import graft.model.ParserAnswer
 import graft.operators.UnionByArity
 import graft.sources.pdf.{PdfParser, PdfTextExtractor}
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** PDF table importer — the reference's `ImportPDF` (`main.py:371-412`),
   * which shells out to the tabula JAR via tabula-py (`pages="all"`,
@@ -33,67 +33,37 @@ import org.apache.spark.sql.{Row, SparkSession}
   * subprocess is single-file single-threaded too); at scale parallelism
   * comes from many files, not from inside one.
   */
-class PdfImporter(
-    val spark: SparkSession,
-    val filePath: String,
-    val concat: Boolean = true
-) extends Importer {
-  override def engineName: String = "ImportPDF"
+object PdfImporter {
 
-  def work(): Seq[ParserAnswer] = {
-    try {
-      val bytes = graft.sources.FsIO.readAllBytes(filePath)
-      // one entry per extracted TABLE (pages can hold several, split at
-      // large vertical gaps — tabula's list-of-tables granularity)
-      val tables: Seq[Seq[IndexedSeq[String]]] = PdfParser.parse(bytes) match {
-        case None => Nil
-        case Some(doc) =>
-          doc.pages.flatMap { page =>
-            val fonts = doc.pageFonts(page)
-            doc.pageContent(page).toSeq
-              .flatMap(c =>
-                PdfTextExtractor.tables(PdfTextExtractor.page(c, fonts)))
-              .filter(_.nonEmpty)
-          }
-      }
-      if (tables.isEmpty) return failedAnswer()
-      val frames = tables.map(frameOf)
-      if (concat) {
-        val r = UnionByArity(frames, withIndexColumn = true)
-        val valid = ParserAnswer(
-          data = r.valid.get, // first table is always in the valid group
-          filePathRaw = filePath,
-          sheetName = "PDF file content (concated)",
-          engine = engineName)
-        r.invalid match {
-          case Some(inv) =>
-            Seq(valid, ParserAnswer(
-              data = inv,
-              filePathRaw = filePath,
-              sheetName = "PDF file content (unsized)",
-              engine = engineName))
-          case None => Seq(valid)
+  /** One entry per extracted TABLE (pages can hold several, split at
+    * large vertical gaps — tabula's list-of-tables granularity). */
+  def tables(path: String): Seq[Seq[IndexedSeq[String]]] =
+    PdfParser.parse(FsIO.readAllBytes(path)) match {
+      case None => Nil
+      case Some(doc) =>
+        doc.pages.flatMap { page =>
+          val fonts = doc.pageFonts(page)
+          doc.pageContent(page).toSeq
+            .flatMap(c => PdfTextExtractor.tables(PdfTextExtractor.page(c, fonts)))
+            .filter(_.nonEmpty)
         }
-      } else {
-        tables.zip(frames).map { case (rows, df) =>
-          ParserAnswer(
-            data = df,
-            filePathRaw = filePath,
-            sheetName = "PDF file content (by page)",
-            engine = engineName,
-            knownRowCount = Some(rows.length.toLong))
-        }
-      }
-    } catch { case _: Exception => failedAnswer() }
-  }
+    }
 
-  /** Ragged rows → null-pad to the table's max arity; positional
-    * all-string columns (tabula emits `header=None` frames). */
-  private def frameOf(rows: Seq[IndexedSeq[String]]): org.apache.spark.sql.DataFrame = {
-    val width = rows.map(_.length).max
-    val schema = TextImporter.positionalSchema(width)
-    val padded = rows.map(r => Row.fromSeq(r.padTo(width, null)))
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(padded.asJava, schema)
+  def answers(spark: SparkSession, r: Route, concat: Boolean = true): Seq[ParserAnswer] = {
+    val found = tables(r.path)
+    if (found.isEmpty) return Nil
+    val engine = r.format.engine
+    val frames = found.map(rows => Formats.frame(spark, Sheet("", rows)))
+    if (concat) {
+      val u = UnionByArity(frames, withIndexColumn = true)
+      // the first table is always in the valid group
+      ParserAnswer(u.valid.get, r.path,
+        sheetName = "PDF file content (concated)", engine = engine) +:
+        u.invalid.toSeq.map(inv => ParserAnswer(inv, r.path,
+          sheetName = "PDF file content (unsized)", engine = engine))
+    } else found.zip(frames).map { case (rows, df) =>
+      ParserAnswer(df, r.path, sheetName = "PDF file content (by page)",
+        engine = engine, knownRowCount = Some(rows.length.toLong))
+    }
   }
 }

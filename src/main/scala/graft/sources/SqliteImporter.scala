@@ -1,7 +1,5 @@
 package graft.sources
 
-import scala.jdk.CollectionConverters._
-
 import graft.model.ParserAnswer
 import graft.sources.sqlite.SqliteParser
 import graft.sources.sqlite.SqliteParser.{Cell, Header, NullCell, TableMeta}
@@ -31,105 +29,90 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * held whole in any heap. Small files decode on the driver to skip the
   * job overhead.
   */
-class SqliteImporter(val spark: SparkSession, val filePath: String)
-    extends Importer {
-  override def engineName: String = "ImportSqlite"
+object SqliteImporter {
 
-  /** Databases at most this big decode on the driver. */
+  /** Databases at most this big decode from one byte image. */
   private val DriverDecodeBytes = 4L << 20
 
-  def work(): Seq[ParserAnswer] = {
-    try {
-      // small files: ONE whole read, then decode from the byte image —
-      // per-page FS opens on a tiny file cost more than the decode. Big
-      // files stay on the ranged road (and their leaf decode runs as a
-      // Spark job below).
-      val fileLen = try FsIO.len(filePath) catch { case _: Exception => -1L }
-      val lower = filePath.toLowerCase
-      val driverSrc: SqliteParser.Source =
-        if (lower.endsWith(".zst") || lower.endsWith(".zstd")) {
-          // .sqlite.zst: the page tree needs random access a zstd stream
-          // can't give — materialize the decoded image through the
-          // SHARED cap reader (BulkIngest's sqlite zst road, same
-          // refusal law, same constant)
-          val bytes = FsIO.readAllBytesDecodedCapped(filePath)
-            .getOrElse(return failedAnswer())
-          SqliteParser.BytesSource(bytes)
-        } else if (fileLen >= 512 && fileLen <= DriverDecodeBytes)
-          SqliteParser.BytesSource(FsIO.readAllBytes(filePath))
-        else SqliteParser.PathSource(filePath)
-      SqliteParser.header(driverSrc) match {
-        case None => failedAnswer()
-        case Some(h) =>
-          val tables = SqliteParser.tables(driverSrc, h)
-          if (tables.isEmpty) failedAnswer()
-          else tables.map(t => answerForTable(driverSrc, h, t))
-      }
-    } catch { case _: Exception => failedAnswer() }
+  /** One sheet per user table, column names from the schema. Small files
+    * (the common catalog case) decode from ONE whole read — per-page FS
+    * opens on a tiny file cost more than the decode. `.sqlite.zst`: the
+    * page tree needs random access a zstd stream can't give, so the
+    * decoded image materializes through the shared cap reader (a
+    * compressed db hiding a larger image refuses). Anything else reads its
+    * pages ranged, one page in the heap at a time. */
+  def sheets(r: Route): Seq[Sheet] = {
+    val len = plainLen(r)
+    val src: SqliteParser.Source =
+      if (r.zstd)
+        SqliteParser.BytesSource(FsIO.readAllBytesDecodedCapped(r.path).getOrElse(return Nil))
+      else if (len >= 512 && len <= DriverDecodeBytes)
+        SqliteParser.BytesSource(FsIO.readAllBytes(r.path))
+      else SqliteParser.PathSource(r.path)
+    val h = SqliteParser.header(src).getOrElse(return Nil)
+    SqliteParser.tables(src, h).map(t =>
+      try sheet(src, h, t, leaves(src, h, t))
+      catch { case _: Exception => Sheet(t.name, Nil) })
   }
 
-  private def failedTable(name: String): ParserAnswer =
-    ParserAnswer(spark.emptyDataFrame, filePath, sheetName = name,
-      engine = engineName, knownRowCount = Some(0L))
-
-  private def answerForTable(
-      driverSrc: SqliteParser.Source, h: Header, t: TableMeta): ParserAnswer = {
-    if (t.virtual || t.withoutRowid || t.rootPage < 1 || t.cols.isEmpty)
-      return failedTable(t.name)
-    try {
-      val leaves = SqliteParser.leafPages(driverSrc, h, t.rootPage)
-        .getOrElse(return failedTable(t.name))
-      val schema = StructType(dedupNames(t.cols).map(StructField(_, StringType, nullable = true)))
-      val ncols = t.cols.length
-      val ipk = t.ipk
-      val path = filePath
-
-      // a val closure over locals only: the executor road ships it, and it
-      // must not capture `this` (the importer holds the SparkSession)
-      val toRow: (Long, IndexedSeq[Cell]) => Row = (rowid, cells) => {
-        val vals = new Array[Any](ncols)
-        var i = 0
-        while (i < ncols) {
-          val c: Cell = if (i < cells.length) cells(i) else NullCell
-          vals(i) =
-            if (i == ipk && c == NullCell) rowid.toString
-            else SqliteParser.render(c)
-          i += 1
-        }
-        Row.fromSeq(vals.toIndexedSeq)
+  /** The driver road: the decode, except for plain databases past
+    * [[DriverDecodeBytes]], whose leaf decode runs as a Spark job — a task
+    * per leaf-page batch, each page fetched with its own ranged read; the
+    * driver reads only the header and the schema/interior pages, and the
+    * database file is never copied, localized, or held whole in any heap. */
+  def answers(spark: SparkSession, r: Route): Seq[ParserAnswer] = {
+    val engine = r.format.engine
+    if (plainLen(r) <= DriverDecodeBytes)
+      return sheets(r).map(Formats.answer(spark, r.path, engine, _))
+    val src = SqliteParser.PathSource(r.path)
+    val h = SqliteParser.header(src).getOrElse(return Nil)
+    SqliteParser.tables(src, h).map { t =>
+      try leaves(src, h, t) match {
+        case Some(pages) if pages.nonEmpty && h.nPages * h.pageSize.toLong > DriverDecodeBytes =>
+          val schema = StructType(dedupNames(t.cols).map(StructField(_, StringType, nullable = true)))
+          val path = r.path
+          val fsProps = FsIO.captureProps(spark)
+          val rdd = spark.sparkContext
+            .parallelize(pages, math.min(pages.length, 64))
+            .mapPartitions { it =>
+              FsIO.install(fsProps) // executor-side hdfs:/s3a: access
+              it.flatMap(pg => SqliteParser.leafRows(path, h, pg)
+                .map { case (rid, cs) => Row.fromSeq(cells(t, rid, cs)) })
+            }
+          ParserAnswer(spark.createDataFrame(rdd, schema), r.path,
+            sheetName = t.name, engine = engine, knownRowCount = None)
+        case pages => Formats.answer(spark, r.path, engine, sheet(src, h, t, pages))
+      } catch {
+        case _: Exception => Formats.answer(spark, r.path, engine, Sheet(t.name, Nil))
       }
-
-      if (leaves.isEmpty) {
-        ParserAnswer(spark.createDataFrame(Seq.empty[Row].asJava, schema),
-          filePath, sheetName = t.name, engine = engineName,
-          knownRowCount = Some(0L))
-      } else if (driverSrc.isInstanceOf[SqliteParser.BytesSource] ||
-          h.nPages * h.pageSize.toLong <= DriverDecodeBytes) {
-        // BytesSource stays on the in-image road regardless of size: a
-        // decoded-from-zstd image has NO path the executor road could
-        // ranged-read (the file on disk is compressed bytes) — and the
-        // image is ≤ the 256 MiB decode cap by construction
-        val rows = leaves.flatMap(pg =>
-          SqliteParser.leafRows(driverSrc, h, pg)
-            .map { case (rid, cs) => toRow(rid, cs) })
-        ParserAnswer(spark.createDataFrame(rows.asJava, schema), filePath,
-          sheetName = t.name, engine = engineName,
-          knownRowCount = Some(rows.length.toLong))
-      } else {
-        val fsProps = FsIO.captureProps(spark)
-        val parts = math.min(leaves.length, 64)
-        val rdd = spark.sparkContext
-          .parallelize(leaves, parts)
-          .mapPartitions { it =>
-            FsIO.install(fsProps) // executor-side hdfs:/s3a: access
-            it.flatMap(pg => SqliteParser.leafRows(path, h, pg)
-              .map { case (rid, cs) => toRow(rid, cs) })
-          }
-        ParserAnswer(spark.createDataFrame(rdd, schema), filePath,
-          sheetName = t.name, engine = engineName, knownRowCount = None)
-      }
-    } catch { case _: Exception => failedTable(t.name) }
+    }
   }
+
+  private def plainLen(r: Route): Long =
+    if (r.zstd) -1L else try FsIO.len(r.path) catch { case _: Exception => -1L }
+
+  /** The table's leaf pages; None = unreadable (WITHOUT ROWID, virtual,
+    * corrupt tree). */
+  private def leaves(src: SqliteParser.Source, h: Header, t: TableMeta): Option[Seq[Long]] =
+    if (t.virtual || t.withoutRowid || t.rootPage < 1 || t.cols.isEmpty) None
+    else SqliteParser.leafPages(src, h, t.rootPage)
+
+  /** An unreadable table is an empty sheet: Failed under its name. */
+  private def sheet(
+      src: SqliteParser.Source, h: Header, t: TableMeta, pages: Option[Seq[Long]]): Sheet =
+    pages.fold(Sheet(t.name, Nil)) { ps =>
+      Sheet(t.name,
+        ps.flatMap(pg => SqliteParser.leafRows(src, h, pg).map { case (rid, cs) => cells(t, rid, cs) }),
+        columns = Some(dedupNames(t.cols)))
+    }
+
+  /** One row's rendered values; the INTEGER PRIMARY KEY alias answers the
+    * rowid where its stored cell is NULL, as SQLite itself does. */
+  private def cells(t: TableMeta, rowid: Long, cs: IndexedSeq[Cell]): IndexedSeq[String] =
+    IndexedSeq.tabulate(t.cols.length) { i =>
+      val c = if (i < cs.length) cs(i) else NullCell
+      if (i == t.ipk && c == NullCell) rowid.toString else SqliteParser.render(c)
+    }
 
   /** Schema column names, made non-empty and unique (Spark frames reject
     * duplicate names): empty → positional, later duplicates suffixed. */

@@ -32,29 +32,21 @@ import org.apache.spark.sql.SparkSession
   * so the actual row decode happens on executors at action time, tables in
   * parallel, also streamed row-by-row.
   */
-class XmlImporter(val spark: SparkSession, val filePath: String)
-    extends Importer {
-  override def engineName: String = "ImportXML"
+object XmlImporter {
 
-  def work(): Seq[ParserAnswer] = {
-    val (mode, tables) =
-      try XmlSpreadsheetParser.tableShapes(filePath)
-      catch { case _: Exception => return failedAnswer() }
-    if (tables.isEmpty) return failedAnswer()
-
+  def answers(spark: SparkSession, r: Route): Seq[ParserAnswer] = {
+    val (mode, tables) = XmlSpreadsheetParser.tableShapes(r.path)
     tables.map { t =>
-      if (t.width == 0)
-        ParserAnswer(spark.emptyDataFrame, filePath, sheetName = t.sheetName,
-          engine = engineName, knownRowCount = Some(0L))
+      if (t.width == 0) Formats.answer(spark, r.path, r.format.engine, Sheet(t.sheetName, Nil))
       else {
         val df = spark.read
           .format("graft-xmlss")
           .schema(TextImporter.positionalSchema(t.width))
           .option("table", t.index)
           .option("mode", mode)
-          .load(filePath)
-        ParserAnswer(df, filePath, sheetName = t.sheetName,
-          engine = engineName, knownRowCount = Some(t.rows))
+          .load(r.path)
+        ParserAnswer(df, r.path, sheetName = t.sheetName,
+          engine = r.format.engine, knownRowCount = Some(t.rows))
       }
     }
   }

@@ -32,6 +32,19 @@ import scala.collection.mutable.ArrayBuffer
   */
 object HtmlParser {
 
+  /** WHATWG-style charset prescan over the first 1024 bytes: the value of
+    * the first `charset=` attribute inside a `<meta ...>` tag (covers both
+    * the HTML5 `<meta charset="x">` and the legacy http-equiv
+    * `content="text/html; charset=x"` spellings — the attribute text is
+    * ASCII either way). */
+  private[graft] def metaCharset(bytes: Array[Byte]): Option[String] = {
+    val n = math.min(bytes.length, 1024)
+    val prefix = new String(bytes, 0, n,
+      java.nio.charset.StandardCharsets.US_ASCII).toLowerCase
+    val meta = "<meta\\s[^>]*charset\\s*=\\s*[\"']?([a-z0-9_\\-]+)".r
+    meta.findFirstMatchIn(prefix).map(_.group(1))
+  }
+
   /** One content block: normalized text, word count, link-word count. */
   final case class Block(text: String, words: Int, linkWords: Int) {
     /** Link density in basis points (0 when empty). */

@@ -85,6 +85,11 @@ object TarWalk {
   def memberCells(e: Entry, data: InputStream): Seq[String] =
     Seq(e.name, e.typeflag.toString, e.size.toString, streamMd5Hex(data))
 
+  private val streamDigests = new ThreadLocal[java.security.MessageDigest] {
+    override def initialValue(): java.security.MessageDigest =
+      java.security.MessageDigest.getInstance("MD5")
+  }
+
   /** Streaming 64 KiB-chunk md5 of a payload stream — the one digest
     * loop every catalog road shares ([[memberCells]],
     * [[graft.operators.WebDataset.catalog]]), so their digests cannot
@@ -93,11 +98,11 @@ object TarWalk {
     // thread-local digest + table-lookup hex (r15 optimization pass):
     // the previous per-member getInstance + per-byte "%02x".format were
     // the catalog road's hottest non-I/O loop at one call per member.
-    // INVARIANT (see Md5Prefix64.md5Instance): the shared thread-local
-    // digest holds partial state across the read() loop below — no other
-    // Md5Prefix64 hashing helper (hash/hashHi/hashPair, or a nested
-    // streamMd5Hex) may run on this thread until digest() returns.
-    val md5 = graft.functions.Md5Prefix64.md5Instance()
+    // The digest holds partial state across the read() loop below, so it
+    // is this loop's own: a read that hashes through Md5Prefix64 on the
+    // same thread cannot touch it.
+    val md5 = streamDigests.get()
+    md5.reset()
     val buf = new Array[Byte](64 << 10)
     var n = data.read(buf)
     while (n > 0) { md5.update(buf, 0, n); n = data.read(buf) }

@@ -21,7 +21,7 @@ import scala.jdk.CollectionConverters._
   * `\n`-terminated line.
   *
   * This is the missing road that lets the ONE-FILE AnyFile importers
-  * (TextImporter / JsonLinesImporter) parse `.csv.zst`/`.jsonl.zst`
+  * (TextImporter / JsonImporter) parse `.csv.zst`/`.jsonl.zst`
   * corpora with the same plan shape their `.gz` twins get from the Hadoop
   * codec layer. Parity with `spark.read.option("lineSep", "\n").text`:
   * lines split on `\n` ONLY (a CR in CRLF files stays in the line — the

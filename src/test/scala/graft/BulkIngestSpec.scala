@@ -6,6 +6,8 @@ import java.util.zip.{ZipEntry, ZipOutputStream}
 import graft.operators.BulkIngest
 import org.apache.spark.sql.functions._
 
+import scala.jdk.CollectionConverters._
+
 /** Distributed bulk ingestion: the single-file `AnyFile.parse` semantics
   * over a file TREE, parsed inside executor tasks — per-format parity
   * with the driver-side importers, failure isolation per file, and a
@@ -63,6 +65,55 @@ class BulkIngestSpec extends SparkSpec {
     dir
   }
 
+  private def writeParquetFile(target: java.nio.file.Path): Unit = {
+    val out = tmpDir("pq").resolve("t").toString
+    spark.range(3).toDF("x").coalesce(1).write.parquet(out)
+    val part = java.nio.file.Files.list(java.nio.file.Paths.get(out)).iterator()
+      .asScala.find(_.toString.endsWith(".parquet")).get
+    java.nio.file.Files.copy(part, target)
+  }
+
+  /** `AnyFile.parse` and `BulkIngest.parseOne` agree on one file: engine,
+    * sheet names in order, per-sheet `parse_info`, and cells. Natively
+    * scanned files (parquet, json, jsonl) are catalogued by the bulk road
+    * as `Native` without decoding, so there only names and status agree;
+    * the zstd json roads decode to raw JSON text, so row counts agree for
+    * lines; a PDF's driver answer is the positional concat of the tables
+    * the bulk road lists one sheet each. */
+  private def assertParity(p: String): Unit = {
+    val name = java.nio.file.Paths.get(p).getFileName.toString
+    val lower = name.toLowerCase
+    val answers = AnyFile.parse(spark, p)
+    val rows = BulkIngest.parseOne(p)
+    val sheets = rows.map(_.sheet).distinct
+    val bySheet = sheets.map(s => rows.filter(_.sheet == s))
+    def cells(df: org.apache.spark.sql.DataFrame): Seq[Seq[String]] =
+      df.collect().toSeq.map(_.toSeq.map(v => if (v == null) null else v.toString))
+    def okCells(rs: Seq[BulkIngest.CellRow]): Seq[Seq[String]] =
+      rs.filter(_.parse_info == "OK").sortBy(_.row_idx).map(_.cells.toSeq)
+
+    val bulkEngine = rows.map(_.engine).distinct.map(e =>
+      if (e.isEmpty) graft.model.ParserAnswer.EngineDefault else e)
+    assert(answers.map(_.engine).distinct == bulkEngine, name)
+    if (rows.exists(_.parse_info == "Native")) {
+      assert(answers.map(_.sheetName) == sheets, name)
+      assert(answers.forall(_.parseInfo == "OK"), name)
+    } else if (lower.endsWith(".pdf") && answers.exists(!_.isFailed)) {
+      assert(answers.map(_.sheetName) == Seq("PDF file content (concated)"), name)
+      assert(rows.forall(_.parse_info == "OK"), name)
+      assert(cells(answers.head.data).map(_.drop(1)) == bySheet.flatMap(okCells), name)
+    } else if (lower.contains("json") && (lower.endsWith(".zst") || lower.endsWith(".zstd"))) {
+      assert(answers.map(_.sheetName) == sheets, name)
+      assert(answers.map(_.parseInfo) == bySheet.map(_.map(_.parse_info).distinct.mkString), name)
+      if (!lower.contains(".json."))
+        assert(answers.map(_.data.count()) == bySheet.map(_.length.toLong), name)
+    } else {
+      assert(answers.map(_.sheetName) == sheets, name)
+      assert(answers.map(_.parseInfo) == bySheet.map(_.map(_.parse_info).distinct.mkString), name)
+      assert(answers.map(a => cells(a.data)) == bySheet.map(okCells), name)
+    }
+  }
+
   test("parseTree: every file lands exactly once, with per-file failure isolation") {
     val dir = makeTree()
     val df = BulkIngest.parseTree(spark, dir.toString).cache()
@@ -103,6 +154,75 @@ class BulkIngestSpec extends SparkSpec {
     // sheet names carried through
     assert(rows.filter(_._1 == "sheet.xml").forall(_._2 == "S_A"))
     assert(rows.filter(_._1 == "book.xlsx").forall(_._2 == "P1"))
+
+    // every registered extension × accepted codec, one malformed file per
+    // container format, an unknown extension and the pickle gap
+    val tree = IngestFixtures.parityTree(tmpDir("parity"))
+    writeParquetFile(tree.resolve("t.parquet"))
+    val files = java.nio.file.Files.list(tree).iterator().asScala
+      .map(_.toString).toSeq.sorted
+    assert(files.length >= 60, files.length)
+    files.foreach(assertParity)
+  }
+
+  test("bulk HTML honours the declared charset, like AnyFile") {
+    val dir = tmpDir("html1251")
+    val p = dir.resolve("ru.html")
+    java.nio.file.Files.write(p, IngestFixtures.htmlTables(
+      Seq(Seq(Seq("Привет", "мир"), Seq("данные", "ячейка"))), "windows-1251"))
+    assertParity(p.toString)
+    assert(BulkIngest.parseOne(p.toString).head.cells == Seq("Привет", "мир"))
+  }
+
+  test("empty sheets answer one Failed row each, on both bulk roads") {
+    import IngestFixtures._
+    val dir = tmpDir("empty_sheets")
+    def put(name: String, bytes: Array[Byte]): Unit =
+      java.nio.file.Files.write(dir.resolve(name), bytes)
+    val grid = Seq(Seq("a", "b"), Seq("c"))
+    put("mixed.xlsx", xlsx(Seq("Full" -> grid, "Blank" -> Nil)))
+    put("blank.xlsx", xlsx(Seq("B1" -> Nil, "B2" -> Nil)))
+    put("mixed.xls", XlsFixture.workbook(Seq("Full" -> grid, "Blank" -> Nil)))
+    put("blank.xls", XlsFixture.workbook(Seq("B1" -> Nil)))
+    XlsbFixture.makeBlankXlsb(dir.resolve("blank.xlsb").toString)
+    put("mixed.ods", ods(Seq("Full" -> grid, "Blank" -> Nil)))
+    put("blank.ods", ods(Seq("B1" -> Nil)))
+    put("mixed.xml", xmlss(Seq("Full" -> grid, "Blank" -> Nil)).getBytes("UTF-8"))
+    put("blank.xml", xmlss(Seq("B1" -> Nil, "B2" -> Nil)).getBytes("UTF-8"))
+
+    val files = java.nio.file.Files.list(dir).iterator().asScala
+      .map(_.toString).toSeq.sorted
+    files.foreach(assertParity)
+
+    // every workbook lands in the catalog, one Failed row per empty sheet
+    def key(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (java.nio.file.Paths.get(r.getString(0)).getFileName.toString,
+        r.getString(2), r.getString(3), r.getLong(4), r.getSeq[String](5).toList))
+      .sortBy(_.toString).toSeq
+    val grain = key(BulkIngest.parseTree(spark, dir.toString))
+    assert(grain.map(_._1).distinct == files.map(f =>
+      java.nio.file.Paths.get(f).getFileName.toString))
+    assert(grain.contains(("blank.xlsx", "B2", "Failed", -1L, Nil)))
+    assert(grain.contains(("mixed.ods", "Blank", "Failed", -1L, Nil)))
+    // the DSv2 split roads (every workbook above a 1-byte threshold)
+    // answer the same rows as the file-grain road
+    assert(key(BulkIngest.parseTreeAuto(spark, dir.toString, bigBytes = 1L)) == grain)
+  }
+
+  test("tar catalog digest is independent of nested Md5Prefix64 calls") {
+    val payload = Array.tabulate[Byte](200000)(i => (i * 31).toByte)
+    // a stream whose every read hashes on the same thread, as a UDF
+    // evaluated between reads could
+    val in = new java.io.FilterInputStream(new java.io.ByteArrayInputStream(payload)) {
+      override def read(b: Array[Byte], off: Int, len: Int): Int = {
+        graft.functions.Md5Prefix64.hash(
+          org.apache.spark.unsafe.types.UTF8String.fromString("nested"))
+        super.read(b, off, math.min(len, 4096))
+      }
+    }
+    val want = java.security.MessageDigest.getInstance("MD5").digest(payload)
+    assert(graft.sources.tar.TarWalk.streamMd5Hex(in) ==
+      want.map(b => f"${b & 0xff}%02x").mkString)
   }
 
   test("the plan is a shuffle-free narrow map over the path list") {

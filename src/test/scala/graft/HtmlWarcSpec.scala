@@ -66,11 +66,11 @@ class HtmlWarcSpec extends SparkSpec {
     val text = ans.head.data.collect().map(_.getString(0)).mkString(" ")
     assert(text.contains("да"), text) // да decoded correctly
     // legacy http-equiv spelling reaches the same prescan
-    assert(graft.sources.HtmlImporter.metaCharset(
+    assert(graft.sources.html.HtmlParser.metaCharset(
       ("<meta http-equiv=\"Content-Type\" " +
         "content=\"text/html; charset=koi8-r\">").getBytes("US-ASCII"))
       .contains("koi8-r"))
-    assert(graft.sources.HtmlImporter.metaCharset(
+    assert(graft.sources.html.HtmlParser.metaCharset(
       "<html><body>no declaration</body></html>".getBytes("US-ASCII")).isEmpty)
   }
 

@@ -7,7 +7,6 @@ import java.security.MessageDigest
 import javax.crypto.Cipher
 import javax.crypto.spec.{IvParameterSpec, SecretKeySpec}
 
-import graft.sources.PdfImporter
 import graft.sources.pdf.{PdfCrypto, PdfParser}
 
 /** Encrypted-PDF fixtures for the standard security handler (ISO 32000-1
@@ -137,7 +136,7 @@ class PdfCryptoSpec extends SparkSpec {
       "ET\n").getBytes("ISO-8859-1")
 
   private def assertGrid(path: String): Unit = {
-    val answers = new PdfImporter(spark, path).work()
+    val answers = AnyFile.parse(spark, path)
     assert(answers.head.parseInfo == "OK", answers.head.parseInfo)
     val rows = answers.head.data.orderBy("index").collect().map(_.toSeq)
     assert(rows(0) == Seq(0, "key", "val"))
@@ -213,7 +212,7 @@ class PdfCryptoSpec extends SparkSpec {
       enc)
     assert(PdfParser.parse(Files.readAllBytes(
       java.nio.file.Paths.get(path))).isEmpty)
-    val answers = new PdfImporter(spark, path).work()
+    val answers = AnyFile.parse(spark, path)
     assert(answers.length == 1 && answers.head.parseInfo == "Failed")
   }
 

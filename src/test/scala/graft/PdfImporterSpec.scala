@@ -4,7 +4,7 @@ import java.io.ByteArrayOutputStream
 import java.nio.file.Files
 import java.util.zip.Deflater
 
-import graft.sources.PdfImporter
+import graft.sources.{Formats, PdfImporter, Route}
 import org.apache.spark.sql.Row
 
 /** Hand-assembled PDF fixtures (ISO 32000 syntax): catalog → page tree →
@@ -83,7 +83,7 @@ class PdfImporterSpec extends SparkSpec {
       Seq("name", "qty", "price"),
       Seq("apple", "3", "1.50"),
       Seq("pear", "7", "0.25")), compress = false)))
-    val answers = new PdfImporter(spark, path).work()
+    val answers = AnyFile.parse(spark, path)
     assert(answers.length == 1)
     val a = answers.head
     assert(a.sheetName == "PDF file content (concated)")
@@ -101,9 +101,9 @@ class PdfImporterSpec extends SparkSpec {
     val g = Seq(Seq("a", "b"), Seq("c", "d"))
     val plain = writePdf("p.pdf", Seq(grid(g, compress = false)))
     val flate = writePdf("f.pdf", Seq(grid(g, compress = true)))
-    val rp = new PdfImporter(spark, plain).work().head.data
+    val rp = AnyFile.parse(spark, plain).head.data
       .orderBy("index").collect().toSeq
-    val rf = new PdfImporter(spark, flate).work().head.data
+    val rf = AnyFile.parse(spark, flate).head.data
       .orderBy("index").collect().toSeq
     assert(rp == rf && rp.nonEmpty)
   }
@@ -112,7 +112,7 @@ class PdfImporterSpec extends SparkSpec {
     val path = writePdf("two.pdf", Seq(
       grid(Seq(Seq("a", "b"), Seq("c", "d")), compress = true),
       grid(Seq(Seq("e", "f"), Seq("g", "h")), compress = true)))
-    val answers = new PdfImporter(spark, path).work()
+    val answers = AnyFile.parse(spark, path)
     assert(answers.length == 1)
     val rows = answers.head.data.orderBy("index").collect().map(_.toSeq)
     assert(rows.map(_.head).toSeq == Seq(0, 1, 2, 3))
@@ -123,7 +123,7 @@ class PdfImporterSpec extends SparkSpec {
     val path = writePdf("mixed.pdf", Seq(
       grid(Seq(Seq("a", "b", "c")), compress = false),
       grid(Seq(Seq("x", "y")), compress = false)))
-    val answers = new PdfImporter(spark, path).work()
+    val answers = AnyFile.parse(spark, path)
     assert(answers.map(_.sheetName) == Seq(
       "PDF file content (concated)", "PDF file content (unsized)"))
     assert(answers(0).data.columns.length == 4) // index + 3
@@ -135,7 +135,7 @@ class PdfImporterSpec extends SparkSpec {
     val path = writePdf("pages.pdf", Seq(
       grid(Seq(Seq("a", "b")), compress = false),
       grid(Seq(Seq("x", "y", "z")), compress = false)))
-    val answers = new PdfImporter(spark, path, concat = false).work()
+    val answers = PdfImporter.answers(spark, Route(path, Formats.Pdf, ""), concat = false)
     assert(answers.length == 2)
     assert(answers.forall(_.sheetName == "PDF file content (by page)"))
     assert(answers(0).data.columns.toSeq == Seq("0", "1")) // no index col
@@ -153,7 +153,7 @@ class PdfImporterSpec extends SparkSpec {
         |ET
         |""".stripMargin.getBytes("ISO-8859-1")
     val path = writePdf("rel.pdf", Seq((content, false)))
-    val a = new PdfImporter(spark, path).work().head
+    val a = AnyFile.parse(spark, path).head
     val rows = a.data.orderBy("index").collect().map(_.toSeq)
     // small TJ kerning stays within MergeTolerance → glued into one cell
     assert(rows(0) == Seq(0, "r1c1", "r1c2"))
@@ -169,7 +169,7 @@ class PdfImporterSpec extends SparkSpec {
         |ET
         |""".stripMargin.getBytes("ISO-8859-1")
     val path = writePdf("esc.pdf", Seq((content, false)))
-    val row = new PdfImporter(spark, path).work().head
+    val row = AnyFile.parse(spark, path).head
       .data.collect().head.toSeq
     assert(row(1) == "a(b)c")
     assert(row(2) == "x\\y") // octal 134 = backslash
@@ -179,13 +179,13 @@ class PdfImporterSpec extends SparkSpec {
     val dir = tmpDir("pdfbad")
     val garbage = dir.resolve("g.pdf")
     Files.write(garbage, Array.fill[Byte](256)(0x55))
-    val g = new PdfImporter(spark, garbage.toString).work()
+    val g = AnyFile.parse(spark, garbage.toString)
     assert(g.length == 1 && g.head.parseInfo == "Failed")
 
     val real = pdfBytes(Seq(grid(Seq(Seq("a", "b")), compress = true)))
     val trunc = dir.resolve("t.pdf")
     Files.write(trunc, real.take(real.length / 3))
-    val t = new PdfImporter(spark, trunc.toString).work()
+    val t = AnyFile.parse(spark, trunc.toString)
     assert(t.nonEmpty) // whatever survives parses or fails — no throw
   }
 
@@ -201,7 +201,7 @@ class PdfImporterSpec extends SparkSpec {
         "1 0 0 1 72 460 Tm (x2) Tj\n1 0 0 1 192 460 Tm (y2) Tj\n" +
         "1 0 0 1 312 460 Tm (z2) Tj\nET\n").getBytes("ISO-8859-1")
     val path = writePdf("twotables.pdf", Seq((content, false)))
-    val answers = new PdfImporter(spark, path).work()
+    val answers = AnyFile.parse(spark, path)
     assert(answers.map(_.sheetName) == Seq(
       "PDF file content (concated)", "PDF file content (unsized)"))
     val valid = answers(0).data.orderBy("index").collect().map(_.toSeq)
@@ -250,7 +250,7 @@ class PdfImporterSpec extends SparkSpec {
     val p = tmpDir("pdfobjstm").resolve("objstm.pdf")
     Files.write(p, out.toByteArray)
 
-    val answers = new PdfImporter(spark, p.toString).work()
+    val answers = AnyFile.parse(spark, p.toString)
     assert(answers.head.parseInfo == "OK")
     val rows = answers.head.data.orderBy("index").collect().map(_.toSeq)
     assert(rows(0) == Seq(0, "m1", "m2"))
@@ -315,10 +315,10 @@ class PdfImporterSpec extends SparkSpec {
     Files.write(pchain, pdfBytesF(Seq((a85(deflate(content)),
       " /Filter [/ASCII85Decode /FlateDecode]"))))
 
-    val want = new PdfImporter(spark, plain).work().head.data
+    val want = AnyFile.parse(spark, plain).head.data
       .orderBy("index").collect().toSeq
     Seq(p85, plzw, pchain).foreach { p =>
-      val got = new PdfImporter(spark, p.toString).work().head.data
+      val got = AnyFile.parse(spark, p.toString).head.data
         .orderBy("index").collect().toSeq
       assert(got == want && got.nonEmpty, p.toString)
     }
@@ -346,7 +346,7 @@ class PdfImporterSpec extends SparkSpec {
         "192 650 m 192 710 l S\n" +
         "312 650 m 312 710 l S\n").getBytes("ISO-8859-1")
     val path = writePdf("lattice.pdf", Seq((content, false)))
-    val answers = new PdfImporter(spark, path).work()
+    val answers = AnyFile.parse(spark, path)
     assert(answers.length == 1)
     val rows = answers.head.data.orderBy("index").collect().map(_.toSeq)
     assert(rows.toSeq == Seq(
@@ -362,7 +362,7 @@ class PdfImporterSpec extends SparkSpec {
       ("0 0 612 792 re W n\n" +
         gridContent(Seq(Seq("k1", "k2"), Seq("v1", "v2")))).getBytes("ISO-8859-1")
     val path = writePdf("clip.pdf", Seq((content, false)))
-    val rows = new PdfImporter(spark, path).work().head.data
+    val rows = AnyFile.parse(spark, path).head.data
       .orderBy("index").collect().map(_.toSeq)
     assert(rows.toSeq == Seq(Seq(0, "k1", "k2"), Seq(1, "v1", "v2")))
   }
@@ -414,7 +414,7 @@ class PdfImporterSpec extends SparkSpec {
     val p = tmpDir("pdffont").resolve("type0.pdf")
     Files.write(p, out.toByteArray)
 
-    val answers = new PdfImporter(spark, p.toString).work()
+    val answers = AnyFile.parse(spark, p.toString)
     assert(answers.head.parseInfo == "OK")
     val rows = answers.head.data.orderBy("index").collect().map(_.toSeq)
     // "(done)" in a Type0 font also decodes as 2-byte codes — 'do' =
@@ -496,7 +496,7 @@ class PdfImporterSpec extends SparkSpec {
     val p = tmpDir("pdfidh").resolve("identity_h.pdf")
     Files.write(p, out.toByteArray)
 
-    val answers = new PdfImporter(spark, p.toString).work()
+    val answers = AnyFile.parse(spark, p.toString)
     assert(answers.head.parseInfo == "OK")
     val rows = answers.head.data.collect().map(_.toSeq)
     assert(rows.exists(_.contains("Hi!")),
@@ -538,7 +538,7 @@ class PdfImporterSpec extends SparkSpec {
     val p = tmpDir("pdfgb").resolve("unigb.pdf")
     Files.write(p, out.toByteArray)
 
-    val answers = new PdfImporter(spark, p.toString).work()
+    val answers = AnyFile.parse(spark, p.toString)
     assert(answers.head.parseInfo == "OK")
     val rows = answers.head.data.collect().map(_.toSeq)
     assert(rows.exists(_.contains("今天好")),
@@ -591,7 +591,7 @@ class PdfImporterSpec extends SparkSpec {
     val p = tmpDir("pdffont").resolve("simple.pdf")
     Files.write(p, out.toByteArray)
 
-    val rows = new PdfImporter(spark, p.toString).work().head
+    val rows = AnyFile.parse(spark, p.toString).head
       .data.orderBy("index").collect().map(_.toSeq)
     assert(rows(0)(1) == "zuick")
     assert(rows(0)(2) == "azua")

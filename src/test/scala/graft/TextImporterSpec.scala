@@ -61,7 +61,8 @@ class TextImporterSpec extends SparkSpec {
     // delimiter explicit: with tabs present the voter (like the reference's
     // Sniffer on the raw line) would pick tab — strip still applies first
     val p = writeFile(dir, "t.txt", "\ta;b\t\nc;d\n")
-    val a = new graft.sources.TextImporter(spark, p, Some(";")).work().head
+    val a = graft.sources.TextImporter.answers(
+      spark, graft.sources.Route(p, graft.sources.Formats.PlainText, ""), Some(";")).head
     assert(a.data.collect().toSeq == Seq(Row("a", "b"), Row("c", "d")))
   }
 

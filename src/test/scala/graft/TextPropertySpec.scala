@@ -26,8 +26,8 @@ class TextPropertySpec extends SparkSpec {
       val p = writeFile(dir, "m.csv", content)
       // delimiter passed explicitly: sniffing is voting-based and single-
       // column rows legitimately default to tab — not under test here
-      val imp = new graft.sources.TextImporter(spark, p, Some(delim))
-      val a = imp.work().head
+      val a = graft.sources.TextImporter.answers(
+        spark, graft.sources.Route(p, graft.sources.Formats.PlainText, ""), Some(delim)).head
       val expectWidth = rows.map(_.length).max
       val got = a.data.collect()
 
@@ -61,9 +61,10 @@ class TextPropertySpec extends SparkSpec {
       val antContent = rows.map(_.mkString(
         graft.sources.TextImporter.AntDelimiter)).mkString("\n") + "\n"
       val p = writeFile(dir, "m.ant", antContent)
-      val driver = new graft.sources.TextImporter(
-        spark, p, Some(graft.sources.TextImporter.AntDelimiter))
-        .work().head.data.collect()
+      val driver = graft.sources.TextImporter.answers(spark,
+        graft.sources.Route(p, graft.sources.Formats.Ant, ""),
+        Some(graft.sources.TextImporter.AntDelimiter))
+        .head.data.collect()
         .map(_.toSeq.map(v => if (v == null) null else v.toString))
       val bulk = graft.operators.BulkIngest.parseOne(p)
         .sortBy(_.row_idx).map(_.cells.toSeq)

@@ -70,4 +70,22 @@ object XlsbFixture {
     entry("xl/worksheets/sheet1.bin", sheet)
     out.close()
   }
+
+  /** One sheet "Blank" whose part holds no records — the empty-sheet shape
+    * every workbook format must still answer (one Failed sheet). */
+  def makeBlankXlsb(path: String): Unit = {
+    val out = new ZipOutputStream(new FileOutputStream(path))
+    def entry(name: String, bytes: Array[Byte]): Unit = {
+      out.putNextEntry(new ZipEntry(name))
+      out.write(bytes)
+      out.closeEntry()
+    }
+    entry("xl/workbook.bin", rec(156, u32(0) ++ u32(1) ++ ws("rId1") ++ ws("Blank")))
+    entry("xl/_rels/workbook.bin.rels",
+      """<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">
+        |<Relationship Id="rId1" Type="t" Target="worksheets/sheet1.bin"/>
+        |</Relationships>""".stripMargin.getBytes("UTF-8"))
+    entry("xl/worksheets/sheet1.bin", Array.emptyByteArray)
+    out.close()
+  }
 }
