@@ -92,8 +92,7 @@ object Audit {
     val (bytes, records) = measureShuffle(spark) {
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
     }
-    spark.sharedState.cacheManager.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+    Harness.clearState(spark)
     val perRec = if (records == 0) 0.0 else bytes.toDouble / records
     f"""{"audit":"shuffle","query":"$name","sf":"$sfDir","shuffle_bytes":$bytes,"shuffle_records":$records,"bytes_per_record":$perRec%.1f}"""
   }
@@ -104,15 +103,7 @@ object Audit {
     SparkEntry.queries.keys.toSeq.sorted.map(shuffleAuditOne(spark, sfDir, _))
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     if (args.length > 1 && args(1) == "all") {
       // meter every declared query and stop — budget-derivation mode
       val lines = shuffleAuditAll(spark, sfDir)

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Runnable smoke demo of the ingestion surface — the Spark twin of the
   * reference's `__main__` transcript (reference `main.py:454-466`): parse a
   * tab-separated text file and a two-sheet workbook, print the answers.
@@ -11,13 +9,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Demo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
 
     val dir = Files.createTempDirectory("graft_demo")
 

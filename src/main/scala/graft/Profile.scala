@@ -1,23 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Scratch profiler: stage-by-stage counts+timings for the dedup pipelines
-  * (r16: q114's ER stages under bench conditions). */
+/** Scratch profiler: stage-by-stage timings of the suffix-LCP family
+  * (q157/q160) under bench conditions, two passes. */
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import graft.operators.Materialize.MaterializeOps
+    val spark = Harness.session()
 
     def timed[T](name: String)(f: => T): T = {
       val t0 = System.nanoTime()
@@ -29,132 +19,28 @@ object Profile {
     def noop(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
 
-    // mode arg: "q160" = suffix-LCP family stage costs, default = q114 ER
-    if (args.headOption.contains("q160")) {
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      for (pass <- 1 to 2) {
-        println(s"=== pass $pass ===")
-        timed("adjacentLcp alone") {
-          noop(graft.operators.SuffixArray.adjacentLcp(docs))
-        }
-        timed("wins explode only (no sort)") {
-          noop(docs.select(col("doc_id"), split(col("text"), "\\s+").as("w"))
-            .select(col("doc_id"), col("w"),
-              posexplode(col("w")).as(Seq("pos", "word")))
-            .select(col("doc_id"), col("pos").cast("long").as("pos"),
-              slice(col("w"), col("pos") + 1, lit(31)).as("win")))
-        }
-        timed("full q160 phraseContam") {
-          noop(graft.operators.SuffixArray
-            .phraseContam(docs, col("doc_id") % 17 === 0)
-            .orderBy("doc_id"))
-        }
-        timed("full q157 lrsPerDoc") {
-          noop(graft.operators.SuffixArray.lrsPerDoc(docs)
-            .orderBy("doc_id"))
-        }
-      }
-      spark.stop()
-      return
-    }
-
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     for (pass <- 1 to 2) {
       println(s"=== pass $pass ===")
-      val docs = timed("docs materialize") {
-        val d = spark.read.parquet(s"$sfDir/documents.parquet")
-          .select(col("doc_id"), col("text"), col("n_chars")).materialized
-        d.count(); d
+      timed("adjacentLcp alone") {
+        noop(graft.operators.SuffixArray.adjacentLcp(docs))
       }
-      def blockPairs(keyed: org.apache.spark.sql.DataFrame) = {
-        val sized = keyed
-          .withColumn("cnt", count(lit(1)).over(Window.partitionBy("key")))
-          .filter(col("cnt") <= 64)
-          .select("key", "doc_id")
-        sized.as("a").join(sized.as("b"),
-            col("a.key") === col("b.key") && col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+      timed("wins explode only (no sort)") {
+        noop(docs.select(col("doc_id"), split(col("text"), "\\s+").as("w"))
+          .select(col("doc_id"), col("w"),
+            posexplode(col("w")).as(Seq("pos", "word")))
+          .select(col("doc_id"), col("pos").cast("long").as("pos"),
+            slice(col("w"), col("pos") + 1, lit(31)).as("win")))
       }
-      val b1 = docs.select(substring(col("text"), 1, 16).as("key"), col("doc_id"))
-      val b2 = docs
-        .select(col("doc_id"), col("n_chars"),
-          filter(split(col("text"), "\\s+"), x => length(x) > 0).as("ws"))
-        .filter(size(col("ws")) > 0)
-        .select(concat_ws("|", try_element_at(col("ws"), lit(1)),
-          expr("cast(n_chars div 32 as string)")).as("key"), col("doc_id"))
-      val cand = timed("cand materialize") {
-        val c = blockPairs(b1).union(blockPairs(b2)).distinct().materialized
-        println("  n=" + c.count()); c
+      timed("full q160 phraseContam") {
+        noop(graft.operators.SuffixArray
+          .phraseContam(docs, col("doc_id") % 17 === 0)
+          .orderBy("doc_id"))
       }
-      val (t1c, t2c) = graft.functions.GraftFunctions.md5_128(col("t"))
-      val tok = timed("tok materialize") {
-        val t = docs.select(col("doc_id"),
-            explode(array_distinct(
-              filter(split(col("text"), "\\s+"), x => length(x) > 0))).as("t"))
-          .select(col("doc_id"), t1c.as("t1"), t2c.as("t2"))
-          .materialized
-        println("  n=" + t.count()); t
+      timed("full q157 lrsPerDoc") {
+        noop(graft.operators.SuffixArray.lrsPerDoc(docs)
+          .orderBy("doc_id"))
       }
-      val counts = tok.groupBy("doc_id").agg(count(lit(1)).as("n"))
-      val inter = cand
-        .join(tok.as("ta"), col("doc_a") === col("ta.doc_id"))
-        .join(tok.as("tb"),
-          col("doc_b") === col("tb.doc_id") && col("ta.t1") === col("tb.t1") &&
-            col("ta.t2") === col("tb.t2"))
-        .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("i"))
-      val lens = docs.select(col("doc_id"), col("n_chars"))
-      val edges = inter
-        .join(counts.as("ca"), col("doc_a") === col("ca.doc_id"))
-        .join(counts.as("cb"), col("doc_b") === col("cb.doc_id"))
-        .join(lens.as("la"), col("doc_a") === col("la.doc_id"))
-        .join(lens.as("lb"), col("doc_b") === col("lb.doc_id"))
-        .filter(col("i") * 5 >= (col("ca.n") + col("cb.n") - col("i")) * 4)
-        .filter(least(col("la.n_chars"), col("lb.n_chars")) * 2 >=
-          greatest(col("la.n_chars"), col("lb.n_chars")))
-        .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      val sym = timed("edges+sym materialize") {
-        val sm = edges
-          .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-          .materialized
-        println("  n=" + sm.count()); sm
-      }
-      var labels = timed("labels init") {
-        val l = sym.select(col("src").as("node")).distinct()
-          .withColumn("lbl", col("node")).materialized
-        l.count(); l
-      }
-      var changed = 1L
-      var rounds = 0
-      while (changed > 0 && rounds < 50) {
-        timed(s"cc round $rounds") {
-          val next = graft.queries.DedupQueries.labelPropRound(sym, labels)
-            .materialized
-          changed = next.filter(col("nxt") < col("lbl")).count()
-          labels = next.select(col("node"), col("nxt").as("lbl"))
-          println("  changed=" + changed)
-        }
-        rounds += 1
-      }
-      timed("final assembly") {
-        val comp = docs.select(col("doc_id"))
-          .join(labels.withColumnRenamed("node", "doc_id"), Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            coalesce(col("lbl"), col("doc_id")).as("cluster"))
-        val sizes = comp.groupBy("cluster").agg(count(lit(1)).as("cluster_size"))
-        val best = comp.join(lens, "doc_id")
-          .withColumn("rn", row_number().over(
-            Window.partitionBy("cluster")
-              .orderBy(col("n_chars").desc, col("doc_id"))))
-          .filter(col("rn") === 1)
-          .select(col("cluster"), col("doc_id").as("best_id"))
-        val out = comp.join(sizes, "cluster").join(best, "cluster")
-          .select(col("doc_id"), col("cluster"), col("cluster_size"),
-            col("best_id"),
-            (col("doc_id") === col("best_id")).cast("int").as("is_canonical"))
-          .orderBy("doc_id")
-        out.write.format("noop").mode("overwrite").save()
-      }
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
     }
     spark.stop()
   }

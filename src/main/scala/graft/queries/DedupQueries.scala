@@ -1,5 +1,7 @@
 package graft.queries
 
+import graft.functions.SplitMix64.{Mask29, P61, mix64}
+import graft.operators.Fixpoint
 import graft.operators.Materialize.MaterializeOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -191,20 +193,9 @@ object DedupQueries {
   private val Bands = 16    // 16 bands × 4 rows
   private val BucketCap = 64
 
-  /** 2^61 - 1 (prime): permutation modulus. Values stay < 2^62 end-to-end. */
-  private val P61 = 2305843009213693951L
-
-  private def mix64(z0: Long): Long = {
-    var z = z0 + 0x9e3779b97f4a7c15L
-    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-    z ^ (z >>> 31)
-  }
-
   // 29-bit multipliers/offsets for the 2-universal permutation family —
   // fixed at plan time from splitmix64 streams so Spark literals and the
   // oracle's SQL list literals are the same numbers.
-  private val Mask29 = (1L << 29) - 1
   private val PermA = IndexedSeq.tabulate(MinhashK)(i => (mix64(0xA0000L + i) & Mask29) | 1L)
   private val PermB = IndexedSeq.tabulate(MinhashK)(i => (mix64(0xB0000L + i) & Mask29) | 1L)
   private val PermC = IndexedSeq.tabulate(MinhashK)(i => mix64(0xC0000L + i) & Mask29)
@@ -476,25 +467,17 @@ object DedupQueries {
   private def jaccardComponents(docs: DataFrame): DataFrame =
     jaccardComponentsOf(docs, jaccardPairs(docs))
 
-  /** [[jaccardComponents]] over a caller-supplied pair table — for queries
-    * that consume BOTH the components and the pairs (q141): the caller
-    * materializes `jaccardPairs` once and feeds both consumers, instead of
-    * running the whole shingle→digest→prefix-join pipeline twice inside
-    * one query (r15 pass; within-query plan reuse, the q22-sigs
-    * discipline — nothing is shared ACROSS queries). */
-  private def jaccardComponentsOf(docs: DataFrame, pairs: DataFrame): DataFrame = {
-    val edges = pairs
-      .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-    // The loop-invariant edge table materializes PRE-PARTITIONED AND
-    // PRE-SORTED on dst — its per-round join key (r16 pass, guide §2.4):
-    // the checkpoint cut preserves outputPartitioning/outputOrdering, so
-    // every round's sym ⋈ labels sort-merge join reads sym exchange-free
-    // and sort-free; only the (changing) label table moves per round.
-    // One up-front exchange+sort, amortized over all rounds.
-    val sym = edges
-      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(col("dst")).sortWithinPartitions("dst")
-      .materialized
+  /** [[jaccardComponents]] over a caller-supplied (doc_a, doc_b) pair
+    * table — for q114's own matcher, and for queries that consume BOTH the
+    * components and the pairs (q141): the caller materializes
+    * `jaccardPairs` once and feeds both consumers, instead of running the
+    * whole shingle→digest→prefix-join pipeline twice inside one query
+    * (r15 pass; within-query plan reuse, the q22-sigs discipline —
+    * nothing is shared ACROSS queries). Throws at [[Fixpoint.MaxRounds]]
+    * if a component's diameter exceeds the cap. */
+  private[graft] def jaccardComponentsOf(docs: DataFrame, pairs: DataFrame): DataFrame = {
+    val sym = symmetricEdges(pairs
+      .select(col("doc_a").as("src"), col("doc_b").as("dst")))
     // The propagation loop runs over EDGE-TOUCHED nodes only: a doc with
     // no similarity edge can neither receive a lower label (no incoming
     // edge) nor lower anyone else's (no outgoing edge), so its label is
@@ -503,21 +486,30 @@ object DedupQueries {
     // corpus per round for rows that never change (guide §2.3 "shuffle
     // fewer bytes"). Isolated docs re-enter as their own singleton
     // cluster in the left-join read-off; the fixpoint is unchanged.
-    var labels = sym.select(col("src").as("node")).distinct()
+    val init = sym.select(col("src").as("node")).distinct()
       .withColumn("lbl", col("node")).materialized
-    var changed = 1L
-    var rounds = 0
-    while (changed > 0 && rounds < 50) {
-      val next = labelPropRound(sym, labels).materialized
-      changed = next.filter(col("nxt") < col("lbl")).count()
-      labels = next.select(col("node"), col("nxt").as("lbl"))
-      rounds += 1
-    }
+    val (labels, _) = Fixpoint(init)(
+      labelPropRound(sym, _),
+      (_, next) => next.filter(col("nxt") < col("lbl")),
+      _.select(col("node"), col("nxt").as("lbl")))
     docs.select(col("doc_id"))
       .join(labels.withColumnRenamed("node", "doc_id"), Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("lbl"), col("doc_id")).as("cluster"))
   }
+
+  /** The symmetric (src, dst) edge table of an undirected graph, the
+    * loop-invariant side of every per-round join on dst. It materializes
+    * PRE-PARTITIONED AND PRE-SORTED on dst (r16 pass, guide §2.4): the
+    * checkpoint cut preserves outputPartitioning/outputOrdering, so each
+    * round's sym ⋈ labels sort-merge join reads sym exchange-free and
+    * sort-free; only the (changing) label table moves per round. One
+    * up-front exchange+sort, amortized over all rounds. */
+  private def symmetricEdges(edges: DataFrame): DataFrame =
+    edges
+      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
+      .repartition(col("dst")).sortWithinPartitions("dst")
+      .materialized
 
   /** One min-label-propagation round, factored out so its plan shape is
     * pinnable by PlanRegressionSpec: per round the only exchanges are on
@@ -619,60 +611,58 @@ object DedupQueries {
     * taken). Exposed for the adversarial path-graph spec. */
   private[graft] def twoStarComponents(
       nodes: DataFrame, edges0: DataFrame): (DataFrame, Int) = {
-    var edges = edges0.distinct().materialized
-    var changed = 1L
-    var rounds = 0
-    while (changed > 0 && rounds < 50) {
-      val sym = edges.select(col("hi").as("u"), col("lo").as("v"))
-        .union(edges.select(col("lo").as("u"), col("hi").as("v")))
-      // r16 round restructure — same SETS per round (so the same rounds
-      // and the same fixpoint; the oracle re-proves it), fewer passes:
-      //  - each half-star's min now rides ONE window exchange on its key
-      //    instead of groupBy + join-back, which shuffled the edge table
-      //    TWICE per half-star (once into the partial agg, once into the
-      //    join) — the window's full-partition min is the same value;
-      //  - large's intermediate distinct is dropped: the small-star
-      //    window min is duplicate-insensitive and the final distinct
-      //    dedups (its partial aggregation thins duplicates map-side);
-      //  - the two star-output branches emit in ONE pass over withM via
-      //    a 1-or-2-element explode — the union form re-derived the
-      //    whole star join once per branch.
-      val large = sym
-        .withColumn("m",
-          least(col("u"), min(col("v")).over(Window.partitionBy("u"))))
-        .filter(col("v") > col("u"))
-        .select(col("v").as("hi"), col("m").as("lo"))
-      val withM = large
-        .withColumn("m", min(col("lo")).over(Window.partitionBy("hi")))
-      val next = withM
-        .select(explode(when(col("lo") =!= col("m"),
-            array(struct(col("hi"), col("m").as("lo")),
-              struct(col("lo").as("hi"), col("m").as("lo"))))
-          .otherwise(array(struct(col("hi"), col("m").as("lo"))))).as("e"))
-        .select(col("e.hi").as("hi"), col("e.lo").as("lo"))
-        .filter(col("hi") > col("lo"))
-        .distinct()
-        .materialized
-      // Symmetric difference in ONE counted aggregate instead of two
-      // except subtrees (each of which is itself a shuffle over both
-      // tables — 4 edge-table exchanges per round for a boolean): both
-      // sides are distinct sets, so tagging ±1 and summing per (hi, lo)
-      // leaves non-zero exactly on rows in one side only. Only the
-      // emptiness of the difference is consumed, so the stop condition
-      // is identical.
-      changed = next.select(col("hi"), col("lo"), lit(1L).as("w"))
-        .union(edges.select(col("hi"), col("lo"), lit(-1L).as("w")))
+    // Symmetric difference in ONE counted aggregate instead of two
+    // except subtrees (each of which is itself a shuffle over both
+    // tables — 4 edge-table exchanges per round for a boolean): both
+    // sides are distinct sets, so tagging ±1 and summing per (hi, lo)
+    // leaves non-zero exactly on rows in one side only. Only the
+    // emptiness of the difference is consumed, so the stop condition
+    // is identical.
+    val (edges, rounds) = Fixpoint(edges0.distinct().materialized)(
+      twoStarRound,
+      (prev, next) => next.select(col("hi"), col("lo"), lit(1L).as("w"))
+        .union(prev.select(col("hi"), col("lo"), lit(-1L).as("w")))
         .groupBy("hi", "lo").agg(sum(col("w")).as("s"))
-        .filter(col("s") =!= 0L).count()
-      edges = next
-      rounds += 1
-    }
+        .filter(col("s") =!= 0L))
     val lbl = edges.groupBy(col("hi").as("node")).agg(min(col("lo")).as("lbl"))
     val labels = nodes
       .join(lbl, nodes("doc_id") === lbl("node"), "left")
       .select(col("doc_id"),
         coalesce(col("lbl"), col("doc_id")).as("cluster"))
     (labels, rounds)
+  }
+
+  /** One large-star + small-star round over an (hi, lo) edge table.
+    * r16 round restructure — same SETS per round (so the same rounds and
+    * the same fixpoint; the oracle re-proves it), fewer passes:
+    *  - each half-star's min rides ONE window exchange on its key instead
+    *    of groupBy + join-back, which shuffled the edge table TWICE per
+    *    half-star (once into the partial agg, once into the join) — the
+    *    window's full-partition min is the same value;
+    *  - large's intermediate distinct is dropped: the small-star window
+    *    min is duplicate-insensitive and the final distinct dedups (its
+    *    partial aggregation thins duplicates map-side);
+    *  - the two star-output branches emit in ONE pass over withM via a
+    *    1-or-2-element explode — the union form re-derived the whole
+    *    star join once per branch. */
+  private def twoStarRound(edges: DataFrame): DataFrame = {
+    val sym = edges.select(col("hi").as("u"), col("lo").as("v"))
+      .union(edges.select(col("lo").as("u"), col("hi").as("v")))
+    val large = sym
+      .withColumn("m",
+        least(col("u"), min(col("v")).over(Window.partitionBy("u"))))
+      .filter(col("v") > col("u"))
+      .select(col("v").as("hi"), col("m").as("lo"))
+    val withM = large
+      .withColumn("m", min(col("lo")).over(Window.partitionBy("hi")))
+    withM
+      .select(explode(when(col("lo") =!= col("m"),
+          array(struct(col("hi"), col("m").as("lo")),
+            struct(col("lo").as("hi"), col("m").as("lo"))))
+        .otherwise(array(struct(col("hi"), col("m").as("lo"))))).as("e"))
+      .select(col("e.hi").as("hi"), col("e.lo").as("lo"))
+      .filter(col("hi") > col("lo"))
+      .distinct()
   }
 
   val q90 = Q(
@@ -1647,7 +1637,7 @@ object DedupQueries {
     *   2. pairwise MATCHING: exact token-set Jaccard ≥ 0.8 (integer
     *      compare) plus a length-ratio sanity gate (2·min ≥ max);
     *   3. CLUSTERING: connected components by min-label propagation
-    *      (the q24 loop, shared plan shape);
+    *      (q24's `jaccardComponentsOf`, over this query's pair table);
     *   4. SURVIVORSHIP: best record per cluster = longest text, ties by
     *      lowest id (a realistic "keep the richest record" rule, unlike
     *      q24's min-id convention).
@@ -1695,7 +1685,7 @@ object DedupQueries {
             col("ta.t2") === col("tb.t2"))
         .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("i"))
       val lens = docs.select(col("doc_id"), col("n_chars"))
-      val edges = inter
+      val pairs = inter
         .join(counts.as("ca"), col("doc_a") === col("ca.doc_id"))
         .join(counts.as("cb"), col("doc_b") === col("cb.doc_id"))
         .join(lens.as("la"), col("doc_a") === col("la.doc_id"))
@@ -1703,30 +1693,8 @@ object DedupQueries {
         .filter(col("i") * 5 >= (col("ca.n") + col("cb.n") - col("i")) * 4)
         .filter(least(col("la.n_chars"), col("lb.n_chars")) * 2 >=
           greatest(col("la.n_chars"), col("lb.n_chars")))
-        .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      val sym = edges
-        .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-        // pre-partitioned+sorted on the per-round join key — the
-        // jaccardComponentsOf invariant-table discipline (guide §2.4)
-        .repartition(col("dst")).sortWithinPartitions("dst")
-        .materialized
-      // edge-touched nodes only — the jaccardComponents discipline:
-      // isolated docs never change label, so they skip the loop and
-      // re-enter as singleton clusters in the left-join read-off
-      var labels = sym.select(col("src").as("node")).distinct()
-        .withColumn("lbl", col("node")).materialized
-      var changed = 1L
-      var rounds = 0
-      while (changed > 0 && rounds < 50) {
-        val next = labelPropRound(sym, labels).materialized
-        changed = next.filter(col("nxt") < col("lbl")).count()
-        labels = next.select(col("node"), col("nxt").as("lbl"))
-        rounds += 1
-      }
-      val comp = docs.select(col("doc_id"))
-        .join(labels.withColumnRenamed("node", "doc_id"), Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("lbl"), col("doc_id")).as("cluster"))
+        .select(col("doc_a"), col("doc_b"))
+      val comp = jaccardComponentsOf(docs, pairs)
       val sizes = comp.groupBy("cluster").agg(count(lit(1)).as("cluster_size"))
       val best = comp.join(lens, "doc_id")
         .withColumn("rn", row_number().over(
@@ -1905,13 +1873,8 @@ object DedupQueries {
       val seeded = docs.select(col("doc_id"),
         when(b < 10, 1).when(b < 20, -1).otherwise(0).as("seed"))
         .materialized // both rounds + output read it
-      val e0 = jaccardPairs(docs)
-        .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      val sym = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
-        // pre-partitioned+sorted on the per-round join key — the
-        // jaccardComponentsOf invariant-table discipline (guide §2.4)
-        .repartition(col("dst")).sortWithinPartitions("dst")
-        .materialized // two vote rounds
+      val sym = symmetricEdges(jaccardPairs(docs)
+        .select(col("doc_a").as("src"), col("doc_b").as("dst")))
       def round(labels: DataFrame): DataFrame = {
         val votes = sym.join(labels, col("dst") === col("doc_id"))
           .groupBy(col("src")).agg(sum(col("lbl")).as("vote"))

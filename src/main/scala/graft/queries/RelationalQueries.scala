@@ -602,13 +602,14 @@ object RelationalQueries {
     // and w = low 56 bits ≡ conv(substr(hx,3,14)): bit-identical to the
     // hex form (Round16LawsSpec pins it), with no 32-char hex render +
     // two substring re-parses per row (r16; the oracle keeps the hex
-    // spelling — it IS the definition).
+    // spelling — it IS the definition). Both derive from the digest
+    // Column itself, so no intermediate column name can collide with
+    // `group`.
     val h = graft.functions.GraftFunctions.md5_prefix64(key.cast("string"))
-    val hashed = df.select(col(group), h.as("h"))
-      .select(
-        col(group),
-        expr("shiftrightunsigned(h, 56)").cast("int").as("bucket"),
-        expr(s"h & ${(1L << 56) - 1}").as("w"))
+    val hashed = df.select(
+      col(group),
+      shiftrightunsigned(h, 56).cast("int").as("bucket"),
+      h.bitwiseAND(lit((1L << 56) - 1)).as("w"))
     bitlen56(hashed, "w")
       .withColumn("rho", lit(57) - col("bitlen"))
       .groupBy(col(group), col("bucket"))

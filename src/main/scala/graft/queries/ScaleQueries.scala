@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.functions.SplitMix64.{Mask29, P61, mix64}
 import graft.operators.Materialize.MaterializeOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -29,18 +30,6 @@ import Tables._
 object ScaleQueries {
 
   // ---- shared md5-derived hash machinery (same family as DedupQueries) ----
-
-  /** 2^61 - 1 (prime): permutation modulus; products of 29-bit constants
-    * with 32-bit md5 halves stay < 2^62 (no overflow in either engine). */
-  private val P61 = 2305843009213693951L
-
-  private def mix64(z0: Long): Long = {
-    var z = z0 + 0x9e3779b97f4a7c15L
-    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-    z ^ (z >>> 31)
-  }
-  private val Mask29 = (1L << 29) - 1
 
   /** Two 32-bit halves of the first 16 md5 hex chars of an md5 hex string
     * column (cross-engine base hash). */

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.functions.SplitMix64.mix64
 import graft.operators.Materialize.MaterializeOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -118,13 +119,6 @@ object SimilarityQueries {
   private val LshTables = 4
   private val LshPlanes = 8
   private val LshDim = 64
-
-  private def mix64(z0: Long): Long = {
-    var z = z0 + 0x9e3779b97f4a7c15L
-    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-    z ^ (z >>> 31)
-  }
 
   // Plane weights as INTEGER thousandths in [-500, 500), derived from a
   // splitmix64 stream over the flat (globalPlane × dim) index. Both the

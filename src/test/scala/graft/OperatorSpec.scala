@@ -255,6 +255,13 @@ class OperatorSpec extends SparkSpec {
       .collect().head.getAs[Long]("hll_parts")
     assert(math.abs(est - 100000.0) / 100000.0 < 0.26,
       s"deterministic HLL estimate $est too far from 100000")
+    // a group column named "h" gives the same registers: the digest never
+    // takes a column name of its own
+    val estH = graft.queries.RelationalQueries.hllEstimate(
+        spark.range(100000).select(col("id").as("k"), lit("A").as("h")),
+        col("k"), "h")
+      .collect().head.getAs[Long]("hll_parts")
+    assert(estH == est, s"group named h: $estH, group named g: $est")
     // And the declared query end-to-end on real data. sf0.001 has only 200
     // distinct parts per flag (< 2.5·m): the raw estimator is biased there
     // by design (no ln-based linear counting) — sanity-check the range.

@@ -66,8 +66,7 @@ class ShuffleAuditSpec extends SparkSpec {
       val (bytes, records) = Audit.measureShuffle(spark) {
         fn(spark, sf).write.format("noop").mode("overwrite").save()
       }
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      Harness.clearState(spark)
       if (records > 0) {
         val perRec = bytes.toDouble / records
         info(f"$name: $bytes bytes / $records records = $perRec%.1f B/rec")
@@ -87,8 +86,7 @@ class ShuffleAuditSpec extends SparkSpec {
       SparkEntry.queries("q21_ngram_jaccard")(spark, sf)
         .write.format("noop").mode("overwrite").save()
     }
-    spark.sharedState.cacheManager.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+    Harness.clearState(spark)
     assert(records > 0,
       "q21 metered zero shuffled records — the shuffle listener is broken " +
         "and every budget test above is passing vacuously")

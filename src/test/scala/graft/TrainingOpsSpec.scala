@@ -129,6 +129,21 @@ class TrainingOpsSpec extends SparkSpec {
     assert(rounds <= 12, s"path-256 took $rounds rounds — not logarithmic")
   }
 
+  test("min-label propagation raises at the round cap instead of returning a non-fixpoint") {
+    // a 60-node PATH needs 59 rounds for label 0 to reach the far end —
+    // past the cap, so the labelling after the last allowed round is not
+    // the fixpoint and must not be returned as if it were
+    import spark.implicits._
+    val n = 60L
+    assert(n - 1 > graft.operators.Fixpoint.MaxRounds)
+    val docs = (0L until n).toDF("doc_id")
+    val pairs = (1L until n).map(i => (i - 1, i)).toDF("doc_a", "doc_b")
+    val e = intercept[IllegalStateException](
+      DedupQueries.jaccardComponentsOf(docs, pairs))
+    assert(e.getMessage.contains(s"${graft.operators.Fixpoint.MaxRounds} rounds"),
+      e.getMessage)
+  }
+
   test("q91: matches a from-scratch binary-lifting recompute") {
     val d = docs
     val levels = d.map { case (id, _, text) =>
