@@ -18,9 +18,15 @@ import org.apache.spark.sql.DataFrame
   *    an answer never triggers a Spark job — the plan stays declarative and
   *    the row-count job only runs if the caller actually asks for status.
   *
-  * Unlike the reference (eager pandas frame), `data` is a lazy Spark plan:
-  * nothing executes until the caller runs an action, so at cluster scale the
-  * scan is partitioned/pushed-down by Catalyst rather than materialized here.
+  * Which `data` a file gets depends on its size
+  * ([[graft.sources.Formats.answers]]). A file of at most
+  * [[graft.sources.Formats.DriverDecodeBytes]] (4 MiB) is decoded in
+  * process, like the reference's eager pandas frame: `data` is a
+  * driver-local frame whose `collect()` runs no Spark job. Past that size,
+  * `data` is a lazy Spark plan: nothing executes until the caller runs an
+  * action, so at cluster scale the scan is partitioned/pushed-down by
+  * Catalyst rather than materialized here. Spark's native scans (parquet,
+  * JSON, JSON lines) are lazy plans at every size.
   */
 final case class ParserAnswer(
     data: DataFrame,

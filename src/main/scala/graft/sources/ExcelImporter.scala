@@ -3,14 +3,15 @@ package graft.sources
 import graft.model.ParserAnswer
 import org.apache.spark.sql.SparkSession
 
-/** The `.xlsx` driver road of the reference's `ImportExcel`
+/** The `.xlsx` Spark road of the reference's `ImportExcel`
   * (reference `main.py:239-265`): every sheet with `header=None,
   * index_col=None, dtype=str`, one answer per sheet in workbook order.
-  * The other Excel-family formats (`.xls`, `.xlsb`, `.ods`/`.odf`/`.odt`)
-  * are bounded and decode on the driver through their shared
-  * [[Formats]] decode.
+  * It serves workbooks past [[Formats.DriverDecodeBytes]] only; smaller
+  * ones answer the shared [[Formats]] decode in process. The other
+  * Excel-family formats (`.xls`, `.xlsb`, `.ods`/`.odf`/`.odt`) are
+  * bounded and decode on the driver at every size.
   *
-  * `.xlsx` is fully off-driver: sheet listing reads only zip
+  * On this road `.xlsx` is fully off-driver: sheet listing reads only zip
   * central-directory metadata (`workbook.xml` + rels, a few hundred bytes
   * — [[graft.sources.xlsx.XlsxParser.openSheetList]]); the per-sheet shape
   * probe (streaming width/count fold, no rows retained) runs as ONE SPARK

@@ -9,13 +9,15 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** One decoded sheet (worksheet, table, page group, record catalog):
-  * ragged all-string rows, the encoding the decode detected, and column
-  * names when the format declares them (SQLite) — positional otherwise. */
+  * ragged all-string rows, the encoding and separator the decode detected
+  * (text), and column names when the format declares them (SQLite) —
+  * positional otherwise. */
 final case class Sheet(
     name: String,
     rows: Seq[IndexedSeq[String]],
     encoding: Option[String] = None,
-    columns: Option[IndexedSeq[String]] = None) {
+    columns: Option[IndexedSeq[String]] = None,
+    separator: Option[String] = None) {
 
   /** Declared column count, else the widest row; 0 = an empty sheet,
     * which answers Failed under its own name on both roads. */
@@ -50,10 +52,15 @@ object Split {
   *    catalogues it as `Native` instead of decoding it, except under zstd,
   *    which Spark's scans cannot decode without Hadoop's native library.
   *  - `decode` is the pure sheet decode both roads share; no sheets means
-  *    the file answers Failed. It runs inside executor tasks.
-  *  - `driver` overrides the `AnyFile` projection of `decode` where the
-  *    driver road is a Spark plan (DSv2 reads, the text aggregate, native
-  *    scans, the PDF concat, the ranged SQLite job). */
+  *    the file answers Failed. It runs inside executor tasks, and on the
+  *    driver for every file of at most [[Formats.DriverDecodeBytes]].
+  *  - `driver` is the `AnyFile` road for files past
+  *    [[Formats.DriverDecodeBytes]] only: a Spark plan (DSv2 reads, the
+  *    text aggregate, the ranged SQLite job) that keeps a big file's cells
+  *    off the driver.
+  *  - `project` replaces the `AnyFile` projection of `decode` at every
+  *    size: Spark's native scans (their typed schema inference is the
+  *    contract) and the PDF concat. */
 final case class Format(
     engine: String,
     extensions: Seq[String],
@@ -62,7 +69,8 @@ final case class Format(
     split: Map[String, Split] = Map.empty,
     nativeScan: Boolean = false,
     decode: Route => Seq[Sheet] = _ => Nil,
-    driver: Option[(SparkSession, Route) => Seq[ParserAnswer]] = None)
+    driver: Option[(SparkSession, Route) => Seq[ParserAnswer]] = None,
+    project: Option[(SparkSession, Route) => Seq[ParserAnswer]] = None)
 
 /** A path routed to its format, with the compression suffix peeled off
   * (`""` when there is none). */
@@ -76,18 +84,22 @@ final case class Route(path: String, format: Format, codec: String) {
   * first answers one [[ParserAnswer]] per sheet, the second one
   * `CellRow` per sheet row.
   *
-  * | extension | engine | decode | driver road |
+  * One size rule ([[answers]]): a file of at most [[DriverDecodeBytes]]
+  * answers its decode in process, as driver-local frames whose `collect()`
+  * runs no Spark job; past that size a format with a Spark road takes it.
+  *
+  * | extension | engine | decode | driver road past 4 MiB |
   * |---|---|---|---|
   * | `.xlsx` | ImportExcel | zip + StAX | `graft-excel` DSv2, shape probe job |
   * | `.xls` `.xlsb` `.ods .odf .odt` | ImportExcel | BIFF8 / MS-XLSB / ODF | decode |
   * | `.xml` | ImportXML | SpreadsheetML | `graft-xmlss` DSv2 |
   * | `.txt .csv .ini` `.ant` `.tsv` | ImportText | sniffed / `~~@~~` / tab | text aggregate plan |
-  * | `.pdf` | ImportPDF | ISO 32000 tables | positional concat |
+  * | `.pdf` | ImportPDF | ISO 32000 tables | in-process positional concat, any size |
   * | `.html .htm` | ImportHTML | tables or main content | decode |
   * | `.docx` `.pptx` | ImportDocx / ImportPptx | tables or paragraphs | decode |
-  * | `.sqlite .sqlite3 .db` | ImportSqlite | one sheet per table | ranged job past 4 MiB |
+  * | `.sqlite .sqlite3 .db` | ImportSqlite | one sheet per table | ranged leaf-page job |
   * | `.warc` `.tar` | ImportWARC / ImportTar | record / member catalog | decode |
-  * | `.parquet` `.json` `.jsonl .ndjson` | ImportParquet / ImportJSON / ImportJSONL | Native | Spark scans |
+  * | `.parquet` `.json` `.jsonl .ndjson` | ImportParquet / ImportJSON / ImportJSONL | Native | Spark scans, any size |
   * | `.pk1 .pickle` | ImportPickle | documented gap: always Failed | — |
   *
   * Codecs: text, json, jsonl, warc and tar accept `.gz`, `.bz2`, `.zst`
@@ -103,6 +115,11 @@ final case class Route(path: String, format: Format, codec: String) {
   * (`main.py:161` bug); per SURVEY.md §7 `.pk1` and `.pickle` both route
   * to the gap. */
 object Formats {
+
+  /** Files at most this big decode in process: the per-job fixed cost of
+    * a Spark road outweighs the decode. Codec forms are held to it twice,
+    * on disk and decoded. */
+  final val DriverDecodeBytes: Int = 4 << 20
 
   private val Excel = "ImportExcel"
   private val Text = "ImportText"
@@ -150,7 +167,7 @@ object Formats {
   val Pdf: Format = Format("ImportPDF", Seq(".pdf"),
     decode = r => PdfImporter.tables(r.path).zipWithIndex
       .map { case (rows, i) => Sheet(s"PDF table $i", rows) },
-    driver = Some(PdfImporter.answers(_, _)))
+    project = Some(PdfImporter.answers(_, _)))
 
   val Html: Format = Format("ImportHTML", Seq(".html", ".htm"), "HTML main content",
     decode = r => {
@@ -225,22 +242,22 @@ object Formats {
 
   val Parquet: Format = Format("ImportParquet", Seq(".parquet"), "Parquet file content",
     nativeScan = true,
-    driver = Some((spark, r) => Seq(ParserAnswer(spark.read.parquet(r.path), r.path,
+    project = Some((spark, r) => Seq(ParserAnswer(spark.read.parquet(r.path), r.path,
       sheetName = Parquet.sheet, engine = Parquet.engine))))
 
   val Json: Format = Format("ImportJSON", Seq(".json"), "JSON file content", Streams,
     nativeScan = true,
     // zstd: the decoded document as one raw-JSON cell, behind the same
-    // first-structural-character gate as the driver road
+    // first-structural-character gate as the `AnyFile` road
     decode = r => JsonImporter.zstdDocument(r.path).toSeq
       .map(doc => Sheet(Json.sheet, Seq(IndexedSeq(new String(doc, StandardCharsets.UTF_8))))),
-    driver = Some(JsonImporter.answers))
+    project = Some(JsonImporter.answers))
 
   val JsonLines: Format = Format("ImportJSONL", Seq(".jsonl", ".ndjson"), "JSON lines content",
     Streams, split = Map(".zst" -> Split.JsonlZst, ".zstd" -> Split.JsonlZst),
     nativeScan = true,
     decode = r => JsonImporter.zstdLines(r.path).toSeq.map(Sheet(JsonLines.sheet, _)),
-    driver = Some(JsonImporter.linesAnswers))
+    project = Some(JsonImporter.linesAnswers))
 
   // Python pickle encodes arbitrary Python object graphs, not portable to
   // the JVM (`main.py:441-451`): the documented gap, always Failed
@@ -271,18 +288,29 @@ object Formats {
       .map(Route(path, _, codec))
   }
 
-  /** The `AnyFile` projection of one routed file. Never throws: a failed
-    * decode, a thrown exception or no sheets answer one Failed answer
-    * (`main.py:140-144` parity). */
+  /** The `AnyFile` projection of one routed file: the format's own
+    * projection where it has one, its Spark road past the size rule, else
+    * its decode in process. Never throws: a failed decode, a thrown
+    * exception or no sheets answer one Failed answer (`main.py:140-144`
+    * parity). */
   def answers(spark: SparkSession, r: Route): Seq[ParserAnswer] = {
     val f = r.format
     val out =
-      try f.driver match {
-        case Some(project) => project(spark, r)
-        case None => f.decode(r).map(answer(spark, r.path, f.engine, _))
+      try (f.project, f.driver) match {
+        case (Some(project), _) => project(spark, r)
+        case (None, Some(road)) if !inProcess(r) => road(spark, r)
+        case _ => f.decode(r).map(answer(spark, r.path, f.engine, _))
       } catch { case _: Exception => Nil }
     if (out.isEmpty) Seq(ParserAnswer.failed(spark, r.path, f.engine)) else out
   }
+
+  /** The size rule: a regular file of at most [[DriverDecodeBytes]] whose
+    * decoded stream, for a codec form, is no bigger either. The decoded
+    * read stops one byte past the cap, so a compression bomb never
+    * inflates on the driver. */
+  private def inProcess(r: Route): Boolean =
+    FsIO.isFile(r.path) && FsIO.len(r.path) <= DriverDecodeBytes &&
+      (r.codec.isEmpty || FsIO.readAllBytesDecodedCapped(r.path, DriverDecodeBytes).isDefined)
 
   /** Sheet → ParserAnswer: rows null-padded to the sheet's width, an
     * all-string schema (positional unless the format names its columns —
@@ -292,6 +320,7 @@ object Formats {
   def answer(spark: SparkSession, path: String, engine: String, s: Sheet): ParserAnswer =
     ParserAnswer(frame(spark, s), path, sheetName = s.name,
       encoding = s.encoding.getOrElse(ParserAnswer.EncodingDefault),
+      separator = s.separator.getOrElse(ParserAnswer.SeparatorDefault),
       engine = engine,
       knownRowCount = Some(if (s.width == 0) 0L else s.rows.length.toLong))
 

@@ -231,15 +231,16 @@ object FsIO {
     * drift between formats. */
   final val DecodedCapBytes: Int = 256 << 20
 
-  /** The whole decoded stream, or None past [[DecodedCapBytes]] (reads
-    * cap+1 so overflow is detected, never truncated into a
-    * silently-partial parse). */
-  def readAllBytesDecodedCapped(path: String): Option[Array[Byte]] = {
+  /** The whole decoded stream, or None past `cap` (reads cap+1 so
+    * overflow is detected, never truncated into a silently-partial parse).
+    * `AnyFile`'s size rule reads codec forms with the smaller
+    * [[Formats.DriverDecodeBytes]] cap. */
+  def readAllBytesDecodedCapped(path: String, cap: Int = DecodedCapBytes): Option[Array[Byte]] = {
     val in = openDecoded(path)
     val bytes =
-      try in.readNBytes(DecodedCapBytes + 1)
+      try in.readNBytes(cap + 1)
       finally in.close()
-    if (bytes.length > DecodedCapBytes) None else Some(bytes)
+    if (bytes.length > cap) None else Some(bytes)
   }
 
   /** [[readAllBytes]] through [[openDecoded]]. */

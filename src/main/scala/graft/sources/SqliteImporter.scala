@@ -23,16 +23,13 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   *
   * Scale road, xlsx-style: the driver reads ONLY the header and the
   * schema/interior pages (a few ranged reads) to enumerate each table's
-  * leaf pages; for databases past a small threshold the leaf decode runs
-  * as a Spark job, a task per leaf-page batch, each page fetched with its
-  * own ranged read — the database file is never copied, localized, or
-  * held whole in any heap. Small files decode on the driver to skip the
-  * job overhead.
+  * leaf pages; for databases past [[Formats.DriverDecodeBytes]] the leaf
+  * decode runs as a Spark job, a task per leaf-page batch, each page
+  * fetched with its own ranged read — the database file is never copied,
+  * localized, or held whole in any heap. Smaller files answer their
+  * decode in process (the registry's one size rule).
   */
 object SqliteImporter {
-
-  /** Databases at most this big decode from one byte image. */
-  private val DriverDecodeBytes = 4L << 20
 
   /** One sheet per user table, column names from the schema. Small files
     * (the common catalog case) decode from ONE whole read — per-page FS
@@ -42,33 +39,35 @@ object SqliteImporter {
     * compressed db hiding a larger image refuses). Anything else reads its
     * pages ranged, one page in the heap at a time. */
   def sheets(r: Route): Seq[Sheet] = {
-    val len = plainLen(r)
     val src: SqliteParser.Source =
       if (r.zstd)
         SqliteParser.BytesSource(FsIO.readAllBytesDecodedCapped(r.path).getOrElse(return Nil))
-      else if (len >= 512 && len <= DriverDecodeBytes)
-        SqliteParser.BytesSource(FsIO.readAllBytes(r.path))
-      else SqliteParser.PathSource(r.path)
+      else {
+        val len = try FsIO.len(r.path) catch { case _: Exception => -1L }
+        if (len >= 512 && len <= Formats.DriverDecodeBytes)
+          SqliteParser.BytesSource(FsIO.readAllBytes(r.path))
+        else SqliteParser.PathSource(r.path)
+      }
     val h = SqliteParser.header(src).getOrElse(return Nil)
     SqliteParser.tables(src, h).map(t =>
       try sheet(src, h, t, leaves(src, h, t))
       catch { case _: Exception => Sheet(t.name, Nil) })
   }
 
-  /** The driver road: the decode, except for plain databases past
-    * [[DriverDecodeBytes]], whose leaf decode runs as a Spark job — a task
-    * per leaf-page batch, each page fetched with its own ranged read; the
-    * driver reads only the header and the schema/interior pages, and the
-    * database file is never copied, localized, or held whole in any heap. */
+  /** The road for databases past [[Formats.DriverDecodeBytes]]: each
+    * table's leaf decode runs as a Spark job — a task per leaf-page batch,
+    * each page fetched with its own ranged read; the driver reads only the
+    * header and the schema/interior pages, and the database file is never
+    * copied, localized, or held whole in any heap. A zstd image has no
+    * ranged road: it decodes from its capped image. */
   def answers(spark: SparkSession, r: Route): Seq[ParserAnswer] = {
     val engine = r.format.engine
-    if (plainLen(r) <= DriverDecodeBytes)
-      return sheets(r).map(Formats.answer(spark, r.path, engine, _))
+    if (r.zstd) return sheets(r).map(Formats.answer(spark, r.path, engine, _))
     val src = SqliteParser.PathSource(r.path)
     val h = SqliteParser.header(src).getOrElse(return Nil)
     SqliteParser.tables(src, h).map { t =>
       try leaves(src, h, t) match {
-        case Some(pages) if pages.nonEmpty && h.nPages * h.pageSize.toLong > DriverDecodeBytes =>
+        case Some(pages) if pages.nonEmpty =>
           val schema = StructType(dedupNames(t.cols).map(StructField(_, StringType, nullable = true)))
           val path = r.path
           val fsProps = FsIO.captureProps(spark)
@@ -87,9 +86,6 @@ object SqliteImporter {
       }
     }
   }
-
-  private def plainLen(r: Route): Long =
-    if (r.zstd) -1L else try FsIO.len(r.path) catch { case _: Exception => -1L }
 
   /** The table's leaf pages; None = unreadable (WITHOUT ROWID, virtual,
     * corrupt tree). */

@@ -8,7 +8,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Plain-text / CSV importer — the reference's `ImportText`
-  * (reference `main.py:327-368`), re-expressed as Spark jobs.
+  * (reference `main.py:327-368`). Two roads, chosen by size
+  * ([[Formats.answers]]): a file of at most [[Formats.DriverDecodeBytes]]
+  * (decoded, for a codec form) answers [[sheets]] in process; a bigger one
+  * takes the Spark plan of [[answers]].
   *
   * Reference pipeline (3 full passes over the file, all in driver memory):
   *   1. whole-file read for encoding detection (`main.py:334`)
@@ -18,8 +21,8 @@ import org.apache.spark.sql.functions._
   *      `split(delimiter)` → per-cell `strip('"').strip("'")` → right-pad
   *      with `''` to max arity (`main.py:339-351`)
   *
-  * Spark shape: the two sniffs read one bounded driver-side prefix
-  * ([[Sniffers]]); arity+count is ONE Spark aggregate job over the
+  * Spark shape (past 4 MiB): the two sniffs read one bounded driver-side
+  * prefix ([[Sniffers]]); arity+count is ONE Spark aggregate job over the
   * partitioned file scan; the padded projection is a lazy, codegen-friendly
   * `select` — so a 1 TB text file parses with a single distributed pass plus
   * whatever action the caller runs, instead of four driver-memory passes.
@@ -38,10 +41,10 @@ object TextImporter {
   /** Fixed multi-char delimiter for `.ant` files (`main.py:153-154`). */
   val AntDelimiter = "~~@~~"
 
-  /** The driver road; `delimiter` = None sniffs it. */
+  /** The Spark road for files past [[Formats.DriverDecodeBytes]];
+    * `delimiter` = None sniffs it. */
   def answers(spark: SparkSession, r: Route, delimiter: Option[String]): Seq[ParserAnswer] = {
     val filePath = r.path
-    val encoding = Sniffers.detectEncoding(filePath).orNull
     val delim = delimiter.getOrElse(Sniffers.detectDelimiter(filePath))
 
     // `.zst`/`.zstd` ride the graft-zstd-lines DSv2 source (zstd-jni;
@@ -88,7 +91,7 @@ object TextImporter {
         data = projected,
         filePathRaw = filePath,
         sheetName = r.format.sheet,
-        encoding = if (encoding == null) "None" else encoding,
+        encoding = encodingOf(filePath),
         separator = delim,
         engine = r.format.engine,
         knownRowCount = Some(rowCount)
@@ -96,14 +99,17 @@ object TextImporter {
     )
   }
 
-  /** The one-task decode the bulk road runs: the reference's three-pass
-    * text pipeline over the decoded bytes — delimiter vote, line-end `\t`
-    * strip, literal-quote strip, right-pad with `''` to the file's max
-    * arity (`main.py:327-358` semantics; [[answers]] is the Spark-plan
-    * twin for files too large to decode in one task). */
+  /** The pure decode the bulk road runs in one task and `AnyFile` runs in
+    * process for files of at most [[Formats.DriverDecodeBytes]]: the
+    * reference's three-pass text pipeline over the decoded bytes —
+    * delimiter vote, line-end `\t` strip, literal-quote strip, right-pad
+    * with `''` to the file's max arity (`main.py:327-358` semantics;
+    * [[answers]] is the Spark-plan twin for bigger files). The sheet
+    * carries the sniffed encoding and the delimiter, as [[answers]]
+    * reports them. */
   def sheets(r: Route, delimiter: Option[String]): Seq[Sheet] = {
     val delim = delimiter.getOrElse(Sniffers.detectDelimiter(r.path))
-    // UTF-8 explicitly: the driver road reads through spark.read.text
+    // UTF-8 explicitly: the Spark road reads through spark.read.text
     // (always UTF-8); decoding with the executor JVM's default charset
     // would silently diverge on non-UTF-8 locales. Decoded read:
     // codec-suffixed files (x.csv.gz) inflate inline, the same bytes the
@@ -121,8 +127,13 @@ object TextImporter {
         .map(c => c.replaceAll("^\"+|\"+$", "").replaceAll("^'+|'+$", ""))
     }
     val arity = cells.map(_.length).max
-    Seq(Sheet(r.format.sheet, cells.map(_.padTo(arity, ""))))
+    Seq(Sheet(r.format.sheet, cells.map(_.padTo(arity, "")),
+      encoding = Some(encodingOf(r.path)), separator = Some(delim)))
   }
+
+  /** The sniffed encoding, `"None"` when there is none. */
+  private def encodingOf(path: String): String =
+    Sniffers.detectEncoding(path).getOrElse("None")
 
   /** All-string positional schema shared by the text-like regime readers. */
   def positionalSchema(n: Int): org.apache.spark.sql.types.StructType =

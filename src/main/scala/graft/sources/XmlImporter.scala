@@ -24,7 +24,11 @@ import org.apache.spark.sql.SparkSession
   *    first, then a recovery pass (escape bare `&`, drop control chars)
   *    before giving up.
   *
-  * Architecture: the driver runs ONE streaming shape pass (table
+  * Two roads, chosen by size ([[Formats.answers]]): a file of at most
+  * [[Formats.DriverDecodeBytes]] answers the shared [[Formats]] decode in
+  * process; [[answers]] is the road past that size.
+  *
+  * Big-file architecture: the driver runs ONE streaming shape pass (table
   * enumeration + per-table width/count, no row materialization —
   * [[graft.sources.xmlss.XmlSpreadsheetParser.tableShapes]]); the returned
   * DataFrames are served by the DSv2 source

@@ -78,6 +78,9 @@ class LargeSheetSpec extends SparkSpec {
   test("ExcelImporter.parse decodes sheets ONLY on executor task threads") {
     val p = tmpDir("bigsheet2").resolve("big2.xlsx").toString
     makeBigXlsx(p)
+    // past the size rule, or parse() would decode in process
+    assert(java.nio.file.Files.size(java.nio.file.Paths.get(p)) >
+      graft.sources.Formats.DriverDecodeBytes)
 
     graft.sources.xlsx.SheetOpenRecorder.drain() // discard earlier opens
     val answers = AnyFile.parse(spark, p)

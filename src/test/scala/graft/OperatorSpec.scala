@@ -1,39 +1,37 @@
 package graft
 
-import graft.operators.{Multimodal, UnionByArity}
+import graft.operators.Multimodal
+import graft.sources.PdfImporter
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 class OperatorSpec extends SparkSpec {
 
-  test("UnionByArity partitions by first frame's arity and concats positionally") {
-    import spark.implicits._
-    val a = Seq(("a", "b")).toDF("0", "1")
-    val b = Seq(("c", "d")).toDF("0", "1")
-    val odd = Seq(("x", "y", "z")).toDF("0", "1", "2")
-    val r = UnionByArity(Seq(a, odd, b))
+  test("PDF concat partitions by first table's arity and concats positionally") {
+    val a = Seq(IndexedSeq("a", "b"))
+    val b = Seq(IndexedSeq("c", "d"))
+    val odd = Seq(IndexedSeq("x", "y", "z"))
+    val r = PdfImporter.concat(spark, Seq(a, odd, b))
     assert(r.valid.get.collect().toSet == Set(Row("a", "b"), Row("c", "d")))
     assert(r.invalid.get.collect().toSeq == Seq(Row("x", "y", "z")))
   }
 
-  test("UnionByArity index column reproduces reset_index quirk") {
-    import spark.implicits._
-    val a = Seq(("a", "b"), ("c", "d")).toDF("0", "1")
-    val b = Seq(("e", "f")).toDF("0", "1")
-    val r = UnionByArity(Seq(a, b), withIndexColumn = true)
+  test("PDF concat index column reproduces reset_index quirk") {
+    val a = Seq(IndexedSeq("a", "b"), IndexedSeq("c", "d"))
+    val b = Seq(IndexedSeq("e", "f"))
+    val r = PdfImporter.concat(spark, Seq(a, b), withIndexColumn = true)
     val rows = r.valid.get.collect()
     assert(r.valid.get.columns.head == "index")
     assert(rows.map(_.getInt(0)).toSeq == Seq(0, 1, 2))
   }
 
-  test("UnionByArity null-pads mixed-arity invalid group (pandas concat parity)") {
-    import spark.implicits._
-    val first = Seq(("a", "b")).toDF("0", "1")
-    val w3 = Seq(("x", "y", "z")).toDF("0", "1", "2")
-    val w4 = Seq(("p", "q", "r", "s")).toDF("0", "1", "2", "3")
+  test("PDF concat null-pads mixed-arity invalid group (pandas concat parity)") {
+    val first = Seq(IndexedSeq("a", "b"))
+    val w3 = Seq(IndexedSeq("x", "y", "z"))
+    val w4 = Seq(IndexedSeq("p", "q", "r", "s"))
     // invalid group mixes widths 3 and 4 — must align positionally and
     // null-pad, not throw NUM_COLUMNS_MISMATCH
-    val r = UnionByArity(Seq(first, w3, w4))
+    val r = PdfImporter.concat(spark, Seq(first, w3, w4))
     assert(r.valid.get.collect().toSeq == Seq(Row("a", "b")))
     val inv = r.invalid.get
     assert(inv.columns.toSeq == Seq("0", "1", "2", "3"))
