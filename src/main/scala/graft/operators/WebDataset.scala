@@ -80,7 +80,7 @@ object WebDataset {
     * in the SAME task in a real pipeline — this operator deliberately
     * ships only coordinates and digests. */
   def catalog(spark: SparkSession, root: String, partitions: Int = 0): DataFrame = {
-    // distributed listing (BulkIngest.parseTreeDistributed's fan-out):
+    // distributed listing (BulkIngest.parseTreeAuto's fan-out):
     // the driver lists only the root's immediate children; each subtree
     // is swept INSIDE an executor task, so a million-shard corpus never
     // funnels its metadata walk through the driver

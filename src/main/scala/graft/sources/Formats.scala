@@ -25,19 +25,6 @@ final case class Sheet(
     columns.fold(if (rows.isEmpty) 0 else rows.map(_.length).max)(_.length)
 }
 
-/** The big-file split roads of `BulkIngest.parseTreeAuto`. */
-sealed trait Split
-object Split {
-  case object Xlsx extends Split
-  case object Xlsb extends Split
-  case object Xmlss extends Split
-  case object Ods extends Split
-  case object WarcGz extends Split
-  case object Tar extends Split
-  case object TarZst extends Split
-  case object JsonlZst extends Split
-}
-
 /** One registered format (the reference's per-extension `AbstractImporter`
   * strategy, reference `main.py:147-187`).
   *
@@ -46,18 +33,22 @@ object Split {
   *  - `codecs` are the compression suffixes accepted over the extension
   *    (`x.csv.gz` routes as `.csv` under `.gz`); any other compressed form
   *    is an unknown extension.
-  *  - `split` maps a codec (`""` = uncompressed) to the big-file road
-  *    `parseTreeAuto` sends files of that form through.
+  *  - `split` maps a codec (`""` = uncompressed) to the [[Splitter]] a
+  *    big file of that form splits through: `BulkIngest.parseTreeAuto`
+  *    past its `bigBytes`, and `AnyFile` past [[Formats.DriverDecodeBytes]],
+  *    both through the one split scan (`graft.operators.SplitScan`).
   *  - `nativeScan`: Spark reads the format itself, so the bulk road
   *    catalogues it as `Native` instead of decoding it, except under zstd,
   *    which Spark's scans cannot decode without Hadoop's native library.
   *  - `decode` is the pure sheet decode both roads share; no sheets means
   *    the file answers Failed. It runs inside executor tasks, and on the
   *    driver for every file of at most [[Formats.DriverDecodeBytes]].
-  *  - `driver` is the `AnyFile` road for files past
-  *    [[Formats.DriverDecodeBytes]] only: a Spark plan (DSv2 reads, the
-  *    text aggregate, the ranged SQLite job) that keeps a big file's cells
-  *    off the driver.
+  *  - `driver` is the `AnyFile` road past [[Formats.DriverDecodeBytes]]
+  *    for every form of the format: a Spark plan that keeps a big file's
+  *    cells off the driver (the text aggregate, the ranged SQLite job, or
+  *    the split scan for the workbook formats, whose one form splits). A
+  *    form with a splitter takes the split scan past the size rule even
+  *    where its format has no driver (`.warc.gz`, `.tar`, `.tar.zst`).
   *  - `project` replaces the `AnyFile` projection of `decode` at every
   *    size: Spark's native scans (their typed schema inference is the
   *    contract) and the PDF concat. */
@@ -66,7 +57,7 @@ final case class Format(
     extensions: Seq[String],
     sheet: String = "None",
     codecs: Set[String] = Set.empty,
-    split: Map[String, Split] = Map.empty,
+    split: Map[String, Splitter[_ <: SplitUnit]] = Map.empty,
     nativeScan: Boolean = false,
     decode: Route => Seq[Sheet] = _ => Nil,
     driver: Option[(SparkSession, Route) => Seq[ParserAnswer]] = None,
@@ -76,7 +67,7 @@ final case class Format(
   * (`""` when there is none). */
 final case class Route(path: String, format: Format, codec: String) {
   def zstd: Boolean = codec == ".zst" || codec == ".zstd"
-  def split: Option[Split] = format.split.get(codec)
+  def splitter: Option[Splitter[_ <: SplitUnit]] = format.split.get(codec)
 }
 
 /** The one extension → format table. `graft.AnyFile.parse` and
@@ -85,21 +76,25 @@ final case class Route(path: String, format: Format, codec: String) {
   * `CellRow` per sheet row.
   *
   * One size rule ([[answers]]): a file of at most [[DriverDecodeBytes]]
-  * answers its decode in process, as driver-local frames whose `collect()`
-  * runs no Spark job; past that size a format with a Spark road takes it.
+  * (a zip workbook also by its inflated entries) answers its decode in
+  * process, as driver-local frames whose `collect()` runs no Spark job;
+  * past that size a form with a splitter takes the split scan (an
+  * executor index job, then one DSv2 scan whose partitions are the
+  * units), and a format with another Spark road takes that.
   *
-  * | extension | engine | decode | driver road past 4 MiB |
+  * | extension | engine | decode | road past 4 MiB (split unit) |
   * |---|---|---|---|
-  * | `.xlsx` | ImportExcel | zip + StAX | `graft-excel` DSv2, shape probe job |
-  * | `.xls` `.xlsb` `.ods .odf .odt` | ImportExcel | BIFF8 / MS-XLSB / ODF | decode |
-  * | `.xml` | ImportXML | SpreadsheetML | `graft-xmlss` DSv2 |
+  * | `.xlsx` `.xlsb` `.ods .odf .odt` | ImportExcel | zip + StAX / MS-XLSB / ODF | split: one unit per sheet |
+  * | `.xls` | ImportExcel | BIFF8 | decode (BIFF8 caps a sheet's cells) |
+  * | `.xml` | ImportXML | SpreadsheetML | split: one unit per table |
   * | `.txt .csv .ini` `.ant` `.tsv` | ImportText | sniffed / `~~@~~` / tab | text aggregate plan |
   * | `.pdf` | ImportPDF | ISO 32000 tables | in-process positional concat, any size |
   * | `.html .htm` | ImportHTML | tables or main content | decode |
   * | `.docx` `.pptx` | ImportDocx / ImportPptx | tables or paragraphs | decode |
   * | `.sqlite .sqlite3 .db` | ImportSqlite | one sheet per table | ranged leaf-page job |
-  * | `.warc` `.tar` | ImportWARC / ImportTar | record / member catalog | decode |
-  * | `.parquet` `.json` `.jsonl .ndjson` | ImportParquet / ImportJSON / ImportJSONL | Native | Spark scans, any size |
+  * | `.warc` | ImportWARC | record catalog | `.warc.gz` split: gzip member batches; else decode |
+  * | `.tar` | ImportTar | member catalog | `.tar` split: member batches; `.tar.zst` split: declared-size frame batches; else decode |
+  * | `.parquet` `.json` `.jsonl .ndjson` | ImportParquet / ImportJSON / ImportJSONL | Native | Spark scans, any size (`.jsonl.zst` splits on the bulk road: frame batches) |
   * | `.pk1 .pickle` | ImportPickle | documented gap: always Failed | — |
   *
   * Codecs: text, json, jsonl, warc and tar accept `.gz`, `.bz2`, `.zst`
@@ -125,26 +120,70 @@ object Formats {
   private val Text = "ImportText"
   private val Streams = Set(".gz", ".bz2", ".zst", ".zstd")
 
-  val Xlsx: Format = Format(Excel, Seq(".xlsx"), split = Map("" -> Split.Xlsx),
+  /** The workbook formats' Spark road: the split scan, one unit per sheet. */
+  private val SplitRoad = Some((spark: SparkSession, r: Route) =>
+    graft.operators.SplitScan.answers(spark, r))
+
+  /** Zip workbooks: the sheet list from the central directory, each
+    * sheet's shape from a streaming probe. */
+  private def sheetSplitter(
+      list: String => Option[Seq[graft.sources.xlsx.XlsxParser.SheetRef]],
+      shape: (String, String) => (Int, Long),
+      rows: (String, String) => Iterator[Seq[String]]): Splitter[SheetUnit] =
+    Splitter[SheetUnit](
+      (p, _) => list(p).toSeq.flatten.map { s =>
+        val (width, count) = shape(p, s.target)
+        SheetUnit(s.name, s.target, width, count)
+      },
+      (p, u) => rows(p, u.part))
+
+  val Xlsx: Format = Format(Excel, Seq(".xlsx"),
+    split = Map("" -> {
+      import graft.sources.xlsx.{SheetRowIterator, XlsxParser}
+      sheetSplitter(XlsxParser.openSheetList, XlsxParser.sheetShape(_, _, IndexedSeq.empty),
+        (p, target) => new SheetRowIterator(p, target, XlsxParser.openWorkbook(p)
+          .getOrElse(throw new IllegalStateException(s"not an xlsx: $p")).shared))
+    }),
     decode = r => graft.sources.xlsx.XlsxParser.openWorkbook(r.path).toSeq
       .flatMap(wb => wb.sheets.map(s => Sheet(s.name,
         graft.sources.xlsx.XlsxParser.sheetRows(r.path, s.target, wb.shared)))),
-    driver = Some(ExcelImporter.xlsx))
+    driver = SplitRoad)
 
   val Xls: Format = Format(Excel, Seq(".xls"),
     decode = r => graft.sources.xls.XlsParser.parse(FsIO.readAllBytes(r.path))
       .toSeq.flatten.map(s => Sheet(s.name, s.rows)))
 
-  val Xlsb: Format = Format(Excel, Seq(".xlsb"), split = Map("" -> Split.Xlsb),
+  val Xlsb: Format = Format(Excel, Seq(".xlsb"),
+    split = Map("" -> {
+      import graft.sources.xlsb.{XlsbRowIterator, XlsbStream}
+      sheetSplitter(XlsbStream.openSheetList, XlsbStream.sheetShape,
+        (p, target) => new XlsbRowIterator(p, target, XlsbStream.loadSst(p)))
+    }),
     decode = r => graft.sources.xlsb.XlsbParser.parse(r.path)
-      .toSeq.flatten.map(s => Sheet(s.name, s.rows)))
+      .toSeq.flatten.map(s => Sheet(s.name, s.rows)),
+    driver = SplitRoad)
 
   val Ods: Format = Format(Excel, Seq(".ods", ".odf", ".odt"),
-    split = Map("" -> Split.Ods),
+    split = Map("" -> Splitter[SheetUnit](
+      (p, _) => graft.sources.ods.OdsStream.tableShapes(p)
+        .map(t => SheetUnit(t.name, t.index.toString, t.width, t.rows)),
+      (p, u) => new graft.sources.ods.OdsRowIterator(p, u.part.toInt))),
     decode = r => graft.sources.ods.OdsParser.sheets(r.path)
-      .toSeq.flatten.map { case (name, rows) => Sheet(name, rows) })
+      .toSeq.flatten.map { case (name, rows) => Sheet(name, rows) },
+    driver = SplitRoad)
 
-  val Xmlss: Format = Format("ImportXML", Seq(".xml"), split = Map("" -> Split.Xmlss),
+  // a table's part is "<mode>:<ordinal>": the probe's mode decides which
+  // tables the ordinal counts
+  val Xmlss: Format = Format("ImportXML", Seq(".xml"),
+    split = Map("" -> Splitter[SheetUnit](
+      (p, _) => {
+        val (mode, shapes) = graft.sources.xmlss.XmlSpreadsheetParser.tableShapes(p)
+        shapes.map(t => SheetUnit(t.sheetName, s"$mode:${t.index}", t.width, t.rows))
+      },
+      (p, u) => {
+        val Array(mode, idx) = u.part.split(":")
+        new graft.sources.xmlss.XmlssRowIterator(p, mode == "worksheet", idx.toInt)
+      })),
     decode = r => {
       import graft.sources.xmlss.{XmlSpreadsheetParser, XmlssRowIterator}
       val (mode, shapes) = XmlSpreadsheetParser.tableShapes(r.path)
@@ -154,7 +193,7 @@ object Formats {
         finally it.close()
       }
     },
-    driver = Some(XmlImporter.answers))
+    driver = SplitRoad)
 
   private def text(exts: Seq[String], delimiter: Option[String]): Format =
     Format(Text, exts, "Text file content", Streams,
@@ -214,8 +253,22 @@ object Formats {
     decode = SqliteImporter.sheets,
     driver = Some(SqliteImporter.answers))
 
+  // gzip has no random access: the index inflates and discards once,
+  // recording member ends; member boundaries are record boundaries (ISO
+  // 28500 annex), so firstMember + i is the whole-file record number on
+  // conforming archives. A member past Int.MaxValue compressed bytes
+  // cannot ride the ranged read and refuses rather than truncate.
   val Warc: Format = Format("ImportWARC", Seq(".warc"), "WARC records", Streams,
-    split = Map(".gz" -> Split.WarcGz),
+    split = Map(".gz" -> Splitter[RangeUnit](
+      (p, batchBytes) => graft.sources.warc.WarcReader.gzMemberBatches(p, batchBytes).map { b =>
+        if (b.length > Int.MaxValue) throw new java.io.IOException(s"$p: member past 2 GiB")
+        RangeUnit(Warc.sheet, 3, b.offset, b.length, Some(b.firstMember))
+      },
+      (p, u) => {
+        import graft.sources.warc.WarcReader
+        WarcReader.records(WarcReader.gunzipIfNeeded(FsIO.readRange(p, u.offset, u.length.toInt)))
+          .iterator.map(warcCells)
+      })),
     decode = r => {
       import graft.sources.warc.WarcReader
       // gunzipIfNeeded stays as the net for gzip bytes behind a plain name
@@ -229,9 +282,22 @@ object Formats {
     IndexedSeq(r.header("warc-target-uri").getOrElse(""),
       r.header("warc-type").getOrElse(""), r.payload.length.toString)
 
-  // one row per regular member: name, typeflag, size, payload md5
+  // one row per regular member: name, typeflag, size, payload md5. A
+  // plain shard indexes its header chain (payload skips seek); a .tar.zst
+  // one splits on declared frame sizes. Member ordinals are intrinsic, so
+  // firstMember + i is the whole-file numbering.
+  private val tarSplitter: Boolean => Splitter[RangeUnit] = zstd => Splitter[RangeUnit](
+    (p, batchBytes) => {
+      import graft.sources.tar.TarWalk
+      if (zstd) TarWalk.zstBatches(p, batchBytes).map(b =>
+        RangeUnit(Tar.sheet, 4, b.offset, b.length, Some(b.firstMember), b.skip, b.span))
+      else TarWalk.memberBatches(p, batchBytes).map(b =>
+        RangeUnit(Tar.sheet, 4, b.offset, b.length, Some(b.firstMember)))
+    },
+    (p, u) => graft.sources.tar.TarWalk.rangeCells(p, u.offset, u.length, zstd, u.skip, u.span)
+      .iterator)
   val Tar: Format = Format("ImportTar", Seq(".tar"), "TAR members", Streams,
-    split = Map("" -> Split.Tar, ".zst" -> Split.TarZst, ".zstd" -> Split.TarZst),
+    split = Map("" -> tarSplitter(false), ".zst" -> tarSplitter(true), ".zstd" -> tarSplitter(true)),
     decode = r => {
       import graft.sources.tar.TarWalk
       // openDecoded covers every codec form, the .tgz contraction included
@@ -253,8 +319,23 @@ object Formats {
       .map(doc => Sheet(Json.sheet, Seq(IndexedSeq(new String(doc, StandardCharsets.UTF_8))))),
     project = Some(JsonImporter.answers))
 
+  // zstd has no random access within a frame, but parallel compressors
+  // cut many independent frames: the index walks block headers only, and
+  // each frame batch owns the lines that start inside it. Lines carry no
+  // intrinsic number, so past the first batch the split road counts them.
+  private val jsonlSplitter = Splitter[RangeUnit](
+    (p, batchBytes) => {
+      import graft.sources.zstd.ZstdFrames
+      val batches = ZstdFrames.frameBatches(p, batchBytes)
+      if (batches.exists(_.length > Int.MaxValue))
+        throw new java.io.IOException(s"$p: frame batch past 2 GiB")
+      if (batches.length <= 1 || ZstdFrames.fewerThanTwoLines(p)) Nil
+      else batches.map(b => RangeUnit(JsonLines.sheet, 1, b.offset, b.length,
+        if (b.offset == 0L) Some(0L) else None))
+    },
+    (p, u) => graft.sources.zstd.ZstdFrames.ownedLines(p, u.offset, u.length.toInt))
   val JsonLines: Format = Format("ImportJSONL", Seq(".jsonl", ".ndjson"), "JSON lines content",
-    Streams, split = Map(".zst" -> Split.JsonlZst, ".zstd" -> Split.JsonlZst),
+    Streams, split = Map(".zst" -> jsonlSplitter, ".zstd" -> jsonlSplitter),
     nativeScan = true,
     decode = r => JsonImporter.zstdLines(r.path).toSeq.map(Sheet(JsonLines.sheet, _)),
     project = Some(JsonImporter.linesAnswers))
@@ -289,28 +370,45 @@ object Formats {
   }
 
   /** The `AnyFile` projection of one routed file: the format's own
-    * projection where it has one, its Spark road past the size rule, else
-    * its decode in process. Never throws: a failed decode, a thrown
-    * exception or no sheets answer one Failed answer (`main.py:140-144`
-    * parity). */
+    * projection where it has one; past the size rule the split scan where
+    * its form has a splitter, else its format's Spark road; else its
+    * decode in process. Never throws: a failed decode, a thrown exception
+    * or no sheets answer one Failed answer (`main.py:140-144` parity). */
   def answers(spark: SparkSession, r: Route): Seq[ParserAnswer] = {
     val f = r.format
+    val road = if (r.splitter.isDefined) SplitRoad else f.driver
     val out =
-      try (f.project, f.driver) match {
+      try (f.project, road) match {
         case (Some(project), _) => project(spark, r)
         case (None, Some(road)) if !inProcess(r) => road(spark, r)
-        case _ => f.decode(r).map(answer(spark, r.path, f.engine, _))
+        case _ => decoded(spark, r)
       } catch { case _: Exception => Nil }
     if (out.isEmpty) Seq(ParserAnswer.failed(spark, r.path, f.engine)) else out
   }
 
+  /** The format's decode, answered in process. */
+  def decoded(spark: SparkSession, r: Route): Seq[ParserAnswer] =
+    r.format.decode(r).map(answer(spark, r.path, r.format.engine, _))
+
   /** The size rule: a regular file of at most [[DriverDecodeBytes]] whose
-    * decoded stream, for a codec form, is no bigger either. The decoded
+    * decoded stream, for a codec form, is no bigger either; the decoded
     * read stops one byte past the cap, so a compression bomb never
-    * inflates on the driver. */
+    * inflates on the driver. A zip container that splits is held to the
+    * cap by the sum of its entries' inflated sizes too. */
   private def inProcess(r: Route): Boolean =
     FsIO.isFile(r.path) && FsIO.len(r.path) <= DriverDecodeBytes &&
-      (r.codec.isEmpty || FsIO.readAllBytesDecodedCapped(r.path, DriverDecodeBytes).isDefined)
+      (r.codec.isEmpty || FsIO.readAllBytesDecodedCapped(r.path, DriverDecodeBytes).isDefined) &&
+      (r.splitter.isEmpty || r.codec.nonEmpty || zipInflatesWithinCap(r.path))
+
+  /** A zip container's entries inflate to at most [[DriverDecodeBytes]];
+    * anything that is not a readable zip is left to its decode. */
+  private def zipInflatesWithinCap(path: String): Boolean = {
+    val head = FsIO.readHead(path, 4)
+    val zip = head.length == 4 && head(0) == 'P' && head(1) == 'K' && head(2) == 3 && head(3) == 4
+    !zip || (try graft.sources.zip.RangedZip.entries(path).valuesIterator
+      .map(_.uncompressedSize).sum <= DriverDecodeBytes
+    catch { case _: Exception => true })
+  }
 
   /** Sheet → ParserAnswer: rows null-padded to the sheet's width, an
     * all-string schema (positional unless the format names its columns —

@@ -7,7 +7,7 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 
 /** All parser byte access goes through this Hadoop `FileSystem` layer, so
   * every ingest path (driver importers, [[graft.operators.BulkIngest]]
-  * executor tasks, the DSv2 excel partitions) reads `hdfs://` / `s3a://`
+  * executor tasks, the split scan partitions) reads `hdfs://` / `s3a://`
   * URIs exactly like local paths. The reference reads whole local files
   * (`/root/reference/main.py:194`) — semantics are unchanged here; only
   * the byte SOURCE generalizes, which is what a 100 TB corpus on real

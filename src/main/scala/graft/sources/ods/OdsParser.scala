@@ -5,12 +5,12 @@ package graft.sources.ods
   * `content.xml` → `table:table` elements, with the ODS repeat-filler
   * discipline (empty-cell/row repeats capped, trailing filler trimmed —
   * real repeated data expands fully). Pure path→cells function, usable on
-  * the driver (ExcelImporter) or inside executor tasks (BulkIngest).
+  * the driver (`AnyFile`) or inside executor tasks (BulkIngest).
   *
   * Since round 7 the decode is STREAMED ([[OdsStream]]/[[OdsRowIterator]]
   * — StAX over a ranged-zip entry stream, one row in memory at a time),
   * shared by this materialized whole-file API, the file-grain BulkIngest
-  * road, and the `graft-ods` DSv2 source, so all roads decode
+  * road, and the split scan's per-table units, so all roads decode
   * byte-identically. */
 object OdsParser {
 

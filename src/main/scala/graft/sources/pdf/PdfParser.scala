@@ -619,8 +619,11 @@ object PdfParser {
     }
 
     /** Parse one COS value starting at the current token. Indirect refs
-      * (`N G R`) are recognized by lookahead over number-number-R. */
-    def parseValue(tok: Token): PObj = tok match {
+      * (`N G R`) are recognized by lookahead over number-number-R. Arrays
+      * and dictionaries nest at most [[MaxNesting]] deep; past that the
+      * value is refused with an exception, so a hostile file cannot
+      * exhaust the stack. */
+    def parseValue(tok: Token, depth: Int = 0): PObj = tok match {
       case TName(n)   => PName(n)
       case TString(b) => PString(b)
       case TNum(n) =>
@@ -634,13 +637,15 @@ object PdfParser {
             }
           case _ => pos = save; PNum(n)
         }
+      case TArrayOpen | TDictOpen if depth >= MaxNesting =>
+        throw new IllegalArgumentException(s"PDF value nested deeper than $MaxNesting")
       case TArrayOpen =>
         val items = Vector.newBuilder[PObj]
         var done = false
         while (!done) {
           next() match {
             case None | Some(TArrayClose) => done = true
-            case Some(t)                  => items += parseValue(t)
+            case Some(t)                  => items += parseValue(t, depth + 1)
           }
         }
         PArr(items.result())
@@ -653,7 +658,7 @@ object PdfParser {
             case Some(TName(k)) =>
               next() match {
                 case None    => done = true
-                case Some(t) => m += k -> parseValue(t)
+                case Some(t) => m += k -> parseValue(t, depth + 1)
               }
             case Some(_) => () // stray token inside dict — skip (lenient)
           }
@@ -666,6 +671,10 @@ object PdfParser {
       case TArrayClose | TDictClose => PNull
     }
   }
+
+  /** Array/dictionary nesting bound of [[Lexer.parseValue]]: far above
+    * any real document's. */
+  final val MaxNesting = 512
 
   sealed trait Token
   final case class TName(value: String) extends Token

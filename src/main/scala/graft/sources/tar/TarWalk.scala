@@ -127,8 +127,9 @@ object TarWalk {
   /** Groups consecutive member extents into ~`targetBatchBytes` batches.
     * The index walk itself is header-I/O only: payload skips seek on the
     * Hadoop stream, so a multi-GB shard indexes at metadata speed. Plain
-    * `.tar` only — a compressed shard has no random access and stays on
-    * the one-task file-grain road, the shape gzip forces everywhere. */
+    * `.tar` only: a `.tar.zst` splits through [[zstBatches]], and a gzip
+    * or bzip2 shard has no random access and stays on the one-task
+    * file-grain road. */
   def memberBatches(path: String, targetBatchBytes: Long): Seq[Batch] = {
     val in = graft.sources.FsIO.open(path)
     val extents = try memberExtents(in) finally in.close()
@@ -156,6 +157,70 @@ object TarWalk {
     }
     if (batchStart >= 0) out += Batch(batchStart, batchEnd - batchStart, batchFirst)
     out.result()
+  }
+
+  /** One ranged batch of a `.tar.zst` shard: the compressed frames
+    * `[offset, offset+length)` cover it; their decoded stream drops `skip`
+    * bytes and then holds the batch's whole members in `span` bytes. */
+  final case class ZstBatch(offset: Long, length: Long, skip: Long, span: Long, firstMember: Long)
+
+  /** Index pass for big `.tar.zst` shards: zstd frames with DECLARED
+    * decoded sizes (Frame_Content_Size — pzstd and one-shot compressors
+    * write it) admit decoded-offset ranged access. The frame table is
+    * walked without decompression and the header chain in one
+    * decode-and-discard pass; member extents group exactly as the plain
+    * road's, and each batch maps to its covering frames. Nil (the whole
+    * shard decodes in one task) when there is no offset arithmetic to
+    * split on or nothing to gain: a frame without a declared size
+    * (streaming compressors), one data frame, no members, one batch. A
+    * declared size that maps a member outside the decoded total is
+    * corruption and throws. */
+  def zstBatches(path: String, targetBatchBytes: Long): Seq[ZstBatch] = {
+    val frames = graft.sources.zstd.ZstdFrames.frames(path)
+    if (frames.exists(f => f.isData && f.decoded < 0) || frames.count(_.isData) <= 1)
+      return Nil
+    val in = new java.io.BufferedInputStream(
+      new com.github.luben.zstd.ZstdInputStream(graft.sources.FsIO.open(path)), 64 << 10)
+    val batches =
+      try groupExtents(memberExtents(in), targetBatchBytes) finally in.close()
+    if (batches.length <= 1) return Nil
+    val decStart = frames.scanLeft(0L)((a, f) => a + math.max(0L, f.decoded))
+    def frameAt(dOff: Long): Int = frames.indices.find(i =>
+      frames(i).isData && dOff >= decStart(i) && dOff < decStart(i) + frames(i).decoded)
+      .getOrElse(throw new java.io.IOException(
+        s"$path: decoded offset $dOff lies outside every declared frame"))
+    batches.map { b =>
+      val f0 = frameAt(b.offset)
+      val f1 = frameAt(b.offset + b.length - 1)
+      val cOff = frames(f0).offset
+      ZstBatch(cOff, frames(f1).offset + frames(f1).length - cOff,
+        b.offset - decStart(f0), b.length, b.firstMember)
+    }
+  }
+
+  /** The member cells of one ranged batch at `[offset, offset+length)`,
+    * streamed (a batch can hold one giant member: the task heap stays at
+    * the 64 KiB digest chunk). With `zstd` the range decodes, drops
+    * `skip` bytes and walks `span`. A range that ends before the index's
+    * promise is truncation, or a declared frame size that lied, and
+    * throws rather than answer a silently short catalog. */
+  def rangeCells(
+      path: String, offset: Long, length: Long,
+      zstd: Boolean, skip: Long, span: Long): Seq[Seq[String]] = {
+    val raw = new java.io.BufferedInputStream(graft.sources.FsIO.openAt(path, offset), 64 << 10)
+    try {
+      val in =
+        if (!zstd) raw
+        else new java.io.BufferedInputStream(
+          new com.github.luben.zstd.ZstdInputStream(new RangeStream(raw, length)), 64 << 10)
+      skipExactly(in, skip)
+      val range = new RangeStream(in, if (zstd) span else length)
+      val cells = walk(range)(memberCells)
+      if (range.remaining > 0)
+        throw new EOFException(
+          s"$path: ranged tar batch at $offset ended ${range.remaining} bytes early")
+      cells
+    } finally raw.close()
   }
 
   /** Core scan. `f(entry, boundedPayload, extentStart, extentEnd)` per

@@ -23,7 +23,7 @@ import scala.collection.mutable
   * below reads fields byte-at-a-time across segment boundaries and picks
   * up the fresh flags byte when a string's characters cross one.
   *
-  * Driver-side decode is deliberate here (unlike the DSv2 xlsx source):
+  * Driver-side decode is deliberate here (unlike the split xlsx road):
   * the format caps sheets at 65536×256, so there is no large-sheet scale
   * path to preserve.
   */

@@ -17,7 +17,7 @@ package graft.sources.xlsb
   * Since round 7 the decode itself is STREAMED ([[XlsbStream]] /
   * [[XlsbRowIterator]] — ranged zip reads, one row in memory at a time),
   * shared by this materialized whole-file API, the file-grain BulkIngest
-  * road, and the `graft-xlsb` DSv2 source, so all roads decode
+  * road, and the split scan's per-sheet units, so all roads decode
   * byte-identically. */
 object XlsbParser {
 
@@ -116,7 +116,7 @@ object XlsbParser {
   }
 
   /** Materialized whole-workbook decode (file-grain BulkIngest road and
-    * the driver importer) — the same streaming iterator the DSv2 source
+    * the driver importer) — the same streaming iterator the split scan
     * uses, collected. A sheet whose part is missing yields empty rows; a
     * structurally broken container yields None. */
   def parse(path: String): Option[Seq[XlsbSheet]] =

@@ -7,19 +7,20 @@ import scala.collection.mutable.ArrayBuffer
 import graft.sources.xlsx.XlsxParser.SheetRef
 import graft.sources.zip.RangedZip
 
-/** Streaming `.xlsb` access — the DSv2 big-workbook road for binary OOXML
+/** Streaming `.xlsb` access — the split road's big-workbook units for binary OOXML
   * (VERDICT r6 #2). [[XlsbParser]] documents the record layouts ([MS-XLSB]);
   * this layer re-expresses the same decode as bounded streams so a
   * multi-GB workbook never pins one task's memory to the whole file:
   *
   *  - [[XlsbStream.openSheetList]] reads the zip central directory plus
   *    `xl/workbook.bin` + its rels (a few KiB) via [[RangedZip]] — the
-  *    driver-side metadata probe;
+  *    index's metadata probe;
   *  - [[XlsbStream.loadSst]] streams `xl/sharedStrings.bin` record by
   *    record (the one table a decode task retains);
   *  - [[XlsbRowIterator]] walks one sheet part's records holding ONE row
-  *    at a time, with DSv2 column pruning reaching the decode (pruned
-  *    cells keep their position as nulls, skipping string/SST work).
+  *    at a time; a column subset skips the decode of the rest (they keep
+  *    their position as nulls, skipping string/SST work — the shape
+  *    probe decodes none).
   *
   * Containers the ranged reader rejects fall back to the localize+ZipFile
   * road, same policy as the xlsx twin. Row semantics are pinned to
@@ -135,8 +136,8 @@ object XlsbStream {
   }
 }
 
-/** One-row-at-a-time decode of an `.xlsb` sheet part. `needed` = DSv2
-  * pruned column ordinals: cells outside the set keep their position as
+/** One-row-at-a-time decode of an `.xlsb` sheet part. `needed` = the
+  * column ordinals to decode (default all): cells outside the set keep their position as
   * nulls without value decode (no SST lookup, no UTF-16 materialization).
   * `decodedCells` counts actual decodes so tests can pin the claim. */
 final class XlsbRowIterator(

@@ -8,17 +8,18 @@ import graft.sources.StaxUtil
 import scala.collection.mutable.ArrayBuffer
 import scala.xml.XML
 
-/** Pure OOXML (`.xlsx`) workbook parser — no Spark dependencies, so the
-  * same code runs on the DRIVER (sheet enumeration, shape probing in
-  * [[graft.sources.ExcelImporter]]) and on EXECUTORS (row decoding inside
-  * the DSv2 [[ExcelDataSource]] partitions).
+/** Pure OOXML (`.xlsx`) workbook parser — the reference's `ImportExcel`
+  * (`main.py:239-265`: every sheet, `header=None, index_col=None,
+  * dtype=str`, workbook order). No Spark dependencies, so the same code
+  * runs in process and inside executor tasks (the split scan's sheet
+  * index and per-sheet units).
   *
   * Parses the three container parts pandas' openpyxl engine reads
   * (reference `main.py:249-259` semantics): `xl/workbook.xml` for sheet
   * order, the workbook rels for sheet targets, `xl/sharedStrings.xml`, and
-  * per-sheet `sheetData`. Cell semantics (gap cells → null, raw stored
-  * numerics, `True`/`False` booleans, multi-run shared strings) are
-  * documented on [[graft.sources.ExcelImporter]].
+  * per-sheet `sheetData`. Cell semantics: gap cells → null, numeric cells
+  * keep the RAW stored string (`dtype=str` parity, SURVEY.md §7),
+  * `True`/`False` booleans, multi-run shared strings joined.
   *
   * Sheet XML and the shared-string table are decoded with a streaming StAX
   * cursor, NOT a DOM: [[SheetRowIterator]] holds one row at a time and
@@ -167,7 +168,7 @@ object XlsxParser {
     } finally it.close()
   }
 
-  /** Materialized decode — small sheets and tests; the DSv2 reader streams
+  /** Materialized decode — small sheets and tests; the split scan streams
     * via [[SheetRowIterator]] instead. */
   def sheetRows(
       path: String,
@@ -213,7 +214,7 @@ object SheetOpenRecorder {
   * Close-safe: closes itself at exhaustion; callers should also `close()`
   * for the early-termination path.
   *
-  * `needed` = pushed-down column ordinals (DSv2 pruning): cells outside
+  * `needed` = the column ordinals to decode (default all): cells outside
   * the set are emitted as position-preserving nulls WITHOUT decoding —
   * no text accumulation, no shared-string lookup, no boolean/number
   * rendering. The XML walk still scans the sheet (the format is not

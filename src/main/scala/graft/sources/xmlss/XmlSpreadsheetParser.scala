@@ -8,14 +8,22 @@ import graft.sources.StaxUtil
 
 import scala.collection.mutable.ArrayBuffer
 
-/** Pure MS SpreadsheetML parser — no Spark dependencies, shared between the
-  * driver-side [[graft.sources.XmlImporter]] (sheet enumeration, shape
-  * probing) and the executor-side DSv2 readers ([[XmlSpreadsheetDataSource]]).
+/** Pure MS SpreadsheetML parser — the reference's `ImportXML` — with no
+  * Spark dependencies, so it runs in process and inside executor tasks
+  * (the split scan's table index and per-table units).
   *
-  * Semantics per reference `main.py:268-324` (documented in detail on
-  * XmlImporter): namespace-filtered Worksheet/Table/Row/Data walk, rows with
-  * zero Data cells skipped, table-without-worksheet fallback named
-  * `"Not defined"`, lenient recovery on malformed input.
+  * Semantics per reference `main.py:268-324`:
+  *  - namespace `urn:schemas-microsoft-com:office:spreadsheet`; `Worksheet`
+  *    nodes anywhere in the tree (`.//` search, `main.py:280`), each
+  *    worksheet's `Table` descendants one frame each (`main.py:284-291`).
+  *  - fallback when no `Worksheet` exists: `Table` nodes under the root,
+  *    sheet name `"Not defined"` (`main.py:293-304`); neither → a single
+  *    Failed answer (`main.py:305-307`).
+  *  - a `Row` contributes a frame row only if it has ≥1 `Data` descendant
+  *    (`main.py:316-323`); ragged rows null-pad to the widest row, columns
+  *    positional and all-string; empty `Data` elements become null.
+  *  - lenient parsing (`recover=True` parity, `main.py:276`): strict parse
+  *    first, then a recovery pass (escape bare `&`, drop control chars).
   *
   * Streaming design: both the shape probe ([[tableShapes]] — one pass over
   * the whole document, O(1) row memory) and the row decode

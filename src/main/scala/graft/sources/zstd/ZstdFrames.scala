@@ -164,4 +164,85 @@ object ZstdFrames {
       else throw new EOFException("zstd index: truncated")
     }
   }
+  /** Fewer than two newlines in the whole decoded stream: at most two
+    * lines, which one task parses as cheaply as any split (and only the
+    * whole-file decode answers the empty and lone-newline shapes). Stops
+    * decoding at the second newline. */
+  def fewerThanTwoLines(path: String): Boolean = {
+    val in = new com.github.luben.zstd.ZstdInputStream(FsIO.open(path))
+    try {
+      val buf = new Array[Byte](64 << 10)
+      var nl = 0
+      var k = in.read(buf)
+      while (k > 0 && nl < 2) {
+        var i = 0
+        while (i < k) { if (buf(i) == '\n') nl += 1; i += 1 }
+        k = in.read(buf)
+      }
+      nl < 2
+    } finally in.close()
+  }
+
+  /** One frame batch's OWNED lines of a `.jsonl.zst` stream: line starts
+    * in (S, E] of the decoded stream, batch 0 also owning start 0 — Hadoop
+    * text-split semantics. A non-first batch discards up to its first
+    * in-range newline (that prefix belongs to the previous batch), and a
+    * line spanning the batch end is finished from a continuation decode of
+    * the following frames; at file end an empty pending start is no row. */
+  def ownedLines(path: String, off: Long, len: Int): Iterator[IndexedSeq[String]] = {
+    val isFirst = off == 0L
+    val isLast = off + len >= FsIO.len(path)
+    // 64 KiB chunked scan splitting on the '\n' BYTE (unambiguous in
+    // UTF-8): a per-byte read() loop costs tens of millions of virtual
+    // calls per batch
+    val own = new com.github.luben.zstd.ZstdInputStream(
+      new java.io.ByteArrayInputStream(FsIO.readRange(path, off, len)))
+    val rows = Seq.newBuilder[IndexedSeq[String]]
+    val acc = new java.io.ByteArrayOutputStream()
+    def row(): Unit = {
+      rows += IndexedSeq(new String(acc.toByteArray, java.nio.charset.StandardCharsets.UTF_8))
+      acc.reset()
+    }
+    try {
+      val chunk = new Array[Byte](64 << 10)
+      // still discarding the previous batch's tail (up to the first own
+      // newline); a batch wholly inside one line owns nothing
+      var skipping = !isFirst
+      var sawOwnNl = false
+      var n = own.read(chunk)
+      while (n > 0) {
+        var pos = 0
+        while (pos < n) {
+          var k = pos
+          while (k < n && chunk(k) != '\n') k += 1
+          if (k < n) {
+            if (skipping) skipping = false
+            else { acc.write(chunk, pos, k - pos); row() }
+            sawOwnNl = true
+            pos = k + 1
+          } else {
+            if (!skipping) acc.write(chunk, pos, n - pos)
+            pos = n
+          }
+        }
+        n = own.read(chunk)
+      }
+      if (!skipping || sawOwnNl) {
+        // own range exhausted with a pending OWNED start: finish it from
+        // the continuation frames
+        var sawCont = false
+        if (!isLast) {
+          val cont = new BufferedInputStream(
+            new com.github.luben.zstd.ZstdInputStream(FsIO.openAt(path, off + len.toLong)), 64 << 10)
+          try {
+            var c = cont.read()
+            while (c >= 0 && c != '\n') { acc.write(c); sawCont = true; c = cont.read() }
+            if (c == '\n') sawCont = true
+          } finally cont.close()
+        }
+        if (acc.size() > 0 || sawCont) row()
+      }
+    } finally own.close()
+    rows.result().iterator
+  }
 }

@@ -235,17 +235,6 @@ class BulkIngestSpec extends SparkSpec {
     assert(df.rdd.getNumPartitions == 3)
   }
 
-  test("DSv2 metadata columns: _sheet and _row_idx surface only when selected") {
-    val dir = makeTree()
-    val p = dir.resolve("book.xlsx").toString
-    val df = spark.read.format("graft-excel").load(p)
-    assert(!df.columns.contains("_sheet")) // hidden by default
-    val withMeta = df.select(col("_sheet"), col("_row_idx"), col("0"), col("1"))
-      .collect().map(r => (r.getString(0), r.getLong(1),
-        r.getString(2), r.getString(3)))
-    assert(withMeta.toSeq == Seq(("P1", 0L, "hi", "7"), ("P1", 1L, null, "8")))
-  }
-
   test("parseTreeAuto routes big workbooks through DSv2, cell-identical to parseTree") {
     val dir = makeTree()
     def key(df: org.apache.spark.sql.DataFrame) =

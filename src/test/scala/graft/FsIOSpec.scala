@@ -193,7 +193,7 @@ class FsIOSpec extends SparkSpec {
     assert(local.exists(t => t._1 == "broken.xlsx" && t._4 == "Failed"))
   }
 
-  test("parseTreeDistributed (subtree fan-out listing) ≡ parseTree") {
+  test("parseTreeAuto (subtree fan-out listing) ≡ parseTree") {
     val dir = tmpDir("fsio_fan")
     val s1 = dir.resolve("s1"); val s2 = dir.resolve("s2/deep")
     java.nio.file.Files.createDirectories(s1)
@@ -204,7 +204,7 @@ class FsIOSpec extends SparkSpec {
     def key(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (FsIO.fileName(r.getString(0)), r.getLong(4),
         r.getSeq[String](5).toList)).sortBy(t => (t._1, t._2)).toSeq
-    assert(key(BulkIngest.parseTreeDistributed(spark, dir.toString)) ==
+    assert(key(BulkIngest.parseTreeAuto(spark, dir.toString)) ==
       key(BulkIngest.parseTree(spark, dir.toString)))
   }
 
@@ -236,13 +236,13 @@ class FsIOSpec extends SparkSpec {
     assert(AnyFile.parse(spark, "").head.parseInfo == "Failed")
   }
 
-  test("DSv2 graft-excel reads a file: URI") {
+  test("the split road reads a file: URI") {
     val dir = tmpDir("fsio_dsv2")
     val p = dir.resolve("book.xlsx").toString
     writeXlsx(p)
     def rows(path: String) =
-      spark.read.format("graft-excel").load(path)
-        .collect().map(_.toSeq.map(v => if (v == null) null else v.toString))
+      graft.operators.SplitScan.answers(spark, graft.sources.Formats.route(path).get)
+        .head.data.collect().map(_.toSeq.map(v => if (v == null) null else v.toString))
         .toSeq
     assert(rows("file://" + p) == rows(p))
     assert(rows(p) == Seq(Seq("hi", "7"), Seq(null, "8")))

@@ -63,8 +63,9 @@ class LargeSheetSpec extends SparkSpec {
     assert(width == Cols)
     assert(rowCount == Rows.toLong)
 
-    // executor-side streamed decode through the public read path
-    val df = spark.read.format("graft-excel").load(p)
+    // executor-side streamed decode through the public read path (past
+    // the size rule: the split road)
+    val df = AnyFile.parse(spark, p).head.data
     assert(df.columns.length == Cols)
     assert(df.count() == Rows.toLong)
     // spot-check an interior row survives the stream intact
@@ -123,17 +124,5 @@ class LargeSheetSpec extends SparkSpec {
       assert(it.decodedCells == Rows.toLong,
         s"expected exactly one decode per row, got ${it.decodedCells}")
     } finally it.close()
-
-    // plan-level proof: a projection through the DSv2 source prunes the
-    // scan schema (the physical scan reads only the selected ordinal)
-    val pruned = spark.read.format("graft-excel").load(p).select("2")
-    val scanSchemas = pruned.queryExecution.executedPlan.collect {
-      case s: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-        s.scan.readSchema().fieldNames.toSeq
-    }
-    assert(scanSchemas == Seq(Seq("2")),
-      s"scan not pruned: $scanSchemas\n" +
-        pruned.queryExecution.executedPlan.toString.take(1500))
-    assert(pruned.count() == Rows.toLong)
   }
 }

@@ -3,12 +3,10 @@ package graft
 import java.io.FileOutputStream
 import java.util.zip.{ZipEntry, ZipOutputStream}
 
-import org.apache.spark.sql.Row
-import org.apache.spark.sql.functions.col
 
-/** The `graft-ods` DSv2 source + streaming ODS decode: sheet-per-partition
-  * executor reads identical to the materialized OdsParser road, repeat
-  * discipline preserved streaming, spill-free on remote schemes. */
+/** Streaming ODS decode and the split road: table-per-partition executor
+  * reads identical to the materialized OdsParser road, repeat discipline
+  * preserved streaming, spill-free on remote schemes. */
 class OdsDataSourceSpec extends SparkSpec {
 
   private val tableNs = "urn:oasis:names:tc:opendocument:xmlns:table:1.0"
@@ -72,26 +70,6 @@ class OdsDataSourceSpec extends SparkSpec {
     assert(streamed == first)
   }
 
-  test("graft-ods DSv2: inferred schema, rows, table option, metadata") {
-    val dir = tmpDir("ods_dsv2")
-    val p = dir.resolve("t.ods").toString
-    writeOds(p)
-    val df = spark.read.format("graft-ods").load(p)
-    assert(df.columns.toSeq == Seq("0", "1", "2"))
-    val rows = df.collect()
-    assert(rows.length == 5)
-    assert(rows(0) == Row("a", "7", "True"))
-    assert(rows(1) == Row("r", "r", null)) // padded to schema width
-    assert(rows(3) == Row(null, null, null)) // interior empty row
-    assert(rows(4) == Row(null, "tail", null))
-    val second = spark.read.format("graft-ods").option("table", "1").load(p)
-    assert(second.collect().toSeq == Seq(Row("z")))
-    val meta = spark.read.format("graft-ods").load(p)
-      .select(col("_sheet"), col("_row_idx"), col("0")).collect()
-    assert(meta.forall(_.getString(0) == "First"))
-    assert(meta.map(_.getLong(1)).toSeq == Seq(0L, 1L, 2L, 3L, 4L))
-  }
-
   test("ods DSv2 decodes spill-free on a remote scheme; planner routes big ods") {
     spark.sparkContext.hadoopConfiguration
       .set("fs.spill.impl", classOf[SpillFs].getName)
@@ -100,8 +78,11 @@ class OdsDataSourceSpec extends SparkSpec {
     val p = dir.resolve("t.ods").toString
     writeOds(p)
     val before = graft.sources.FsIO.spillCount.get()
-    val local = spark.read.format("graft-ods").load(p).collect().toSeq
-    val remote = spark.read.format("graft-ods").load("spill:" + p)
+    // the split road's first table, as AnyFile answers a big ods
+    def read(path: String) = graft.operators.SplitScan
+      .answers(spark, graft.sources.Formats.route(path).get).head.data
+    val local = read(p).collect().toSeq
+    val remote = read("spill:" + p)
       .collect().toSeq
     assert(remote == local)
     assert(graft.sources.FsIO.spillCount.get() == before,
