@@ -135,7 +135,7 @@ object Formats {
         val (width, count) = shape(p, s.target)
         SheetUnit(s.name, s.target, width, count)
       },
-      (p, u) => rows(p, u.part))
+      (p, u) => rows(p, u.part), zip = true)
 
   val Xlsx: Format = Format(Excel, Seq(".xlsx"),
     split = Map("" -> {
@@ -167,7 +167,7 @@ object Formats {
     split = Map("" -> Splitter[SheetUnit](
       (p, _) => graft.sources.ods.OdsStream.tableShapes(p)
         .map(t => SheetUnit(t.name, t.index.toString, t.width, t.rows)),
-      (p, u) => new graft.sources.ods.OdsRowIterator(p, u.part.toInt))),
+      (p, u) => new graft.sources.ods.OdsRowIterator(p, u.part.toInt), zip = true)),
     decode = r => graft.sources.ods.OdsParser.sheets(r.path)
       .toSeq.flatten.map { case (name, rows) => Sheet(name, rows) },
     driver = SplitRoad)
@@ -395,20 +395,19 @@ object Formats {
     * read stops one byte past the cap, so a compression bomb never
     * inflates on the driver. A zip container that splits is held to the
     * cap by the sum of its entries' inflated sizes too. */
-  private def inProcess(r: Route): Boolean =
-    FsIO.isFile(r.path) && FsIO.len(r.path) <= DriverDecodeBytes &&
+  private def inProcess(r: Route): Boolean = FsIO.isFile(r.path) && {
+    val len = FsIO.len(r.path)
+    len <= DriverDecodeBytes &&
       (r.codec.isEmpty || FsIO.readAllBytesDecodedCapped(r.path, DriverDecodeBytes).isDefined) &&
-      (r.splitter.isEmpty || r.codec.nonEmpty || zipInflatesWithinCap(r.path))
+      r.splitter.forall(s => !s.zip || zipInflatesWithinCap(r.path, len))
+  }
 
   /** A zip container's entries inflate to at most [[DriverDecodeBytes]];
     * anything that is not a readable zip is left to its decode. */
-  private def zipInflatesWithinCap(path: String): Boolean = {
-    val head = FsIO.readHead(path, 4)
-    val zip = head.length == 4 && head(0) == 'P' && head(1) == 'K' && head(2) == 3 && head(3) == 4
-    !zip || (try graft.sources.zip.RangedZip.entries(path).valuesIterator
+  private def zipInflatesWithinCap(path: String, len: Long): Boolean =
+    try graft.sources.zip.RangedZip.entries(path, len).valuesIterator
       .map(_.uncompressedSize).sum <= DriverDecodeBytes
-    catch { case _: Exception => true })
-  }
+    catch { case _: Exception => true }
 
   /** Sheet → ParserAnswer: rows null-padded to the sheet's width, an
     * all-string schema (positional unless the format names its columns —

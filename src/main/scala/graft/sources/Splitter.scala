@@ -39,10 +39,13 @@ final case class RangeUnit(
   * file's units, given a target of compressed bytes per ranged unit; it
   * runs inside an executor task. An index that throws answers one Failed
   * row; one that lists no units sends the whole file to the file-grain
-  * decode. `rows` streams one unit's rows. */
+  * decode. `rows` streams one unit's rows. `zip`: the file is a zip
+  * container, so `AnyFile`'s size rule also sums its entries' inflated
+  * sizes. */
 final case class Splitter[U <: SplitUnit](
     index: (String, Long) => Seq[U],
-    rows: (String, U) => Iterator[Seq[String]]) {
+    rows: (String, U) => Iterator[Seq[String]],
+    zip: Boolean = false) {
   def read(path: String, u: SplitUnit): Iterator[Seq[String]] =
     rows(path, u.asInstanceOf[U])
 }
