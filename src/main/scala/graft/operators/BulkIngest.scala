@@ -79,8 +79,9 @@ object BulkIngest {
     * A file at or above `bigBytes` whose form has a splitter in the
     * format registry (`Format.split`) takes the one split protocol,
     * [[SplitScan]]: one batched executor job indexes every big file into
-    * units (a sheet, a ranged batch of members or frames), and one DSv2
-    * scan decodes the units as its input partitions, streaming, so a
+    * units (a sheet, a ranged batch of members or frames), a second probes
+    * each workbook sheet's shape in a task of its own, and one DSv2 scan
+    * decodes the units as its input partitions, streaming, so a
     * single multi-GB file does not pin one task's memory to the whole
     * file. Both roads emit the same [[CellRow]]s, so downstream consumers
     * cannot tell which planner decision a row took. Big forms with no

@@ -346,6 +346,11 @@ object WebQueries {
       FROM documents ORDER BY shard_id, row_idx""")
   )
 
+  /** q188's split road: target bytes per member batch, and per zstd
+    * frame of a `.tar.zst` shard, both small enough that a shard splits. */
+  private val ShardBatchBytes = 2048L
+  private val ShardFrameBytes = 1024
+
   /** Tar WebDataset shard ingestion end-to-end — the container road for
     * the layout multimodal training corpora actually ship (img2dataset
     * output: `key.txt` + `key.gif` + `key.json` member triples per
@@ -354,9 +359,12 @@ object WebQueries {
     * unsigned checksums, block padding), each shard written to a
     * task-local temp file under a per-shard ROTATING codec suffix
     * (`.tar` / `.tar.gz` / `.tar.zst` — all three decode doors gate every
-    * run) and cataloged through the REAL ingestion route
-    * ([[graft.operators.BulkIngest.parseOne]]: suffix peel → member walk →
-    * streamed payload digests), then paired back into samples
+    * run) and cataloged through the REAL big-file ingestion route
+    * ([[graft.operators.SplitScan.local]], the split road in process:
+    * suffix peel → member-batch index (header chain for `.tar`, declared
+    * frame sizes for `.tar.zst`) → ranged member walks → streamed payload
+    * digests; the `.tar.gz` shard has no random access and walks whole),
+    * then paired back into samples
     * ([[graft.operators.WebDataset.samples]] — contiguous key runs) with
     * the image member decoded through the REAL GIF road
     * ([[Multimodal.MediaCodec.dhashBands]]). Per sample: shard/position
@@ -373,7 +381,8 @@ object WebQueries {
     * decode all run inside the consuming task; payload bytes never
     * shuffle (only fixed-width stats and 32-char digests leave). At
     * 100 TB the fixture assembly is replaced by reading real WebDataset
-    * shards through the same parseOne/memberBatches roads. */
+    * shards through `BulkIngest.parseTreeAuto`, whose big files take this
+    * same split road. */
   val q188 = Q(
     "q188_tar_webdataset",
     (s, dir) => {
@@ -415,21 +424,26 @@ object WebQueries {
             }
           val bytes = TarBuild.archive(members)
           // route 1 — the real ingestion road: suffix dispatch → member
-          // catalog, codec rotating per shard so plain/gzip/zstd all gate
+          // catalog, codec rotating per shard so plain/gzip/zstd all gate;
+          // the plain and zstd shards split into member batches
           val suffix = (shard % 3) match {
             case 0 => ".tar"; case 1 => ".tar.gz"; case _ => ".tar.zst"
           }
           val tmp = java.nio.file.Files.createTempFile("graft_shard", suffix)
           val catalog =
             try {
-              val raw = java.nio.file.Files.newOutputStream(tmp)
-              val out: java.io.OutputStream = suffix match {
-                case ".tar" => raw
-                case ".tar.gz" => new java.util.zip.GZIPOutputStream(raw)
-                case _ => new com.github.luben.zstd.ZstdOutputStream(raw)
-              }
-              try out.write(bytes) finally out.close()
-              graft.operators.BulkIngest.parseOne(tmp.toString)
+              val out = java.nio.file.Files.newOutputStream(tmp)
+              try suffix match {
+                case ".tar" => out.write(bytes)
+                case ".tar.gz" =>
+                  val gz = new java.util.zip.GZIPOutputStream(out)
+                  try gz.write(bytes) finally gz.close()
+                // independent frames that declare their sizes, as
+                // parallel compressors cut them
+                case _ => bytes.grouped(ShardFrameBytes)
+                    .foreach(c => out.write(com.github.luben.zstd.Zstd.compress(c)))
+              } finally out.close()
+              graft.operators.SplitScan.local(tmp.toString, ShardBatchBytes).toVector
             } finally java.nio.file.Files.deleteIfExists(tmp)
           val catOk = catalog.length == members.length &&
             catalog.zip(members).zipWithIndex.forall {

@@ -44,11 +44,10 @@ final case class Sheet(
   *    the file answers Failed. It runs inside executor tasks, and on the
   *    driver for every file of at most [[Formats.DriverDecodeBytes]].
   *  - `driver` is the `AnyFile` road past [[Formats.DriverDecodeBytes]]
-  *    for every form of the format: a Spark plan that keeps a big file's
-  *    cells off the driver (the text aggregate, the ranged SQLite job, or
-  *    the split scan for the workbook formats, whose one form splits). A
-  *    form with a splitter takes the split scan past the size rule even
-  *    where its format has no driver (`.warc.gz`, `.tar`, `.tar.zst`).
+  *    for the forms without a splitter: a Spark plan that keeps a big
+  *    file's cells off the driver (the text aggregate, the ranged SQLite
+  *    job). A form with a splitter takes the split scan instead
+  *    ([[Formats.road]]).
   *  - `project` replaces the `AnyFile` projection of `decode` at every
   *    size: Spark's native scans (their typed schema inference is the
   *    contract) and the PDF concat. */
@@ -79,8 +78,9 @@ final case class Route(path: String, format: Format, codec: String) {
   * (a zip workbook also by its inflated entries) answers its decode in
   * process, as driver-local frames whose `collect()` runs no Spark job;
   * past that size a form with a splitter takes the split scan (an
-  * executor index job, then one DSv2 scan whose partitions are the
-  * units), and a format with another Spark road takes that.
+  * executor index job, a job probing each sheet, then one DSv2 scan
+  * whose partitions are the units), and a format with another Spark road
+  * takes that ([[road]]).
   *
   * | extension | engine | decode | road past 4 MiB (split unit) |
   * |---|---|---|---|
@@ -120,34 +120,31 @@ object Formats {
   private val Text = "ImportText"
   private val Streams = Set(".gz", ".bz2", ".zst", ".zstd")
 
-  /** The workbook formats' Spark road: the split scan, one unit per sheet. */
-  private val SplitRoad = Some((spark: SparkSession, r: Route) =>
-    graft.operators.SplitScan.answers(spark, r))
-
   /** Zip workbooks: the sheet list from the central directory, each
-    * sheet's shape from a streaming probe. */
+    * sheet's shape from a streaming probe of its own. */
   private def sheetSplitter(
       list: String => Option[Seq[graft.sources.xlsx.XlsxParser.SheetRef]],
       shape: (String, String) => (Int, Long),
       rows: (String, String) => Iterator[Seq[String]]): Splitter[SheetUnit] =
     Splitter[SheetUnit](
-      (p, _) => list(p).toSeq.flatten.map { s =>
-        val (width, count) = shape(p, s.target)
-        SheetUnit(s.name, s.target, width, count)
+      (p, _) => list(p).toSeq.flatten.map(s => SheetUnit(s.name, s.target)),
+      (p, u) => rows(p, u.part),
+      probe = Some { (p, u) =>
+        val (width, count) = shape(p, u.part)
+        u.copy(width = width, count = count)
       },
-      (p, u) => rows(p, u.part), zip = true)
+      zip = true)
 
   val Xlsx: Format = Format(Excel, Seq(".xlsx"),
     split = Map("" -> {
       import graft.sources.xlsx.{SheetRowIterator, XlsxParser}
-      sheetSplitter(XlsxParser.openSheetList, XlsxParser.sheetShape(_, _, IndexedSeq.empty),
+      sheetSplitter(XlsxParser.openSheetList, XlsxParser.sheetShape,
         (p, target) => new SheetRowIterator(p, target, XlsxParser.openWorkbook(p)
           .getOrElse(throw new IllegalStateException(s"not an xlsx: $p")).shared))
     }),
     decode = r => graft.sources.xlsx.XlsxParser.openWorkbook(r.path).toSeq
       .flatMap(wb => wb.sheets.map(s => Sheet(s.name,
-        graft.sources.xlsx.XlsxParser.sheetRows(r.path, s.target, wb.shared)))),
-    driver = SplitRoad)
+        graft.sources.xlsx.XlsxParser.sheetRows(r.path, s.target, wb.shared)))))
 
   val Xls: Format = Format(Excel, Seq(".xls"),
     decode = r => graft.sources.xls.XlsParser.parse(FsIO.readAllBytes(r.path))
@@ -160,8 +157,7 @@ object Formats {
         (p, target) => new XlsbRowIterator(p, target, XlsbStream.loadSst(p)))
     }),
     decode = r => graft.sources.xlsb.XlsbParser.parse(r.path)
-      .toSeq.flatten.map(s => Sheet(s.name, s.rows)),
-    driver = SplitRoad)
+      .toSeq.flatten.map(s => Sheet(s.name, s.rows)))
 
   val Ods: Format = Format(Excel, Seq(".ods", ".odf", ".odt"),
     split = Map("" -> Splitter[SheetUnit](
@@ -169,8 +165,7 @@ object Formats {
         .map(t => SheetUnit(t.name, t.index.toString, t.width, t.rows)),
       (p, u) => new graft.sources.ods.OdsRowIterator(p, u.part.toInt), zip = true)),
     decode = r => graft.sources.ods.OdsParser.sheets(r.path)
-      .toSeq.flatten.map { case (name, rows) => Sheet(name, rows) },
-    driver = SplitRoad)
+      .toSeq.flatten.map { case (name, rows) => Sheet(name, rows) })
 
   // a table's part is "<mode>:<ordinal>": the probe's mode decides which
   // tables the ordinal counts
@@ -192,8 +187,7 @@ object Formats {
         try Sheet(sh.sheetName, it.map(_.toIndexedSeq).toIndexedSeq)
         finally it.close()
       }
-    },
-    driver = SplitRoad)
+    })
 
   private def text(exts: Seq[String], delimiter: Option[String]): Format =
     Format(Text, exts, "Text file content", Streams,
@@ -376,15 +370,22 @@ object Formats {
     * or no sheets answer one Failed answer (`main.py:140-144` parity). */
   def answers(spark: SparkSession, r: Route): Seq[ParserAnswer] = {
     val f = r.format
-    val road = if (r.splitter.isDefined) SplitRoad else f.driver
     val out =
-      try (f.project, road) match {
+      try (f.project, road(r)) match {
         case (Some(project), _) => project(spark, r)
         case (None, Some(road)) if !inProcess(r) => road(spark, r)
         case _ => decoded(spark, r)
       } catch { case _: Exception => Nil }
     if (out.isEmpty) Seq(ParserAnswer.failed(spark, r.path, f.engine)) else out
   }
+
+  /** The `AnyFile` road past the size rule for a format without its own
+    * projection: the split scan where the form has a splitter, else the
+    * format's `driver`. */
+  def road(r: Route): Option[(SparkSession, Route) => Seq[ParserAnswer]] =
+    if (r.format.project.isDefined) None
+    else if (r.splitter.isDefined) Some(graft.operators.SplitScan.answers(_, _))
+    else r.format.driver
 
   /** The format's decode, answered in process. */
   def decoded(spark: SparkSession, r: Route): Seq[ParserAnswer] =

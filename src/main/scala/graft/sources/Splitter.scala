@@ -11,14 +11,15 @@ trait SplitUnit extends Serializable {
   /** The unit's row count, where the index knows it. */
   def rows: Option[Long] = None
   /** Row number of its first row within the sheet; None = where the
-    * sheet's previous unit ends, which the split road counts. */
+    * sheet's previous unit ends, which the split road counts. A unit that
+    * starts at row 0 starts a sheet of its own. */
   def first: Option[Long] = Some(0L)
 }
 
 /** A sheet of a workbook: `part` locates it in the container (an entry
   * name or a table ordinal); width and row count come from the streaming
   * shape probe. */
-final case class SheetUnit(sheet: String, part: String, width: Int, count: Long)
+final case class SheetUnit(sheet: String, part: String, width: Int = 0, count: Long = 0L)
     extends SplitUnit {
   override def rows: Option[Long] = Some(count)
 }
@@ -39,13 +40,19 @@ final case class RangeUnit(
   * file's units, given a target of compressed bytes per ranged unit; it
   * runs inside an executor task. An index that throws answers one Failed
   * row; one that lists no units sends the whole file to the file-grain
-  * decode. `rows` streams one unit's rows. `zip`: the file is a zip
-  * container, so `AnyFile`'s size rule also sums its entries' inflated
-  * sizes. */
+  * decode. `probe`, where given, completes one listed unit's shape (a
+  * workbook sheet's width and row count) in a task of its own, so the
+  * sheets of one workbook probe in parallel; one that throws fails the
+  * file like its index. `rows` streams one unit's rows. `zip`: the file
+  * is a zip container, so `AnyFile`'s size rule also sums its entries'
+  * inflated sizes. */
 final case class Splitter[U <: SplitUnit](
     index: (String, Long) => Seq[U],
     rows: (String, U) => Iterator[Seq[String]],
+    probe: Option[(String, U) => U] = None,
     zip: Boolean = false) {
   def read(path: String, u: SplitUnit): Iterator[Seq[String]] =
     rows(path, u.asInstanceOf[U])
+  def shape(path: String, u: SplitUnit): SplitUnit =
+    probe.fold(u)(_(path, u.asInstanceOf[U]))
 }

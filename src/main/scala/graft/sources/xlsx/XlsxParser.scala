@@ -149,13 +149,10 @@ object XlsxParser {
     }
 
   /** Streaming width/count probe: (max row arity, row count incl. trailing
-    * gap-bounded rows) without materializing any row — the driver-side
-    * shape pass. */
-  def sheetShape(
-      path: String,
-      target: String,
-      shared: IndexedSeq[String]): (Int, Long) = {
-    val it = new SheetRowIterator(path, target, shared)
+    * gap-bounded rows) without materializing any row or decoding any cell
+    * (positions only) — the split index's shape pass. */
+  def sheetShape(path: String, target: String): (Int, Long) = {
+    val it = new SheetRowIterator(path, target, IndexedSeq.empty, needed = Some(Set.empty))
     try {
       var width = 0
       var n = 0L

@@ -188,48 +188,76 @@ object ZstdFrames {
     * text-split semantics. A non-first batch discards up to its first
     * in-range newline (that prefix belongs to the previous batch), and a
     * line spanning the batch end is finished from a continuation decode of
-    * the following frames; at file end an empty pending start is no row. */
-  def ownedLines(path: String, off: Long, len: Int): Iterator[IndexedSeq[String]] = {
-    val isFirst = off == 0L
-    val isLast = off + len >= FsIO.len(path)
+    * the following frames; at file end an empty pending start is no row.
+    * Lazy: one line is held at a time; closes itself at exhaustion. */
+  def ownedLines(path: String, off: Long, len: Int): Iterator[IndexedSeq[String]] =
+    new OwnedLines(path, off, len)
+
+  private final class OwnedLines(path: String, off: Long, len: Int)
+      extends Iterator[IndexedSeq[String]] with java.io.Closeable {
+    private val isLast = off + len >= FsIO.len(path)
+    private val own = new com.github.luben.zstd.ZstdInputStream(
+      new java.io.ByteArrayInputStream(FsIO.readRange(path, off, len)))
     // 64 KiB chunked scan splitting on the '\n' BYTE (unambiguous in
     // UTF-8): a per-byte read() loop costs tens of millions of virtual
     // calls per batch
-    val own = new com.github.luben.zstd.ZstdInputStream(
-      new java.io.ByteArrayInputStream(FsIO.readRange(path, off, len)))
-    val rows = Seq.newBuilder[IndexedSeq[String]]
-    val acc = new java.io.ByteArrayOutputStream()
-    def row(): Unit = {
-      rows += IndexedSeq(new String(acc.toByteArray, java.nio.charset.StandardCharsets.UTF_8))
+    private val chunk = new Array[Byte](64 << 10)
+    private var n = 0
+    private var pos = 0
+    private val acc = new java.io.ByteArrayOutputStream()
+    // still discarding the previous batch's tail (up to the first own
+    // newline); a batch wholly inside one line owns nothing
+    private var skipping = off != 0L
+    private var sawOwnNl = false
+    private var done = false
+    private var queued: IndexedSeq[String] = _
+
+    private def take(): IndexedSeq[String] = {
+      val line = IndexedSeq(new String(acc.toByteArray, java.nio.charset.StandardCharsets.UTF_8))
       acc.reset()
+      line
     }
-    try {
-      val chunk = new Array[Byte](64 << 10)
-      // still discarding the previous batch's tail (up to the first own
-      // newline); a batch wholly inside one line owns nothing
-      var skipping = !isFirst
-      var sawOwnNl = false
-      var n = own.read(chunk)
-      while (n > 0) {
-        var pos = 0
-        while (pos < n) {
+
+    override def hasNext: Boolean = queued != null || (!done && fetch())
+
+    override def next(): IndexedSeq[String] = {
+      if (!hasNext) throw new NoSuchElementException("batch exhausted")
+      val q = queued
+      queued = null
+      q
+    }
+
+    /** Scan to the next owned newline, or finish the batch. */
+    private def fetch(): Boolean = {
+      while (!done) {
+        if (pos >= n) {
+          n = own.read(chunk)
+          pos = 0
+          if (n <= 0) finish()
+        } else {
           var k = pos
           while (k < n && chunk(k) != '\n') k += 1
           if (k < n) {
-            if (skipping) skipping = false
-            else { acc.write(chunk, pos, k - pos); row() }
             sawOwnNl = true
+            val owned = !skipping
+            if (owned) acc.write(chunk, pos, k - pos)
+            skipping = false
             pos = k + 1
+            if (owned) { queued = take(); return true }
           } else {
             if (!skipping) acc.write(chunk, pos, n - pos)
             pos = n
           }
         }
-        n = own.read(chunk)
       }
+      queued != null
+    }
+
+    /** Own range exhausted: a pending OWNED start is finished from the
+      * continuation frames. */
+    private def finish(): Unit = {
+      close()
       if (!skipping || sawOwnNl) {
-        // own range exhausted with a pending OWNED start: finish it from
-        // the continuation frames
         var sawCont = false
         if (!isLast) {
           val cont = new BufferedInputStream(
@@ -240,9 +268,13 @@ object ZstdFrames {
             if (c == '\n') sawCont = true
           } finally cont.close()
         }
-        if (acc.size() > 0 || sawCont) row()
+        if (acc.size() > 0 || sawCont) queued = take()
       }
-    } finally own.close()
-    rows.result().iterator
+    }
+
+    override def close(): Unit = if (!done) {
+      done = true
+      own.close()
+    }
   }
 }

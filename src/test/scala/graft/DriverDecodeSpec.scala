@@ -110,8 +110,9 @@ class DriverDecodeSpec extends SparkSpec {
   }
 
   /** One file's answers, reduced to what both roads must agree on. The
-    * ranged SQLite road leaves its row count to a job (`knownRowCount`
-    * None), so the count compared is the known one, else a counted one. */
+    * ranged SQLite road and the member-batch splits leave their row count
+    * to a job (`knownRowCount` None), so the count compared is the known
+    * one, else a counted one. */
   private def shape(as: Seq[ParserAnswer]) = as.map { a =>
     (a.sheetName, a.engine, a.encoding, a.separator, a.parseInfo,
       a.knownRowCount.getOrElse(a.data.count()),
@@ -122,19 +123,19 @@ class DriverDecodeSpec extends SparkSpec {
   test("in-process answers equal each format's Spark road on the parity tree") {
     val tree: Path = IngestFixtures.parityTree(tmpDir("road_parity"))
     val routed = Files.list(tree).iterator().asScala.map(_.toString).toSeq.sorted
-      .flatMap(Formats.route).filter(_.format.driver.isDefined)
+      .flatMap(Formats.route).filter(Formats.road(_).isDefined)
     assert(routed.map(_.format.engine).distinct.sorted ==
-      Seq("ImportExcel", "ImportSqlite", "ImportText", "ImportXML"))
+      Seq("ImportExcel", "ImportSqlite", "ImportTar", "ImportText", "ImportWARC", "ImportXML"))
     assert(routed.length >= 20, routed.length)
     routed.foreach { case r @ Route(path, format, _) =>
       val inProcess = AnyFile.parse(spark, path)
       assert(inProcess.forall(a => isLocal(a) && a.knownRowCount.isDefined), path)
       val spark0 =
-        try format.driver.get(spark, r) catch { case _: Exception => Nil }
+        try Formats.road(r).get(spark, r) catch { case _: Exception => Nil }
       val sparkRoad =
         if (spark0.isEmpty) Seq(ParserAnswer.failed(spark, path, format.engine)) else spark0
       assert(shape(inProcess) == shape(sparkRoad), path)
-      if (format != Formats.Sqlite)
+      if (!Set(Formats.Sqlite, Formats.Warc, Formats.Tar)(format))
         assert(inProcess.map(_.knownRowCount) == sparkRoad.map(_.knownRowCount), path)
     }
   }

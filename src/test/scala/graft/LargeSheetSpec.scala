@@ -59,7 +59,7 @@ class LargeSheetSpec extends SparkSpec {
 
     // shape probe: width/count only, no rows retained
     val (width, rowCount) = graft.sources.xlsx.XlsxParser.sheetShape(
-      p, "xl/worksheets/sheet1.xml", IndexedSeq.empty)
+      p, "xl/worksheets/sheet1.xml")
     assert(width == Cols)
     assert(rowCount == Rows.toLong)
 

@@ -13,7 +13,8 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 
 /** The one split protocol: every big file of every format splits through
-  * its registry `Splitter`, one index job and one DSv2 scan, answering
+  * its registry `Splitter`, one index job, one probe job and one DSv2
+  * scan, answering
   * exactly what the file-grain road answers. */
 class SplitSpec extends SparkSpec {
 
@@ -118,6 +119,63 @@ class SplitSpec extends SparkSpec {
       val split = SplitScan.answers(spark, r)
       assert(split.forall(_.data.queryExecution.executedPlan.toString.contains("BatchScan")), f)
       assert(shape(split) == shape(Formats.decoded(spark, r)), f)
+    }
+  }
+
+  test("same-named SpreadsheetML tables answer apart on the split road, as in process") {
+    val dir = tmpDir("split_same_name")
+    val ns = "urn:schemas-microsoft-com:office:spreadsheet"
+    def table(grid: Seq[Seq[String]]) = "<ss:Table>" + grid.map(row => "<ss:Row>" +
+      row.map(v => s"<ss:Cell><ss:Data>$v</ss:Data></ss:Cell>").mkString + "</ss:Row>").mkString +
+      "</ss:Table>"
+    val (a, b) = (Seq(Seq("a1", "a2"), Seq("a3")), Seq(Seq("b1", "b2", "b3"), Seq("b4"), Seq("b5")))
+    def book(body: String) = s"""<?xml version="1.0"?><Workbook xmlns:ss="$ns">$body</Workbook>"""
+    // standalone: both bare tables are "Not defined"; a Worksheet holding
+    // two Tables gives both its name
+    Files.write(dir.resolve("bare.xml"), book(table(a) + table(b)).getBytes("UTF-8"))
+    Files.write(dir.resolve("ws.xml"),
+      book(s"""<ss:Worksheet ss:Name="W">${table(a) + table(b)}</ss:Worksheet>""").getBytes("UTF-8"))
+    def shape(as: Seq[ParserAnswer]) = as.map(a => (a.sheetName, a.knownRowCount,
+      a.data.schema.fieldNames.toSeq, a.data.collect().map(_.toSeq).toSeq))
+    for ((f, name) <- Seq("bare.xml" -> "Not defined", "ws.xml" -> "W")) {
+      val r = Formats.route(dir.resolve(f).toString).get
+      val split = SplitScan.answers(spark, r)
+      assert(split.map(_.sheetName) == Seq(name, name), f)
+      assert(shape(split) == shape(Formats.decoded(spark, r)), f)
+    }
+    assert(key(BulkIngest.parseTreeAuto(spark, dir.toString, bigBytes = 1L)) ==
+      key(BulkIngest.parseTree(spark, dir.toString)))
+  }
+
+  test("a workbook's sheets probe in one task each, after a one-task index") {
+    val p = tmpDir("split_probe").resolve("three.xlsx")
+    val grids = Seq("A" -> Seq(Seq("1", "2")), "B" -> Seq(Seq("1"), Seq("2"), Seq("3")),
+      "C" -> Seq(Seq("1", "2", "3", "4")))
+    Files.write(p, IngestFixtures.xlsx(grids))
+    val sc = spark.sparkContext
+    sc.setJobGroup("split-probe", "split probe")
+    val work = try SplitScan.plan(spark, Seq(p.toString), SplitScan.BatchBytes, 8)
+    finally sc.clearJobGroup()
+    val tracker = sc.statusTracker
+    val tasks = tracker.getJobIdsForGroup("split-probe").sorted.toSeq.map(j =>
+      tracker.getJobInfo(j).get.stageIds.map(s => tracker.getStageInfo(s).get.numTasks).sum)
+    assert(tasks == Seq(1, 3))
+    assert(work.map { case SplitScan.Piece(_, u, first) => (u.sheet, u.width, u.rows, first) } ==
+      Seq(("A", 2, Some(1L), 0L), ("B", 1, Some(3L), 0L), ("C", 4, Some(1L), 0L)))
+  }
+
+  test("the split road in process answers parseOne's rows, over several units") {
+    import IngestFixtures._
+    val dir = tmpDir("split_local")
+    val lines = (0 until 3).map(i => zst((0 until 20)
+      .map(j => s"""{"i": $i, "j": $j}\n""").mkString.getBytes("UTF-8"))).reduce(_ ++ _)
+    val files = Seq("a.tar" -> tar(9), "b.tar.zst" -> framed(tar(9)), "c.warc.gz" -> warcGz(5),
+      "d.jsonl.zst" -> lines, "e.xlsx" -> xlsx(Seq("S1" -> Seq(Seq("a", "b")), "S2" -> Seq(Seq("c")))))
+    for ((f, bytes) <- files) {
+      val p = dir.resolve(f).toString
+      Files.write(dir.resolve(f), bytes)
+      assert(Formats.route(p).get.splitter.get.index(p, 1L).length > 1, f)
+      assert(SplitScan.local(p, 1L).toSeq == BulkIngest.parseOne(p), f)
     }
   }
 
