@@ -22,11 +22,13 @@ import org.apache.spark.sql.DataFrame
   * ([[graft.sources.Formats.answers]]). A file of at most
   * [[graft.sources.Formats.DriverDecodeBytes]] (4 MiB) is decoded in
   * process, like the reference's eager pandas frame: `data` is a
-  * driver-local frame whose `collect()` runs no Spark job. Past that size,
+  * driver-local frame whose `collect()` runs no Spark job, and
+  * `knownRowCount` is set. That holds for the native formats too
+  * (parquet, JSON, JSON lines), whose frames carry the typed schema and
+  * rows `spark.read` gives. Past that size, and for a parquet directory,
   * `data` is a lazy Spark plan: nothing executes until the caller runs an
   * action, so at cluster scale the scan is partitioned/pushed-down by
-  * Catalyst rather than materialized here. Spark's native scans (parquet,
-  * JSON, JSON lines) are lazy plans at every size.
+  * Catalyst rather than materialized here.
   */
 final case class ParserAnswer(
     data: DataFrame,

@@ -43,14 +43,15 @@ final case class Sheet(
   *  - `decode` is the pure sheet decode both roads share; no sheets means
   *    the file answers Failed. It runs inside executor tasks, and on the
   *    driver for every file of at most [[Formats.DriverDecodeBytes]].
-  *  - `driver` is the `AnyFile` road past [[Formats.DriverDecodeBytes]]
-  *    for the forms without a splitter: a Spark plan that keeps a big
-  *    file's cells off the driver (the text aggregate, the ranged SQLite
-  *    job). A form with a splitter takes the split scan instead
-  *    ([[Formats.road]]).
-  *  - `project` replaces the `AnyFile` projection of `decode` at every
-  *    size: Spark's native scans (their typed schema inference is the
-  *    contract) and the PDF concat. */
+  *  - `driver` is the `AnyFile` road past [[Formats.DriverDecodeBytes]]:
+  *    a Spark plan that keeps a big file's cells off the driver (the text
+  *    aggregate, the ranged SQLite job, Spark's native parquet and JSON
+  *    scans). A form without one takes the split scan where it has a
+  *    splitter ([[Formats.road]]).
+  *  - `project` replaces the `AnyFile` projection of `decode` wherever
+  *    the file answers in process: the native formats' typed frames
+  *    (the schema and rows `spark.read` gives, read on the driver) and
+  *    the PDF concat, which has no road and so answers at every size. */
 final case class Format(
     engine: String,
     extensions: Seq[String],
@@ -63,10 +64,24 @@ final case class Format(
     project: Option[(SparkSession, Route) => Seq[ParserAnswer]] = None)
 
 /** A path routed to its format, with the compression suffix peeled off
-  * (`""` when there is none). */
-final case class Route(path: String, format: Format, codec: String) {
+  * (`""` when there is none). `image` holds the decoded bytes when the
+  * size rule has already read them, so a small codec file inflates once
+  * per parse. */
+final case class Route(path: String, format: Format, codec: String,
+    image: Option[Array[Byte]] = None) {
   def zstd: Boolean = codec == ".zst" || codec == ".zstd"
   def splitter: Option[Splitter[_ <: SplitUnit]] = format.split.get(codec)
+
+  /** The decoded file: the held image, else one decoded read. */
+  def bytes: Array[Byte] = image.getOrElse(FsIO.readAllBytesDecoded(path))
+
+  /** The decoded file as a stream: the held image, else a decoded open. */
+  def openDecoded(): java.io.InputStream =
+    image.fold(FsIO.openDecoded(path))(new java.io.ByteArrayInputStream(_))
+
+  /** [[bytes]] under the shared decoded cap ([[FsIO.DecodedCapBytes]]):
+    * None past it. */
+  def bytesCapped: Option[Array[Byte]] = image.orElse(FsIO.readAllBytesDecodedCapped(path))
 }
 
 /** The one extension → format table. `graft.AnyFile.parse` and
@@ -94,7 +109,7 @@ final case class Route(path: String, format: Format, codec: String) {
   * | `.sqlite .sqlite3 .db` | ImportSqlite | one sheet per table | ranged leaf-page job |
   * | `.warc` | ImportWARC | record catalog | `.warc.gz` split: gzip member batches; else decode |
   * | `.tar` | ImportTar | member catalog | `.tar` split: member batches; `.tar.zst` split: declared-size frame batches; else decode |
-  * | `.parquet` `.json` `.jsonl .ndjson` | ImportParquet / ImportJSON / ImportJSONL | Native | Spark scans, any size (`.jsonl.zst` splits on the bulk road: frame batches) |
+  * | `.parquet` `.json` `.jsonl .ndjson` | ImportParquet / ImportJSON / ImportJSONL | Native: typed frames read on the driver (a parquet file also by its row groups' inflated size) | Spark's scans; a parquet directory always (`.jsonl.zst` splits on the bulk road: frame batches) |
   * | `.pk1 .pickle` | ImportPickle | documented gap: always Failed | — |
   *
   * Codecs: text, json, jsonl, warc and tar accept `.gz`, `.bz2`, `.zst`
@@ -205,11 +220,11 @@ object Formats {
   val Html: Format = Format("ImportHTML", Seq(".html", ".htm"), "HTML main content",
     decode = r => {
       import graft.sources.html.HtmlParser
-      val bytes = FsIO.readAllBytes(r.path)
+      val bytes = r.bytes
       // HTML declares its own charset: honour <meta charset>, then the
       // byte sniffer, then UTF-8 (which subsumes ASCII)
       val encoding = HtmlParser.metaCharset(bytes)
-        .orElse(Sniffers.detectEncoding(r.path)).getOrElse("utf-8")
+        .orElse(Sniffers.detectEncoding(bytes)).getOrElse("utf-8")
       val cs =
         try java.nio.charset.Charset.forName(encoding)
         catch { case _: Exception => StandardCharsets.UTF_8 }
@@ -266,8 +281,7 @@ object Formats {
     decode = r => {
       import graft.sources.warc.WarcReader
       // gunzipIfNeeded stays as the net for gzip bytes behind a plain name
-      val recs = WarcReader.records(
-        WarcReader.gunzipIfNeeded(FsIO.readAllBytesDecoded(r.path)))
+      val recs = WarcReader.records(WarcReader.gunzipIfNeeded(r.bytes))
       if (recs.isEmpty) Nil else Seq(Sheet(Warc.sheet, recs.map(warcCells)))
     })
 
@@ -295,15 +309,16 @@ object Formats {
     decode = r => {
       import graft.sources.tar.TarWalk
       // openDecoded covers every codec form, the .tgz contraction included
-      val in = FsIO.openDecoded(r.path)
+      val in = r.openDecoded()
       val cells = try TarWalk.walk(in)(TarWalk.memberCells) finally in.close()
       if (cells.isEmpty) Nil else Seq(Sheet(Tar.sheet, cells.map(_.toIndexedSeq)))
     })
 
   val Parquet: Format = Format("ImportParquet", Seq(".parquet"), "Parquet file content",
     nativeScan = true,
-    project = Some((spark, r) => Seq(ParserAnswer(spark.read.parquet(r.path), r.path,
-      sheetName = Parquet.sheet, engine = Parquet.engine))))
+    driver = Some((spark, r) => Seq(ParserAnswer(spark.read.parquet(r.path), r.path,
+      sheetName = Parquet.sheet, engine = Parquet.engine))),
+    project = Some(ParquetLocal.answers))
 
   val Json: Format = Format("ImportJSON", Seq(".json"), "JSON file content", Streams,
     nativeScan = true,
@@ -311,7 +326,8 @@ object Formats {
     // first-structural-character gate as the `AnyFile` road
     decode = r => JsonImporter.zstdDocument(r.path).toSeq
       .map(doc => Sheet(Json.sheet, Seq(IndexedSeq(new String(doc, StandardCharsets.UTF_8))))),
-    project = Some(JsonImporter.answers))
+    driver = Some(JsonImporter.answers),
+    project = Some(JsonImporter.local))
 
   // zstd has no random access within a frame, but parallel compressors
   // cut many independent frames: the index walks block headers only, and
@@ -332,16 +348,20 @@ object Formats {
     Streams, split = Map(".zst" -> jsonlSplitter, ".zstd" -> jsonlSplitter),
     nativeScan = true,
     decode = r => JsonImporter.zstdLines(r.path).toSeq.map(Sheet(JsonLines.sheet, _)),
-    project = Some(JsonImporter.linesAnswers))
+    driver = Some(JsonImporter.linesAnswers),
+    project = Some(JsonImporter.localLines))
 
   // Python pickle encodes arbitrary Python object graphs, not portable to
   // the JVM (`main.py:441-451`): the documented gap, always Failed
   val Pickle: Format = Format("ImportPickle", Seq(".pk1", ".pickle"))
 
-  private val byExtension: Map[String, Format] =
+  /** Every registered format. */
+  val registry: Seq[Format] =
     Seq(Xlsx, Xls, Xlsb, Ods, Xmlss, PlainText, Ant, Tsv, Pdf, Html, Docx, Pptx,
       Sqlite, Warc, Tar, Parquet, Json, JsonLines, Pickle)
-      .flatMap(f => f.extensions.map(_ -> f)).toMap
+
+  private val byExtension: Map[String, Format] =
+    registry.flatMap(f => f.extensions.map(_ -> f)).toMap
 
   /** Python `Path.suffix`: a leading dot does not start an extension. */
   private def extOf(name: String): String = {
@@ -363,29 +383,30 @@ object Formats {
       .map(Route(path, _, codec))
   }
 
-  /** The `AnyFile` projection of one routed file: the format's own
-    * projection where it has one; past the size rule the split scan where
-    * its form has a splitter, else its format's Spark road; else its
-    * decode in process. Never throws: a failed decode, a thrown exception
-    * or no sheets answer one Failed answer (`main.py:140-144` parity). */
+  /** The `AnyFile` projection of one routed file, under the one size
+    * rule: a file that passes [[inProcess]], or whose form has no
+    * [[road]], answers in process (the format's `project`, else its
+    * decode); any other takes its road. Never throws: a failed decode, a
+    * thrown exception or no sheets answer one Failed answer
+    * (`main.py:140-144` parity). */
   def answers(spark: SparkSession, r: Route): Seq[ParserAnswer] = {
     val f = r.format
     val out =
-      try (f.project, road(r)) match {
-        case (Some(project), _) => project(spark, r)
-        case (None, Some(road)) if !inProcess(r) => road(spark, r)
-        case _ => decoded(spark, r)
+      try road(r) match {
+        case Some(big) => inProcess(r).fold(big(spark, r))(local(spark, _))
+        case None => local(spark, r)
       } catch { case _: Exception => Nil }
     if (out.isEmpty) Seq(ParserAnswer.failed(spark, r.path, f.engine)) else out
   }
 
-  /** The `AnyFile` road past the size rule for a format without its own
-    * projection: the split scan where the form has a splitter, else the
-    * format's `driver`. */
+  /** The in-process answer: the format's `project`, else its decode. */
+  private def local(spark: SparkSession, r: Route): Seq[ParserAnswer] =
+    r.format.project.fold(decoded(spark, r))(_(spark, r))
+
+  /** The `AnyFile` road past the size rule: the format's `driver` where
+    * it has one, else the split scan where the form has a splitter. */
   def road(r: Route): Option[(SparkSession, Route) => Seq[ParserAnswer]] =
-    if (r.format.project.isDefined) None
-    else if (r.splitter.isDefined) Some(graft.operators.SplitScan.answers(_, _))
-    else r.format.driver
+    r.format.driver.orElse(r.splitter.map(_ => graft.operators.SplitScan.answers(_, _)))
 
   /** The format's decode, answered in process. */
   def decoded(spark: SparkSession, r: Route): Seq[ParserAnswer] =
@@ -395,13 +416,20 @@ object Formats {
     * decoded stream, for a codec form, is no bigger either; the decoded
     * read stops one byte past the cap, so a compression bomb never
     * inflates on the driver. A zip container that splits is held to the
-    * cap by the sum of its entries' inflated sizes too. */
-  private def inProcess(r: Route): Boolean = FsIO.isFile(r.path) && {
-    val len = FsIO.len(r.path)
-    len <= DriverDecodeBytes &&
-      (r.codec.isEmpty || FsIO.readAllBytesDecodedCapped(r.path, DriverDecodeBytes).isDefined) &&
-      r.splitter.forall(s => !s.zip || zipInflatesWithinCap(r.path, len))
-  }
+    * cap by the sum of its entries' inflated sizes too, and a parquet file
+    * by its row groups' uncompressed sizes. Some(route) = in process, the
+    * route holding the decoded image a codec form was judged by. */
+  private def inProcess(r: Route): Option[Route] =
+    if (!FsIO.isFile(r.path)) None
+    else {
+      val len = FsIO.len(r.path)
+      val fits = len <= DriverDecodeBytes &&
+        r.splitter.forall(s => !s.zip || zipInflatesWithinCap(r.path, len)) &&
+        (r.format != Parquet || ParquetLocal.inflatesWithin(r.path, DriverDecodeBytes))
+      if (!fits) None
+      else if (r.codec.isEmpty) Some(r)
+      else FsIO.readAllBytesDecodedCapped(r.path, DriverDecodeBytes).map(b => r.copy(image = Some(b)))
+    }
 
   /** A zip container's entries inflate to at most [[DriverDecodeBytes]];
     * anything that is not a readable zip is left to its decode. */

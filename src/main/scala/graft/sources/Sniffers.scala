@@ -2,17 +2,18 @@ package graft.sources
 
 import java.nio.ByteBuffer
 import java.nio.charset.{Charset, CharsetDecoder, CodingErrorAction}
-import java.nio.file.{Files, Paths}
 
 /** Driver-side file sniffing: encoding detection and delimiter voting.
   *
   * The reference reads the ENTIRE file for both (reference `main.py:194`
   * whole-byte read for charset detection; `main.py:218-219` re-reads all
   * lines once per delimiter sample — O(samples × file)). That cannot scale;
-  * here both sniffers read one bounded prefix (default 4 MiB) once. For the
-  * sizes where the answers could differ (multi-GiB single text files) the
-  * prefix is a statistically sufficient sample, and the scan itself is done
-  * by Spark executors, not the driver.
+  * here both sniffers read one bounded prefix (default 4 MiB) once. The
+  * byte variants sniff the head of bytes a decode already holds, so a
+  * decode that read the file reads nothing more. For the sizes where the
+  * answers could differ (multi-GiB single text files) the prefix is a
+  * statistically sufficient sample, and the scan itself is done by Spark
+  * executors, not the driver.
   */
 object Sniffers {
 
@@ -49,9 +50,15 @@ object Sniffers {
     * beyond the koi8/cp1251 case-geography signal there is no honest
     * structural evidence to distinguish them.
     */
-  def detectEncoding(path: String): Option[String] = {
+  def detectEncoding(path: String): Option[String] =
+    try detectEncoding(readPrefix(path, SampleBytes))
+    catch { case _: Exception => None }
+
+  /** [[detectEncoding]] over bytes already read: their first
+    * [[SampleBytes]] are the sample. */
+  def detectEncoding(head: Array[Byte]): Option[String] = {
     try {
-      val bytes = readPrefix(path, SampleBytes)
+      val bytes = sample(head)
       if (bytes.isEmpty) return Some("utf_8")
       bomOf(bytes).orElse {
         // UTF-16 first: BOM-less UTF-16 of ASCII text is also valid UTF-8
@@ -360,9 +367,15 @@ object Sniffers {
     * space) with the highest occurrence count in the comma-stripped line; a
     * line where no candidate occurs = sniff failure = default tab.
     */
-  def detectDelimiter(path: String): String = {
+  def detectDelimiter(path: String): String =
+    try detectDelimiter(readPrefix(path, SampleBytes))
+    catch { case _: Exception => DefaultDelimiter }
+
+  /** [[detectDelimiter]] over bytes already read: their first
+    * [[SampleBytes]] are the sample. */
+  def detectDelimiter(head: Array[Byte]): String = {
     try {
-      val text = new String(readPrefix(path, SampleBytes), "UTF-8")
+      val text = new String(sample(head), "UTF-8")
       val lines = text.split("\n", -1).toIndexedSeq
       // reference counts '\n' chars, so a trailing newline doesn't create a
       // sampled empty last line (positions stay within 0..lineCount-1 only
@@ -408,4 +421,7 @@ object Sniffers {
     * vote garbage delimiters and fake encodings. */
   private def readPrefix(path: String, limit: Int): Array[Byte] =
     FsIO.readHeadDecoded(path, limit)
+
+  private def sample(head: Array[Byte]): Array[Byte] =
+    if (head.length <= SampleBytes) head else java.util.Arrays.copyOf(head, SampleBytes)
 }

@@ -41,7 +41,7 @@ object SqliteImporter {
   def sheets(r: Route): Seq[Sheet] = {
     val src: SqliteParser.Source =
       if (r.zstd)
-        SqliteParser.BytesSource(FsIO.readAllBytesDecodedCapped(r.path).getOrElse(return Nil))
+        SqliteParser.BytesSource(r.bytesCapped.getOrElse(return Nil))
       else {
         val len = try FsIO.len(r.path) catch { case _: Exception => -1L }
         if (len >= 512 && len <= Formats.DriverDecodeBytes)

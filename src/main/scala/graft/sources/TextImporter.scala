@@ -105,16 +105,18 @@ object TextImporter {
     * delimiter vote, line-end `\t` strip, literal-quote strip, right-pad
     * with `''` to the file's max arity (`main.py:327-358` semantics;
     * [[answers]] is the Spark-plan twin for bigger files). The sheet
-    * carries the sniffed encoding and the delimiter, as [[answers]]
-    * reports them. */
+    * carries the encoding and the delimiter sniffed from the bytes read
+    * (their head is the prefix [[answers]] sniffs), so the file is read
+    * once. */
   def sheets(r: Route, delimiter: Option[String]): Seq[Sheet] = {
-    val delim = delimiter.getOrElse(Sniffers.detectDelimiter(r.path))
+    // decoded bytes: codec-suffixed files (x.csv.gz) inflate inline, the
+    // same bytes the Spark text scan sees
+    val bytes = r.bytes
+    val delim = delimiter.getOrElse(Sniffers.detectDelimiter(bytes))
     // UTF-8 explicitly: the Spark road reads through spark.read.text
     // (always UTF-8); decoding with the executor JVM's default charset
-    // would silently diverge on non-UTF-8 locales. Decoded read:
-    // codec-suffixed files (x.csv.gz) inflate inline, the same bytes the
-    // Spark text scan sees.
-    val raw = new String(FsIO.readAllBytesDecoded(r.path), StandardCharsets.UTF_8)
+    // would silently diverge on non-UTF-8 locales.
+    val raw = new String(bytes, StandardCharsets.UTF_8)
     val lines = raw.split("\n", -1).toSeq match {
       case init :+ "" => init // trailing newline: no phantom last row
       case ls => ls
@@ -128,7 +130,8 @@ object TextImporter {
     }
     val arity = cells.map(_.length).max
     Seq(Sheet(r.format.sheet, cells.map(_.padTo(arity, "")),
-      encoding = Some(encodingOf(r.path)), separator = Some(delim)))
+      encoding = Some(Sniffers.detectEncoding(bytes).getOrElse("None")),
+      separator = Some(delim)))
   }
 
   /** The sniffed encoding, `"None"` when there is none. */

@@ -1,14 +1,11 @@
 package graft
 
 import java.nio.file.{Files, Path}
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
 import graft.model.ParserAnswer
-import graft.sources.{Formats, Route, TextImporter}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import graft.sources.{Format, Formats, Route, TextImporter}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 
 /** The one size rule of `Formats.answers`: a file of at most
@@ -17,35 +14,9 @@ import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
   * ones take their format's Spark road, whose answers match. */
 class DriverDecodeSpec extends SparkSpec {
 
-  /** Spark jobs started while `body` runs. A marked sentinel job closes
-    * the window: listener events arrive in order, so once the sentinel's
-    * start is seen every earlier job start has been counted. */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val Sentinel = "driver-decode-spec sentinel"
-    val jobs = new AtomicInteger
-    val closed = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.job.description") == Sentinel))
-          closed.countDown()
-        else jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.setJobDescription(Sentinel)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      assert(closed.await(60, TimeUnit.SECONDS), "sentinel job never reached the listener")
-      jobs.get
-    } finally sc.removeSparkListener(listener)
-  }
-
-  private def isLocal(a: ParserAnswer): Boolean =
-    a.data.queryExecution.analyzed.isInstanceOf[LocalRelation]
-
   test("small files of every driver road parse and collect with zero Spark jobs") {
     import IngestFixtures._
+    import spark.implicits._
     val dir = tmpDir("driver_decode")
     def put(name: String, bytes: Array[Byte]): String = {
       val p = dir.resolve(name)
@@ -54,17 +25,43 @@ class DriverDecodeSpec extends SparkSpec {
     }
     val csv = "h1,h2,h3\n1,2,3\n4,5\n".getBytes("UTF-8")
     val grid = Seq(Seq("a", "b"), Seq("c", "d"))
-    val files = Seq(
-      put("a.txt", "p|q|r\ns|t|u\n".getBytes("UTF-8")),
-      put("a.csv", csv),
-      put("a.ant", "k~~@~~v\n1~~@~~2~~@~~3\n".getBytes("UTF-8")),
-      put("a.tsv", "a\tb\nc\td\te\n".getBytes("UTF-8")),
+    val json = "[{\"a\": 1}, {\"a\": 2.5, \"b\": {\"c\": [1, 2]}}]".getBytes("UTF-8")
+    val jsonl = "{\"a\": 1, \"b\": \"x\"}\n{\"a\": 2, \"c\": null}\n".getBytes("UTF-8")
+    val xlsb = dir.resolve("fixture.xlsb.bin")
+    XlsbFixture.makeXlsb(xlsb.toString)
+    val fixture: Map[Format, Array[Byte]] = Map(
+      Formats.Xlsx -> xlsx(Seq("S1" -> grid, "S2" -> Seq(Seq("x", "y", "z")))),
+      Formats.Xls -> XlsFixture.workbook(Seq("L1" -> grid)),
+      Formats.Xlsb -> Files.readAllBytes(xlsb),
+      Formats.Ods -> ods(Seq("O1" -> grid)),
+      Formats.Xmlss -> xmlss(Seq("X1" -> grid)).getBytes("UTF-8"),
+      Formats.PlainText -> csv,
+      Formats.Ant -> "k~~@~~v\n1~~@~~2~~@~~3\n".getBytes("UTF-8"),
+      Formats.Tsv -> "a\tb\nc\td\te\n".getBytes("UTF-8"),
+      Formats.Pdf -> pdf(Seq(grid, Seq(Seq("e", "f")))),
+      Formats.Html -> htmlTables(Seq(grid), "utf-8"),
+      Formats.Docx -> docx(Seq(grid), Nil),
+      Formats.Pptx -> pptx(Seq(Left(grid))),
+      Formats.Sqlite -> sqlite(4),
+      Formats.Warc -> warc(3),
+      Formats.Tar -> tar(3),
+      Formats.Parquet -> parquet(Seq((1L, 1.5, Seq(0.5f))).toDF("l", "d", "arr")),
+      Formats.Json -> json,
+      Formats.JsonLines -> jsonl)
+    // every registered extension has a small fixture here, but the
+    // always-Failed pickle gap: a format cannot join the registry
+    // without answering in process
+    val registered = for {
+      f <- Formats.registry if f != Formats.Pickle
+      ext <- f.extensions
+    } yield put("a" + ext, fixture.getOrElse(f, fail(s"no small fixture for ${f.extensions}")))
+    val files = registered ++ Seq(
+      put("b.json", "{\"a\": {\"0\": 1, \"1\": 2}, \"b\": {\"0\": \"x\"}}".getBytes("UTF-8")),
       put("a.csv.gz", gz(csv)),
       put("a.csv.zst", zst(csv)),
-      put("a.xlsx", xlsx(Seq("S1" -> grid, "S2" -> Seq(Seq("x", "y", "z"))))),
-      put("a.xml", xmlss(Seq("X1" -> grid)).getBytes("UTF-8")),
-      put("a.pdf", pdf(Seq(grid, Seq(Seq("e", "f"))))),
-      put("a.sqlite", sqlite(4)))
+      put("a.jsonl.gz", gz(jsonl)),
+      put("a.json.zst", zst(json)),
+      put("a.jsonl.zst", zst(jsonl)))
 
     var answers = Seq.empty[ParserAnswer]
     val jobs = jobsDuring {
@@ -123,11 +120,11 @@ class DriverDecodeSpec extends SparkSpec {
   test("in-process answers equal each format's Spark road on the parity tree") {
     val tree: Path = IngestFixtures.parityTree(tmpDir("road_parity"))
     val routed = Files.list(tree).iterator().asScala.map(_.toString).toSeq.sorted
-      .flatMap(Formats.route).filter(Formats.road(_).isDefined)
+      .flatMap(Formats.route).filter(r => Formats.road(r).isDefined && !r.format.nativeScan)
     assert(routed.map(_.format.engine).distinct.sorted ==
       Seq("ImportExcel", "ImportSqlite", "ImportTar", "ImportText", "ImportWARC", "ImportXML"))
     assert(routed.length >= 20, routed.length)
-    routed.foreach { case r @ Route(path, format, _) =>
+    routed.foreach { case r @ Route(path, format, _, _) =>
       val inProcess = AnyFile.parse(spark, path)
       assert(inProcess.forall(a => isLocal(a) && a.knownRowCount.isDefined), path)
       val spark0 =

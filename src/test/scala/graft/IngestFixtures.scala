@@ -171,6 +171,16 @@ object IngestFixtures {
   private val grid2: Grid = Seq(Seq("a", "b", "c"), Seq("d", "e"), Seq("f"))
   private val grid3: Grid = Seq(Seq("x", "y"), Seq("z", "w"))
 
+  /** A Spark-written single-file parquet of `df`: the bytes of its one
+    * part file. */
+  def parquet(df: org.apache.spark.sql.DataFrame): Array[Byte] = {
+    val out = Files.createTempDirectory("pq").resolve("t")
+    df.coalesce(1).write.parquet(out.toString)
+    val parts = Files.list(out)
+    try Files.readAllBytes(parts.filter(_.toString.endsWith(".parquet")).findFirst().get)
+    finally parts.close()
+  }
+
   /** The parity tree: every extension the registry routes, every codec
     * each one accepts, one malformed file per container format, an
     * unknown extension, and the pickle gap. Returns the directory. */

@@ -243,4 +243,45 @@ class TextImporterSpec extends SparkSpec {
     assert(Sniffers.detectEncoding(put("koi2.txt", ru.getBytes("KOI8-R")))
       .contains("koi8_r"))
   }
+
+  test("the byte sniffers answer what the path sniffers answer") {
+    import graft.sources.Sniffers
+    val dir = tmpDir("sniff_bytes")
+    val ru = "привет мир как дела сегодня и ещё немного текста для проверки\n"
+    val ruCap = "Привет Мир Как Дела Сегодня Ещё Немного Текста Для Проверки\n"
+    val ja = "\u3053\u3093\u306b\u3061\u306f\u4e16\u754c\u3001\u4eca\u65e5\u306f\u826f\u3044\u5929\u6c17\u3067\u3059\u3002\n"
+    val zh = "\u4eca\u5929\u5929\u6c14\u5f88\u597d\uff0c\u6211\u4eec\u53bb\u516c\u56ed\u6563\u6b65\u5427\u3002\n"
+    val tw = "\u4eca\u5929\u5929\u6c23\u5f88\u597d\uff0c\u6211\u5011\u53bb\u516c\u5712\u6563\u6b65\u5427\u3002\n"
+    val samples: Seq[(String, Array[Byte])] = Seq(
+      "tab.txt" -> "v11\tv12\tv13\nv21\tv22\tv23\n".getBytes("UTF-8"),
+      "ragged.csv" -> "a|b|c\n\"d\"|'e'\nf|g|h|i\n".getBytes("UTF-8"),
+      "semi.csv" -> "a;b;c\n1;2;3\n".getBytes("UTF-8"),
+      "none.txt" -> "no delimiter here\n".getBytes("UTF-8"),
+      "empty.txt" -> Array.emptyByteArray,
+      "west.txt" -> ("it".getBytes("ASCII") ++ Array(0x92.toByte) ++ "s fine\n".getBytes("ASCII")),
+      "soup.txt" -> ("x".getBytes("ASCII") ++ Array(0x90.toByte, 0x8d.toByte) ++ "\n".getBytes("ASCII")),
+      "le.txt" -> "hello world".getBytes("UTF-16LE"),
+      "be.txt" -> "hello world".getBytes("UTF-16BE"),
+      "u32.txt" -> "\ufeffhi".getBytes("UTF-32LE"),
+      "sjis.txt" -> ja.getBytes("Shift_JIS"),
+      "euc.txt" -> ja.getBytes("EUC-JP"),
+      "koi.txt" -> ru.getBytes("KOI8-R"),
+      "cp1251.txt" -> ruCap.getBytes("windows-1251"),
+      "gb.txt" -> zh.getBytes("GB2312"),
+      "big5.txt" -> tw.getBytes("Big5"),
+      "dos.txt" -> ru.getBytes("IBM866"),
+      "mac.txt" -> ruCap.getBytes("x-MacCyrillic"),
+      // past the sample: only the head votes and is decoded
+      "long.csv" -> ((("a;b\n" * (Sniffers.SampleBytes / 4)) + ("x|y|z\n" * 1000)).getBytes("UTF-8") ++
+        Array(0x90.toByte)),
+      "gz.csv.gz" -> IngestFixtures.gz("a|b\nc|d\n".getBytes("UTF-8")),
+      "zst.csv.zst" -> IngestFixtures.zst(ru.getBytes("KOI8-R")))
+    samples.foreach { case (name, bytes) =>
+      val p = dir.resolve(name)
+      java.nio.file.Files.write(p, bytes)
+      val decoded = graft.sources.FsIO.readAllBytesDecoded(p.toString)
+      assert(Sniffers.detectEncoding(decoded) == Sniffers.detectEncoding(p.toString), name)
+      assert(Sniffers.detectDelimiter(decoded) == Sniffers.detectDelimiter(p.toString), name)
+    }
+  }
 }
