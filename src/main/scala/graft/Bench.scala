@@ -51,10 +51,10 @@ import org.apache.spark.sql.SparkSession
   * user pays running THAT query alone; letting q115 ride q24's cached
   * labels would under-report its true cost and make the bench order
   * load-bearing. A production pipeline that runs several cluster-consuming
-  * analyses materializes the labels once (the `Materialize` operator /
-  * `CurationSink`'s incremental parquet) and feeds the downstream queries
-  * from the artifact — that composition is the user's explicit choice, not
-  * something the benchmark should silently simulate. The overlap is
+  * analyses materializes the labels once (the `Materialize` operator)
+  * and feeds the downstream queries from the artifact — that composition
+  * is the user's explicit choice, not something the benchmark should
+  * silently simulate. The overlap is
   * bounded: the three loop-riders share ~3 s of the 127 s sf0.1 suite.
   */
 object Bench {

@@ -79,9 +79,9 @@ final class TopKHeap(val k: Int) extends Serializable {
     idx.sortWith((a, b) => worseThan(keys(b), ties(b), keys(a), ties(a)))
   }
 
-  /** Wire format shared by the aggregate buffer and streaming state:
-    * count + (key, tie) pairs in heap-array order. A valid heap
-    * round-trips to a valid heap, so no re-heapify on read. */
+  /** The aggregate buffer's wire format: count + (key, tie) pairs in
+    * heap-array order. A valid heap round-trips to a valid heap, so no
+    * re-heapify on read. */
   def toBytes: Array[Byte] = {
     val bb = ByteBuffer.allocate(4 + size * 16)
     bb.putInt(size)
@@ -97,7 +97,7 @@ object TopKHeap {
     val n = bb.getInt
     require(n <= k,
       s"serialized heap holds $n entries > capacity $k — " +
-        "state was written with a larger k (incompatible restart)")
+        "it was written with a larger k")
     val buf = new TopKHeap(k)
     var i = 0
     while (i < n) { buf.keys(i) = bb.getDouble; buf.ties(i) = bb.getLong; i += 1 }

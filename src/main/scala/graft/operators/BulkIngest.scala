@@ -14,7 +14,7 @@ import graft.sources.{Formats, FsIO, Sheet}
   * points project) over its slice of the file list and emits uniform
   * all-string cell rows:
   *
-  *   (path, engine, sheet, parse_info, row_idx, cells: array<string>)
+  *   (path, engine, sheet, sheet_idx, parse_info, row_idx, cells: array<string>)
   *
   * Failure isolation matches the reference: a corrupt file yields ONE
   * `Failed` catalog row, never a thrown task (`main.py:139-144` — no
@@ -37,17 +37,24 @@ object BulkIngest {
     * (e.g. `ParserAnswer.filePath`) should compare on
     * `FsIO.hpath(p).toUri.getPath`.
     *
+    * `sheet_idx` is the sheet's 0-based position in the file's decode
+    * order, the order `AnyFile.parse` answers in, so two sheets of one
+    * name (standalone SpreadsheetML tables are all "Not defined") stay
+    * apart; a whole-file Failed row and a `Native` row carry −1, as their
+    * `row_idx` does.
+    *
     * `row_idx` contract for the big-`.warc.gz` split road: records number
     * as firstMember + offset-within-batch — identical to the whole-file
     * numbering on CONFORMING archives (one record per gzip member, the
     * ISO 28500 annex layout CommonCrawl ships). A non-conforming archive
     * that packs several records into one member numbers its tail records
-    * differently from the file-grain road; (path, sheet, row_idx)
+    * differently from the file-grain road; (path, sheet_idx, row_idx)
     * uniqueness and record order still hold. */
   final case class CellRow(
       path: String,
       engine: String,
       sheet: String,
+      sheet_idx: Int,
       parse_info: String,
       row_idx: Long,
       cells: Seq[String])
@@ -202,26 +209,27 @@ object BulkIngest {
       route match {
         case None => Seq(failedRow(path, engine))
         case Some(r) if r.format.nativeScan && !r.zstd =>
-          Seq(CellRow(path, engine, r.format.sheet, "Native", -1L, Seq.empty))
+          Seq(CellRow(path, engine, r.format.sheet, -1, "Native", -1L, Seq.empty))
         case Some(r) =>
           val sheets = r.format.decode(r)
           if (sheets.isEmpty) Seq(failedRow(path, engine))
-          else sheets.flatMap(cellRows(path, engine, _))
+          else sheets.zipWithIndex.flatMap { case (s, i) => cellRows(path, engine, s, i) }
       }
     } catch { case _: Exception => Seq(failedRow(path, engine)) }
   }
 
-  /** Sheet → cell rows: null-padded to the sheet's width, numbered from
-    * 0; an empty sheet is one Failed row carrying its name, so every sheet
-    * of every file lands in the catalog. */
-  private def cellRows(path: String, engine: String, s: Sheet): Seq[CellRow] = {
+  /** The `idx`-th sheet → cell rows: null-padded to the sheet's width,
+    * numbered from 0; an empty sheet is one Failed row carrying its name,
+    * so every sheet of every file lands in the catalog. */
+  private def cellRows(path: String, engine: String, s: Sheet, idx: Int): Seq[CellRow] = {
     val width = s.width
-    if (width == 0 || s.rows.isEmpty) Seq(failedRow(path, engine, s.name))
+    if (width == 0 || s.rows.isEmpty) Seq(failedRow(path, engine, s.name, idx))
     else s.rows.zipWithIndex.map { case (r, i) =>
-      CellRow(path, engine, s.name, "OK", i.toLong, r.padTo(width, null))
+      CellRow(path, engine, s.name, idx, "OK", i.toLong, r.padTo(width, null))
     }
   }
 
-  private[graft] def failedRow(path: String, engine: String, sheet: String = "None"): CellRow =
-    CellRow(path, engine, sheet, "Failed", -1L, Seq.empty)
+  private[graft] def failedRow(
+      path: String, engine: String, sheet: String = "None", sheetIdx: Int = -1): CellRow =
+    CellRow(path, engine, sheet, sheetIdx, "Failed", -1L, Seq.empty)
 }

@@ -46,8 +46,9 @@ object SplitScan {
 
   /** One input partition of the split scan. */
   sealed trait Work extends InputPartition { def path: String }
-  /** A unit and the row number of its first row. */
-  final case class Piece(path: String, unit: SplitUnit, first: Long) extends Work
+  /** A unit, the row number of its first row and its sheet's ordinal in
+    * the file. */
+  final case class Piece(path: String, unit: SplitUnit, first: Long, sheetIdx: Int) extends Work
   /** The whole file, decoded file-grain. */
   final case class Whole(path: String) extends Work
   /** A file whose index, probe or count threw: one Failed row. */
@@ -89,7 +90,9 @@ object SplitScan {
     try { var n = 0L; while (it.hasNext) { it.next(); n += 1 }; n }
     finally it match { case c: java.io.Closeable => c.close(); case _ => }
 
-  /** One file's work from its index and its resolved units. */
+  /** One file's work from its index and its resolved units. A unit that
+    * starts at row 0 starts the file's next sheet; an open one starts
+    * where its sheet's previous unit ends. */
   private def work(
       p: String,
       indexed: Option[Seq[SplitUnit]],
@@ -101,11 +104,13 @@ object SplitScan {
         val done = us.indices.map(i => resolved(i).getOrElse(Some(us(i) -> None)))
         if (done.exists(_.isEmpty)) Seq(Broken(p))
         else {
-          var end = Map.empty[String, Long]
-          done.flatten.map { case (u, counted) =>
-            val first = u.first.getOrElse(end.getOrElse(u.sheet, 0L))
-            u.rows.orElse(counted).foreach(n => end += u.sheet -> (first + n))
-            Piece(p, u, first)
+          var sheetIdx = -1
+          var end = 0L
+          done.flatten.zipWithIndex.map { case ((u, counted), i) =>
+            if (i == 0 || u.first.contains(0L)) { sheetIdx += 1; end = 0L }
+            val first = u.first.getOrElse(end)
+            u.rows.orElse(counted).foreach(n => end = first + n)
+            Piece(p, u, first, sheetIdx)
           }
         }
     }
@@ -148,8 +153,8 @@ object SplitScan {
       new SplitTable(work, FsIO.captureProps(spark)), None, None))
 
   /** `AnyFile`'s road for a big file whose form splits: one answer per
-    * sheet, in index order (a sheet starts at every unit whose first row
-    * is 0, so same-named tables stay apart), each a scan of that sheet's
+    * sheet, in index order (same-named tables stay apart), each a scan of
+    * that sheet's
     * units with positional all-string columns and the row count where
     * the index knows it. A whole-file index answers the in-process
     * decode. */
@@ -159,12 +164,8 @@ object SplitScan {
       case Seq(Broken(_)) => Nil
       case Seq(Whole(_)) => Formats.decoded(spark, r)
       case work =>
-        val pieces = work.collect { case p: Piece => p }
-        val sheets = pieces.foldLeft(Vector.empty[Vector[Piece]]) { (acc, p) =>
-          if (acc.isEmpty || p.unit.first.contains(0L)) acc :+ Vector(p)
-          else acc.init :+ (acc.last :+ p)
-        }
-        sheets.map { sheet =>
+        val sheets = work.collect { case p: Piece => p }.groupBy(_.sheetIdx).toSeq.sortBy(_._1)
+        sheets.map { case (_, sheet) =>
           val name = sheet.head.unit.sheet
           val width = sheet.head.unit.width
           if (width == 0) Formats.answer(spark, r.path, engine, Sheet(name, Nil))
@@ -185,14 +186,14 @@ object SplitScan {
     w match {
       case Whole(path) => (BulkIngest.parseOne(path).iterator, None)
       case Broken(path) => (Iterator(BulkIngest.failedRow(path, engine)), None)
-      case Piece(path, u, _) if u.width == 0 =>
-        (Iterator(BulkIngest.failedRow(path, engine, u.sheet)), None)
-      case Piece(path, u, first) =>
+      case Piece(path, u, _, sheetIdx) if u.width == 0 =>
+        (Iterator(BulkIngest.failedRow(path, engine, u.sheet, sheetIdx)), None)
+      case Piece(path, u, first, sheetIdx) =>
         val src = splitterOf(path).get.read(path, u)
         var idx = first - 1
         (src.map { r =>
           idx += 1
-          CellRow(path, engine, u.sheet, "OK", idx, r.padTo(u.width, null))
+          CellRow(path, engine, u.sheet, sheetIdx, "OK", idx, r.padTo(u.width, null))
         }, Some(src))
     }
   }
@@ -228,8 +229,8 @@ object SplitScan {
 
     override def next(): Boolean = rows.hasNext && {
       val r = rows.next()
-      current = InternalRow(utf8(r.path), utf8(r.engine), utf8(r.sheet), utf8(r.parse_info),
-        r.row_idx, new GenericArrayData(r.cells.map(utf8).toArray[Any]))
+      current = InternalRow(utf8(r.path), utf8(r.engine), utf8(r.sheet), r.sheet_idx,
+        utf8(r.parse_info), r.row_idx, new GenericArrayData(r.cells.map(utf8).toArray[Any]))
       true
     }
     override def get(): InternalRow = current

@@ -318,11 +318,8 @@ object PipelineQueries {
     * set is reproducible on any cluster size — and the DuckDB oracle
     * re-runs the ENTIRE chain, so the hash check covers the composition,
     * not just the pieces. */
-  /** The curation chain as a reusable DataFrame→DataFrame operator —
-    * shared verbatim by the batch query (q55) and the incremental
-    * streaming sink ([[graft.streaming.CurationSink]]), so batch and
-    * stream provably apply the same policy. Input schema: (doc_id, text,
-    * lang, source, ...). */
+  /** The curation chain as a reusable DataFrame→DataFrame operator, run
+    * by q55. Input schema: (doc_id, text, lang, source, ...). */
   def curate(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val keep = docs
       .groupBy(md5(col("text")).as("h"))

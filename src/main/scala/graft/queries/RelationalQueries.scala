@@ -419,11 +419,8 @@ object RelationalQueries {
       ORDER BY event_id""")
   )
 
-  /** Batch tumbling window: hourly event aggregate. This is the
-    * oracle-checkable twin of the Structured Streaming query
-    * `events.withWatermark("ts","10 minutes").groupBy(window($"ts","1 hour"))`
-    * (demonstrated in StreamingSpec); timestamps serialize as formatted
-    * strings so both engines hash identically. */
+  /** Batch tumbling window: hourly event aggregate. Timestamps serialize
+    * as formatted strings so both engines hash identically. */
   val q15 = Q(
     "q15_tumbling_window",
     (s, dir) =>
@@ -832,18 +829,14 @@ object RelationalQueries {
   )
 
   /** Click→purchase attribution: each click left-joined to the purchases
-    * the same user makes within the following 30 minutes — the batch twin
-    * of [[graft.streaming.StreamingIntervalJoin]] (the stream-stream
-    * interval join; StreamingIntervalJoinSpec asserts stream ≡ THIS).
-    * Clicks with no attributable purchase survive with −1/0 sentinels
-    * (q58's coalesce discipline — engine-dependent NULL ordering never
-    * reaches the hash).
+    * the same user makes within the following 30 minutes. Clicks with no
+    * attributable purchase survive with −1/0 sentinels (q58's coalesce
+    * discipline — engine-dependent NULL ordering never reaches the hash).
     *
     * Scale shape: an EQUI join on user_id with the time bound as residual
     * predicate — Spark plans SMJ/shuffled-hash keyed by user, never a
     * nested loop (suite-wide plan guard). Purchases replicate at most
-    * per-click-within-window, the same bound the streaming state story
-    * relies on. */
+    * per-click-within-window. */
   val q81 = Q(
     "q81_interval_enrich",
     (s, dir) => {
@@ -1325,14 +1318,9 @@ object RelationalQueries {
       FROM sums ORDER BY event_type""")
   )
 
-  /** Stream-static enrichment join (batch twin) — the standard streaming
-    * topology "enrich each event with its dimension row, aggregate by a
-    * dimension attribute": events ⋈ customer (user key) ⋈ nation, revenue
-    * and volume per (nation, event_type). In the streaming form
-    * (StreamingSpec's twin, built on [[Tables.eventsStream]]) the
-    * dimension side is static and Spark broadcasts it into every
-    * micro-batch — no state store, no watermark needed for the join
-    * itself. The batch twin here carries the same plan shape: both dims
+  /** Enrichment join — "enrich each event with its dimension row,
+    * aggregate by a dimension attribute": events ⋈ customer (user key) ⋈
+    * nation, revenue and volume per (nation, event_type). Both dims
     * are explicitly broadcast (customer is bounded per-tenant; nation is
     * 25 rows), so the corpus-sized events scan never shuffles — the only
     * exchange is the ~125-group aggregate, map-side combined. At 100 TB

@@ -285,9 +285,8 @@ object ScaleQueries {
   private val CmC = IndexedSeq.tabulate(CmDepth)(i => mix64(0xF0000L + i) & Mask29)
 
   /** Sketch row r's bucket for an md5-halved value — THE count-min hash
-    * family, in exactly one place: q63's counter build, q63's probes, and
-    * the streaming sketch's cell stream all call this, so batch and stream
-    * cannot drift apart (their counters must be EQUAL, not close). */
+    * family, in exactly one place: q63's counter build and its probes
+    * both call this, so they cannot drift apart. */
   private def cmBucket(r: Int, lo: Column, hi: Column): Column =
     ((lit(CmA(r)) * lo + lit(CmB(r)) * hi + lit(CmC(r))) % P61) % CmWidth
 
@@ -305,15 +304,6 @@ object ScaleQueries {
       .withColumn("bucket", col("rb.bucket"))
       .drop("rb")
   }
-
-  /** One (r, bucket) sketch cell per token occurrence — q63's update
-    * stream, shared with [[graft.streaming.StreamingCountMin]]. */
-  def cmCells(docs: DataFrame): DataFrame =
-    cmCellsOf(
-      docs.select(explode(split(col("text"), "\\s+")).as("token"))
-        .filter(length(col("token")) > 0)
-        .select(graft.functions.GraftFunctions.md5_prefix64(col("token")).as("p")),
-      col("p")).select("r", "bucket")
 
   /** Count-min sketch over the token stream: 4 hash rows × 1024 counters
     * estimate any token's frequency with one-sided error (estimate ≥

@@ -68,31 +68,6 @@ object Tables {
     }
   }
 
-  /** Streaming twin of [[events]]: the same schema-adaptive decode over a
-    * file-stream source watching `watchDir` (staged copies of the events
-    * parquet). The stream's user-provided schema must match the PHYSICAL
-    * file schema, so it is derived from a raw batch read of the real data
-    * in `dataDir`, then the same ts normalization is applied on top. */
-  def eventsStream(s: SparkSession, dataDir: String, watchDir: String): DataFrame = {
-    val path = s"$dataDir/events.parquet"
-    if (eventsTsIsNanos(s, path)) {
-      val ns = s.newSession()
-      ns.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = ns.read.parquet(path).schema
-      ns.readStream.schema(raw).option("maxFilesPerTrigger", "1").parquet(watchDir)
-        .withColumn("ts", timestamp_micros(expr("ts div 1000")))
-    } else {
-      val raw = s.read.parquet(path).schema
-      val st = s.readStream.schema(raw)
-        .option("maxFilesPerTrigger", "1").parquet(watchDir)
-      raw("ts").dataType match {
-        case org.apache.spark.sql.types.TimestampNTZType =>
-          st.withColumn("ts", col("ts").cast("timestamp"))
-        case _ => st
-      }
-    }
-  }
-
   /** True iff the stored `ts` column is parquet TIMESTAMP(NANOS). Reads one
     * footer via parquet-hadoop; handles both a bare parquet file (the
     * driver's layout) and a Spark-written directory. */

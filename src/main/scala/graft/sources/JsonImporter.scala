@@ -13,7 +13,7 @@ import org.apache.spark.sql.catalyst.json.{CreateJacksonParser, JacksonParser, J
 import org.apache.spark.sql.catalyst.json.graft.JsonShims
 import org.apache.spark.sql.catalyst.util.FailureSafeParser
 import org.apache.spark.sql.graft.SqlShims
-import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** JSON roads: the typed frames `spark.read.json` gives, read in process
@@ -45,11 +45,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * `JsonInferSchema.inferField` folded with `compatibleRootType` and
   * `canonicalizeType` (what `JsonInferSchema.infer` runs per partition),
   * then `JacksonParser` under `FailureSafeParser`. Jackson's nesting cap
-  * (`StreamReadConstraints`) bounds every parse, so a hostile nesting
-  * depth ends as a corrupt record or a Failed answer, never a deep stack.
-  * A frame whose only column is the corrupt record answers Failed on
-  * every road: it holds no parseable record, and Spark refuses to query
-  * it from a file.
+  * (`StreamReadConstraints`, 1,000 levels) ends a deeper document as a
+  * corrupt record or a Failed answer. Under the cap a record still infers
+  * a schema as deep as itself, and Catalyst recurses once per level of
+  * it: a schema 150–300 deep overflowed the stack of the thread that
+  * collected the frame, and of an executor deserializing a task. So the
+  * one schema gate every road passes (`refused`) answers Failed for a
+  * schema nested past [[MaxDepth]], as it does for a frame whose only
+  * column is the corrupt record: that holds no parseable record, and
+  * Spark refuses to query it from a file.
   *
   * Spark's json scans cannot decode zstd without Hadoop's native library,
   * so past the cap the `.zst` forms decode through zstd-jni instead: lines
@@ -82,7 +86,7 @@ object JsonImporter {
           new ObjectMapper().readTree(FsIO.openDecoded(r.path))))
         case _ => return Nil
       }
-    if (corruptOnly(spark, df.schema)) Nil else Seq(answer(r, df, None))
+    if (refused(spark, df.schema)) Nil else Seq(answer(r, df, None))
   }
 
   /** The `.jsonl`/`.ndjson` road past the cap. */
@@ -98,7 +102,7 @@ object JsonImporter {
       else spark.read.json(r.path)
     // a file of no parseable objects (empty, blank, or nothing but
     // corrupt lines) answers Failed, not raw garbage
-    if (df.columns.isEmpty || corruptOnly(spark, df.schema)) Nil
+    if (df.columns.isEmpty || refused(spark, df.schema)) Nil
     else Seq(answer(r, df, None))
   }
 
@@ -113,7 +117,7 @@ object JsonImporter {
       else if (r.zstd) read(spark, Seq(new String(bytes, StandardCharsets.UTF_8)), Strings)
       else read(spark, Seq(bytes), Document)
     }
-    if (corruptOnly(spark, schema)) Nil
+    if (refused(spark, schema)) Nil
     else Seq(answer(r, SqlShims.localFrame(spark, schema, rows), Some(rows.length.toLong)))
   }
 
@@ -124,7 +128,7 @@ object JsonImporter {
       if (r.zstd) read(spark, newlineLines(bytes), Strings)
       else read(spark, hadoopLines(bytes), PathLines)
     }
-    if (schema.isEmpty || corruptOnly(spark, schema)) Nil
+    if (schema.isEmpty || refused(spark, schema)) Nil
     else Seq(answer(r, SqlShims.localFrame(spark, schema, rows), Some(rows.length.toLong)))
   }
 
@@ -135,8 +139,22 @@ object JsonImporter {
   private def corruptCol(spark: SparkSession): String =
     spark.conf.get("spark.sql.columnNameOfCorruptRecord", "_corrupt_record")
 
-  private def corruptOnly(spark: SparkSession, schema: StructType): Boolean =
-    schema.fieldNames.sameElements(Array(corruptCol(spark)))
+  /** Struct and array levels a JSON frame's schema may nest, the root
+    * struct included: past it Catalyst's per-level recursion can overflow
+    * a thread's stack, which no road may risk. */
+  final val MaxDepth = 64
+
+  /** The schema gate of every road: a frame whose only column is the
+    * corrupt record, or whose schema nests past [[MaxDepth]], answers
+    * Failed. */
+  private def refused(spark: SparkSession, schema: StructType): Boolean =
+    schema.fieldNames.sameElements(Array(corruptCol(spark))) || depth(schema) > MaxDepth
+
+  private def depth(t: DataType): Int = t match {
+    case s: StructType => 1 + s.fields.iterator.map(f => depth(f.dataType)).maxOption.getOrElse(0)
+    case a: ArrayType => 1 + depth(a.elementType)
+    case _ => 0
+  }
 
   /** How one of Spark's JSON reads sees its records: the parser its
     * schema inference opens on a record, the parser its read opens, the

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   *      `split(delimiter)` → per-cell `strip('"').strip("'")` → right-pad
   *      with `''` to max arity (`main.py:339-351`)
   *
-  * Spark shape (past 4 MiB): the two sniffs read one bounded driver-side
+  * Spark shape (past 4 MiB): the two sniffs share one bounded driver-side
   * prefix ([[Sniffers]]); arity+count is ONE Spark aggregate job over the
   * partitioned file scan; the padded projection is a lazy, codegen-friendly
   * `select` — so a 1 TB text file parses with a single distributed pass plus
@@ -45,7 +45,8 @@ object TextImporter {
     * `delimiter` = None sniffs it. */
   def answers(spark: SparkSession, r: Route, delimiter: Option[String]): Seq[ParserAnswer] = {
     val filePath = r.path
-    val delim = delimiter.getOrElse(Sniffers.detectDelimiter(filePath))
+    val head = FsIO.readHeadDecoded(filePath, Sniffers.SampleBytes)
+    val delim = delimiter.getOrElse(Sniffers.detectDelimiter(head))
 
     // `.zst`/`.zstd` ride the graft-zstd-lines DSv2 source (zstd-jni;
     // Spark's native text scan needs Hadoop's native zstd library) —
@@ -91,7 +92,7 @@ object TextImporter {
         data = projected,
         filePathRaw = filePath,
         sheetName = r.format.sheet,
-        encoding = encodingOf(filePath),
+        encoding = Sniffers.detectEncoding(head).getOrElse("None"),
         separator = delim,
         engine = r.format.engine,
         knownRowCount = Some(rowCount)
@@ -133,10 +134,6 @@ object TextImporter {
       encoding = Some(Sniffers.detectEncoding(bytes).getOrElse("None")),
       separator = Some(delim)))
   }
-
-  /** The sniffed encoding, `"None"` when there is none. */
-  private def encodingOf(path: String): String =
-    Sniffers.detectEncoding(path).getOrElse("None")
 
   /** All-string positional schema shared by the text-like regime readers. */
   def positionalSchema(n: Int): org.apache.spark.sql.types.StructType =

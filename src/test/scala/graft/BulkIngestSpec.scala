@@ -85,8 +85,8 @@ class BulkIngestSpec extends SparkSpec {
     val lower = name.toLowerCase
     val answers = AnyFile.parse(spark, p)
     val rows = BulkIngest.parseOne(p)
-    val sheets = rows.map(_.sheet).distinct
-    val bySheet = sheets.map(s => rows.filter(_.sheet == s))
+    val bySheet = rows.map(_.sheet_idx).distinct.map(i => rows.filter(_.sheet_idx == i))
+    val sheets = bySheet.map(_.head.sheet)
     def cells(df: org.apache.spark.sql.DataFrame): Seq[Seq[String]] =
       df.collect().toSeq.map(_.toSeq.map(v => if (v == null) null else v.toString))
     def okCells(rs: Seq[BulkIngest.CellRow]): Seq[Seq[String]] =
@@ -138,7 +138,7 @@ class BulkIngestSpec extends SparkSpec {
     val rows = BulkIngest.parseTree(spark, dir.toString)
       .filter(col("parse_info") === "OK").collect()
       .map(r => (java.nio.file.Paths.get(r.getString(0)).getFileName.toString,
-        r.getString(2), r.getLong(4), r.getSeq[String](5)))
+        r.getString(2), r.getLong(5), r.getSeq[String](6)))
 
     def bulkCells(file: String): Seq[Seq[String]] =
       rows.filter(_._1 == file).sortBy(_._3).map(_._4.toSeq).toSeq
@@ -197,7 +197,7 @@ class BulkIngestSpec extends SparkSpec {
     // every workbook lands in the catalog, one Failed row per empty sheet
     def key(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (java.nio.file.Paths.get(r.getString(0)).getFileName.toString,
-        r.getString(2), r.getString(3), r.getLong(4), r.getSeq[String](5).toList))
+        r.getString(2), r.getString(4), r.getLong(5), r.getSeq[String](6).toList))
       .sortBy(_.toString).toSeq
     val grain = key(BulkIngest.parseTree(spark, dir.toString))
     assert(grain.map(_._1).distinct == files.map(f =>
@@ -240,7 +240,7 @@ class BulkIngestSpec extends SparkSpec {
     def key(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (java.nio.file.Paths.get(r.getString(0))
           .getFileName.toString, r.getString(1), r.getString(2),
-        r.getString(3), r.getLong(4), r.getSeq[String](5).toList))
+        r.getString(4), r.getLong(5), r.getSeq[String](6).toList))
         .sortBy(t => (t._1, t._3, t._5)).toSeq
     // threshold 1 byte: every .xlsx (incl. the corrupt one) takes the
     // DSv2 road; output must be indistinguishable from the file-grain road
@@ -282,7 +282,7 @@ class BulkIngestSpec extends SparkSpec {
     graft.sources.ListingRecorder.drain() // reset
     def key(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (graft.sources.FsIO.fileName(r.getString(0)),
-        r.getString(2), r.getLong(4), r.getSeq[String](5).toList))
+        r.getString(2), r.getLong(5), r.getSeq[String](6).toList))
         .sortBy(t => (t._1, t._2, t._3)).toSeq
     // threshold 1: both workbooks take the DSv2 road; everything else
     // parses from the executor-side listing without a driver collect
@@ -321,7 +321,7 @@ class BulkIngestSpec extends SparkSpec {
     }
     def read() = spark.read.parquet(out)
       .collect().map(r => (graft.sources.FsIO.fileName(r.getString(0)),
-        r.getString(3), r.getLong(4), r.getSeq[String](5).toList))
+        r.getString(4), r.getLong(5), r.getSeq[String](6).toList))
       .sortBy(t => (t._1, t._3)).toSeq
 
     // batch 1: a text file and a CORRUPT xlsx (failure isolation)
@@ -343,7 +343,7 @@ class BulkIngestSpec extends SparkSpec {
       .parseFiles(spark, Seq(in.resolve("a.txt").toString,
         in.resolve("b.csv").toString, in.resolve("bad.xlsx").toString))
       .collect().map(r => (graft.sources.FsIO.fileName(r.getString(0)),
-        r.getString(3), r.getLong(4), r.getSeq[String](5).toList))
+        r.getString(4), r.getLong(5), r.getSeq[String](6).toList))
       .sortBy(t => (t._1, t._3)).toSeq
     assert(after2 == batch)
   }
@@ -354,7 +354,7 @@ class BulkIngestSpec extends SparkSpec {
       .write.mode("overwrite").parquet(dir.resolve("t.parquet").toString)
     writeFile(dir, "d.json", """[{"a": 1}]""")
     val rows = BulkIngest.parseTree(spark, dir.toString).collect()
-      .map(r => (r.getString(1), r.getString(3)))
+      .map(r => (r.getString(1), r.getString(4)))
     // every parquet part file + the json file catalogs as Native;
     // spark-written _SUCCESS markers and checksums surface as Failed
     // catalog rows (unknown extensions), never as exceptions

@@ -121,15 +121,15 @@ class DocxImporterSpec extends SparkSpec {
          |<w:tr><w:tc>${p("a")}</w:tc></w:tr>
          |</w:tbl></w:body></w:document>""".stripMargin)
     val rows = graft.operators.BulkIngest.parseTree(spark, dir.toString)
-      .collect().sortBy(_.getLong(4))
+      .collect().sortBy(_.getLong(5))
     assert(rows.length == 2)
     assert(rows.forall(r => r.getString(1) == "ImportDocx" &&
-      r.getString(2) == "table0" && r.getString(3) == "OK"))
-    assert(rows(0).getSeq[String](5) == Seq("k", "v"))
-    assert(rows(1).getSeq[String](5) == Seq("a", null))
+      r.getString(2) == "table0" && r.getString(4) == "OK"))
+    assert(rows(0).getSeq[String](6) == Seq("k", "v"))
+    assert(rows(1).getSeq[String](6) == Seq("a", null))
     // ≡ the driver-side AnyFile frame
     val drv = AnyFile.parse(spark, path).head.data.collect()
       .map(_.toSeq.map(v => if (v == null) null else v.toString)).toSeq
-    assert(rows.map(_.getSeq[String](5).toSeq).toSeq == drv)
+    assert(rows.map(_.getSeq[String](6).toSeq).toSeq == drv)
   }
 }

@@ -178,7 +178,7 @@ class FsIOSpec extends SparkSpec {
     writeFile(dir, "broken.xlsx", "not a zip")
     def key(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (FsIO.fileName(r.getString(0)), r.getString(1),
-        r.getString(2), r.getString(3), r.getLong(4), r.getSeq[String](5).toList))
+        r.getString(2), r.getString(4), r.getLong(5), r.getSeq[String](6).toList))
         .sortBy(t => (t._1, t._5)).toSeq
     val local = key(BulkIngest.parseTree(spark, dir.toString))
     // remote twin: same files addressed through the non-file scheme (the
@@ -202,8 +202,8 @@ class FsIOSpec extends SparkSpec {
     writeFile(s1, "one.csv", "1,2\n3,4\n")
     writeFile(s2, "two.txt", "z\n")
     def key(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (FsIO.fileName(r.getString(0)), r.getLong(4),
-        r.getSeq[String](5).toList)).sortBy(t => (t._1, t._2)).toSeq
+      df.collect().map(r => (FsIO.fileName(r.getString(0)), r.getLong(5),
+        r.getSeq[String](6).toList)).sortBy(t => (t._1, t._2)).toSeq
     assert(key(BulkIngest.parseTreeAuto(spark, dir.toString)) ==
       key(BulkIngest.parseTree(spark, dir.toString)))
   }

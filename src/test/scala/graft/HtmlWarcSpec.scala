@@ -149,8 +149,8 @@ class HtmlWarcSpec extends SparkSpec {
 
     val rows = BulkIngest.parseTree(spark, dir.toString).collect()
       .map(r => (java.nio.file.Paths.get(r.getString(0)).getFileName.toString,
-        r.getString(1), r.getString(2), r.getString(3), r.getLong(4),
-        r.getSeq[String](5)))
+        r.getString(1), r.getString(2), r.getString(4), r.getLong(5),
+        r.getSeq[String](6)))
 
     val t = rows.filter(_._1 == "t.html")
     assert(t.length == 1 && t.head._2 == "ImportHTML" &&
@@ -192,7 +192,7 @@ class HtmlWarcSpec extends SparkSpec {
     val dir = tmpDir("warcgz")
     java.nio.file.Files.write(dir.resolve("crawl.warc.gz"), gzBytes)
     val rows = BulkIngest.parseTree(spark, dir.toString).collect()
-      .map(r => (r.getString(1), r.getString(3), r.getLong(4), r.getSeq[String](5)))
+      .map(r => (r.getString(1), r.getString(4), r.getLong(5), r.getSeq[String](6)))
       .sortBy(_._3)
     assert(rows.length == 2 && rows.forall(r => r._1 == "ImportWARC" && r._2 == "OK"))
     assert(rows(0)._4 == Seq("http://corpus.local/doc/1", "response", "25"))

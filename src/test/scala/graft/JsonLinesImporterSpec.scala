@@ -52,7 +52,7 @@ class JsonLinesImporterSpec extends SparkSpec {
     val rows = graft.operators.BulkIngest.parseTree(spark, dir.toString)
       .collect()
       .map(r => (java.nio.file.Paths.get(r.getString(0)).getFileName.toString,
-        r.getString(1), r.getString(2), r.getString(3), r.getSeq[String](5)))
+        r.getString(1), r.getString(2), r.getString(4), r.getSeq[String](6)))
     val j = rows.filter(_._1 == "d.jsonl")
     assert(j.length == 1 &&
       j.head._2 == "ImportJSONL" && j.head._4 == "Native")

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
 
 import graft.model.ParserAnswer
-import graft.sources.{Formats, FsIO}
+import graft.sources.{Formats, FsIO, JsonImporter}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
@@ -182,5 +182,23 @@ class NativeScanSpec extends SparkSpec {
     // the session still answers
     assert(AnyFile.parse(spark, put(dir, "fine.jsonl", utf8("{\"a\": 1}\n"))).head.parseInfo ==
       ParserAnswer.Ok)
+  }
+
+  test("JSON nested past MaxDepth, under Jackson's cap, answers Failed on both roads") {
+    val dir = tmpDir("json_nested")
+    def nested(depth: Int) = utf8("{\"a\": " * depth + "1" + "}" * depth + "\n")
+    for (depth <- Seq(150, 300)) {
+      val f = put(dir, s"d$depth.jsonl", nested(depth))
+      var answers = Seq.empty[ParserAnswer]
+      assert(jobsDuring { answers = AnyFile.parse(spark, f) } == 0, f)
+      assert(answers.map(_.parseInfo) == Seq(ParserAnswer.Failed), f)
+    }
+    // the spark.read road; only at 150, since a 300-deep schema can hang
+    // the scan's own inference job
+    val r = Formats.route(dir.resolve("d150.jsonl").toString).get
+    assert(Formats.road(r).get(spark, r).isEmpty)
+    // a record at the bound answers and collects
+    val at = AnyFile.parse(spark, put(dir, "at.jsonl", nested(JsonImporter.MaxDepth)))
+    assert(at.map(_.parseInfo) == Seq(ParserAnswer.Ok) && at.head.data.collect().length == 1)
   }
 }

@@ -92,7 +92,7 @@ class OdsDataSourceSpec extends SparkSpec {
     // output identical to the file-grain road
     def key(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (graft.sources.FsIO.fileName(r.getString(0)),
-        r.getString(2), r.getLong(4), r.getSeq[String](5).toList))
+        r.getString(2), r.getLong(5), r.getSeq[String](6).toList))
         .sortBy(t => (t._1, t._2, t._3)).toSeq
     val auto = graft.operators.BulkIngest.parseTreeAuto(
       spark, dir.toString, bigBytes = 1L)

@@ -160,13 +160,13 @@ class PptxImporterSpec extends SparkSpec {
     writePptx(path,
       "ppt/slides/slide1.xml" -> slide(sp("alpha") + sp("beta")))
     val rows = graft.operators.BulkIngest.parseTree(spark, dir.toString)
-      .collect().sortBy(_.getLong(4))
+      .collect().sortBy(_.getLong(5))
     assert(rows.length == 2)
     assert(rows.forall(r => r.getString(1) == "ImportPptx" &&
-      r.getString(2) == "slide1" && r.getString(3) == "OK"))
-    assert(rows.map(_.getSeq[String](5).head).toSeq == Seq("alpha", "beta"))
+      r.getString(2) == "slide1" && r.getString(4) == "OK"))
+    assert(rows.map(_.getSeq[String](6).head).toSeq == Seq("alpha", "beta"))
     val drv = AnyFile.parse(spark, path).head.data.collect()
       .map(_.getString(0)).toSeq
-    assert(rows.map(_.getSeq[String](5).head).toSeq == drv)
+    assert(rows.map(_.getSeq[String](6).head).toSeq == drv)
   }
 }

@@ -66,8 +66,8 @@ class Round13IngestSpec extends SparkSpec {
     val dir = tmpDir("warcauto")
     java.nio.file.Files.write(dir.resolve("big.warc.gz"), memberArchive(12))
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getString(1), r.getString(2), r.getString(3),
-        r.getLong(4), r.getSeq[String](5).toList)).sortBy(_._4).toSeq
+      .map(r => (r.getString(1), r.getString(2), r.getString(4),
+        r.getLong(5), r.getSeq[String](6).toList)).sortBy(_._4).toSeq
     // bigBytes=1 forces the split road; default goes file-grain
     val split = rows(BulkIngest.parseTreeAuto(spark, dir.toString, bigBytes = 1L))
     val whole = rows(BulkIngest.parseTree(spark, dir.toString))
@@ -85,7 +85,7 @@ class Round13IngestSpec extends SparkSpec {
       .collect()
     assert(rows.length == 1)
     assert(rows.head.getString(1) == "ImportWARC" &&
-      rows.head.getString(3) == "Failed")
+      rows.head.getString(4) == "Failed")
   }
 
   test("a member truncated inside its FNAME field throws, answering Failed") {
@@ -100,7 +100,7 @@ class Round13IngestSpec extends SparkSpec {
     }
     val rows = BulkIngest.parseTreeAuto(spark, dir.toString, bigBytes = 1L)
       .collect()
-    assert(rows.length == 1 && rows.head.getString(3) == "Failed")
+    assert(rows.length == 1 && rows.head.getString(4) == "Failed")
   }
 
   test("trailing non-gzip garbage ends the member walk leniently") {
@@ -140,7 +140,7 @@ class Round13IngestSpec extends SparkSpec {
       csv.getBytes(StandardCharsets.UTF_8))
     val bulk = BulkIngest.parseTree(spark, dir.toString).collect()
       .map(r => (graft.sources.FsIO.fileName(r.getString(0)), r.getString(1),
-        r.getString(3), r.getLong(4), r.getSeq[String](5).toList))
+        r.getString(4), r.getLong(5), r.getSeq[String](6).toList))
     val gz = bulk.filter(_._1 == "d.csv.gz").sortBy(_._4)
     val pl = bulk.filter(_._1 == "plain.csv").sortBy(_._4)
     assert(gz.nonEmpty && gz.map(t => (t._2, t._3, t._4, t._5)).toSeq ==

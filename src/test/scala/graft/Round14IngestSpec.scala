@@ -23,7 +23,7 @@ class Round14IngestSpec extends SparkSpec {
 
   private def cells(df: org.apache.spark.sql.DataFrame) = df.collect()
     .map(r => (graft.sources.FsIO.fileName(r.getString(0)), r.getString(1),
-      r.getString(3), r.getLong(4), r.getSeq[String](5).toList))
+      r.getString(4), r.getLong(5), r.getSeq[String](6).toList))
 
   test(".csv.zst / .tsv.zst parse like their plain twins (delimiter vote on decoded bytes)") {
     val dir = tmpDir("zstcsv")
@@ -230,8 +230,8 @@ class Round14IngestSpec extends SparkSpec {
       val body = corpusBody(trailingNl)
       java.nio.file.Files.write(dir.resolve("big.jsonl.zst"), cutIntoFrames(body))
       def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-        .map(r => (r.getString(1), r.getString(2), r.getString(3),
-          r.getLong(4), r.getSeq[String](5).toList)).sortBy(_._4).toSeq
+        .map(r => (r.getString(1), r.getString(2), r.getString(4),
+          r.getLong(5), r.getSeq[String](6).toList)).sortBy(_._4).toSeq
       // bigBytes=1 + splitBatchBytes=1 force per-frame ranged batches
       val split = rows(BulkIngest.parseTreeAuto(spark, dir.toString,
         bigBytes = 1L, splitBatchBytes = 1L))

@@ -258,7 +258,7 @@ class Round15IngestSpec extends SparkSpec {
     for (f <- Seq("cut.tar", "empty.tar")) {
       val rows = BulkIngest.parseOne(dir.resolve(f).toString)
       assert(rows == Seq(BulkIngest.CellRow(dir.resolve(f).toString,
-        "ImportTar", "None", "Failed", -1L, Seq.empty)), f)
+        "ImportTar", "None", -1, "Failed", -1L, Seq.empty)), f)
     }
   }
 
@@ -297,10 +297,10 @@ class Round15IngestSpec extends SparkSpec {
     assert(batches.head.firstMember == 0L)
     val auto = BulkIngest.parseTreeAuto(spark, dir.toString,
       bigBytes = 4096, splitBatchBytes = 16 << 10)
-      .collect().map(r => (r.getLong(4), r.getSeq[String](5).toList))
+      .collect().map(r => (r.getLong(5), r.getSeq[String](6).toList))
       .sortBy(_._1)
     val fileGrain = BulkIngest.parseFiles(spark, Seq(p.toString))
-      .collect().map(r => (r.getLong(4), r.getSeq[String](5).toList))
+      .collect().map(r => (r.getLong(5), r.getSeq[String](6).toList))
       .sortBy(_._1)
     assert(auto.length == many.length)
     assert(auto.toSeq == fileGrain.toSeq)
@@ -322,10 +322,10 @@ class Round15IngestSpec extends SparkSpec {
     assert(fs.filter(_.isData).map(_.decoded) == chunks.map(_.length.toLong))
     val auto = graft.operators.BulkIngest.parseTreeAuto(spark, dir.toString,
       bigBytes = 4096, splitBatchBytes = 16 << 10)
-      .collect().map(r => (r.getLong(4), r.getSeq[String](5).toList))
+      .collect().map(r => (r.getLong(5), r.getSeq[String](6).toList))
       .sortBy(_._1)
     val fileGrain = BulkIngest.parseFiles(spark, Seq(p.toString))
-      .collect().map(r => (r.getLong(4), r.getSeq[String](5).toList))
+      .collect().map(r => (r.getLong(5), r.getSeq[String](6).toList))
       .sortBy(_._1)
     assert(auto.length == manyMembers.length)
     assert(auto.toSeq == fileGrain.toSeq)
@@ -338,7 +338,7 @@ class Round15IngestSpec extends SparkSpec {
     java.nio.file.Files.write(dir.resolve("s.tar.zst"), zst(tar))
     val auto = graft.operators.BulkIngest.parseTreeAuto(spark, dir.toString,
       bigBytes = 4096, splitBatchBytes = 16 << 10)
-      .collect().map(r => (r.getLong(4), r.getSeq[String](5).toList))
+      .collect().map(r => (r.getLong(5), r.getSeq[String](6).toList))
       .sortBy(_._1)
     assert(auto.length == manyMembers.length)
     val expect = manyMembers.zipWithIndex.map { case ((n, d), i) =>
@@ -358,7 +358,7 @@ class Round15IngestSpec extends SparkSpec {
       java.util.Arrays.copyOf(whole, whole.length - 7))
     val rows = graft.operators.BulkIngest.parseTreeAuto(spark, dir.toString,
       bigBytes = 4096, splitBatchBytes = 16 << 10).collect()
-    assert(rows.length == 1 && rows.head.getString(3) == "Failed" &&
+    assert(rows.length == 1 && rows.head.getString(4) == "Failed" &&
       rows.head.getString(1) == "ImportTar")
   }
 

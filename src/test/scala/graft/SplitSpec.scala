@@ -20,8 +20,8 @@ class SplitSpec extends SparkSpec {
 
   private def key(df: DataFrame) =
     df.collect().map(r => (FsIO.fileName(r.getString(0)), r.getString(1), r.getString(2),
-      r.getString(3), r.getLong(4), r.getSeq[String](5).toList))
-      .sortBy(t => (t._1, t._3, t._5)).toSeq
+      r.getInt(3), r.getString(4), r.getLong(5), r.getSeq[String](6).toList))
+      .sortBy(t => (t._1, t._4, t._6)).toSeq
 
   test("parity tree through the split road ≡ parseTree, every splittable file included") {
     val tree = IngestFixtures.parityTree(tmpDir("split_parity"))
@@ -32,7 +32,7 @@ class SplitSpec extends SparkSpec {
     val split = Files.list(tree).iterator().asScala.map(_.toString).toSeq
       .filter(p => Formats.route(p).exists(_.splitter.isDefined)).map(FsIO.fileName)
     assert(split.contains("broken.xlsx") && split.contains("gz.warc.gz") && split.length >= 12, split)
-    assert(got.exists(t => t._1 == "broken.ods" && t._4 == "Failed"))
+    assert(got.exists(t => t._1 == "broken.ods" && t._5 == "Failed"))
     assert(auto.queryExecution.executedPlan.toString.contains("BatchScan"))
   }
 
@@ -143,8 +143,11 @@ class SplitSpec extends SparkSpec {
       assert(split.map(_.sheetName) == Seq(name, name), f)
       assert(shape(split) == shape(Formats.decoded(spark, r)), f)
     }
-    assert(key(BulkIngest.parseTreeAuto(spark, dir.toString, bigBytes = 1L)) ==
-      key(BulkIngest.parseTree(spark, dir.toString)))
+    val auto = key(BulkIngest.parseTreeAuto(spark, dir.toString, bigBytes = 1L))
+    assert(auto == key(BulkIngest.parseTree(spark, dir.toString)))
+    // the bulk rows keep the two tables apart by sheet ordinal
+    assert(auto.filter(_._1 == "bare.xml").groupBy(_._4).view.mapValues(_.length).toMap ==
+      Map(0 -> 2, 1 -> 3))
   }
 
   test("a workbook's sheets probe in one task each, after a one-task index") {
@@ -160,7 +163,7 @@ class SplitSpec extends SparkSpec {
     val tasks = tracker.getJobIdsForGroup("split-probe").sorted.toSeq.map(j =>
       tracker.getJobInfo(j).get.stageIds.map(s => tracker.getStageInfo(s).get.numTasks).sum)
     assert(tasks == Seq(1, 3))
-    assert(work.map { case SplitScan.Piece(_, u, first) => (u.sheet, u.width, u.rows, first) } ==
+    assert(work.map { case SplitScan.Piece(_, u, first, _) => (u.sheet, u.width, u.rows, first) } ==
       Seq(("A", 2, Some(1L), 0L), ("B", 1, Some(3L), 0L), ("C", 4, Some(1L), 0L)))
   }
 
@@ -191,7 +194,7 @@ class SplitSpec extends SparkSpec {
     val answers = AnyFile.parse(spark, p.toString)
     assert(answers.map(_.parseInfo) == Seq("Failed"))
     val rows = BulkIngest.parseTree(spark, dir.toString).collect()
-    assert(rows.map(_.getString(3)).toSeq == Seq("Failed"))
+    assert(rows.map(_.getString(4)).toSeq == Seq("Failed"))
     // a sibling at the bound still parses as a document
     assert(graft.sources.pdf.PdfParser.parse(("%PDF-1.4\n1 0 obj " + "[" * 500 + "]" * 500 +
       " endobj\ntrailer << /Root 1 0 R >>\n").getBytes("ISO-8859-1")).isDefined)

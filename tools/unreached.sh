@@ -1,0 +1,29 @@
+#!/bin/sh
+# Packages under src/main/scala that no main file outside them reaches:
+# a package is printed when no file of another package names any type it
+# declares at top level (class, object, trait, enum). Comments are
+# stripped first (tools/code_lines.awk), so a scaladoc link does not count
+# as a use. The root `graft` package (the API and the mains) is reached by
+# definition. Exits 1 when it prints anything.
+# usage: tools/unreached.sh   (run from the repository root)
+tmp=$(mktemp -d) || exit 2
+trap 'rm -rf "$tmp"' EXIT
+for f in $(find src/main/scala -name '*.scala' | sort); do
+  pkg=$(awk '/^package /{print $2; exit}' "$f")
+  out="$tmp/$(echo "$f" | tr / _)"
+  awk -f tools/code_lines.awk "$f" > "$out"
+  echo "$pkg $out" >> "$tmp/index"
+done
+found=0
+for pkg in $(cut -d' ' -f1 "$tmp/index" | sort -u); do
+  [ "$pkg" = graft ] && continue
+  awk -v p="$pkg" '$1 == p {print $2}' "$tmp/index" | xargs cat |
+    grep -oE '^((final|sealed|abstract|case|implicit|private(\[[A-Za-z]+\])?) +)*(class|object|trait|enum) +[A-Za-z_][A-Za-z0-9_]*' |
+    awk '{print $NF}' | sort -u > "$tmp/names"
+  [ -s "$tmp/names" ] || continue
+  if ! awk -v p="$pkg" '$1 != p {print $2}' "$tmp/index" | xargs cat | grep -wFf "$tmp/names" > /dev/null; then
+    echo "$pkg"
+    found=1
+  fi
+done
+exit $found
