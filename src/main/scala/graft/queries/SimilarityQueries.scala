@@ -2,9 +2,11 @@ package graft.queries
 
 import graft.functions.SplitMix64.mix64
 import graft.operators.Materialize.MaterializeOps
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import Tables._
 
@@ -12,11 +14,11 @@ import Tables._
   * `embedding: array<float>`, `label`).
   *
   * Cross-engine float determinism: a float×float product is EXACT in double
-  * (24-bit mantissas → ≤48-bit product), and summing those products as
-  * DECIMAL(38,15) is exact and order-independent — so dot products, norms
-  * and the final cosine are bit-identical in Spark and DuckDB no matter how
-  * either engine parallelizes. The ranking therefore never diverges on
-  * near-ties.
+  * (24-bit mantissas → ≤48-bit product), each product scaled by 1e15 and
+  * floored is the same long in both engines, and those longs sum exactly
+  * in any order (`FixedPointDot`, below) — so dot products, norms and the
+  * final cosine are bit-identical in Spark and DuckDB no matter how either
+  * engine parallelizes. The ranking therefore never diverges on near-ties.
   *
   * Scale design: q40 is the exact brute-force baseline (QxN work — correct
   * at any size, quadratic cost); q41 is the scale path: hyperplane-LSH
@@ -1971,69 +1973,123 @@ object SimilarityQueries {
     * sampler or RAG reranker runs after top-k: per query (vec_id < 4),
     * take the top-12 by cosine, then greedily pick 5 where each step
     * maximizes `2·rel(c) − max_{s∈selected} sim(c, s)` (λ = ½ scaled
-    * out; ties to the smaller neighbor_id; step 1 is plain top-1).
+    * out; ties to the smaller neighbor_id; step 1 is plain top-1; a
+    * query with fewer than 5 candidates stops when they run out).
     * Every relevance and similarity is a fixed-point-dot cosine, so the
     * greedy trajectory is engine-exact and the oracle replays it.
     *
     * Scale shape: queries broadcast, candidates stream by (q40's
     * audit-grade brute stage — production swaps in q43/q41 candidate
-    * generation); everything after the top-12 cut is per-query
-    * constant-size: one 12×12 pairwise-sim table per query and four
-    * greedy rounds of ≤12-row joins + a per-query top-1 window. */
-  /** MMR core over an `(vec_id, embedding)` frame — package-visible so
-    * the spec can plant adversarial geometries (a near-duplicate of the
-    * top hit that greedy-by-relevance would take and MMR must skip). */
+    * generation). The per-query top-12 window carries only
+    * `(query_id, neighbor_id, cn, rel)`, so at most 4 × 12 = 48 narrow
+    * rows leave it at any corpus size. Those rows are collected, then
+    * only their embeddings (one `vec_id IN (…)` scan), and the five
+    * greedy steps run on the driver (q135's winner collect, at 48 rows):
+    * no embedding crosses an exchange, and no round costs a job.
+    *
+    * Package-visible over a `(vec_id: bigint, embedding)` frame so specs
+    * can plant adversarial geometries (a near-duplicate of the top hit
+    * that greedy-by-relevance would take and MMR must skip). */
   private[graft] def mmrDiversify(emb: DataFrame): DataFrame = {
-      val queries = emb.filter(col("vec_id") < 4)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-          sqrt(dotDec(col("embedding"), col("embedding"))).as("qn"))
-      val cands = emb.select(col("vec_id").as("neighbor_id"),
-        col("embedding").as("ce"),
-        sqrt(dotDec(col("embedding"), col("embedding"))).as("cn"))
-      val wRel = Window.partitionBy(col("query_id"))
-        .orderBy(col("rel").desc, col("neighbor_id"))
-      val cand12 = cands.join(broadcast(queries),
-          col("query_id") =!= col("neighbor_id"))
-        .select(col("query_id"), col("neighbor_id"), col("ce"), col("cn"),
-          (dotDec(col("qe"), col("ce")) / (col("qn") * col("cn")))
-            .as("rel"))
-        .withColumn("rr", row_number().over(wRel))
-        .filter(col("rr") <= 12)
-        .drop("rr")
-        .materialized // pairwise sims + 4 greedy rounds re-read it
-      val ps = cand12.select(col("query_id"), col("neighbor_id").as("a"),
-          col("ce").as("ae"), col("cn").as("an"))
-        .join(cand12.select(col("query_id"), col("neighbor_id").as("b"),
-          col("ce").as("be"), col("cn").as("bn")), Seq("query_id"))
-        .filter(col("a") =!= col("b"))
-        .select(col("query_id"), col("a"), col("b"),
-          (dotDec(col("ae"), col("be")) / (col("an") * col("bn")))
-            .as("sim"))
-        .materialized // ≤12·11 rows per query at any corpus size
-      var sel = cand12
-        .withColumn("rk", row_number().over(wRel))
-        .filter(col("rk") === 1)
-        .select(col("query_id"), col("neighbor_id"), lit(1L).as("mmr_rank"))
-        .materialized
-      for (step <- 2 to 5) {
-        val wScore = Window.partitionBy(col("query_id"))
-          .orderBy(col("score").desc, col("neighbor_id"))
-        val next = cand12
-          .join(sel.select("query_id", "neighbor_id"),
-            Seq("query_id", "neighbor_id"), "left_anti")
-          .join(ps.join(sel.select(col("query_id"),
-              col("neighbor_id").as("b")), Seq("query_id", "b"))
-            .groupBy(col("query_id"), col("a").as("neighbor_id"))
-            .agg(max(col("sim")).as("maxsim")),
-            Seq("query_id", "neighbor_id"))
-          .withColumn("score", col("rel") * 2 - col("maxsim"))
-          .withColumn("rk", row_number().over(wScore))
-          .filter(col("rk") === 1)
-          .select(col("query_id"), col("neighbor_id"),
-            lit(step.toLong).as("mmr_rank"))
-        sel = sel.unionByName(next).materialized
+    val norm = sqrt(dotDec(col("embedding"), col("embedding")))
+    val queries = emb.filter(col("vec_id") < 4)
+      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
+        norm.as("qn"))
+    val wRel = Window.partitionBy(col("query_id"))
+      .orderBy(col("rel").desc, col("neighbor_id"))
+    val top12 = emb.select(col("vec_id").as("neighbor_id"),
+        col("embedding").as("ce"), norm.as("cn"))
+      .join(broadcast(queries), col("query_id") =!= col("neighbor_id"))
+      .select(col("query_id"), col("neighbor_id"), col("cn"),
+        (dotDec(col("qe"), col("ce")) / (col("qn") * col("cn"))).as("rel"))
+      .withColumn("rr", row_number().over(wRel))
+      .filter(col("rr") <= 12)
+    def dbl(r: Row, i: Int): java.lang.Double =
+      if (r.isNullAt(i)) null else r.getDouble(i)
+    val cands = top12.collect()
+      .sortBy(r => (r.getLong(0), r.getInt(4)))
+      .map(r => MmrCand(r.getLong(0), r.getLong(1), dbl(r, 2), dbl(r, 3)))
+      .toSeq
+    val ids = cands.map(_.neighbor).distinct
+    val vecs: Map[Long, ArrayData] =
+      if (ids.isEmpty) Map.empty
+      else emb.filter(col("vec_id").isin(ids: _*))
+        .select("vec_id", "embedding").collect()
+        .map(r => r.getLong(0) ->
+          (if (r.isNullAt(1)) null
+           else ArrayData.toArrayData(r.getSeq[Float](1).toArray)))
+        .toMap
+    val picks = cands.groupBy(_.query).toSeq.sortBy(_._1)
+      .flatMap { case (q, cs) =>
+        mmrGreedy(cs.toIndexedSeq, vecs).zipWithIndex
+          .map { case (n, i) => Row(q, n, i + 1L) }
       }
-      sel.orderBy("query_id", "mmr_rank")
+    emb.sparkSession.createDataFrame(
+      java.util.Arrays.asList(picks: _*),
+      StructType(Seq(top12.schema("query_id"), top12.schema("neighbor_id"),
+        StructField("mmr_rank", LongType, nullable = false))))
+  }
+
+  /** One top-12 row of [[mmrDiversify]]; a null `cn` or `rel` is what
+    * Spark's arithmetic answered (a null embedding, or a zero norm with
+    * ANSI off). */
+  private case class MmrCand(query: Long, neighbor: Long,
+      cn: java.lang.Double, rel: java.lang.Double)
+
+  /** The five greedy MMR steps over one query's candidates, given in
+    * `(rel desc, neighbor_id)` order; returns the picked neighbor ids in
+    * pick order. Replays Spark's relational semantics bit for bit:
+    * `sim = (dot / 1e15) / (n_a · n_b)` on the collected norms, a null
+    * similarity is ignored by the running max (as by `max`), a null score
+    * sorts last, and doubles compare as Spark's sort and `max` do (NaN
+    * greatest, −0.0 == 0.0). */
+  private def mmrGreedy(cs: IndexedSeq[MmrCand],
+      vecs: Map[Long, ArrayData]): Seq[Long] = {
+    import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
+    def sim(a: MmrCand, b: MmrCand): java.lang.Double = {
+      val (ea, eb) = (vecs(a.neighbor), vecs(b.neighbor))
+      if (ea == null || eb == null || a.cn == null || b.cn == null) null
+      else {
+        val d = a.cn * b.cn
+        // a zero norm already failed (ANSI) or nulled `rel` upstream
+        if (d == 0) null
+        else (graft.functions.FixedPointDot.dot(ea, eb).toDouble / Scale) / d
+      }
+    }
+    def maxOf(x: java.lang.Double, y: java.lang.Double): java.lang.Double =
+      if (x == null) y
+      else if (y == null || compareDoubles(x, y) >= 0) x
+      else y
+    // score desc (nulls last), then the smaller neighbor_id
+    def before(s: java.lang.Double, n: Long, t: java.lang.Double, m: Long) = {
+      val c =
+        if (s == null) { if (t == null) 0 else 1 }
+        else if (t == null) -1
+        else -compareDoubles(s, t)
+      c < 0 || (c == 0 && n < m)
+    }
+    val maxSim = Array.fill[java.lang.Double](cs.length)(null)
+    val taken = Array.fill(cs.length)(false)
+    val picked = scala.collection.mutable.ArrayBuffer(0)
+    taken(0) = true
+    while (picked.length < math.min(5, cs.length)) {
+      val last = cs(picked.last)
+      var best = -1
+      var bestScore: java.lang.Double = null
+      for (i <- cs.indices if !taken(i)) {
+        maxSim(i) = maxOf(maxSim(i), sim(cs(i), last))
+        val score: java.lang.Double =
+          if (cs(i).rel == null || maxSim(i) == null) null
+          else cs(i).rel * 2 - maxSim(i)
+        if (best < 0 || before(score, cs(i).neighbor, bestScore, cs(best).neighbor)) {
+          best = i
+          bestScore = score
+        }
+      }
+      taken(best) = true
+      picked += best
+    }
+    picked.map(cs(_).neighbor).toSeq
   }
 
   val q172 = Q(

@@ -294,8 +294,8 @@ class PlanRegressionSpec extends SparkSpec {
       // — both sides FIXED-size at any corpus scale, q83's shape
       "q167_phrase_spectrum",
       // q172: the 4-row query panel broadcast against the streaming
-      // candidates — case (b); after the top-12 cut everything is
-      // per-query constant-size equi-joins
+      // candidates — case (b), in the top-12 job the query runs before
+      // answering; the ≤48-row greedy after it runs on the driver
       "q172_mmr_diversify",
       // q180: the bigram-type total N1+(··) is a ONE-ROW scalar frame
       // cross joined over the scoring join — case (a); the three count

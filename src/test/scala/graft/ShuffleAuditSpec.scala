@@ -77,6 +77,18 @@ class ShuffleAuditSpec extends SparkSpec {
     }
   }
 
+  // q172's five greedy steps run on the driver over ≤48 narrow top-12
+  // rows: a relational round per step cost 52 jobs at sf0.1
+  test("q172_mmr_diversify runs at most 10 Spark jobs") {
+    val jobs = jobsDuring {
+      SparkEntry.queries("q172_mmr_diversify")(spark, sf)
+        .write.format("noop").mode("overwrite").save()
+    }
+    Harness.clearState(spark)
+    info(s"q172: $jobs jobs")
+    assert(jobs <= 10, s"q172 ran $jobs jobs")
+  }
+
   // Listener canary: a broken ShuffleTally would report 0 records for
   // every query, which the budget above treats as "no exchange at all" —
   // silently green-lighting the whole suite. q21's n-gram posting join
