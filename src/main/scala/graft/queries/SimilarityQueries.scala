@@ -1991,38 +1991,24 @@ object SimilarityQueries {
     * can plant adversarial geometries (a near-duplicate of the top hit
     * that greedy-by-relevance would take and MMR must skip). */
   private[graft] def mmrDiversify(emb: DataFrame): DataFrame = {
-    val norm = sqrt(dotDec(col("embedding"), col("embedding")))
-    val queries = emb.filter(col("vec_id") < 4)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        norm.as("qn"))
-    val wRel = Window.partitionBy(col("query_id"))
-      .orderBy(col("rel").desc, col("neighbor_id"))
-    val top12 = emb.select(col("vec_id").as("neighbor_id"),
-        col("embedding").as("ce"), norm.as("cn"))
-      .join(broadcast(queries), col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), col("cn"),
-        (dotDec(col("qe"), col("ce")) / (col("qn") * col("cn"))).as("rel"))
-      .withColumn("rr", row_number().over(wRel))
-      .filter(col("rr") <= 12)
+    val top12 = mmrTop12(emb)
     def dbl(r: Row, i: Int): java.lang.Double =
       if (r.isNullAt(i)) null else r.getDouble(i)
-    val cands = top12.collect()
-      .sortBy(r => (r.getLong(0), r.getInt(4)))
-      .map(r => MmrCand(r.getLong(0), r.getLong(1), dbl(r, 2), dbl(r, 3)))
-      .toSeq
-    val ids = cands.map(_.neighbor).distinct
+    val rows = top12.collect().sortBy(r => (r.getLong(0), r.getInt(4)))
+    val ids = rows.map(_.getLong(1)).distinct
     val vecs: Map[Long, ArrayData] =
       if (ids.isEmpty) Map.empty
-      else emb.filter(col("vec_id").isin(ids: _*))
+      else emb.filter(col("vec_id").isin(ids.toSeq: _*))
         .select("vec_id", "embedding").collect()
         .map(r => r.getLong(0) ->
           (if (r.isNullAt(1)) null
            else ArrayData.toArrayData(r.getSeq[Float](1).toArray)))
         .toMap
-    val picks = cands.groupBy(_.query).toSeq.sortBy(_._1)
-      .flatMap { case (q, cs) =>
-        mmrGreedy(cs.toIndexedSeq, vecs).zipWithIndex
-          .map { case (n, i) => Row(q, n, i + 1L) }
+    val picks = rows.toSeq.groupBy(_.getLong(0)).toSeq.sortBy(_._1)
+      .flatMap { case (q, rs) =>
+        val cs = rs.map(r => MmrCand(r.getLong(1), vecs(r.getLong(1)),
+          dbl(r, 2), dbl(r, 3)))
+        mmrGreedy(cs).zipWithIndex.map { case (n, i) => Row(q, n, i + 1L) }
       }
     emb.sparkSession.createDataFrame(
       java.util.Arrays.asList(picks: _*),
@@ -2030,66 +2016,68 @@ object SimilarityQueries {
         StructField("mmr_rank", LongType, nullable = false))))
   }
 
-  /** One top-12 row of [[mmrDiversify]]; a null `cn` or `rel` is what
-    * Spark's arithmetic answered (a null embedding, or a zero norm with
-    * ANSI off). */
-  private case class MmrCand(query: Long, neighbor: Long,
+  /** q172's brute-force stage: the 4-row query panel broadcast against
+    * the streaming candidates, then per query the top 12 by
+    * `(rel desc, neighbor_id)` as narrow
+    * `(query_id, neighbor_id, cn, rel, rr)` rows. Package-visible so
+    * PlanRegressionSpec can guard its plan: [[mmrDiversify]] answers a
+    * local frame, whose plan no longer shows this stage. */
+  private[graft] def mmrTop12(emb: DataFrame): DataFrame = {
+    val norm = sqrt(dotDec(col("embedding"), col("embedding")))
+    val queries = emb.filter(col("vec_id") < 4)
+      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
+        norm.as("qn"))
+    val wRel = Window.partitionBy(col("query_id"))
+      .orderBy(col("rel").desc, col("neighbor_id"))
+    emb.select(col("vec_id").as("neighbor_id"),
+        col("embedding").as("ce"), norm.as("cn"))
+      .join(broadcast(queries), col("query_id") =!= col("neighbor_id"))
+      .select(col("query_id"), col("neighbor_id"), col("cn"),
+        (dotDec(col("qe"), col("ce")) / (col("qn") * col("cn"))).as("rel"))
+      .withColumn("rr", row_number().over(wRel))
+      .filter(col("rr") <= 12)
+  }
+
+  /** One top-12 candidate of [[mmrDiversify]]; a null `e`, `cn` or `rel`
+    * is what Spark answered (a null embedding, or a zero norm with ANSI
+    * off). */
+  private case class MmrCand(neighbor: Long, e: ArrayData,
       cn: java.lang.Double, rel: java.lang.Double)
 
+  /** Spark's double order with null least: `max` under it ignores a null
+    * as Spark's `max` does, and its reverse sorts as `desc` (nulls last);
+    * NaN is greatest and −0.0 == 0.0. */
+  private val sparkDoubles: Ordering[java.lang.Double] = (x, y) =>
+    if (x == null || y == null) java.lang.Boolean.compare(x != null, y != null)
+    else org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles(x, y)
+
   /** The five greedy MMR steps over one query's candidates, given in
-    * `(rel desc, neighbor_id)` order; returns the picked neighbor ids in
-    * pick order. Replays Spark's relational semantics bit for bit:
-    * `sim = (dot / 1e15) / (n_a · n_b)` on the collected norms, a null
-    * similarity is ignored by the running max (as by `max`), a null score
-    * sorts last, and doubles compare as Spark's sort and `max` do (NaN
-    * greatest, −0.0 == 0.0). */
-  private def mmrGreedy(cs: IndexedSeq[MmrCand],
-      vecs: Map[Long, ArrayData]): Seq[Long] = {
-    import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
-    def sim(a: MmrCand, b: MmrCand): java.lang.Double = {
-      val (ea, eb) = (vecs(a.neighbor), vecs(b.neighbor))
-      if (ea == null || eb == null || a.cn == null || b.cn == null) null
-      else {
-        val d = a.cn * b.cn
-        // a zero norm already failed (ANSI) or nulled `rel` upstream
-        if (d == 0) null
-        else (graft.functions.FixedPointDot.dot(ea, eb).toDouble / Scale) / d
-      }
-    }
-    def maxOf(x: java.lang.Double, y: java.lang.Double): java.lang.Double =
-      if (x == null) y
-      else if (y == null || compareDoubles(x, y) >= 0) x
-      else y
-    // score desc (nulls last), then the smaller neighbor_id
-    def before(s: java.lang.Double, n: Long, t: java.lang.Double, m: Long) = {
-      val c =
-        if (s == null) { if (t == null) 0 else 1 }
-        else if (t == null) -1
-        else -compareDoubles(s, t)
-      c < 0 || (c == 0 && n < m)
-    }
-    val maxSim = Array.fill[java.lang.Double](cs.length)(null)
-    val taken = Array.fill(cs.length)(false)
-    val picked = scala.collection.mutable.ArrayBuffer(0)
-    taken(0) = true
-    while (picked.length < math.min(5, cs.length)) {
-      val last = cs(picked.last)
-      var best = -1
-      var bestScore: java.lang.Double = null
-      for (i <- cs.indices if !taken(i)) {
-        maxSim(i) = maxOf(maxSim(i), sim(cs(i), last))
+    * `(rel desc, neighbor_id)` order; the picked neighbor ids in pick
+    * order. The arithmetic is the relational greedy's:
+    * `sim = (dot / 1e15) / (n_a · n_b)` (a null in or a zero divisor
+    * answers null, as Spark's divide with ANSI off),
+    * `score = rel * 2 - max sim`, best score first, ties to the smaller
+    * neighbor_id. */
+  private def mmrGreedy(cs: Seq[MmrCand]): Seq[Long] = {
+    def sim(a: MmrCand, b: MmrCand): java.lang.Double =
+      if (a.e == null || b.e == null || a.cn == null || b.cn == null ||
+          a.cn * b.cn == 0) null
+      else (graft.functions.FixedPointDot.dot(a.e, b.e).toDouble / Scale) /
+        (a.cn * b.cn)
+    val byScore = Ordering.Tuple2(sparkDoubles.reverse, Ordering.Long)
+    var picked = Vector(cs.head)
+    var rest = cs.tail.map(c => (c, null: java.lang.Double)) // (c, max sim)
+    while (picked.length < 5 && rest.nonEmpty) {
+      rest = rest.map { case (c, m) => (c, sparkDoubles.max(m, sim(c, picked.last))) }
+      val best = rest.minBy { case (c, m) =>
         val score: java.lang.Double =
-          if (cs(i).rel == null || maxSim(i) == null) null
-          else cs(i).rel * 2 - maxSim(i)
-        if (best < 0 || before(score, cs(i).neighbor, bestScore, cs(best).neighbor)) {
-          best = i
-          bestScore = score
-        }
-      }
-      taken(best) = true
-      picked += best
+          if (c.rel == null || m == null) null else c.rel * 2 - m
+        (score, c.neighbor)
+      }(byScore)
+      picked :+= best._1
+      rest = rest.filterNot(_ eq best)
     }
-    picked.map(cs(_).neighbor).toSeq
+    picked.map(_.neighbor)
   }
 
   val q172 = Q(

@@ -47,6 +47,18 @@ class PlanRegressionSpec extends SparkSpec {
     assert(plan.contains("AsOfJoin"), plan.take(2000))
   }
 
+  test("q172: the top-12 stage nests a loop only over the broadcast query panel") {
+    // q172 answers a local frame of the driver's picks, so its own plan
+    // shows no join; the brute-force stage it collects is guarded here
+    val plan = graft.queries.SimilarityQueries
+      .mmrTop12(graft.queries.Tables.embeddings(spark, sf))
+      .queryExecution.executedPlan.toString
+    assert(!plan.contains("CartesianProduct"), plan.take(3000))
+    assert("BroadcastNestedLoopJoin".r.findAllIn(plan).size == 1, plan.take(3000))
+    assert(plan.contains("BroadcastNestedLoopJoin BuildRight"), plan.take(3000))
+    assert(plan.contains("LessThan(vec_id,4)"), plan.take(3000))
+  }
+
   test("q28: binned range join is a real join, never a nested loop") {
     val plan = planOf(RelationalQueries.q28)
     // the whole point of RangeJoin.binned: the no-equi-key interval join
@@ -293,10 +305,6 @@ class PlanRegressionSpec extends SparkSpec {
       // (≤cap rows) and the doc-length histogram (≤max-doc-length rows)
       // — both sides FIXED-size at any corpus scale, q83's shape
       "q167_phrase_spectrum",
-      // q172: the 4-row query panel broadcast against the streaming
-      // candidates — case (b), in the top-12 job the query runs before
-      // answering; the ≤48-row greedy after it runs on the driver
-      "q172_mmr_diversify",
       // q180: the bigram-type total N1+(··) is a ONE-ROW scalar frame
       // cross joined over the scoring join — case (a); the three count
       // models are vocabulary-sized equi-joins

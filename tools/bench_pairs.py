@@ -8,11 +8,14 @@ end-to-end metric. Run from the repository root:
 The parent revision is exported once (`git archive`, which leaves the
 repository's own metadata untouched) to a directory outside the checkout
 (--parent-dir); the change is the checkout's working tree. Each side builds
-its own perfbench classes. Odd pairs run the parent first, even pairs the
-change first. Every run is written to --out as soon as it finishes, in the
-shape {command, host, order, runs: {workload: [{pair, side, correct,
-failed, attempted, <metric>: value, ...}]}}; an existing --out is extended,
-and --report-only prints the table of a finished file without running.
+its own perfbench classes. Every run lasts BENCHMARK.json's run_seconds.
+Odd pairs run the parent first, even pairs the change first. Every run is
+written to --out as soon as it finishes, in the shape {command, parent,
+change, seed, run_seconds, host, order, runs: {workload: [{pair, side,
+correct, failed, attempted, <metric>: value, ...}]}}. An existing --out is
+extended only when its parent, change, seed and run_seconds are the ones
+of this call; --report-only prints the table of a finished file without
+running.
 
 For each workload and end-to-end metric of BENCHMARK.json it prints both
 sides' medians and quartiles, the change's wins (ties count for neither)
@@ -42,6 +45,11 @@ def export(rev, dest):
                              check=True, capture_output=True).stdout
     subprocess.run(["tar", "-x", "-C", tmp], input=archive, check=True)
     os.rename(tmp, dest)
+
+
+def git(*args):
+    return subprocess.run(["git", *args], check=True, capture_output=True,
+                          text=True).stdout.strip()
 
 
 def run_once(cwd, workload, seed, seconds):
@@ -112,25 +120,36 @@ def main():
                     help="repeatable; default both")
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--seed", type=int, default=1)
-    ap.add_argument("--seconds", type=int, default=12)
     ap.add_argument("--out", default="BENCH_pairs.json")
     ap.add_argument("--report-only", action="store_true")
     a = ap.parse_args()
     root = os.getcwd()
     with open(os.path.join(root, "BENCHMARK.json")) as f:
         bench = json.load(f)
-    doc = {"command": f"python3 perfbench/run.py --workload <w> --seed {a.seed} "
-                      f"--seconds {a.seconds} --trace 0",
-           "host": f"{len(os.sched_getaffinity(0))} CPUs, "
-                   f"{os.sysconf('SC_PAGE_SIZE') * os.sysconf('SC_PHYS_PAGES') / 2**30:.0f} GB",
-           "order": "pairs alternate which side runs first (odd pairs: parent first)",
-           "runs": {}}
     if os.path.exists(a.out):
         with open(a.out) as f:
             doc = json.load(f)
+    elif a.report_only:
+        raise SystemExit(f"bench_pairs: no {a.out}")
     if not a.report_only:
-        rev = subprocess.run(["git", "rev-parse", a.parent], check=True,
-                             capture_output=True, text=True).stdout.strip()
+        seconds = bench["run_seconds"]
+        rev = git("rev-parse", a.parent)
+        change = git("rev-parse", "HEAD") + (
+            "+dirty" if git("status", "--porcelain", "--untracked-files=no") else "")
+        settings = {"parent": rev, "change": change, "seed": a.seed,
+                    "run_seconds": seconds}
+        if not os.path.exists(a.out):
+            doc = {"command": f"python3 perfbench/run.py --workload <w> --seed {a.seed} "
+                              f"--seconds {seconds} --trace 0",
+                   **settings,
+                   "host": f"{len(os.sched_getaffinity(0))} CPUs, "
+                           f"{os.sysconf('SC_PAGE_SIZE') * os.sysconf('SC_PHYS_PAGES') / 2**30:.0f} GB",
+                   "order": "pairs alternate which side runs first (odd pairs: parent first)",
+                   "runs": {}}
+        differ = {k: (doc.get(k), v) for k, v in settings.items() if doc.get(k) != v}
+        if differ:
+            raise SystemExit(f"bench_pairs: {a.out} was run with other settings "
+                             f"(recorded, now): {differ}")
         pdir = a.parent_dir or os.path.join(tempfile.gettempdir(), f"bench_pairs_{rev[:12]}")
         if os.path.realpath(pdir).startswith(os.path.realpath(root) + os.sep):
             raise SystemExit("bench_pairs: --parent-dir must be outside the checkout")
@@ -141,7 +160,7 @@ def main():
             for i in range(first, first + a.pairs):
                 order = [("parent", pdir), ("change", root)]
                 for side, cwd in (order if i % 2 else order[::-1]):
-                    r = {"pair": i, "side": side, **run_once(cwd, wl, a.seed, a.seconds)}
+                    r = {"pair": i, "side": side, **run_once(cwd, wl, a.seed, seconds)}
                     runs.append(r)
                     print(json.dumps({"workload": wl, **r}), flush=True)
                     with open(a.out + ".tmp", "w") as f:
