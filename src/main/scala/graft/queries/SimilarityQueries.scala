@@ -2021,7 +2021,7 @@ object SimilarityQueries {
     * `(rel desc, neighbor_id)` as narrow
     * `(query_id, neighbor_id, cn, rel, rr)` rows. Package-visible so
     * PlanRegressionSpec can guard its plan: [[mmrDiversify]] answers a
-    * local frame, whose plan no longer shows this stage. */
+    * local frame, whose plan does not show this stage. */
   private[graft] def mmrTop12(emb: DataFrame): DataFrame = {
     val norm = sqrt(dotDec(col("embedding"), col("embedding")))
     val queries = emb.filter(col("vec_id") < 4)
