@@ -75,13 +75,6 @@ object Audit {
     // yield (source×policy counts), norm ladder (per-digest expand rows)
     "q163_cluster_split", "q169_filter_ensemble", "q170_norm_ladder")
 
-  /** Queries whose ONE text-bearing exchange is the 31-word capped
-    * suffix window (PLANS: "text shuffles only inside the 31-word LCP
-    * windows") — metered against a window-grain ceiling instead of the
-    * digest-grain one. */
-  val CappedWindowQueries: Seq[String] = Seq(
-    "q157_phrase_lrs", "q161_repeat_sweep", "q167_phrase_spectrum")
-
   def shuffleAudit(spark: SparkSession, sfDir: String): Seq[String] = {
     DigestShuffleQueries.map(shuffleAuditOne(spark, sfDir, _))
   }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one local session of the runnable mains (Bench, Verify, Plans,
-  * Audit, Profile, Demo): `local[$SPARK_GRAFT_CPUS]` (default 4) with as
+  * Audit, Demo): `local[$SPARK_GRAFT_CPUS]` (default 4) with as
   * many shuffle partitions as cores, UTC session time zone, AQE on, UI
   * off, WARN logging. */
 object Harness {

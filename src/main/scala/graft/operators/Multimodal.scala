@@ -30,7 +30,6 @@ import org.apache.spark.sql.functions._
 object Multimodal {
 
   final case class MediaRow(doc_id: Long, payload: Array[Byte], kind: String)
-  final case class MediaMeta(n_bytes: Long, width: Int, height: Int, format: String)
   final case class DecodedRow(
       doc_id: Long,
       n_bytes: Long,

@@ -29,13 +29,7 @@ import Tables._
   */
 object ScaleQueries {
 
-  // ---- shared md5-derived hash machinery (same family as DedupQueries) ----
-
-  /** Two 32-bit halves of the first 16 md5 hex chars of an md5 hex string
-    * column (cross-engine base hash). */
-  private def hexHalves(h: Column): (Column, Column) =
-    (conv(substring(h, 1, 8), 16, 10).cast("long"),
-      conv(substring(h, 9, 8), 16, 10).cast("long"))
+  // ---- shared: a constant array as a DuckDB list literal ----------------
 
   private def sqlList(xs: Seq[Long]): String = xs.mkString("[", ",", "]")
 

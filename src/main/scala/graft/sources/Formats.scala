@@ -102,14 +102,14 @@ final case class Route(path: String, format: Format, codec: String,
   * | `.xlsx` `.xlsb` `.ods .odf .odt` | ImportExcel | zip + StAX / MS-XLSB / ODF | split: one unit per sheet |
   * | `.xls` | ImportExcel | BIFF8 | decode (BIFF8 caps a sheet's cells) |
   * | `.xml` | ImportXML | SpreadsheetML | split: one unit per table |
-  * | `.txt .csv .ini` `.ant` `.tsv` | ImportText | sniffed / `~~@~~` / tab | text aggregate plan |
+  * | `.txt .csv .ini` `.ant` `.tsv` | ImportText | sniffed / `~~@~~` / tab | text aggregate plan (`.zst` over frame-batch lines) |
   * | `.pdf` | ImportPDF | ISO 32000 tables | in-process positional concat, any size |
   * | `.html .htm` | ImportHTML | tables or main content | decode |
   * | `.docx` `.pptx` | ImportDocx / ImportPptx | tables or paragraphs | decode |
   * | `.sqlite .sqlite3 .db` | ImportSqlite | one sheet per table | ranged leaf-page job |
   * | `.warc` | ImportWARC | record catalog | `.warc.gz` split: gzip member batches; else decode |
   * | `.tar` | ImportTar | member catalog | `.tar` split: member batches; `.tar.zst` split: declared-size frame batches; else decode |
-  * | `.parquet` `.json` `.jsonl .ndjson` | ImportParquet / ImportJSON / ImportJSONL | Native: typed frames read on the driver (a parquet file also by its row groups' inflated size) | Spark's scans; a parquet directory always (`.jsonl.zst` splits on the bulk road: frame batches) |
+  * | `.parquet` `.json` `.jsonl .ndjson` | ImportParquet / ImportJSON / ImportJSONL | Native: typed frames read on the driver (a parquet file also by its row groups' inflated size) | Spark's scans (`.jsonl.zst` over frame-batch lines, the units its bulk split uses); a parquet directory always |
   * | `.pk1 .pickle` | ImportPickle | documented gap: always Failed | — |
   *
   * Codecs: text, json, jsonl, warc and tar accept `.gz`, `.bz2`, `.zst`
@@ -117,9 +117,9 @@ final case class Route(path: String, format: Format, codec: String,
   * capped decoded image ([[FsIO.readAllBytesDecodedCapped]]). Byte roads
   * decode every codec through [[FsIO.openDecoded]]; Spark's text and json
   * scans decode gzip and bzip2 inline, while zstd (whose Hadoop codec
-  * needs a native library) reaches them through the `graft-zstd-lines`
-  * DSv2 source or a capped decoded image. Container formats that need
-  * random access have no compressed form.
+  * needs a native library) reaches them as lines streamed one task per
+  * frame batch (`ZstdFrames.lines`) or as a capped decoded image.
+  * Container formats that need random access have no compressed form.
   *
   * The reference matches the literal `"pickle"` without a dot
   * (`main.py:161` bug); per SURVEY.md §7 `.pk1` and `.pickle` both route
@@ -337,13 +337,11 @@ object Formats {
     (p, batchBytes) => {
       import graft.sources.zstd.ZstdFrames
       val batches = ZstdFrames.frameBatches(p, batchBytes)
-      if (batches.exists(_.length > Int.MaxValue))
-        throw new java.io.IOException(s"$p: frame batch past 2 GiB")
       if (batches.length <= 1 || ZstdFrames.fewerThanTwoLines(p)) Nil
       else batches.map(b => RangeUnit(JsonLines.sheet, 1, b.offset, b.length,
         if (b.offset == 0L) Some(0L) else None))
     },
-    (p, u) => graft.sources.zstd.ZstdFrames.ownedLines(p, u.offset, u.length.toInt))
+    (p, u) => graft.sources.zstd.ZstdFrames.ownedLines(p, u.offset, u.length))
   val JsonLines: Format = Format("ImportJSONL", Seq(".jsonl", ".ndjson"), "JSON lines content",
     Streams, split = Map(".zst" -> jsonlSplitter, ".zstd" -> jsonlSplitter),
     nativeScan = true,

@@ -150,6 +150,28 @@ object FsIO {
         java.nio.channels.Channels.newInputStream(ch)
     }
 
+  /** A bounded view of `in`: at most `limit` bytes, then EOF (-1).
+    * `remaining` tells a fully read range from an underlying stream that
+    * ended early (an index promised `limit` bytes; fewer means the file
+    * lied), which is the caller's to check. Closing it closes `in`. */
+  final class RangeStream(in: InputStream, limit: Long) extends InputStream {
+    private var left = limit
+    def remaining: Long = left
+    override def read(): Int = {
+      if (left <= 0) return -1
+      val v = in.read()
+      if (v >= 0) left -= 1
+      v
+    }
+    override def read(b: Array[Byte], off: Int, len: Int): Int = {
+      if (left <= 0) return -1
+      val n = in.read(b, off, math.min(len.toLong, left).toInt)
+      if (n > 0) left -= n
+      n
+    }
+    override def close(): Unit = in.close()
+  }
+
   /** Exactly `len` bytes at `offset` (EOF short-reads throw). */
   def readRange(path: String, offset: Long, len: Int): Array[Byte] = {
     val in = openAt(path, offset)
@@ -206,7 +228,8 @@ object FsIO {
     // text/warc/sqlite/jsonl decodes, the sniffers) gets `.jsonl.zst`-style
     // corpora for free. Spark's own text/json SCANS can't split or decode
     // zstd without that native library, so the AnyFile Spark-plan roads
-    // take zstd through the graft-zstd-lines source (documented on Formats).
+    // read zstd lines from frame batches (`ZstdFrames.lines`, documented
+    // on Formats).
     val lower = path.toLowerCase
     if (lower.endsWith(".zst") || lower.endsWith(".zstd"))
       return new java.io.BufferedInputStream(

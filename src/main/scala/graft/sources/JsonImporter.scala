@@ -57,7 +57,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Spark's json scans cannot decode zstd without Hadoop's native library,
   * so past the cap the `.zst` forms decode through zstd-jni instead: lines
-  * through the `graft-zstd-lines` DSv2 source, a whole document from one
+  * one task per frame batch (`ZstdFrames.lines`), a whole document from one
   * capped decoded image ([[FsIO.readAllBytesDecodedCapped]], the shared
   * 256 MiB refusal — a decompression bomb refuses before any parse). The
   * same two decodes are the bulk road's raw-JSON rows ([[zstdDocument]],
@@ -94,11 +94,7 @@ object JsonImporter {
     // the json parse runs distributed over the decoded lines with the
     // same PERMISSIVE corrupt-record semantics as the path road
     val df =
-      if (r.zstd)
-        spark.read.json(
-          spark.read.format("graft-zstd-lines").load(r.path)
-            .select("value")
-            .as[String](org.apache.spark.sql.Encoders.STRING))
+      if (r.zstd) spark.read.json(graft.sources.zstd.ZstdFrames.lines(spark, r.path))
       else spark.read.json(r.path)
     // a file of no parseable objects (empty, blank, or nothing but
     // corrupt lines) answers Failed, not raw garbage
@@ -125,7 +121,7 @@ object JsonImporter {
   def localLines(spark: SparkSession, r: Route): Seq[ParserAnswer] = {
     val bytes = r.bytes
     val (schema, rows) = SqlShims.withActive(spark) {
-      if (r.zstd) read(spark, newlineLines(bytes), Strings)
+      if (r.zstd) read(spark, TextImporter.newlineLines(bytes), Strings)
       else read(spark, hadoopLines(bytes), PathLines)
     }
     if (schema.isEmpty || refused(spark, schema)) Nil
@@ -258,14 +254,6 @@ object JsonImporter {
     lines.result()
   }
 
-  /** The lines `graft-zstd-lines` reads: split on `\n` only, no empty
-    * last line after a final `\n`. */
-  private def newlineLines(b: Array[Byte]): Seq[String] =
-    new String(b, StandardCharsets.UTF_8).split("\n", -1).toSeq match {
-      case init :+ "" => init
-      case ls => ls
-    }
-
   private def jsonLines(spark: SparkSession, lines: Seq[String]): DataFrame = {
     import spark.implicits._
     spark.read.json(spark.createDataset(lines))
@@ -287,28 +275,14 @@ object JsonImporter {
     }
 
   /** The lines of a zstd JSON-lines file, each the raw JSON text of one
-    * row: split on the '\n' BYTE (unambiguous in UTF-8) straight off the
-    * capped decoded image — one copy per line, no whole-file String; the
-    * same strip-trailing-newline law as the text decode. None (Failed)
-    * past the cap, for an empty file, or for a lone empty line. A big
-    * CONFORMING corpus takes the frame-split road in `parseTreeAuto`. */
-  def zstdLines(path: String): Option[Seq[IndexedSeq[String]]] = {
-    val bytes = FsIO.readAllBytesDecodedCapped(path).getOrElse(return None)
-    val rows = Seq.newBuilder[IndexedSeq[String]]
-    var pos = 0
-    while (pos <= bytes.length) {
-      var k = pos
-      while (k < bytes.length && bytes(k) != '\n') k += 1
-      // trailing newline: no phantom last row (pos == length with nothing
-      // pending only happens after a final '\n')
-      if (k < bytes.length || pos < bytes.length)
-        rows += IndexedSeq(new String(bytes, pos, k - pos, StandardCharsets.UTF_8))
-      pos = k + 1
-    }
-    val out = rows.result()
-    if (out.isEmpty || (out.lengthIs == 1 && out.head.head.isEmpty)) None
-    else Some(out)
-  }
+    * row, cut from the capped decoded image by the text line law
+    * ([[TextImporter.newlineLines]]). None (Failed) past the cap, for an
+    * empty file, or for a lone empty line. A big CONFORMING corpus takes
+    * the frame-split road in `parseTreeAuto`. */
+  def zstdLines(path: String): Option[Seq[IndexedSeq[String]]] =
+    FsIO.readAllBytesDecodedCapped(path).map(TextImporter.newlineLines)
+      .filter(ls => ls.nonEmpty && ls != Seq(""))
+      .map(_.map(IndexedSeq(_)))
 
   private def firstStructuralChar(path: String): Option[Char] = {
     val in = new java.io.BufferedReader(new java.io.InputStreamReader(

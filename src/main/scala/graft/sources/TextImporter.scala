@@ -48,12 +48,11 @@ object TextImporter {
     val head = FsIO.readHeadDecoded(filePath, Sniffers.SampleBytes)
     val delim = delimiter.getOrElse(Sniffers.detectDelimiter(head))
 
-    // `.zst`/`.zstd` ride the graft-zstd-lines DSv2 source (zstd-jni;
-    // Spark's native text scan needs Hadoop's native zstd library) —
+    // `.zst`/`.zstd` lines stream from frame batches through zstd-jni
+    // (Spark's native text scan needs Hadoop's native zstd library) —
     // same `value` column, same \n-only line law, executor-side decode
     val rawLines =
-      if (r.zstd)
-        spark.read.format("graft-zstd-lines").load(filePath)
+      if (r.zstd) graft.sources.zstd.ZstdFrames.lines(spark, filePath).toDF()
       else spark.read.option("lineSep", "\n").text(filePath)
     val lines = rawLines
       // strip('\n').strip('\t') parity: remove leading/trailing tab runs
@@ -117,11 +116,7 @@ object TextImporter {
     // UTF-8 explicitly: the Spark road reads through spark.read.text
     // (always UTF-8); decoding with the executor JVM's default charset
     // would silently diverge on non-UTF-8 locales.
-    val raw = new String(bytes, StandardCharsets.UTF_8)
-    val lines = raw.split("\n", -1).toSeq match {
-      case init :+ "" => init // trailing newline: no phantom last row
-      case ls => ls
-    }
+    val lines = newlineLines(bytes)
     if (lines.isEmpty) return Nil
     val splitter = Pattern.compile(Pattern.quote(delim))
     val cells = lines.map { l =>
@@ -133,6 +128,22 @@ object TextImporter {
     Seq(Sheet(r.format.sheet, cells.map(_.padTo(arity, "")),
       encoding = Some(Sniffers.detectEncoding(bytes).getOrElse("None")),
       separator = Some(delim)))
+  }
+
+  /** The in-memory line law of every `\n` road over decoded bytes, as
+    * `spark.read.text` cuts with `lineSep` `\n`: split on the `\n` byte
+    * only (a CR stays in its line), each line UTF-8 decoded, and no empty
+    * last line after a final `\n`. */
+  def newlineLines(bytes: Array[Byte]): IndexedSeq[String] = {
+    val lines = IndexedSeq.newBuilder[String]
+    var pos = 0
+    while (pos < bytes.length) {
+      var k = pos
+      while (k < bytes.length && bytes(k) != '\n') k += 1
+      lines += new String(bytes, pos, k - pos, StandardCharsets.UTF_8)
+      pos = k + 1
+    }
+    lines.result()
   }
 
   /** All-string positional schema shared by the text-like regime readers. */

@@ -212,9 +212,9 @@ object TarWalk {
       val in =
         if (!zstd) raw
         else new java.io.BufferedInputStream(
-          new com.github.luben.zstd.ZstdInputStream(new RangeStream(raw, length)), 64 << 10)
+          new com.github.luben.zstd.ZstdInputStream(new graft.sources.FsIO.RangeStream(raw, length)), 64 << 10)
       skipExactly(in, skip)
-      val range = new RangeStream(in, if (zstd) span else length)
+      val range = new graft.sources.FsIO.RangeStream(in, if (zstd) span else length)
       val cells = walk(range)(memberCells)
       if (range.remaining > 0)
         throw new EOFException(
@@ -461,31 +461,6 @@ object TarWalk {
       i += len
     }
     out.result()
-  }
-
-  /** A bounded VIEW of `in`: reads at most `limit` bytes then answers
-    * EOF (-1), exposing `remaining` so a caller can distinguish a fully
-    * consumed range from an underlying stream that ended early — the
-    * ranged split roads' truncation check (an index promised `limit`
-    * decoded bytes; fewer means the file or a declared frame size lied,
-    * and the walk must FAIL rather than answer a silently short
-    * catalog). Unlike the private payload view below, hitting EOF early
-    * here is the CALLER's condition to check, not an exception. */
-  final class RangeStream(in: InputStream, limit: Long) extends InputStream {
-    private var left = limit
-    def remaining: Long = left
-    override def read(): Int = {
-      if (left <= 0) return -1
-      val v = in.read()
-      if (v >= 0) left -= 1
-      v
-    }
-    override def read(b: Array[Byte], off: Int, len: Int): Int = {
-      if (left <= 0) return -1
-      val n = in.read(b, off, math.min(len.toLong, left).toInt)
-      if (n > 0) left -= n
-      n
-    }
   }
 
   /** Skip exactly `n` bytes of `in` or throw — the ranged roads' lead

@@ -145,7 +145,7 @@ object RangedZip {
     if (u32(lh, 0) != (LocSig & 0xffffffffL))
       throw new EOFException(s"bad local header for ${e.name}: $path")
     val dataStart = e.localHeaderOffset + 30 + u16(lh, 26) + u16(lh, 28)
-    val raw = new BoundedRangeStream(path, dataStart, e.compressedSize)
+    val raw = new FsIO.RangeStream(FsIO.openAt(path, dataStart), e.compressedSize)
     e.method match {
       case 0 => raw // stored
       case 8 => new InflaterInputStream(raw, new Inflater(true), 64 * 1024)
@@ -162,28 +162,6 @@ object RangedZip {
       try in.readAllBytes()
       finally in.close()
     }
-
-  /** A one-open bounded window [offset, offset+len) of the file. */
-  private final class BoundedRangeStream(path: String, offset: Long, len: Long)
-      extends InputStream {
-    private val in = FsIO.openAt(path, offset)
-    private var remaining = len
-    override def read(): Int =
-      if (remaining <= 0) -1
-      else {
-        val b = in.read()
-        if (b >= 0) remaining -= 1
-        b
-      }
-    override def read(buf: Array[Byte], off: Int, n: Int): Int =
-      if (remaining <= 0) -1
-      else {
-        val got = in.read(buf, off, math.min(n.toLong, remaining).toInt)
-        if (got > 0) remaining -= got
-        got
-      }
-    override def close(): Unit = in.close()
-  }
 
   /** Open one entry as a stream with the standard fallback policy: ranged
     * road first; containers the ranged reader rejects go through

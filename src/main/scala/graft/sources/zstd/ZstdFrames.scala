@@ -1,8 +1,11 @@
 package graft.sources.zstd
 
-import java.io.{BufferedInputStream, EOFException, InputStream}
+import java.io.{BufferedInputStream, Closeable, EOFException, InputStream}
 
+import graft.operators.SplitScan
 import graft.sources.FsIO
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 
 /** Zstandard FRAME index without decompression (RFC 8878 §3): walks the
   * container at I/O speed recording each frame's compressed byte range —
@@ -183,21 +186,39 @@ object ZstdFrames {
     } finally in.close()
   }
 
-  /** One frame batch's OWNED lines of a `.jsonl.zst` stream: line starts
+  /** One frame batch's OWNED `\n` lines of a zstd stream: line starts
     * in (S, E] of the decoded stream, batch 0 also owning start 0 — Hadoop
     * text-split semantics. A non-first batch discards up to its first
     * in-range newline (that prefix belongs to the previous batch), and a
     * line spanning the batch end is finished from a continuation decode of
     * the following frames; at file end an empty pending start is no row.
-    * Lazy: one line is held at a time; closes itself at exhaustion. */
-  def ownedLines(path: String, off: Long, len: Int): Iterator[IndexedSeq[String]] =
+    * Lazy: the batch's compressed range streams, one line is held at a
+    * time, and the iterator closes itself at exhaustion. */
+  def ownedLines(path: String, off: Long, len: Long): Iterator[IndexedSeq[String]] with Closeable =
     new OwnedLines(path, off, len)
 
-  private final class OwnedLines(path: String, off: Long, len: Int)
-      extends Iterator[IndexedSeq[String]] with java.io.Closeable {
+  /** A zstd text file's lines as the `value` column `spark.read.text`
+    * gives with `lineSep` `\n`: CR kept, no empty last row after a final
+    * `\n`. The driver walks frame headers only ([[frameBatches]]); each
+    * batch of [[SplitScan.BatchBytes]] is one task that streams its
+    * [[ownedLines]], so a single-frame file is one task of any size. */
+  def lines(spark: SparkSession, path: String): Dataset[String] = {
+    val batches = frameBatches(path, SplitScan.BatchBytes)
+    val props = FsIO.captureProps(spark)
+    val rdd = spark.sparkContext.parallelize(batches, batches.length).mapPartitions(_.flatMap { b =>
+      FsIO.install(props)
+      val owned = ownedLines(path, b.offset, b.length)
+      TaskContext.get().addTaskCompletionListener[Unit](_ => owned.close())
+      owned.map(_.head)
+    })
+    spark.createDataset(rdd)(Encoders.STRING)
+  }
+
+  private final class OwnedLines(path: String, off: Long, len: Long)
+      extends Iterator[IndexedSeq[String]] with Closeable {
     private val isLast = off + len >= FsIO.len(path)
     private val own = new com.github.luben.zstd.ZstdInputStream(
-      new java.io.ByteArrayInputStream(FsIO.readRange(path, off, len)))
+      new FsIO.RangeStream(FsIO.openAt(path, off), len))
     // 64 KiB chunked scan splitting on the '\n' BYTE (unambiguous in
     // UTF-8): a per-byte read() loop costs tens of millions of virtual
     // calls per batch
@@ -261,7 +282,7 @@ object ZstdFrames {
         var sawCont = false
         if (!isLast) {
           val cont = new BufferedInputStream(
-            new com.github.luben.zstd.ZstdInputStream(FsIO.openAt(path, off + len.toLong)), 64 << 10)
+            new com.github.luben.zstd.ZstdInputStream(FsIO.openAt(path, off + len)), 64 << 10)
           try {
             var c = cont.read()
             while (c >= 0 && c != '\n') { acc.write(c); sawCont = true; c = cont.read() }

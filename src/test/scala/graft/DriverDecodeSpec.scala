@@ -78,32 +78,75 @@ class DriverDecodeSpec extends SparkSpec {
       answers.filterNot(a => a.parseInfo == ParserAnswer.Ok && isLocal(a)).mkString("\n"))
   }
 
-  test("a .csv.gz that inflates past the cap takes the Spark text road") {
-    val dir = tmpDir("gz_bomb")
-    val p = dir.resolve("big.csv.gz")
+  test("a .csv.gz or .csv.zst that inflates past the cap takes the Spark text road") {
+    val dir = tmpDir("codec_bomb")
     val line = "x" * 96
-    val out = new java.util.zip.GZIPOutputStream(Files.newOutputStream(p))
-    var decoded = 0L
-    var i = 0
-    try while (decoded <= Formats.DriverDecodeBytes) {
-      val l = s"$i,$line,${i % 7}\n".getBytes("UTF-8")
-      out.write(l)
-      decoded += l.length
-      i += 1
-    } finally out.close()
-    assert(Files.size(p) <= Formats.DriverDecodeBytes) // small on disk
+    for ((name, wrap) <- Seq[(String, java.io.OutputStream => java.io.OutputStream)](
+        "big.csv.gz" -> (new java.util.zip.GZIPOutputStream(_)),
+        "big.csv.zst" -> (new com.github.luben.zstd.ZstdOutputStream(_)))) {
+      val p = dir.resolve(name)
+      val out = wrap(Files.newOutputStream(p))
+      var decoded = 0L
+      var i = 0
+      try while (decoded <= Formats.DriverDecodeBytes) {
+        val l = s"$i,$line,${i % 7}\n".getBytes("UTF-8")
+        out.write(l)
+        decoded += l.length
+        i += 1
+      } finally out.close()
+      assert(Files.size(p) <= Formats.DriverDecodeBytes) // small on disk
 
-    var answers = Seq.empty[ParserAnswer]
-    // the text aggregate: also the canary that the job count is live
-    assert(jobsDuring { answers = AnyFile.parse(spark, p.toString) } > 0)
-    assert(answers.length == 1)
-    val a = answers.head
-    assert(!a.data.queryExecution.analyzed.exists(_.isInstanceOf[LocalRelation]),
-      a.data.queryExecution.analyzed.treeString)
-    val direct = TextImporter.answers(spark, Formats.route(p.toString).get, None).head
-    assert(a.knownRowCount == Some(i.toLong) && a.knownRowCount == direct.knownRowCount)
-    assert((a.encoding, a.separator) == ((direct.encoding, direct.separator)))
-    assert(a.data.collect().toSeq == direct.data.collect().toSeq)
+      var answers = Seq.empty[ParserAnswer]
+      // the text aggregate: also the canary that the job count is live
+      assert(jobsDuring { answers = AnyFile.parse(spark, p.toString) } > 0)
+      assert(answers.length == 1)
+      val a = answers.head
+      assert(!a.data.queryExecution.analyzed.exists(_.isInstanceOf[LocalRelation]),
+        a.data.queryExecution.analyzed.treeString)
+      val direct = TextImporter.answers(spark, Formats.route(p.toString).get, None).head
+      assert(a.knownRowCount == Some(i.toLong) && a.knownRowCount == direct.knownRowCount)
+      assert((a.encoding, a.separator) == ((direct.encoding, direct.separator)))
+      assert(a.data.collect().toSeq == direct.data.collect().toSeq)
+    }
+  }
+
+  test("a multi-frame .csv.zst / .jsonl.zst past the cap reads one task per batch") {
+    import IngestFixtures.{skippable, zst}
+    val dir = tmpDir("zst_batches")
+    // three frames, each but the last padded past SplitScan.BatchBytes by
+    // a skippable frame, so each is its own batch: the first ends inside a
+    // long line, the second lies wholly inside it, and the third finishes
+    // it; CRLF and empty lines throughout, no trailing newline
+    def container(head: String, row: Int => String, long: String): (Array[Byte], Array[Byte]) = {
+      def rows(from: Int) = (from until from + 200000).map(i =>
+        if (i % 997 == 0) "" else if (i % 101 == 0) row(i) + "\r" else row(i)).mkString("\n")
+      val (a, b) = long.splitAt(long.length / 2)
+      val parts = Seq(s"$head\r\n${rows(0)}\n$a", b.take(40000), s"${b.drop(40000)}\n\n${rows(1 << 20)}")
+        .map(_.getBytes("UTF-8"))
+      val pad = skippable(graft.operators.SplitScan.BatchBytes.toInt)
+      (parts.flatten.toArray, (zst(parts(0)) ++ pad ++ zst(parts(1)) ++ pad ++ zst(parts(2))))
+    }
+    val files = Seq(
+      "big.csv" -> container("h1;h2;h3", i => s"$i;v${i % 13};w", "L;" + "y" * 300000),
+      "big.jsonl" -> container("""{"id":-1}""", i => s"""{"id":$i,"v":"x${i % 13}"}""",
+        s"""{"id":-2,"v":"${"y" * 300000}"}"""))
+    files.foreach { case (name, (plain, zstd)) =>
+      val twin = dir.resolve(name)
+      val path = dir.resolve(name + ".zst")
+      Files.write(twin, plain)
+      Files.write(path, zstd)
+      assert(plain.length > Formats.DriverDecodeBytes && zstd.length > Formats.DriverDecodeBytes)
+      val batches = graft.sources.zstd.ZstdFrames
+        .frameBatches(path.toString, graft.operators.SplitScan.BatchBytes).length
+      assert(batches == 3, name)
+
+      var viaZst = Seq.empty[Any]
+      val tasks = scanTasksDuring { viaZst = shape(AnyFile.parse(spark, path.toString)) }
+      val viaTwin = AnyFile.parse(spark, twin.toString)
+      assert(viaTwin.forall(!isLocal(_)), name) // the twin's Spark road
+      assert(viaZst == shape(viaTwin), name)
+      assert(tasks.nonEmpty && tasks.forall(_ == batches), s"$name: $tasks")
+    }
   }
 
   /** One file's answers, reduced to what both roads must agree on. The

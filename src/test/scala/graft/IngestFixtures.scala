@@ -49,6 +49,14 @@ object IngestFixtures {
     new org.apache.commons.compress.compressors.bzip2.BZip2CompressorOutputStream(_))
   def zst(b: Array[Byte]): Array[Byte] = through(b)(
     new com.github.luben.zstd.ZstdOutputStream(_))
+  /** An RFC 8878 skippable frame of `n` zero bytes: decoders skip it, and
+    * it counts into a frame batch's compressed size. */
+  def skippable(n: Int): Array[Byte] = {
+    val frame = new Array[Byte](8 + n)
+    java.nio.ByteBuffer.wrap(frame).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      .putInt(0x184d2a50).putInt(n)
+    frame
+  }
 
   /** `.xlsx` with inline-string cells, one part per sheet. */
   def xlsx(sheets: Seq[(String, Grid)]): Array[Byte] = {

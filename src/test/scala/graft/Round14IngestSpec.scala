@@ -171,16 +171,6 @@ class Round14IngestSpec extends SparkSpec {
     bos.toByteArray
   }
 
-  /** RFC 8878 skippable frame: magic 0x184D2A50 LE + size + payload. */
-  private def skippable(n: Int): Array[Byte] = {
-    val bos = new java.io.ByteArrayOutputStream()
-    bos.write(0x50); bos.write(0x2a); bos.write(0x4d); bos.write(0x18)
-    bos.write(n & 0xff); bos.write((n >> 8) & 0xff)
-    bos.write((n >> 16) & 0xff); bos.write((n >> 24) & 0xff)
-    (0 until n).foreach(i => bos.write(i))
-    bos.toByteArray
-  }
-
   private def corpusBody(trailingNl: Boolean): Array[Byte] = {
     // empty lines included; line lengths vary so frame cuts land mid-line
     val lines = (0 until 57).map {
@@ -201,7 +191,7 @@ class Round14IngestSpec extends SparkSpec {
     }.toSeq
     val bos = new java.io.ByteArrayOutputStream()
     frames.zipWithIndex.foreach { case (f, i) =>
-      if (i == 2) bos.write(skippable(11))
+      if (i == 2) bos.write(IngestFixtures.skippable(11))
       bos.write(zst(f))
     }
     bos.toByteArray
@@ -287,15 +277,16 @@ class Round14IngestSpec extends SparkSpec {
     assert(rows.head._2 == "ImportJSONL" && rows.head._3 == "Failed")
   }
 
-  test("graft-zstd-lines parity with spark.read.text: \\n-only split, CR kept, no phantom row") {
+  test("ZstdFrames.lines parity with spark.read.text") {
     val dir = tmpDir("zstlines")
     val body = "a;1\r\nb;2\n\nlast"  // CRLF line, empty line, no trailing \n
     java.nio.file.Files.write(dir.resolve("x.csv.zst"),
       zst(body.getBytes(StandardCharsets.UTF_8)))
     java.nio.file.Files.write(dir.resolve("x.csv"),
       body.getBytes(StandardCharsets.UTF_8))
-    val viaZst = spark.read.format("graft-zstd-lines")
-      .load(dir.resolve("x.csv.zst").toString).collect().map(_.getString(0)).toSeq
+    // \n-only split, CR kept, no phantom row
+    val viaZst = graft.sources.zstd.ZstdFrames.lines(spark, dir.resolve("x.csv.zst").toString)
+      .collect().toSeq
     val viaText = spark.read.option("lineSep", "\n")
       .text(dir.resolve("x.csv").toString).collect().map(_.getString(0)).toSeq
     assert(viaZst == viaText)

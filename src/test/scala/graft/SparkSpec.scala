@@ -1,5 +1,8 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -23,22 +26,40 @@ object TestSpark {
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
 
-  /** Spark jobs started while `body` runs. A marked sentinel job closes
-    * the window: listener events arrive in order, so once the sentinel's
-    * start is seen every earlier job start has been counted. */
+  /** Spark jobs started while `body` runs. */
   def jobsDuring(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    during(body) { case _: SparkListenerJobStart => jobs.incrementAndGet() }
+    jobs.get
+  }
+
+  /** The task count of every stage that reads no shuffle (a scan stage),
+    * in submission order, of the jobs `body` runs. */
+  def scanTasksDuring(body: => Unit): Seq[Int] = {
+    val tasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]
+    during(body) {
+      case e: SparkListenerStageSubmitted if e.stageInfo.parentIds.isEmpty =>
+        tasks.add(e.stageInfo.numTasks)
+    }
+    tasks.asScala.toSeq
+  }
+
+  /** Runs `body` with `on` seeing its job-start and stage-submitted
+    * events. A marked sentinel job closes the window: listener events
+    * arrive in order, so once the sentinel's start is seen every earlier
+    * event has been handled. */
+  private def during(body: => Unit)(on: PartialFunction[SparkListenerEvent, Unit]): Unit = {
     import java.util.concurrent.{CountDownLatch, TimeUnit}
-    import java.util.concurrent.atomic.AtomicInteger
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val sc = spark.sparkContext
     val Sentinel = "jobs-during sentinel"
-    val jobs = new AtomicInteger
+    def sentinel(props: java.util.Properties) =
+      Option(props).exists(_.getProperty("spark.job.description") == Sentinel)
     val closed = new CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.job.description") == Sentinel))
-          closed.countDown()
-        else jobs.incrementAndGet()
+        if (sentinel(e.properties)) closed.countDown() else on.lift(e)
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (!sentinel(e.properties)) on.lift(e)
     }
     sc.addSparkListener(listener)
     try {
@@ -46,7 +67,6 @@ trait SparkSpec extends AnyFunSuite {
       sc.setJobDescription(Sentinel)
       try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
       assert(closed.await(60, TimeUnit.SECONDS), "sentinel job never reached the listener")
-      jobs.get
     } finally sc.removeSparkListener(listener)
   }
 

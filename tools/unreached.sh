@@ -4,7 +4,9 @@
 # declares at top level (class, object, trait, enum). Comments are
 # stripped first (tools/code_lines.awk), so a scaladoc link does not count
 # as a use. The root `graft` package (the API and the mains) is reached by
-# definition. Exits 1 when it prints anything.
+# definition, but each of its objects with a `main` must be named, as
+# `graft.<Name>`, by a line of README.md, PLANS.md, tools/ or perfbench/:
+# an unnamed one is printed too. Exits 1 when it prints anything.
 # usage: tools/unreached.sh   (run from the repository root)
 tmp=$(mktemp -d) || exit 2
 trap 'rm -rf "$tmp"' EXIT
@@ -25,5 +27,14 @@ for pkg in $(cut -d' ' -f1 "$tmp/index" | sort -u); do
     echo "$pkg"
     found=1
   fi
+done
+for f in $(awk '$1 == "graft" {print $2}' "$tmp/index"); do
+  for name in $(awk '/^object [A-Za-z_]/ {o = $2; sub(/[^A-Za-z0-9_].*/, "", o)}
+      /def main\(/ && o != "" {print o; o = ""}' "$f"); do
+    if ! grep -rqwF "graft.$name" README.md PLANS.md tools perfbench; then
+      echo "graft.$name"
+      found=1
+    fi
+  done
 done
 exit $found
