@@ -86,15 +86,16 @@ object BulkIngest {
     * A file at or above `bigBytes` whose form has a splitter in the
     * format registry (`Format.split`) takes the one split protocol,
     * [[SplitScan]]: one batched executor job indexes every big file into
-    * units (a sheet, a ranged batch of members or frames), a second probes
-    * each workbook sheet's shape in a task of its own, and one DSv2 scan
-    * decodes the units as its input partitions, streaming, so a
-    * single multi-GB file does not pin one task's memory to the whole
-    * file. Both roads emit the same [[CellRow]]s, so downstream consumers
-    * cannot tell which planner decision a row took. Big forms with no
-    * splitter (a huge `.pdf`, a `.tar.gz`) stay file-grain; the per-task
-    * bound there is one file. `splitBatchBytes` is the target compressed
-    * size of a ranged unit; tests lower it to force multi-unit splits.
+    * units (a sheet, a ranged batch of members or frames, a byte range of
+    * text), a second probes each workbook sheet's or text range's shape in
+    * a task of its own, and one DSv2 scan decodes the units as its input
+    * partitions, streaming, so a single multi-GB file does not pin one
+    * task's memory to the whole file. Both roads emit the same
+    * [[CellRow]]s, so downstream consumers cannot tell which planner
+    * decision a row took. Big forms with no splitter (a huge `.pdf`, a
+    * `.tar.gz`, a `.xls`) stay file-grain; the per-task bound there is one
+    * file. `splitBatchBytes` is the target compressed size of a ranged
+    * unit; tests lower it to force multi-unit splits.
     *
     * The listing sweep runs twice end-to-end: once eagerly (the big-file
     * collect) and once lazily when the returned frame executes (the small

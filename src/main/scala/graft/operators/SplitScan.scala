@@ -30,11 +30,14 @@ import org.apache.spark.unsafe.types.UTF8String
   *    lists no units, or a form with no splitter, sends the whole file to
   *    the file-grain decode ([[BulkIngest.parseOne]]) inside the scan.
   *  - The resolve job runs one task per unit that needs one: the form's
-  *    `probe` (a workbook sheet's shape), and the row count of a unit
-  *    whose sheet has a unit with an open first row, which then starts
-  *    where its sheet's previous unit ends. A probe or count that throws
-  *    fails the file into one Failed row.
-  *  - A unit of width 0 is an empty sheet: one Failed row under its name.
+  *    `probe` (a workbook sheet's shape, a text range's widest row and row
+  *    count), and the row count of a unit whose sheet has a unit with an
+  *    open first row, which then starts where its sheet's previous unit
+  *    ends. A probe or count that throws fails the file into one Failed
+  *    row.
+  *  - A sheet is as wide as its widest unit, and its short rows pad with
+  *    their unit's `pad` (null; `''` for text). A sheet of width 0 is an
+  *    empty sheet: one Failed row under its name.
   *
   * Corruption that first shows mid-scan, past the index, fails the query,
   * as a Spark read of a corrupt file does; the index bounds that window
@@ -47,8 +50,9 @@ object SplitScan {
   /** One input partition of the split scan. */
   sealed trait Work extends InputPartition { def path: String }
   /** A unit, the row number of its first row and its sheet's ordinal in
-    * the file. */
-  final case class Piece(path: String, unit: SplitUnit, first: Long, sheetIdx: Int) extends Work
+    * the file; `width` is its sheet's, the widest of the sheet's units. */
+  final case class Piece(path: String, unit: SplitUnit, first: Long, sheetIdx: Int)(val width: Int)
+      extends Work
   /** The whole file, decoded file-grain. */
   final case class Whole(path: String) extends Work
   /** A file whose index, probe or count threw: one Failed row. */
@@ -92,7 +96,8 @@ object SplitScan {
 
   /** One file's work from its index and its resolved units. A unit that
     * starts at row 0 starts the file's next sheet; an open one starts
-    * where its sheet's previous unit ends. */
+    * where its sheet's previous unit ends. A sheet is as wide as its
+    * widest unit. */
   private def work(
       p: String,
       indexed: Option[Seq[SplitUnit]],
@@ -106,12 +111,14 @@ object SplitScan {
         else {
           var sheetIdx = -1
           var end = 0L
-          done.flatten.zipWithIndex.map { case ((u, counted), i) =>
+          val placed = done.flatten.zipWithIndex.map { case ((u, counted), i) =>
             if (i == 0 || u.first.contains(0L)) { sheetIdx += 1; end = 0L }
             val first = u.first.getOrElse(end)
             u.rows.orElse(counted).foreach(n => end = first + n)
-            Piece(p, u, first, sheetIdx)
+            (u, first, sheetIdx)
           }
+          val widths = placed.groupMapReduce(_._3)(_._1.width)(math.max)
+          placed.map { case (u, first, s) => Piece(p, u, first, s)(widths(s)) }
         }
     }
 
@@ -154,10 +161,9 @@ object SplitScan {
 
   /** `AnyFile`'s road for a big file whose form splits: one answer per
     * sheet, in index order (same-named tables stay apart), each a scan of
-    * that sheet's
-    * units with positional all-string columns and the row count where
-    * the index knows it. A whole-file index answers the in-process
-    * decode. */
+    * that sheet's units with positional all-string columns, the row count
+    * where the index knows it, and its units' encoding and separator. A
+    * whole-file index answers the in-process decode. */
   def answers(spark: SparkSession, r: Route): Seq[ParserAnswer] = {
     val engine = r.format.engine
     plan(spark, Seq(r.path), BatchBytes, spark.sparkContext.defaultParallelism) match {
@@ -166,14 +172,17 @@ object SplitScan {
       case work =>
         val sheets = work.collect { case p: Piece => p }.groupBy(_.sheetIdx).toSeq.sortBy(_._1)
         sheets.map { case (_, sheet) =>
-          val name = sheet.head.unit.sheet
-          val width = sheet.head.unit.width
-          if (width == 0) Formats.answer(spark, r.path, engine, Sheet(name, Nil))
+          val u = sheet.head.unit
+          val width = sheet.head.width
+          if (width == 0) Formats.answer(spark, r.path, engine, Sheet(u.sheet, Nil))
           else {
             val counts = sheet.map(_.unit.rows)
             ParserAnswer(
               frame(spark, sheet).select((0 until width).map(i => col("cells")(i).as(i.toString)): _*),
-              r.path, sheetName = name, engine = engine,
+              r.path, sheetName = u.sheet,
+              encoding = u.encoding.getOrElse(ParserAnswer.EncodingDefault),
+              separator = u.separator.getOrElse(ParserAnswer.SeparatorDefault),
+              engine = engine,
               knownRowCount = if (counts.forall(_.isDefined)) Some(counts.flatten.sum) else None)
           }
         }
@@ -186,14 +195,14 @@ object SplitScan {
     w match {
       case Whole(path) => (BulkIngest.parseOne(path).iterator, None)
       case Broken(path) => (Iterator(BulkIngest.failedRow(path, engine)), None)
-      case Piece(path, u, _, sheetIdx) if u.width == 0 =>
+      case p @ Piece(path, u, _, sheetIdx) if p.width == 0 =>
         (Iterator(BulkIngest.failedRow(path, engine, u.sheet, sheetIdx)), None)
-      case Piece(path, u, first, sheetIdx) =>
+      case p @ Piece(path, u, first, sheetIdx) =>
         val src = splitterOf(path).get.read(path, u)
         var idx = first - 1
         (src.map { r =>
           idx += 1
-          CellRow(path, engine, u.sheet, sheetIdx, "OK", idx, r.padTo(u.width, null))
+          CellRow(path, engine, u.sheet, sheetIdx, "OK", idx, r.padTo(p.width, u.pad))
         }, Some(src))
     }
   }

@@ -43,11 +43,11 @@ final case class Sheet(
   *  - `decode` is the pure sheet decode both roads share; no sheets means
   *    the file answers Failed. It runs inside executor tasks, and on the
   *    driver for every file of at most [[Formats.DriverDecodeBytes]].
-  *  - `driver` is the `AnyFile` road past [[Formats.DriverDecodeBytes]]:
-  *    a Spark plan that keeps a big file's cells off the driver (the text
-  *    aggregate, the ranged SQLite job, Spark's native parquet and JSON
-  *    scans). A form without one takes the split scan where it has a
-  *    splitter ([[Formats.road]]).
+  *  - `driver` is the `AnyFile` road past [[Formats.DriverDecodeBytes]]
+  *    for a format the split scan does not serve: a Spark plan that keeps
+  *    a big file's cells off the driver (the ranged SQLite job, Spark's
+  *    native parquet and JSON scans). A form without one takes the split
+  *    scan where it has a splitter ([[Formats.road]]).
   *  - `project` replaces the `AnyFile` projection of `decode` wherever
   *    the file answers in process: the native formats' typed frames
   *    (the schema and rows `spark.read` gives, read on the driver) and
@@ -93,16 +93,16 @@ final case class Route(path: String, format: Format, codec: String,
   * (a zip workbook also by its inflated entries) answers its decode in
   * process, as driver-local frames whose `collect()` runs no Spark job;
   * past that size a form with a splitter takes the split scan (an
-  * executor index job, a job probing each sheet, then one DSv2 scan
-  * whose partitions are the units), and a format with another Spark road
-  * takes that ([[road]]).
+  * executor index job, a job probing each sheet or text range, then one
+  * DSv2 scan whose partitions are the units), and a format with another
+  * Spark road takes that ([[road]]).
   *
   * | extension | engine | decode | road past 4 MiB (split unit) |
   * |---|---|---|---|
   * | `.xlsx` `.xlsb` `.ods .odf .odt` | ImportExcel | zip + StAX / MS-XLSB / ODF | split: one unit per sheet |
   * | `.xls` | ImportExcel | BIFF8 | decode (BIFF8 caps a sheet's cells) |
   * | `.xml` | ImportXML | SpreadsheetML | split: one unit per table |
-  * | `.txt .csv .ini` `.ant` `.tsv` | ImportText | sniffed / `~~@~~` / tab | text aggregate plan (`.zst` over frame-batch lines) |
+  * | `.txt .csv .ini` `.ant` `.tsv` | ImportText | sniffed / `~~@~~` / tab | split: byte ranges; `.zst` frame batches; `.gz`/`.bz2` one unit |
   * | `.pdf` | ImportPDF | ISO 32000 tables | in-process positional concat, any size |
   * | `.html .htm` | ImportHTML | tables or main content | decode |
   * | `.docx` `.pptx` | ImportDocx / ImportPptx | tables or paragraphs | decode |
@@ -115,11 +115,12 @@ final case class Route(path: String, format: Format, codec: String,
   * Codecs: text, json, jsonl, warc and tar accept `.gz`, `.bz2`, `.zst`
   * and `.zstd` (and `.tgz` for `.tar.gz`); sqlite accepts only zstd, as a
   * capped decoded image ([[FsIO.readAllBytesDecodedCapped]]). Byte roads
-  * decode every codec through [[FsIO.openDecoded]]; Spark's text and json
-  * scans decode gzip and bzip2 inline, while zstd (whose Hadoop codec
-  * needs a native library) reaches them as lines streamed one task per
-  * frame batch (`ZstdFrames.lines`) or as a capped decoded image.
-  * Container formats that need random access have no compressed form.
+  * decode every codec through [[FsIO.openDecoded]], and ranged zstd units
+  * through [[FsIO.openRange]]. Spark's json scans decode gzip and bzip2
+  * inline, while zstd (whose Hadoop codec needs a native library) reaches
+  * them as lines streamed one task per frame batch (`ZstdFrames.lines`)
+  * or as a capped decoded image. Container formats that need random
+  * access have no compressed form.
   *
   * The reference matches the literal `"pickle"` without a dot
   * (`main.py:161` bug); per SURVEY.md §7 `.pk1` and `.pickle` both route
@@ -204,10 +205,11 @@ object Formats {
       }
     })
 
-  private def text(exts: Seq[String], delimiter: Option[String]): Format =
+  /** A text format: the delimiter sniffed, or fixed by the format. */
+  def text(exts: Seq[String], delimiter: Option[String]): Format =
     Format(Text, exts, "Text file content", Streams,
-      decode = r => TextImporter.sheets(r, delimiter),
-      driver = Some(TextImporter.answers(_, _, delimiter)))
+      split = TextImporter.splitters("Text file content", delimiter),
+      decode = r => TextImporter.sheets(r, delimiter))
   val PlainText: Format = text(Seq(".txt", ".csv", ".ini"), None)
   val Ant: Format = text(Seq(".ant"), Some(TextImporter.AntDelimiter))
   val Tsv: Format = text(Seq(".tsv"), Some("\t"))
@@ -341,7 +343,7 @@ object Formats {
       else batches.map(b => RangeUnit(JsonLines.sheet, 1, b.offset, b.length,
         if (b.offset == 0L) Some(0L) else None))
     },
-    (p, u) => graft.sources.zstd.ZstdFrames.ownedLines(p, u.offset, u.length))
+    (p, u) => OwnedLines.range(p, u.offset, u.length, zstd = true)(IndexedSeq(_)))
   val JsonLines: Format = Format("ImportJSONL", Seq(".jsonl", ".ndjson"), "JSON lines content",
     Streams, split = Map(".zst" -> jsonlSplitter, ".zstd" -> jsonlSplitter),
     nativeScan = true,

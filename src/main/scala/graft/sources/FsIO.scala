@@ -172,6 +172,17 @@ object FsIO {
     override def close(): Unit = in.close()
   }
 
+  /** `length` bytes at `offset`, buffered, and decoded through zstd-jni
+    * when `zstd` (the range then holds whole frames): the ranged units of
+    * the split road open their bytes here. Closing it closes every layer,
+    * the zstd decoder's native memory included. */
+  def openRange(path: String, offset: Long, length: Long, zstd: Boolean): InputStream = {
+    val range = new RangeStream(openAt(path, offset), length)
+    try new java.io.BufferedInputStream(
+      if (zstd) new com.github.luben.zstd.ZstdInputStream(range) else range, 64 << 10)
+    catch { case e: Throwable => range.close(); throw e }
+  }
+
   /** Exactly `len` bytes at `offset` (EOF short-reads throw). */
   def readRange(path: String, offset: Long, len: Int): Array[Byte] = {
     val in = openAt(path, offset)
@@ -199,8 +210,8 @@ object FsIO {
 
   /** Open with inline decompression when the file name carries a codec
     * suffix the Hadoop codec layer knows (`.gz`, `.bz2`, …) — the same
-    * layer Spark's text/json scans decompress through, so a sniff or a
-    * byte-level parse over `x.csv.gz` sees the same decoded bytes the
+    * layer Spark's json scans decompress through, so a sniff or a
+    * byte-level parse over `x.jsonl.gz` sees the same decoded bytes the
     * scan will. Plain [[open]] when no codec claims the suffix. */
   // codec registry walk is conf-derived and stable per installed conf —
   // built once, not per file (a 10^7-file sweep calls openDecoded per file)
@@ -223,13 +234,12 @@ object FsIO {
     // parquet codecs) rather than Hadoop's ZStandardCodec, which needs a
     // native libhadoop this layer can't assume — the branch must come
     // BEFORE the codec-factory lookup, or the factory claims the suffix
-    // and fails at read time. This is the byte-road zstd door: everything
-    // that reads via readAllBytesDecoded/readHeadDecoded (the shared
-    // text/warc/sqlite/jsonl decodes, the sniffers) gets `.jsonl.zst`-style
-    // corpora for free. Spark's own text/json SCANS can't split or decode
-    // zstd without that native library, so the AnyFile Spark-plan roads
-    // read zstd lines from frame batches (`ZstdFrames.lines`, documented
-    // on Formats).
+    // and fails at read time. This is the one decoded door: the in-process
+    // decodes, the sniffers, and the split road's whole-stream text unit
+    // (`.gz`, `.bz2`) read through it. Ranged zstd units decode their
+    // frames through [[openRange]]; only the JSON-lines Spark road still
+    // needs lines from frame batches (`ZstdFrames.lines`), because
+    // Spark's json scan cannot decode zstd either.
     val lower = path.toLowerCase
     if (lower.endsWith(".zst") || lower.endsWith(".zstd"))
       return new java.io.BufferedInputStream(

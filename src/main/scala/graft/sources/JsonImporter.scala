@@ -121,7 +121,7 @@ object JsonImporter {
   def localLines(spark: SparkSession, r: Route): Seq[ParserAnswer] = {
     val bytes = r.bytes
     val (schema, rows) = SqlShims.withActive(spark) {
-      if (r.zstd) read(spark, TextImporter.newlineLines(bytes), Strings)
+      if (r.zstd) read(spark, OwnedLines.of(bytes), Strings)
       else read(spark, hadoopLines(bytes), PathLines)
     }
     if (schema.isEmpty || refused(spark, schema)) Nil
@@ -276,11 +276,11 @@ object JsonImporter {
 
   /** The lines of a zstd JSON-lines file, each the raw JSON text of one
     * row, cut from the capped decoded image by the text line law
-    * ([[TextImporter.newlineLines]]). None (Failed) past the cap, for an
+    * ([[OwnedLines.of]]). None (Failed) past the cap, for an
     * empty file, or for a lone empty line. A big CONFORMING corpus takes
     * the frame-split road in `parseTreeAuto`. */
   def zstdLines(path: String): Option[Seq[IndexedSeq[String]]] =
-    FsIO.readAllBytesDecodedCapped(path).map(TextImporter.newlineLines)
+    FsIO.readAllBytesDecodedCapped(path).map(OwnedLines.of)
       .filter(ls => ls.nonEmpty && ls != Seq(""))
       .map(_.map(IndexedSeq(_)))
 

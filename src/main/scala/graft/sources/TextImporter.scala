@@ -1,17 +1,16 @@
 package graft.sources
 
-import java.nio.charset.StandardCharsets
 import java.util.regex.Pattern
 
-import graft.model.ParserAnswer
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Plain-text / CSV importer — the reference's `ImportText`
-  * (reference `main.py:327-368`). Two roads, chosen by size
-  * ([[Formats.answers]]): a file of at most [[Formats.DriverDecodeBytes]]
-  * (decoded, for a codec form) answers [[sheets]] in process; a bigger one
-  * takes the Spark plan of [[answers]].
+  * (reference `main.py:327-368`). One law ([[law]]) over two roads,
+  * chosen by size ([[Formats.answers]]): a file of at most
+  * [[Formats.DriverDecodeBytes]] (decoded, for a codec form) answers
+  * [[sheets]] in process; a bigger one, and a big file of the bulk road,
+  * splits through the format's [[splitters]] into the one split scan
+  * (`graft.operators.SplitScan`).
   *
   * Reference pipeline (3 full passes over the file, all in driver memory):
   *   1. whole-file read for encoding detection (`main.py:334`)
@@ -21,14 +20,15 @@ import org.apache.spark.sql.functions._
   *      `split(delimiter)` → per-cell `strip('"').strip("'")` → right-pad
   *      with `''` to max arity (`main.py:339-351`)
   *
-  * Spark shape (past 4 MiB): the two sniffs share one bounded driver-side
-  * prefix ([[Sniffers]]); arity+count is ONE Spark aggregate job over the
-  * partitioned file scan; the padded projection is a lazy, codegen-friendly
-  * `select` — so a 1 TB text file parses with a single distributed pass plus
-  * whatever action the caller runs, instead of four driver-memory passes.
+  * Split shape (past 4 MiB): one index task sniffs both from one bounded
+  * prefix ([[Sniffers]]) and lists the units; one probe job counts each
+  * unit's rows and finds its widest, so the arity and the row count cost
+  * one parallel pass; the scan then streams each unit's rows, padded to
+  * the widest unit, so no task and no driver holds more than one line of
+  * a big file.
   *
   * Observable parity choices:
-  *   - `lineSep` pinned to `\n` (Python `readlines` splits on `\n` only, so
+  *   - lines cut on `\n` only (Python `readlines` splits on `\n` only, so
   *     a `\r` stays in the last cell of CRLF files — reproduced here).
   *   - cells split with trailing empties preserved (Python `str.split`).
   *   - quote stripping removes *runs* of leading/trailing `"` first, then
@@ -41,117 +41,95 @@ object TextImporter {
   /** Fixed multi-char delimiter for `.ant` files (`main.py:153-154`). */
   val AntDelimiter = "~~@~~"
 
-  /** The Spark road for files past [[Formats.DriverDecodeBytes]];
-    * `delimiter` = None sniffs it. */
-  def answers(spark: SparkSession, r: Route, delimiter: Option[String]): Seq[ParserAnswer] = {
-    val filePath = r.path
-    val head = FsIO.readHeadDecoded(filePath, Sniffers.SampleBytes)
-    val delim = delimiter.getOrElse(Sniffers.detectDelimiter(head))
+  private val TabRuns = Pattern.compile("^\t+|\t+$")
+  private val DoubleQuoteRuns = Pattern.compile("^\"+|\"+$")
+  private val SingleQuoteRuns = Pattern.compile("^'+|'+$")
 
-    // `.zst`/`.zstd` lines stream from frame batches through zstd-jni
-    // (Spark's native text scan needs Hadoop's native zstd library) —
-    // same `value` column, same \n-only line law, executor-side decode
-    val rawLines =
-      if (r.zstd) graft.sources.zstd.ZstdFrames.lines(spark, filePath).toDF()
-      else spark.read.option("lineSep", "\n").text(filePath)
-    val lines = rawLines
-      // strip('\n').strip('\t') parity: remove leading/trailing tab runs
-      // (the \n is already consumed by the line reader)
-      .select(
-        regexp_replace(regexp_replace(col("value"), "^\t+", ""), "\t+$", "")
-          .as("line")
-      )
-      .select(split(col("line"), Pattern.quote(delim)).as("cells"))
+  /** `s` without the runs `runs` matches; a string without `c` has none. */
+  private def strip(s: String, c: Char, runs: Pattern): String =
+    if (s.indexOf(c) < 0) s else runs.matcher(s).replaceAll("")
 
-    // Job 1: max arity + row count in a single aggregate (the reference's
-    // dedicated `max_cols_in_rows` pass, main.py:360-368, fused with the
-    // row count so ParserAnswer.parseInfo needs no second job).
-    val stats = lines.agg(
-      max(size(col("cells"))).as("arity"),
-      count(lit(1)).as("rows")
-    ).head()
-    val rowCount = stats.getLong(1)
-    if (rowCount == 0L) return Nil
-    val arity = stats.getInt(0)
-
-    // Lazy padded projection: ordinal columns, quote-stripped, ''-padded.
-    val projected = lines.select(
-      (0 until arity).map { i =>
-        // try_element_at: out-of-range reads are the NORM for ragged rows
-        // (plain element_at throws under Spark 4's default ANSI mode)
-        val cell = try_element_at(col("cells"), lit(i + 1))
-        val dq = regexp_replace(cell, "^\"+|\"+$", "")
-        val sq = regexp_replace(dq, "^'+|'+$", "")
-        coalesce(sq, lit("")).as(i.toString)
-      }: _*
-    )
-
-    Seq(
-      ParserAnswer(
-        data = projected,
-        filePathRaw = filePath,
-        sheetName = r.format.sheet,
-        encoding = Sniffers.detectEncoding(head).getOrElse("None"),
-        separator = delim,
-        engine = r.format.engine,
-        knownRowCount = Some(rowCount)
-      )
-    )
+  /** The text law for one line under `delimiter`, both roads' one cell
+    * decode: strip the line's leading and trailing tab runs, split on the
+    * delimiter keeping trailing empties, then strip each cell's `"` runs,
+    * then its `'` runs. Rows are padded by the caller, to the sheet's
+    * widest row. */
+  def law(delimiter: String): String => IndexedSeq[String] = {
+    // one character takes `String.split`'s regex-free path (a matcher per
+    // line took 1.7x its time), escaped where it is a metacharacter; a
+    // longer delimiter one literal pattern
+    val char = if (".$|()[{^?*+\\".contains(delimiter)) "\\" + delimiter else delimiter
+    val literal = Pattern.compile(delimiter, Pattern.LITERAL)
+    def split(s: String) = if (delimiter.length == 1) s.split(char, -1) else literal.split(s, -1)
+    line => split(strip(line, '\t', TabRuns)).toIndexedSeq
+      .map(c => strip(strip(c, '"', DoubleQuoteRuns), '\'', SingleQuoteRuns))
   }
 
-  /** The pure decode the bulk road runs in one task and `AnyFile` runs in
-    * process for files of at most [[Formats.DriverDecodeBytes]]: the
-    * reference's three-pass text pipeline over the decoded bytes —
-    * delimiter vote, line-end `\t` strip, literal-quote strip, right-pad
-    * with `''` to the file's max arity (`main.py:327-358` semantics;
-    * [[answers]] is the Spark-plan twin for bigger files). The sheet
-    * carries the encoding and the delimiter sniffed from the bytes read
-    * (their head is the prefix [[answers]] sniffs), so the file is read
-    * once. */
+  /** The in-process decode, which the bulk road also runs in one task:
+    * the delimiter voted from the decoded bytes (unless the format fixes
+    * it), each line through [[law]], rows right-padded with `''` to the
+    * file's max arity. The sheet carries the encoding and the delimiter
+    * sniffed from the bytes read (their head is the prefix the split
+    * road's index sniffs), so the file is read once. */
   def sheets(r: Route, delimiter: Option[String]): Seq[Sheet] = {
-    // decoded bytes: codec-suffixed files (x.csv.gz) inflate inline, the
-    // same bytes the Spark text scan sees
+    // decoded bytes: codec-suffixed files (x.csv.gz) inflate inline
     val bytes = r.bytes
     val delim = delimiter.getOrElse(Sniffers.detectDelimiter(bytes))
-    // UTF-8 explicitly: the Spark road reads through spark.read.text
-    // (always UTF-8); decoding with the executor JVM's default charset
-    // would silently diverge on non-UTF-8 locales.
-    val lines = newlineLines(bytes)
+    // UTF-8 explicitly, as the split road decodes its lines: the
+    // detected encoding is reported, not applied (`main.py:339`)
+    val lines = OwnedLines.of(bytes)
     if (lines.isEmpty) return Nil
-    val splitter = Pattern.compile(Pattern.quote(delim))
-    val cells = lines.map { l =>
-      val stripped = l.replaceAll("^\t+", "").replaceAll("\t+$", "")
-      splitter.split(stripped, -1).toIndexedSeq
-        .map(c => c.replaceAll("^\"+|\"+$", "").replaceAll("^'+|'+$", ""))
-    }
+    val cells = lines.map(law(delim))
     val arity = cells.map(_.length).max
     Seq(Sheet(r.format.sheet, cells.map(_.padTo(arity, "")),
       encoding = Some(Sniffers.detectEncoding(bytes).getOrElse("None")),
       separator = Some(delim)))
   }
 
-  /** The in-memory line law of every `\n` road over decoded bytes, as
-    * `spark.read.text` cuts with `lineSep` `\n`: split on the `\n` byte
-    * only (a CR stays in its line), each line UTF-8 decoded, and no empty
-    * last line after a final `\n`. */
-  def newlineLines(bytes: Array[Byte]): IndexedSeq[String] = {
-    val lines = IndexedSeq.newBuilder[String]
-    var pos = 0
-    while (pos < bytes.length) {
-      var k = pos
-      while (k < bytes.length && bytes(k) != '\n') k += 1
-      lines += new String(bytes, pos, k - pos, StandardCharsets.UTF_8)
-      pos = k + 1
+  /** A text format's big-file road, one splitter per codec: a plain file
+    * splits into byte ranges of the batch size, `.zst`/`.zstd` into frame
+    * batches, and `.gz`/`.bz2`, which have no random access, read as one
+    * unit. The index, one task, sniffs the delimiter (unless the format
+    * fixes it) and the encoding from the decoded head, the prefix the
+    * in-process decode sniffs; an empty head lists no units, so the
+    * whole-file decode answers Failed. A unit's rows are the lines it owns
+    * ([[OwnedLines]]) through [[law]]. */
+  def splitters(sheet: String, delimiter: Option[String]): Map[String, Splitter[TextUnit]] = {
+    def splitter(ranges: (String, Long) => Seq[(Long, Long)])(
+        lines: (String, TextUnit, String => IndexedSeq[String]) => OwnedLines[IndexedSeq[String]]) = {
+      def rows(p: String, u: TextUnit) = lines(p, u, law(u.sep))
+      Splitter[TextUnit](
+        (p, batchBytes) => {
+          val head = FsIO.readHeadDecoded(p, Sniffers.SampleBytes)
+          if (head.isEmpty) Nil
+          else {
+            val delim = delimiter.getOrElse(Sniffers.detectDelimiter(head))
+            val enc = Sniffers.detectEncoding(head).getOrElse("None")
+            ranges(p, batchBytes).map { case (off, len) => TextUnit(sheet, off, len, delim, enc) }
+          }
+        },
+        rows,
+        probe = Some { (p, u) =>
+          val it = rows(p, u)
+          var (width, count) = (0, 0L)
+          try it.foreach { r => width = math.max(width, r.length); count += 1 }
+          finally it.close()
+          u.copy(width = width, count = count)
+        })
     }
-    lines.result()
+    def ranged(zstd: Boolean)(p: String, u: TextUnit, row: String => IndexedSeq[String]) =
+      OwnedLines.range(p, u.offset, u.length, zstd)(row)
+    val plain = splitter { (p, batchBytes) =>
+      val len = FsIO.len(p)
+      (0L until len by batchBytes).map(o => (o, math.min(batchBytes, len - o)))
+    }(ranged(zstd = false))
+    val zstd = splitter((p, batchBytes) => graft.sources.zstd.ZstdFrames.frameBatches(p, batchBytes)
+      .map(b => (b.offset, b.length)))(ranged(zstd = true))
+    val whole = splitter((p, _) => Seq((0L, FsIO.len(p))))((p, _, row) => OwnedLines.whole(p)(row))
+    Map("" -> plain, ".gz" -> whole, ".bz2" -> whole, ".zst" -> zstd, ".zstd" -> zstd)
   }
 
   /** All-string positional schema shared by the text-like regime readers. */
-  def positionalSchema(n: Int): org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(
-      (0 until n).map(i =>
-        org.apache.spark.sql.types
-          .StructField(i.toString, org.apache.spark.sql.types.StringType, nullable = true)
-      )
-    )
+  def positionalSchema(n: Int): StructType =
+    StructType((0 until n).map(i => StructField(i.toString, StringType, nullable = true)))
 }

@@ -207,12 +207,8 @@ object TarWalk {
   def rangeCells(
       path: String, offset: Long, length: Long,
       zstd: Boolean, skip: Long, span: Long): Seq[Seq[String]] = {
-    val raw = new java.io.BufferedInputStream(graft.sources.FsIO.openAt(path, offset), 64 << 10)
+    val in = graft.sources.FsIO.openRange(path, offset, length, zstd)
     try {
-      val in =
-        if (!zstd) raw
-        else new java.io.BufferedInputStream(
-          new com.github.luben.zstd.ZstdInputStream(new graft.sources.FsIO.RangeStream(raw, length)), 64 << 10)
       skipExactly(in, skip)
       val range = new graft.sources.FsIO.RangeStream(in, if (zstd) span else length)
       val cells = walk(range)(memberCells)
@@ -220,7 +216,7 @@ object TarWalk {
         throw new EOFException(
           s"$path: ranged tar batch at $offset ended ${range.remaining} bytes early")
       cells
-    } finally raw.close()
+    } finally in.close()
   }
 
   /** Core scan. `f(entry, boundedPayload, extentStart, extentEnd)` per

@@ -1,19 +1,19 @@
 package graft.sources.zstd
 
-import java.io.{BufferedInputStream, Closeable, EOFException, InputStream}
+import java.io.{BufferedInputStream, EOFException, InputStream}
 
 import graft.operators.SplitScan
-import graft.sources.FsIO
+import graft.sources.{FsIO, OwnedLines}
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 
 /** Zstandard FRAME index without decompression (RFC 8878 §3): walks the
   * container at I/O speed recording each frame's compressed byte range —
-  * the split point the big-`.jsonl.zst` road needs. The format makes
-  * this possible cheaply: every block carries its compressed size in a
-  * 3-byte header, so a frame's length is the sum of its header, block
-  * walk and optional checksum — no byte of entropy-coded payload is ever
-  * decoded.
+  * the split point the big text and JSON-lines `.zst` roads need. The
+  * format makes this possible cheaply: every block carries its
+  * compressed size in a 3-byte header, so a frame's length is the sum of
+  * its header, block walk and optional checksum — no byte of
+  * entropy-coded payload is ever decoded.
   *
   * Multi-frame files are what parallel compressors actually produce
   * (pzstd and the seekable format cut input into independent frames;
@@ -186,116 +186,22 @@ object ZstdFrames {
     } finally in.close()
   }
 
-  /** One frame batch's OWNED `\n` lines of a zstd stream: line starts
-    * in (S, E] of the decoded stream, batch 0 also owning start 0 — Hadoop
-    * text-split semantics. A non-first batch discards up to its first
-    * in-range newline (that prefix belongs to the previous batch), and a
-    * line spanning the batch end is finished from a continuation decode of
-    * the following frames; at file end an empty pending start is no row.
-    * Lazy: the batch's compressed range streams, one line is held at a
-    * time, and the iterator closes itself at exhaustion. */
-  def ownedLines(path: String, off: Long, len: Long): Iterator[IndexedSeq[String]] with Closeable =
-    new OwnedLines(path, off, len)
-
-  /** A zstd text file's lines as the `value` column `spark.read.text`
-    * gives with `lineSep` `\n`: CR kept, no empty last row after a final
-    * `\n`. The driver walks frame headers only ([[frameBatches]]); each
-    * batch of [[SplitScan.BatchBytes]] is one task that streams its
-    * [[ownedLines]], so a single-frame file is one task of any size. */
+  /** A zstd file's lines as the `value` column `spark.read.text` gives
+    * with `lineSep` `\n` (CR kept, no empty last row after a final `\n`),
+    * for the one road that reads them: JSON lines past the cap
+    * (`JsonImporter.linesAnswers`). The driver walks frame headers only
+    * ([[frameBatches]]); each batch of [[SplitScan.BatchBytes]] is one
+    * task that streams the lines it owns ([[OwnedLines.range]]), so a
+    * single-frame file is one task of any size. */
   def lines(spark: SparkSession, path: String): Dataset[String] = {
     val batches = frameBatches(path, SplitScan.BatchBytes)
     val props = FsIO.captureProps(spark)
     val rdd = spark.sparkContext.parallelize(batches, batches.length).mapPartitions(_.flatMap { b =>
       FsIO.install(props)
-      val owned = ownedLines(path, b.offset, b.length)
+      val owned = OwnedLines.range(path, b.offset, b.length, zstd = true)(identity)
       TaskContext.get().addTaskCompletionListener[Unit](_ => owned.close())
-      owned.map(_.head)
+      owned
     })
     spark.createDataset(rdd)(Encoders.STRING)
-  }
-
-  private final class OwnedLines(path: String, off: Long, len: Long)
-      extends Iterator[IndexedSeq[String]] with Closeable {
-    private val isLast = off + len >= FsIO.len(path)
-    private val own = new com.github.luben.zstd.ZstdInputStream(
-      new FsIO.RangeStream(FsIO.openAt(path, off), len))
-    // 64 KiB chunked scan splitting on the '\n' BYTE (unambiguous in
-    // UTF-8): a per-byte read() loop costs tens of millions of virtual
-    // calls per batch
-    private val chunk = new Array[Byte](64 << 10)
-    private var n = 0
-    private var pos = 0
-    private val acc = new java.io.ByteArrayOutputStream()
-    // still discarding the previous batch's tail (up to the first own
-    // newline); a batch wholly inside one line owns nothing
-    private var skipping = off != 0L
-    private var sawOwnNl = false
-    private var done = false
-    private var queued: IndexedSeq[String] = _
-
-    private def take(): IndexedSeq[String] = {
-      val line = IndexedSeq(new String(acc.toByteArray, java.nio.charset.StandardCharsets.UTF_8))
-      acc.reset()
-      line
-    }
-
-    override def hasNext: Boolean = queued != null || (!done && fetch())
-
-    override def next(): IndexedSeq[String] = {
-      if (!hasNext) throw new NoSuchElementException("batch exhausted")
-      val q = queued
-      queued = null
-      q
-    }
-
-    /** Scan to the next owned newline, or finish the batch. */
-    private def fetch(): Boolean = {
-      while (!done) {
-        if (pos >= n) {
-          n = own.read(chunk)
-          pos = 0
-          if (n <= 0) finish()
-        } else {
-          var k = pos
-          while (k < n && chunk(k) != '\n') k += 1
-          if (k < n) {
-            sawOwnNl = true
-            val owned = !skipping
-            if (owned) acc.write(chunk, pos, k - pos)
-            skipping = false
-            pos = k + 1
-            if (owned) { queued = take(); return true }
-          } else {
-            if (!skipping) acc.write(chunk, pos, n - pos)
-            pos = n
-          }
-        }
-      }
-      queued != null
-    }
-
-    /** Own range exhausted: a pending OWNED start is finished from the
-      * continuation frames. */
-    private def finish(): Unit = {
-      close()
-      if (!skipping || sawOwnNl) {
-        var sawCont = false
-        if (!isLast) {
-          val cont = new BufferedInputStream(
-            new com.github.luben.zstd.ZstdInputStream(FsIO.openAt(path, off + len)), 64 << 10)
-          try {
-            var c = cont.read()
-            while (c >= 0 && c != '\n') { acc.write(c); sawCont = true; c = cont.read() }
-            if (c == '\n') sawCont = true
-          } finally cont.close()
-        }
-        if (acc.size() > 0 || sawCont) queued = take()
-      }
-    }
-
-    override def close(): Unit = if (!done) {
-      done = true
-      own.close()
-    }
   }
 }

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
 
 import graft.model.ParserAnswer
-import graft.sources.{Format, Formats, Route, TextImporter}
+import graft.sources.{Format, Formats, Route}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 
 /** The one size rule of `Formats.answers`: a file of at most
@@ -97,13 +97,15 @@ class DriverDecodeSpec extends SparkSpec {
       assert(Files.size(p) <= Formats.DriverDecodeBytes) // small on disk
 
       var answers = Seq.empty[ParserAnswer]
-      // the text aggregate: also the canary that the job count is live
+      // the split road's index and probe jobs: also the canary that the
+      // job count is live
       assert(jobsDuring { answers = AnyFile.parse(spark, p.toString) } > 0)
       assert(answers.length == 1)
       val a = answers.head
       assert(!a.data.queryExecution.analyzed.exists(_.isInstanceOf[LocalRelation]),
         a.data.queryExecution.analyzed.treeString)
-      val direct = TextImporter.answers(spark, Formats.route(p.toString).get, None).head
+      val r = Formats.route(p.toString).get
+      val direct = Formats.road(r).get(spark, r).head
       assert(a.knownRowCount == Some(i.toLong) && a.knownRowCount == direct.knownRowCount)
       assert((a.encoding, a.separator) == ((direct.encoding, direct.separator)))
       assert(a.data.collect().toSeq == direct.data.collect().toSeq)
@@ -145,8 +147,41 @@ class DriverDecodeSpec extends SparkSpec {
       val viaTwin = AnyFile.parse(spark, twin.toString)
       assert(viaTwin.forall(!isLocal(_)), name) // the twin's Spark road
       assert(viaZst == shape(viaTwin), name)
-      assert(tasks.nonEmpty && tasks.forall(_ == batches), s"$name: $tasks")
+      // text: a one-task index, one probe task per batch, then the
+      // collect's scan, one task per batch; JSON lines: Spark's json scans,
+      // one task per batch
+      if (name == "big.csv") assert(tasks == Seq(1, batches, batches), s"$name: $tasks")
+      else assert(tasks.nonEmpty && tasks.forall(_ == batches), s"$name: $tasks")
     }
+  }
+
+  test("a plain .csv past the cap splits into byte ranges: one index task, one probe per range") {
+    val p = tmpDir("csv_ranges").resolve("big.csv")
+    val batch = graft.operators.SplitScan.BatchBytes.toInt
+    val sb = new StringBuilder
+    var i = 0
+    def fill(to: Int, row: Int => String): Unit =
+      while (sb.length < to) { sb ++= row(i); i += 1 }
+    // the first range ends on a newline; the long line starts at the
+    // second range's offset, which the first range owns, covers the whole
+    // second range and crosses into the third; CRLF and empty rows follow,
+    // the widest row last with no trailing newline
+    fill(batch - 64, i => s"$i;v${i % 13};${"x" * (i % 50)}\n")
+    sb ++= "z" * (batch - 1 - sb.length) + "\n"
+    assert(sb.length == batch)
+    sb ++= "L;" + "y" * (batch + 4096) + "\n"
+    fill(2 * batch + (1 << 20), i => if (i % 97 == 0) "\r\n" else s"$i;w${i % 7}\r\n")
+    sb ++= "a;b;c;d;e;f;g;h"
+    Files.write(p, sb.toString.getBytes("UTF-8"))
+    assert(Files.size(p) > 2L * batch && Files.size(p) < 3L * batch)
+
+    var answers = Seq.empty[ParserAnswer]
+    val tasks = scanTasksDuring { answers = AnyFile.parse(spark, p.toString) }
+    assert(tasks == Seq(1, 3), tasks)
+    assert(answers.forall(!isLocal(_)))
+    val inProcess = Formats.decoded(spark, Formats.route(p.toString).get)
+    assert(answers.map(_.knownRowCount) == inProcess.map(_.knownRowCount))
+    assert(shape(answers) == shape(inProcess))
   }
 
   /** One file's answers, reduced to what both roads must agree on. The

@@ -172,14 +172,35 @@ class SplitSpec extends SparkSpec {
     val dir = tmpDir("split_local")
     val lines = (0 until 3).map(i => zst((0 until 20)
       .map(j => s"""{"i": $i, "j": $j}\n""").mkString.getBytes("UTF-8"))).reduce(_ ++ _)
+    // CRLF, empty lines, quotes, no trailing newline, the widest row last
+    val csv = "a;b\r\n1;\"2\"\r\n\r\n\n3\r\n\t'q';r\t\r\n\n4;5;6;7;8".getBytes("UTF-8")
+    val csvFrames = Seq("h;i\nj;k;l\nm", "n;o\n\np;q\r\n", "r\ns;t;u;v\n")
+      .map(t => zst(t.getBytes("UTF-8"))).reduce(_ ++ _)
     val files = Seq("a.tar" -> tar(9), "b.tar.zst" -> framed(tar(9)), "c.warc.gz" -> warcGz(5),
-      "d.jsonl.zst" -> lines, "e.xlsx" -> xlsx(Seq("S1" -> Seq(Seq("a", "b")), "S2" -> Seq(Seq("c")))))
+      "d.jsonl.zst" -> lines, "e.xlsx" -> xlsx(Seq("S1" -> Seq(Seq("a", "b")), "S2" -> Seq(Seq("c")))),
+      "f.csv" -> csv, "g.csv.zst" -> csvFrames)
     for ((f, bytes) <- files) {
       val p = dir.resolve(f).toString
       Files.write(dir.resolve(f), bytes)
       assert(Formats.route(p).get.splitter.get.index(p, 1L).length > 1, f)
       assert(SplitScan.local(p, 1L).toSeq == BulkIngest.parseOne(p), f)
     }
+    // gzip has no random access: a .tsv.gz is one unit
+    val tsv = dir.resolve("h.tsv.gz")
+    Files.write(tsv, gz("x\ty\n\"z\"\n\tw\tv\tu\n".getBytes("UTF-8")))
+    assert(Formats.route(tsv.toString).get.splitter.get.index(tsv.toString, 1L).length == 1)
+    assert(SplitScan.local(tsv.toString, 1L).toSeq == BulkIngest.parseOne(tsv.toString))
+  }
+
+  test("parseTreeAuto splits a big .csv into byte ranges, the rows parseTree answers") {
+    val dir = tmpDir("split_csv")
+    Files.write(dir.resolve("big.csv"), (0 until 3000).map(i =>
+      if (i % 211 == 0) "" else Seq.fill(1 + i % 5)(s"c$i").mkString("|"))
+      .mkString("", "\r\n", "\n").getBytes("UTF-8"))
+    val auto = BulkIngest.parseTreeAuto(spark, dir.toString, bigBytes = 1L, splitBatchBytes = 4096L)
+    assert(key(auto) == key(BulkIngest.parseTree(spark, dir.toString)))
+    val scans = nodes(auto).collect { case b: BatchScanExec => b.inputPartitions.length }
+    assert(scans.length == 1 && scans.head > 1, scans)
   }
 
   test("a PDF nested 200,000 deep answers Failed on both roads, and the JVM lives on") {

@@ -26,8 +26,8 @@ class TextPropertySpec extends SparkSpec {
       val p = writeFile(dir, "m.csv", content)
       // delimiter passed explicitly: sniffing is voting-based and single-
       // column rows legitimately default to tab — not under test here
-      val a = graft.sources.TextImporter.answers(
-        spark, graft.sources.Route(p, graft.sources.Formats.PlainText, ""), Some(delim)).head
+      val a = graft.sources.Formats.answers(
+        spark, graft.sources.Route(p, graft.sources.Formats.text(Seq(".csv"), Some(delim)), "")).head
       val expectWidth = rows.map(_.length).max
       val got = a.data.collect()
 
@@ -51,9 +51,9 @@ class TextPropertySpec extends SparkSpec {
   }
 
   test("∀ ragged matrix: executor-side BulkIngest cells ≡ driver-side TextImporter") {
-    // the distributed ingest path re-implements the reference's text
-    // semantics inside a task; this property pins the two code paths to
-    // each other on arbitrary ragged quote-wrapped input
+    // the file-grain decode and the split road run the reference's text
+    // law over different line readers; this property pins the two roads
+    // to each other on arbitrary ragged quote-wrapped input
     val prop = Prop.forAll(matrixGen) { case (rows, _) =>
       val dir = tmpDir("bulkprop")
       // .ant lets both paths take a FIXED delimiter (sniffing is voting
@@ -61,9 +61,8 @@ class TextPropertySpec extends SparkSpec {
       val antContent = rows.map(_.mkString(
         graft.sources.TextImporter.AntDelimiter)).mkString("\n") + "\n"
       val p = writeFile(dir, "m.ant", antContent)
-      val driver = graft.sources.TextImporter.answers(spark,
-        graft.sources.Route(p, graft.sources.Formats.Ant, ""),
-        Some(graft.sources.TextImporter.AntDelimiter))
+      val route = graft.sources.Formats.route(p).get
+      val driver = graft.sources.Formats.road(route).get(spark, route)
         .head.data.collect()
         .map(_.toSeq.map(v => if (v == null) null else v.toString))
       val bulk = graft.operators.BulkIngest.parseOne(p)
