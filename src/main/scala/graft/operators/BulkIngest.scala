@@ -87,13 +87,13 @@ object BulkIngest {
     * format registry (`Format.split`) takes the one split protocol,
     * [[SplitScan]]: one batched executor job indexes every big file into
     * units (a sheet, a ranged batch of members or frames, a byte range of
-    * text), a second probes each workbook sheet's or text range's shape in
-    * a task of its own, and one DSv2 scan decodes the units as its input
-    * partitions, streaming, so a single multi-GB file does not pin one
-    * task's memory to the whole file. Both roads emit the same
+    * text, a batch of a SQLite table's leaf pages), a second probes each
+    * unit's shape or row count in a task of its own, and one DSv2 scan
+    * decodes the units as its input partitions, streaming, so a single
+    * multi-GB file does not pin one task's memory to the whole file. Both roads emit the same
     * [[CellRow]]s, so downstream consumers cannot tell which planner
     * decision a row took. Big forms with no splitter (a huge `.pdf`, a
-    * `.tar.gz`, a `.xls`) stay file-grain; the per-task bound there is one
+    * `.tar.gz`, a `.xls`, a `.sqlite.zst`) stay file-grain; the per-task bound there is one
     * file. `splitBatchBytes` is the target compressed size of a ranged
     * unit; tests lower it to force multi-unit splits.
     *
@@ -201,7 +201,8 @@ object BulkIngest {
   /** One file → cell rows; pure, runs inside executor tasks: the bulk
     * projection of [[graft.sources.Formats]], cell-for-cell the cells of
     * `AnyFile.parse` (BulkIngestSpec pins every extension × codec).
-    * Natively scanned formats are one `Native` row. */
+    * A format with Spark's own scan (`Format.native`) is one `Native`
+    * row, except under zstd. */
   private[graft] def parseOne(path: String): Seq[CellRow] = {
     val route = Formats.route(path)
     val engine = route.fold("")(_.format.engine)
@@ -209,7 +210,7 @@ object BulkIngest {
       if (!FsIO.isFile(path)) return Seq(failedRow(path, ""))
       route match {
         case None => Seq(failedRow(path, engine))
-        case Some(r) if r.format.nativeScan && !r.zstd =>
+        case Some(r) if r.format.native.isDefined && !r.zstd =>
           Seq(CellRow(path, engine, r.format.sheet, -1, "Native", -1L, Seq.empty))
         case Some(r) =>
           val sheets = r.format.decode(r)

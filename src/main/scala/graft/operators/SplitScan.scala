@@ -21,23 +21,22 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** The one split protocol for big files (`graft.sources.Splitter`, a
   * field of the format registry): one batched executor job indexes every
-  * big file of every format into units, a second resolves the units
-  * that need it, then one DSv2 scan whose input partitions are those
+  * big file of every format into units, a second probes the units of the
+  * forms that probe, then one DSv2 scan whose input partitions are those
   * units decodes them on executors, streaming, as [[CellRow]]s. The
   * plan's size does not grow with the number of big files or formats.
   *
   *  - An index that throws answers one Failed row for its file; one that
   *    lists no units, or a form with no splitter, sends the whole file to
   *    the file-grain decode ([[BulkIngest.parseOne]]) inside the scan.
-  *  - The resolve job runs one task per unit that needs one: the form's
-  *    `probe` (a workbook sheet's shape, a text range's widest row and row
-  *    count), and the row count of a unit whose sheet has a unit with an
-  *    open first row, which then starts where its sheet's previous unit
-  *    ends. A probe or count that throws fails the file into one Failed
-  *    row.
+  *  - The probe job runs one task per unit of a form with a `probe` (a
+  *    workbook sheet's shape, a text range's widest row and row count, a
+  *    page batch's or a frame batch's row count). An open unit starts
+  *    where its sheet's previous unit ends; a probe that throws, or a
+  *    start that no row count tells, fails the file into one Failed row.
   *  - A sheet is as wide as its widest unit, and its short rows pad with
-  *    their unit's `pad` (null; `''` for text). A sheet of width 0 is an
-  *    empty sheet: one Failed row under its name.
+  *    their unit's `pad` (null; `''` for text). A sheet of width 0 or of
+  *    no rows is an empty sheet: one Failed row under its name.
   *
   * Corruption that first shows mid-scan, past the index, fails the query,
   * as a Spark read of a corrupt file does; the index bounds that window
@@ -50,108 +49,101 @@ object SplitScan {
   /** One input partition of the split scan. */
   sealed trait Work extends InputPartition { def path: String }
   /** A unit, the row number of its first row and its sheet's ordinal in
-    * the file; `width` is its sheet's, the widest of the sheet's units. */
+    * the file; `width` is its sheet's: the widest of the sheet's units,
+    * 0 for an empty sheet. */
   final case class Piece(path: String, unit: SplitUnit, first: Long, sheetIdx: Int)(val width: Int)
       extends Work
   /** The whole file, decoded file-grain. */
   final case class Whole(path: String) extends Work
-  /** A file whose index, probe or count threw: one Failed row. */
+  /** A file whose index or a probe threw, or with a unit whose start no
+    * row count tells: one Failed row. */
   final case class Broken(path: String) extends Work
 
   private val Schema: StructType = Encoders.product[CellRow].schema
 
   private def splitterOf(path: String) = Formats.route(path).flatMap(_.splitter)
 
-  private def batched[T: scala.reflect.ClassTag](spark: SparkSession, xs: Seq[T], parts: Int) =
-    spark.sparkContext.parallelize(xs, math.max(1, math.min(xs.length, parts)))
-
   /** One file's units; None = its index threw. */
   private def index(p: String, batchBytes: Long): Option[Seq[SplitUnit]] =
     try Some(splitterOf(p).fold(Seq.empty[SplitUnit])(_.index(p, batchBytes).toVector))
     catch { case _: Exception => None }
 
-  /** The units the resolve job runs, by ordinal, each with whether its
-    * row count is needed: in a sheet with an open first row, every unit
-    * but the last, after which nothing starts. */
-  private def pending(p: String, us: Seq[SplitUnit]): Seq[(Int, SplitUnit, Boolean)] = {
-    val probes = splitterOf(p).exists(_.probe.isDefined)
-    val open = us.filter(_.first.isEmpty).map(_.sheet).toSet
-    val last = us.zipWithIndex.map { case (u, i) => u.sheet -> i }.toMap
-    us.zipWithIndex.map { case (u, i) => (i, u, open(u.sheet) && i != last(u.sheet)) }
-      .filter { case (_, u, count) => probes || (count && u.rows.isEmpty) }
-  }
+  /** The units the probe job runs, by ordinal: every unit of a form that
+    * probes. */
+  private def pending(p: String, us: Seq[SplitUnit]): Seq[(Int, SplitUnit)] =
+    if (splitterOf(p).exists(_.probe.isDefined)) us.indices.zip(us) else Nil
 
-  /** One unit resolved: its shape probed and, where needed and unknown,
-    * its rows counted; None = either threw. */
-  private def resolve(p: String, u: SplitUnit, count: Boolean): Option[(SplitUnit, Option[Long])] =
-    try {
-      val s = splitterOf(p).get
-      val v = s.shape(p, u)
-      Some(v -> (if (count && v.rows.isEmpty) Some(drain(s.read(p, v))) else None))
-    } catch { case _: Exception => None }
+  /** One unit probed; None = its probe threw. */
+  private def probe(p: String, u: SplitUnit): Option[SplitUnit] =
+    try Some(splitterOf(p).get.shape(p, u)) catch { case _: Exception => None }
 
-  private def drain(it: Iterator[_]): Long =
-    try { var n = 0L; while (it.hasNext) { it.next(); n += 1 }; n }
-    finally it match { case c: java.io.Closeable => c.close(); case _ => }
-
-  /** One file's work from its index and its resolved units. A unit that
+  /** One file's work from its index and its probed units. A unit that
     * starts at row 0 starts the file's next sheet; an open one starts
     * where its sheet's previous unit ends. A sheet is as wide as its
-    * widest unit. */
+    * widest unit; one whose units count no rows is empty, and answers
+    * from its first unit alone. */
   private def work(
       p: String,
       indexed: Option[Seq[SplitUnit]],
-      resolved: Int => Option[Option[(SplitUnit, Option[Long])]]): Seq[Work] =
+      probed: Int => Option[Option[SplitUnit]]): Seq[Work] =
     indexed match {
       case None => Seq(Broken(p))
       case Some(Seq()) => Seq(Whole(p))
       case Some(us) =>
-        val done = us.indices.map(i => resolved(i).getOrElse(Some(us(i) -> None)))
-        if (done.exists(_.isEmpty)) Seq(Broken(p))
+        val done = us.indices.map(i => probed(i).getOrElse(Some(us(i))))
+        var sheetIdx = -1
+        var end: Option[Long] = Some(0L)
+        val placed = done.flatten.zipWithIndex.map { case (u, i) =>
+          if (i == 0 || u.first.contains(0L)) { sheetIdx += 1; end = Some(0L) }
+          val first = u.first.orElse(end)
+          end = for (f <- first; n <- u.rows) yield f + n
+          (u, first, sheetIdx)
+        }
+        if (done.exists(_.isEmpty) || placed.exists(_._2.isEmpty)) Seq(Broken(p))
         else {
-          var sheetIdx = -1
-          var end = 0L
-          val placed = done.flatten.zipWithIndex.map { case ((u, counted), i) =>
-            if (i == 0 || u.first.contains(0L)) { sheetIdx += 1; end = 0L }
-            val first = u.first.getOrElse(end)
-            u.rows.orElse(counted).foreach(n => end = first + n)
-            (u, first, sheetIdx)
+          val widths = placed.groupBy(_._3).map { case (s, units) =>
+            val rows = units.map(_._1.rows)
+            s -> (if (rows.forall(_.contains(0L))) 0 else units.map(_._1.width).max)
           }
-          val widths = placed.groupMapReduce(_._3)(_._1.width)(math.max)
-          placed.map { case (u, first, s) => Piece(p, u, first, s)(widths(s)) }
+          val pieces = placed.map { case (u, first, s) => Piece(p, u, first.get, s)(widths(s)) }
+          pieces.zipWithIndex.collect {
+            case (w, i) if w.width > 0 || i == 0 || pieces(i - 1).sheetIdx != w.sheetIdx => w
+          }
         }
     }
 
-  /** Index every path in one batched executor job, resolve the units
-    * that need it in a second, and answer the scan's work, path by path. */
+  /** Index every path in one batched executor job, probe the units of the
+    * forms that probe in a second, one task per unit, and answer the
+    * scan's work, path by path. */
   def plan(spark: SparkSession, paths: Seq[String], batchBytes: Long, parts: Int): Seq[Work] = {
     if (paths.isEmpty) return Nil
+    val sc = spark.sparkContext
     val props = FsIO.captureProps(spark)
-    val indexed: Map[String, Option[Seq[SplitUnit]]] = batched(spark, paths, parts).map { p =>
-      FsIO.install(props)
-      p -> index(p, batchBytes)
-    }.collect().toMap
+    val indexed: Map[String, Option[Seq[SplitUnit]]] =
+      sc.parallelize(paths, math.max(1, math.min(paths.length, parts))).map { p =>
+        FsIO.install(props)
+        p -> index(p, batchBytes)
+      }.collect().toMap
     val todo = for {
       p <- paths
       us <- indexed(p).toSeq
-      (i, u, count) <- pending(p, us)
-    } yield (p, i, u, count)
-    val resolved: Map[(String, Int), Option[(SplitUnit, Option[Long])]] =
+      (i, u) <- pending(p, us)
+    } yield (p, i, u)
+    val probed: Map[(String, Int), Option[SplitUnit]] =
       if (todo.isEmpty) Map.empty
-      else batched(spark, todo, parts).map { case (p, i, u, count) =>
+      else sc.parallelize(todo, todo.length).map { case (p, i, u) =>
         FsIO.install(props)
-        (p, i) -> resolve(p, u, count)
+        (p, i) -> probe(p, u)
       }.collect().toMap
-    paths.flatMap(p => work(p, indexed(p), i => resolved.get((p, i))))
+    paths.flatMap(p => work(p, indexed(p), i => probed.get((p, i))))
   }
 
   /** One file's split road in process, with no Spark job: the rows the
     * split scan answers for it, unit after unit. */
   private[graft] def local(path: String, batchBytes: Long): Iterator[CellRow] = {
     val us = index(path, batchBytes)
-    val resolved = us.toSeq.flatMap(pending(path, _))
-      .map { case (i, u, count) => i -> resolve(path, u, count) }.toMap
-    work(path, us, resolved.get).iterator.flatMap(w => cells(w)._1)
+    val probed = us.toSeq.flatMap(pending(path, _)).map { case (i, u) => i -> probe(path, u) }.toMap
+    work(path, us, probed.get).iterator.flatMap(w => cells(w)._1)
   }
 
   /** The work as one DSv2 scan of [[CellRow]]s. */
@@ -161,9 +153,11 @@ object SplitScan {
 
   /** `AnyFile`'s road for a big file whose form splits: one answer per
     * sheet, in index order (same-named tables stay apart), each a scan of
-    * that sheet's units with positional all-string columns, the row count
-    * where the index knows it, and its units' encoding and separator. A
-    * whole-file index answers the in-process decode. */
+    * that sheet's units with all-string columns (named by its units'
+    * `columns`, positional otherwise), the row count where its units know
+    * it, and its units' encoding and separator. An empty sheet answers
+    * its named columns and no rows, Failed, as in process. A whole-file
+    * index answers the in-process decode. */
   def answers(spark: SparkSession, r: Route): Seq[ParserAnswer] = {
     val engine = r.format.engine
     plan(spark, Seq(r.path), BatchBytes, spark.sparkContext.defaultParallelism) match {
@@ -174,11 +168,12 @@ object SplitScan {
         sheets.map { case (_, sheet) =>
           val u = sheet.head.unit
           val width = sheet.head.width
-          if (width == 0) Formats.answer(spark, r.path, engine, Sheet(u.sheet, Nil))
+          if (width == 0) Formats.answer(spark, r.path, engine, Sheet(u.sheet, Nil, columns = u.columns))
           else {
             val counts = sheet.map(_.unit.rows)
+            val names = u.columns.getOrElse((0 until width).map(_.toString))
             ParserAnswer(
-              frame(spark, sheet).select((0 until width).map(i => col("cells")(i).as(i.toString)): _*),
+              frame(spark, sheet).select((0 until width).map(i => col("cells")(i).as(names(i))): _*),
               r.path, sheetName = u.sheet,
               encoding = u.encoding.getOrElse(ParserAnswer.EncodingDefault),
               separator = u.separator.getOrElse(ParserAnswer.SeparatorDefault),

@@ -37,17 +37,15 @@ final case class Sheet(
   *    big file of that form splits through: `BulkIngest.parseTreeAuto`
   *    past its `bigBytes`, and `AnyFile` past [[Formats.DriverDecodeBytes]],
   *    both through the one split scan (`graft.operators.SplitScan`).
-  *  - `nativeScan`: Spark reads the format itself, so the bulk road
-  *    catalogues it as `Native` instead of decoding it, except under zstd,
-  *    which Spark's scans cannot decode without Hadoop's native library.
   *  - `decode` is the pure sheet decode both roads share; no sheets means
   *    the file answers Failed. It runs inside executor tasks, and on the
   *    driver for every file of at most [[Formats.DriverDecodeBytes]].
-  *  - `driver` is the `AnyFile` road past [[Formats.DriverDecodeBytes]]
-  *    for a format the split scan does not serve: a Spark plan that keeps
-  *    a big file's cells off the driver (the ranged SQLite job, Spark's
-  *    native parquet and JSON scans). A form without one takes the split
-  *    scan where it has a splitter ([[Formats.road]]).
+  *  - `native` is Spark's own scan of the format (parquet, JSON, JSON
+  *    lines): the `AnyFile` road past [[Formats.DriverDecodeBytes]], where
+  *    a format without one takes the split scan if its form has a
+  *    splitter ([[Formats.road]]). The bulk road catalogues a native file
+  *    as one `Native` row instead of decoding it, except under zstd, which
+  *    Spark's scans cannot decode without Hadoop's native library.
   *  - `project` replaces the `AnyFile` projection of `decode` wherever
   *    the file answers in process: the native formats' typed frames
   *    (the schema and rows `spark.read` gives, read on the driver) and
@@ -58,9 +56,8 @@ final case class Format(
     sheet: String = "None",
     codecs: Set[String] = Set.empty,
     split: Map[String, Splitter[_ <: SplitUnit]] = Map.empty,
-    nativeScan: Boolean = false,
     decode: Route => Seq[Sheet] = _ => Nil,
-    driver: Option[(SparkSession, Route) => Seq[ParserAnswer]] = None,
+    native: Option[(SparkSession, Route) => Seq[ParserAnswer]] = None,
     project: Option[(SparkSession, Route) => Seq[ParserAnswer]] = None)
 
 /** A path routed to its format, with the compression suffix peeled off
@@ -92,10 +89,9 @@ final case class Route(path: String, format: Format, codec: String,
   * One size rule ([[answers]]): a file of at most [[DriverDecodeBytes]]
   * (a zip workbook also by its inflated entries) answers its decode in
   * process, as driver-local frames whose `collect()` runs no Spark job;
-  * past that size a form with a splitter takes the split scan (an
-  * executor index job, a job probing each sheet or text range, then one
-  * DSv2 scan whose partitions are the units), and a format with another
-  * Spark road takes that ([[road]]).
+  * past that size a native format takes Spark's own scan, and a form with
+  * a splitter the split scan (an executor index job, a job probing each
+  * unit, then one DSv2 scan whose partitions are the units) ([[road]]).
   *
   * | extension | engine | decode | road past 4 MiB (split unit) |
   * |---|---|---|---|
@@ -106,7 +102,7 @@ final case class Route(path: String, format: Format, codec: String,
   * | `.pdf` | ImportPDF | ISO 32000 tables | in-process positional concat, any size |
   * | `.html .htm` | ImportHTML | tables or main content | decode |
   * | `.docx` `.pptx` | ImportDocx / ImportPptx | tables or paragraphs | decode |
-  * | `.sqlite .sqlite3 .db` | ImportSqlite | one sheet per table | ranged leaf-page job |
+  * | `.sqlite .sqlite3 .db` | ImportSqlite | one sheet per table | split: leaf-page batches; `.zst` decode |
   * | `.warc` | ImportWARC | record catalog | `.warc.gz` split: gzip member batches; else decode |
   * | `.tar` | ImportTar | member catalog | `.tar` split: member batches; `.tar.zst` split: declared-size frame batches; else decode |
   * | `.parquet` `.json` `.jsonl .ndjson` | ImportParquet / ImportJSON / ImportJSONL | Native: typed frames read on the driver (a parquet file also by its row groups' inflated size) | Spark's scans (`.jsonl.zst` over frame-batch lines, the units its bulk split uses); a parquet directory always |
@@ -261,8 +257,8 @@ object Formats {
 
   val Sqlite: Format = Format("ImportSqlite", Seq(".sqlite", ".sqlite3", ".db"),
     codecs = Set(".zst", ".zstd"),
-    decode = SqliteImporter.sheets,
-    driver = Some(SqliteImporter.answers))
+    split = Map("" -> SqliteImporter.splitter),
+    decode = SqliteImporter.sheets)
 
   // gzip has no random access: the index inflates and discards once,
   // recording member ends; member boundaries are record boundaries (ISO
@@ -317,24 +313,22 @@ object Formats {
     })
 
   val Parquet: Format = Format("ImportParquet", Seq(".parquet"), "Parquet file content",
-    nativeScan = true,
-    driver = Some((spark, r) => Seq(ParserAnswer(spark.read.parquet(r.path), r.path,
+    native = Some((spark, r) => Seq(ParserAnswer(spark.read.parquet(r.path), r.path,
       sheetName = Parquet.sheet, engine = Parquet.engine))),
     project = Some(ParquetLocal.answers))
 
   val Json: Format = Format("ImportJSON", Seq(".json"), "JSON file content", Streams,
-    nativeScan = true,
     // zstd: the decoded document as one raw-JSON cell, behind the same
     // first-structural-character gate as the `AnyFile` road
     decode = r => JsonImporter.zstdDocument(r.path).toSeq
       .map(doc => Sheet(Json.sheet, Seq(IndexedSeq(new String(doc, StandardCharsets.UTF_8))))),
-    driver = Some(JsonImporter.answers),
+    native = Some(JsonImporter.answers),
     project = Some(JsonImporter.local))
 
   // zstd has no random access within a frame, but parallel compressors
   // cut many independent frames: the index walks block headers only, and
   // each frame batch owns the lines that start inside it. Lines carry no
-  // intrinsic number, so past the first batch the split road counts them.
+  // intrinsic number, so the probe counts each batch's.
   private val jsonlSplitter = Splitter[RangeUnit](
     (p, batchBytes) => {
       import graft.sources.zstd.ZstdFrames
@@ -343,12 +337,15 @@ object Formats {
       else batches.map(b => RangeUnit(JsonLines.sheet, 1, b.offset, b.length,
         if (b.offset == 0L) Some(0L) else None))
     },
-    (p, u) => OwnedLines.range(p, u.offset, u.length, zstd = true)(IndexedSeq(_)))
+    (p, u) => OwnedLines.range(p, u.offset, u.length, zstd = true)(IndexedSeq(_)),
+    probe = Some { (p, u) =>
+      val lines = OwnedLines.range(p, u.offset, u.length, zstd = true)(_ => ())
+      try u.copy(count = lines.size.toLong) finally lines.close()
+    })
   val JsonLines: Format = Format("ImportJSONL", Seq(".jsonl", ".ndjson"), "JSON lines content",
     Streams, split = Map(".zst" -> jsonlSplitter, ".zstd" -> jsonlSplitter),
-    nativeScan = true,
     decode = r => JsonImporter.zstdLines(r.path).toSeq.map(Sheet(JsonLines.sheet, _)),
-    driver = Some(JsonImporter.linesAnswers),
+    native = Some(JsonImporter.linesAnswers),
     project = Some(JsonImporter.localLines))
 
   // Python pickle encodes arbitrary Python object graphs, not portable to
@@ -403,10 +400,10 @@ object Formats {
   private def local(spark: SparkSession, r: Route): Seq[ParserAnswer] =
     r.format.project.fold(decoded(spark, r))(_(spark, r))
 
-  /** The `AnyFile` road past the size rule: the format's `driver` where
-    * it has one, else the split scan where the form has a splitter. */
+  /** The `AnyFile` road past the size rule: the format's `native` scan
+    * where it has one, else the split scan where the form has a splitter. */
   def road(r: Route): Option[(SparkSession, Route) => Seq[ParserAnswer]] =
-    r.format.driver.orElse(r.splitter.map(_ => graft.operators.SplitScan.answers(_, _)))
+    r.format.native.orElse(r.splitter.map(_ => graft.operators.SplitScan.answers(_, _)))
 
   /** The format's decode, answered in process. */
   def decoded(spark: SparkSession, r: Route): Seq[ParserAnswer] =

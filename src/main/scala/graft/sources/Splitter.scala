@@ -14,6 +14,9 @@ trait SplitUnit extends Serializable {
     * sheet's previous unit ends, which the split road counts. A unit that
     * starts at row 0 starts a sheet of its own. */
   def first: Option[Long] = Some(0L)
+  /** Its sheet's column names, where the format declares them (SQLite);
+    * positional otherwise. */
+  def columns: Option[IndexedSeq[String]] = None
   /** The encoding and separator its sheet's answer carries (text). */
   def encoding: Option[String] = None
   def separator: Option[String] = None
@@ -31,7 +34,8 @@ final case class SheetUnit(sheet: String, part: String, width: Int = 0, count: L
 
 /** A byte range of whole members or frames: `[offset, offset+length)` on
   * disk. A codec form that decodes the range drops `skip` decoded bytes
-  * and walks the next `span`. */
+  * and walks the next `span`. `count`, where the probe sets it, is its
+  * row count. */
 final case class RangeUnit(
     sheet: String,
     width: Int,
@@ -39,7 +43,10 @@ final case class RangeUnit(
     length: Long,
     override val first: Option[Long],
     skip: Long = 0L,
-    span: Long = -1L) extends SplitUnit
+    span: Long = -1L,
+    count: Long = -1L) extends SplitUnit {
+  override def rows: Option[Long] = if (count < 0) None else Some(count)
+}
 
 /** A unit of a text file: the `\n` lines that `[offset, offset+length)`
   * on disk owns (`OwnedLines`; for a whole-stream codec, the whole file),
@@ -62,9 +69,12 @@ final case class TextUnit(sheet: String, offset: Long, length: Long, sep: String
   * row; one that lists no units sends the whole file to the file-grain
   * decode. `probe`, where given, completes one listed unit's shape (a
   * workbook sheet's width and row count, a text unit's widest row and
-  * row count) in a task of its own, so the sheets of one workbook and
-  * the ranges of one text file probe in parallel; one that throws fails
-  * the file like its index. `rows` streams one unit's rows. `zip`: the
+  * row count, a unit's row count) in a task of its own, so the sheets of
+  * one workbook and the ranges of one text file probe in parallel; one
+  * that throws fails the file like its index. An open unit (`first`
+  * None) starts where the unit before it ends, so a splitter that lists
+  * open units sets `rows` in its probe; a start still unknown after the
+  * probes fails the file too. `rows` streams one unit's rows. `zip`: the
   * file is a zip container, so `AnyFile`'s size rule also sums its
   * entries' inflated sizes. */
 final case class Splitter[U <: SplitUnit](

@@ -1,15 +1,12 @@
 package graft.sources
 
-import graft.model.ParserAnswer
 import graft.sources.sqlite.SqliteParser
 import graft.sources.sqlite.SqliteParser.{Cell, Header, NullCell, TableMeta}
-import org.apache.spark.sql.{Row, SparkSession}
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** SQLite database importer — `.sqlite`/`.sqlite3`/`.db` (beyond the
   * reference's extension table, like `.html`/`.docx`: single-file
   * databases are a common exchange format and the file layout is a public
-  * spec). One [[ParserAnswer]] per user table (the multi-sheet Excel
+  * spec). One `ParserAnswer` per user table (the multi-sheet Excel
   * shape), sheetName = table name, REAL column names from the schema,
   * every value rendered to its text form ([[SqliteParser.render]]) so the
   * frame discipline stays all-string like the other importers. A column
@@ -21,13 +18,17 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * SQLite database at all yields the single Failed answer
   * (`main.py:140-144` contract).
   *
-  * Scale road, xlsx-style: the driver reads ONLY the header and the
-  * schema/interior pages (a few ranged reads) to enumerate each table's
-  * leaf pages; for databases past [[Formats.DriverDecodeBytes]] the leaf
-  * decode runs as a Spark job, a task per leaf-page batch, each page
-  * fetched with its own ranged read — the database file is never copied,
-  * localized, or held whole in any heap. Smaller files answer their
-  * decode in process (the registry's one size rule).
+  * Scale road: a database past [[Formats.DriverDecodeBytes]] (and a big
+  * file of the bulk road) splits through [[splitter]] into the one split
+  * scan (`graft.operators.SplitScan`). A one-task index reads the header,
+  * the schema and each table's b-tree pages, and lists each table's leaf
+  * pages in batches; a probe per batch sums its pages' cell counts; the
+  * scan decodes each batch in a task of its own, each page fetched with
+  * its own ranged read, so the database file is never copied, localized,
+  * or held whole in any heap. Smaller files answer their decode in
+  * process (the registry's one size rule). A `.sqlite.zst` has no random
+  * access, so no splitter: it decodes its capped image in process at any
+  * size.
   */
 object SqliteImporter {
 
@@ -54,38 +55,41 @@ object SqliteImporter {
       catch { case _: Exception => Sheet(t.name, Nil) })
   }
 
-  /** The road for databases past [[Formats.DriverDecodeBytes]]: each
-    * table's leaf decode runs as a Spark job — a task per leaf-page batch,
-    * each page fetched with its own ranged read; the driver reads only the
-    * header and the schema/interior pages, and the database file is never
-    * copied, localized, or held whole in any heap. A zstd image has no
-    * ranged road: it decodes from its capped image. */
-  def answers(spark: SparkSession, r: Route): Seq[ParserAnswer] = {
-    val engine = r.format.engine
-    if (r.zstd) return sheets(r).map(Formats.answer(spark, r.path, engine, _))
-    val src = SqliteParser.PathSource(r.path)
-    val h = SqliteParser.header(src).getOrElse(return Nil)
-    SqliteParser.tables(src, h).map { t =>
-      try leaves(src, h, t) match {
-        case Some(pages) if pages.nonEmpty =>
-          val schema = StructType(dedupNames(t.cols).map(StructField(_, StringType, nullable = true)))
-          val path = r.path
-          val fsProps = FsIO.captureProps(spark)
-          val rdd = spark.sparkContext
-            .parallelize(pages, math.min(pages.length, 64))
-            .mapPartitions { it =>
-              FsIO.install(fsProps) // executor-side hdfs:/s3a: access
-              it.flatMap(pg => SqliteParser.leafRows(path, h, pg)
-                .map { case (rid, cs) => Row.fromSeq(cells(t, rid, cs)) })
-            }
-          ParserAnswer(spark.createDataFrame(rdd, schema), r.path,
-            sheetName = t.name, engine = engine, knownRowCount = None)
-        case pages => Formats.answer(spark, r.path, engine, sheet(src, h, t, pages))
-      } catch {
-        case _: Exception => Formats.answer(spark, r.path, engine, Sheet(t.name, Nil))
-      }
-    }
+  /** A batch of one table's leaf pages. A table's first batch starts at
+    * row 0 and each later one where the batch before it ends, so the
+    * probe fills in every batch's row count. No pages = an unreadable
+    * table: width 0, Failed under its name. */
+  final case class PageUnit(t: TableMeta, h: Header, pages: Seq[Long],
+      override val first: Option[Long], count: Long = -1L) extends SplitUnit {
+    def sheet: String = t.name
+    def width: Int = if (pages.isEmpty) 0 else t.cols.length
+    override def rows: Option[Long] = if (count < 0) None else Some(count)
+    override def columns: Option[IndexedSeq[String]] =
+      if (pages.isEmpty) None else Some(dedupNames(t.cols))
   }
+
+  /** The big-database road: each table's leaf pages in batches of
+    * `batchBytes / pageSize` pages, at least one, and a width-0 unit per
+    * unreadable table; a file with no header lists none, so its
+    * whole-file decode answers Failed. The probe sums the cell counts in
+    * its pages' headers, decoding no record and following no overflow
+    * chain; the rows are [[sheets]]' rows. */
+  val splitter: Splitter[PageUnit] = Splitter[PageUnit](
+    (p, batchBytes) => {
+      val src = SqliteParser.PathSource(p)
+      SqliteParser.header(src).toSeq.flatMap { h =>
+        val per = math.max(1L, math.min(batchBytes / h.pageSize, Int.MaxValue)).toInt
+        SqliteParser.tables(src, h).flatMap { t =>
+          val pages = try leaves(src, h, t).getOrElse(Nil) catch { case _: Exception => Nil }
+          if (pages.isEmpty) Seq(PageUnit(t, h, Nil, Some(0L)))
+          else pages.grouped(per).zipWithIndex
+            .map { case (ps, i) => PageUnit(t, h, ps, if (i == 0) Some(0L) else None) }
+        }
+      }
+    },
+    (p, u) => u.pages.iterator.flatMap(pg =>
+      SqliteParser.leafRows(p, u.h, pg).map { case (rid, cs) => cells(u.t, rid, cs) }),
+    probe = Some((p, u) => u.copy(count = u.pages.map(SqliteParser.leafCells(p, u.h, _).toLong).sum)))
 
   /** The table's leaf pages; None = unreadable (WITHOUT ROWID, virtual,
     * corrupt tree). */

@@ -41,9 +41,11 @@ object TextImporter {
   /** Fixed multi-char delimiter for `.ant` files (`main.py:153-154`). */
   val AntDelimiter = "~~@~~"
 
-  private val TabRuns = Pattern.compile("^\t+|\t+$")
-  private val DoubleQuoteRuns = Pattern.compile("^\"+|\"+$")
-  private val SingleQuoteRuns = Pattern.compile("^'+|'+$")
+  // `\z`, not `$`: Java's `$` also matches before a final line
+  // terminator, so `"y"\r` would lose its quote where Python keeps it
+  private val TabRuns = Pattern.compile("^\t+|\t+\\z")
+  private val DoubleQuoteRuns = Pattern.compile("^\"+|\"+\\z")
+  private val SingleQuoteRuns = Pattern.compile("^'+|'+\\z")
 
   /** `s` without the runs `runs` matches; a string without `c` has none. */
   private def strip(s: String, c: Char, runs: Pattern): String =

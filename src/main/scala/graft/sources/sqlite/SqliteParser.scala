@@ -84,7 +84,6 @@ object SqliteParser {
 
   // ------------------------------------------------------------- header
 
-  def header(path: String): Option[Header] = header(PathSource(path))
   def header(src: Source): Option[Header] = {
     val fileLen = try src.len catch { case _: Exception => return None }
     if (fileLen < 512) return None
@@ -128,8 +127,6 @@ object SqliteParser {
 
   /** Leaf pages of the table b-tree rooted at `root`, left-to-right.
     * None if the root is not a table b-tree (WITHOUT ROWID / index). */
-  def leafPages(path: String, h: Header, root: Long): Option[Seq[Long]] =
-    leafPages(PathSource(path), h, root)
   def leafPages(src: Source, h: Header, root: Long): Option[Seq[Long]] = {
     val out = mutable.ArrayBuffer.empty[Long]
     val stack = mutable.Stack(root)
@@ -156,6 +153,16 @@ object SqliteParser {
       }
     }
     Some(out.toSeq)
+  }
+
+  /** The cell count of one table leaf page, from its b-tree page header
+    * alone: its row count, with no record decoded. */
+  def leafCells(path: String, h: Header, page: Long): Int = {
+    require(page >= 1 && page <= h.nPages, s"page $page out of range")
+    val off = if (page == 1L) 100 else 0
+    val hd = FsIO.readRange(path, (page - 1) * h.pageSize.toLong + off, 8)
+    require((hd(0) & 0xff) == 0x0d, s"page $page is not a table leaf")
+    u16(hd, 3)
   }
 
   /** Decode every row on one table leaf page: (rowid, column values as
@@ -272,8 +279,6 @@ object SqliteParser {
 
   // ----------------------------------------------------- sqlite_master
 
-  def masterObjects(path: String, h: Header): Seq[Master] =
-    masterObjects(PathSource(path), h)
   def masterObjects(src: Source, h: Header): Seq[Master] = {
     val leaves = leafPages(src, h, 1L)
       .getOrElse(throw new IllegalStateException("page 1 is not a table tree"))
@@ -292,8 +297,6 @@ object SqliteParser {
     }
   }
 
-  def tables(path: String, h: Header): Seq[TableMeta] =
-    tables(PathSource(path), h)
   def tables(src: Source, h: Header): Seq[TableMeta] =
     masterObjects(src, h)
       .filter(m => m.objType == "table" && !m.name.startsWith("sqlite_"))

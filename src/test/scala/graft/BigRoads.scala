@@ -10,32 +10,36 @@ import org.apache.spark.sql.functions.{col, sum, xxhash64}
 
 /** The big-file road probe: one ~130 MB delimited text file in five forms
   * (`.csv`, `.csv.gz`, `.csv.bz2`, and single- and multi-frame
-  * `.csv.zst`), each timed through `AnyFile.parse` + `count` and through
-  * `BulkIngest.parseTreeAuto` + `count` at its default `bigBytes`. Prints
-  * one JSON line per file and road: wall time, Spark jobs, tasks per
-  * stage, decoded MB/s, rows, an order-free row hash, the answer's schema,
-  * encoding and separator, and the JVM's peak RSS so far.
+  * `.csv.zst`), and one ~100 MB SQLite database, each timed through
+  * `AnyFile.parse` + `count` and through `BulkIngest.parseTreeAuto` +
+  * `count` at its default `bigBytes`. Prints one JSON line per file and
+  * road: wall time, Spark jobs, tasks per stage, decoded MB/s, rows, an
+  * order-free row hash, the answer's schema, encoding and separator, and
+  * the JVM's peak RSS so far.
   *
   * usage: sbt "Test/runMain graft.BigRoads <dir> [form] [road]"
   *   <dir>   where the files are written, once; later runs reuse them
-  *   [form]  csv, csv_gz, csv_bz2, csv_zst or csv_zst_frames (default all)
+  *   [form]  csv, csv_gz, csv_bz2, csv_zst, csv_zst_frames or sqlite
+  *           (default all)
   *   [road]  anyfile or bulk (default both)
   * Run one form and road per JVM to read the peak RSS as that road's.
-  * It calls only `AnyFile.parse`, `BulkIngest.parseTreeAuto` and the
-  * `IngestFixtures` writers, so it runs on older trees as well. */
+  * It calls only `AnyFile.parse`, `BulkIngest.parseTreeAuto`, the
+  * `IngestFixtures` writers and `SqliteWriter`, so it runs on older trees
+  * as well. */
 object BigRoads {
 
   private val DecodedBytes = 130L << 20
 
-  /** The forms: directory name, file name, and the encoder over the
-    * decoded bytes. */
-  private val Forms: Seq[(String, String, Array[Byte] => Array[Byte])] = Seq(
-    ("csv", "big.csv", identity),
-    ("csv_gz", "big.csv.gz", IngestFixtures.gz),
-    ("csv_bz2", "big.csv.bz2", IngestFixtures.bz2),
-    ("csv_zst", "big.csv.zst", IngestFixtures.zst),
+  /** The forms: directory name, file name, and the file's bytes from the
+    * text's decoded bytes. */
+  private val Forms: Seq[(String, String, (=> Array[Byte]) => Array[Byte])] = Seq(
+    ("csv", "big.csv", b => b),
+    ("csv_gz", "big.csv.gz", b => IngestFixtures.gz(b)),
+    ("csv_bz2", "big.csv.bz2", b => IngestFixtures.bz2(b)),
+    ("csv_zst", "big.csv.zst", b => IngestFixtures.zst(b)),
     // 1 MiB frames, as a parallel compressor cuts them
-    ("csv_zst_frames", "big.csv.zst", b => b.grouped(1 << 20).map(IngestFixtures.zst).reduce(_ ++ _)))
+    ("csv_zst_frames", "big.csv.zst", b => b.grouped(1 << 20).map(IngestFixtures.zst).reduce(_ ++ _)),
+    ("sqlite", "big.sqlite", _ => database()))
 
   /** Seeded ragged rows: 2 to 9 `;`-separated cells, some quoted, some
     * tab-padded, every 50th line CRLF and every 500th empty (never the
@@ -57,9 +61,34 @@ object BigRoads {
     out.toByteArray
   }
 
-  private def write(dir: Path): Unit = {
+  /** Seeded rows of one table on 64 KiB pages, ~100 MB: an INTEGER
+    * PRIMARY KEY alias, a name, an int, a real and a short note, and
+    * every 97th row a 40-120 KB body; those past a page spill to
+    * overflow chains (644 of the file's 1,798 pages). */
+  private def database(): Array[Byte] = {
+    import graft.sources.sqlite.SqliteParser.{Cell, IntCell, NullCell, RealCell, TextCell}
+    val rnd = new scala.util.Random(14)
+    val rows = Seq.newBuilder[(Long, Seq[Cell])]
+    var bytes = 0L
+    var id = 0L
+    while (bytes < (100L << 20)) {
+      id += 1
+      val note = "n" * (100 + rnd.nextInt(400))
+      val body = if (id % 97 == 0) TextCell("b" * (40000 + rnd.nextInt(80000))) else NullCell
+      rows += id -> Seq(NullCell, TextCell(s"name ${rnd.nextInt(100000)}"), IntCell(rnd.nextInt(1000)),
+        RealCell(rnd.nextInt(100000) / 8.0), TextCell(note), body)
+      bytes += 40 + note.length + (body match { case TextCell(b) => b.length; case _ => 0 })
+    }
+    graft.sources.sqlite.SqliteWriter.build("big", Seq("id", "name", "qty", "price", "note", "body"),
+      0, rows.result(), pageSize = 65536)
+  }
+
+  /** Writes the forms not yet written, and the plain `.csv` beside any
+    * text form: its size is the text forms' decoded MB. */
+  private def write(dir: Path, forms: Seq[(String, String, (=> Array[Byte]) => Array[Byte])]): Unit = {
     lazy val bytes = text()
-    Forms.foreach { case (form, name, encode) =>
+    val todo = Forms.filter(f => f._1 == "csv" && forms.exists(_._1 != "sqlite")) ++ forms
+    todo.distinct.foreach { case (form, name, encode) =>
       val p = dir.resolve(form).resolve(name)
       if (!Files.exists(p)) {
         Files.createDirectories(p.getParent)
@@ -120,8 +149,7 @@ object BigRoads {
     val dir = Paths.get(args(0)).toAbsolutePath
     val forms = args.lift(1).fold(Forms)(f => Forms.filter(_._1 == f))
     val roads = args.lift(2).fold(Seq("anyfile", "bulk"))(Seq(_))
-    write(dir)
-    val mb = Files.size(dir.resolve("csv").resolve("big.csv")) / 1e6
+    write(dir, forms)
     val spark = SparkSession.builder().master("local[4]").appName("big-roads")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
@@ -130,6 +158,7 @@ object BigRoads {
     spark.sparkContext.setLogLevel("ERROR")
     for ((form, name, _) <- forms; road <- roads) {
       val path = dir.resolve(form).resolve(name).toString
+      val mb = Files.size(dir.resolve(if (form == "sqlite") "sqlite/big.sqlite" else "csv/big.csv")) / 1e6
       var wall = 0.0
       val ((rows, frames, meta), jobs, tasks) = traced(spark) {
         val t0 = System.nanoTime()

@@ -185,9 +185,8 @@ class DriverDecodeSpec extends SparkSpec {
   }
 
   /** One file's answers, reduced to what both roads must agree on. The
-    * ranged SQLite road and the member-batch splits leave their row count
-    * to a job (`knownRowCount` None), so the count compared is the known
-    * one, else a counted one. */
+    * member-batch splits leave their row count to a job (`knownRowCount`
+    * None), so the count compared is the known one, else a counted one. */
   private def shape(as: Seq[ParserAnswer]) = as.map { a =>
     (a.sheetName, a.engine, a.encoding, a.separator, a.parseInfo,
       a.knownRowCount.getOrElse(a.data.count()),
@@ -198,7 +197,7 @@ class DriverDecodeSpec extends SparkSpec {
   test("in-process answers equal each format's Spark road on the parity tree") {
     val tree: Path = IngestFixtures.parityTree(tmpDir("road_parity"))
     val routed = Files.list(tree).iterator().asScala.map(_.toString).toSeq.sorted
-      .flatMap(Formats.route).filter(r => Formats.road(r).isDefined && !r.format.nativeScan)
+      .flatMap(Formats.route).filter(r => Formats.road(r).isDefined && r.format.native.isEmpty)
     assert(routed.map(_.format.engine).distinct.sorted ==
       Seq("ImportExcel", "ImportSqlite", "ImportTar", "ImportText", "ImportWARC", "ImportXML"))
     assert(routed.length >= 20, routed.length)
@@ -210,7 +209,7 @@ class DriverDecodeSpec extends SparkSpec {
       val sparkRoad =
         if (spark0.isEmpty) Seq(ParserAnswer.failed(spark, path, format.engine)) else spark0
       assert(shape(inProcess) == shape(sparkRoad), path)
-      if (!Set(Formats.Sqlite, Formats.Warc, Formats.Tar)(format))
+      if (!Set(Formats.Warc, Formats.Tar)(format))
         assert(inProcess.map(_.knownRowCount) == sparkRoad.map(_.knownRowCount), path)
     }
   }

@@ -57,7 +57,7 @@ class NativeScanSpec extends SparkSpec {
     val tree = IngestFixtures.parityTree(tmpDir("native_parity"))
     put(tree, "t.parquet", IngestFixtures.parquet(floatsAndDoubles))
     val native = Files.list(tree).iterator().asScala.map(_.toString).toSeq.sorted
-      .flatMap(Formats.route).filter(_.format.nativeScan)
+      .flatMap(Formats.route).filter(_.format.native.isDefined)
     assert(native.map(r => FsIO.fileName(r.path)) == Seq("bz.ndjson.bz2", "doc.json", "gz.json.gz",
       "gz.jsonl.gz", "lines.jsonl", "lines.ndjson", "t.parquet", "zst.json.zst",
       "zst.jsonl.zst", "zst.ndjson.zstd"))

@@ -45,6 +45,35 @@ class SplitSpec extends SparkSpec {
   private def framed(bytes: Array[Byte]): Array[Byte] =
     bytes.grouped(2048).map(c => com.github.luben.zstd.Zstd.compress(c)).reduce(_ ++ _)
 
+  /** A 512-byte-page database of four tables: `items`, an INTEGER PRIMARY
+    * KEY alias over three leaf pages, one row with an overflow payload;
+    * `empty`, no rows; `wor`, WITHOUT ROWID; `tags`, one row. */
+  private def sqliteDb(path: Path): Array[Byte] = {
+    import SqliteFixture._
+    val b = new Builder()
+    b.allocPage()
+    val leaves = Seq.fill(3)(b.allocPage())
+    val Seq(itemsRoot, emptyRoot, worRoot, tagsRoot) = Seq.fill(4)(b.allocPage())
+    b.writeMaster(Seq(
+      ("table", "items", itemsRoot.toLong, "CREATE TABLE items(id INTEGER PRIMARY KEY, name TEXT, body TEXT)"),
+      ("table", "empty", emptyRoot.toLong, "CREATE TABLE empty(x TEXT, y INT)"),
+      ("table", "wor", worRoot.toLong, "CREATE TABLE wor(k TEXT PRIMARY KEY, v TEXT) WITHOUT ROWID"),
+      ("table", "tags", tagsRoot.toLong, "CREATE TABLE tags(tag TEXT)")))
+    leaves.zipWithIndex.foreach { case (leaf, l) =>
+      b.writeTableLeaf(leaf, (1 to 4).map { j =>
+        val id = l * 4L + j
+        val body = if (id == 6) "overflow " * 200 else s"body $id"
+        b.leafCell(id, record(Seq(VNull, VText(s"name $id"), VText(body)), b.cs))
+      })
+    }
+    b.writeTableInterior(itemsRoot, Seq(leaves(0) -> 4L, leaves(1) -> 8L), rightmost = leaves(2))
+    b.writeTableLeaf(emptyRoot, Nil)
+    b.writeIndexLeaf(worRoot)
+    b.writeTableLeaf(tagsRoot, Seq(b.leafCell(1L, record(Seq(VText("t")), b.cs))))
+    b.finish(path.toString)
+    Files.readAllBytes(path)
+  }
+
   /** Nodes of the executed plan, AQE's subtree included. */
   private def nodes(df: DataFrame) =
     new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) { case n => n }
@@ -178,7 +207,7 @@ class SplitSpec extends SparkSpec {
       .map(t => zst(t.getBytes("UTF-8"))).reduce(_ ++ _)
     val files = Seq("a.tar" -> tar(9), "b.tar.zst" -> framed(tar(9)), "c.warc.gz" -> warcGz(5),
       "d.jsonl.zst" -> lines, "e.xlsx" -> xlsx(Seq("S1" -> Seq(Seq("a", "b")), "S2" -> Seq(Seq("c")))),
-      "f.csv" -> csv, "g.csv.zst" -> csvFrames)
+      "f.csv" -> csv, "g.csv.zst" -> csvFrames, "i.sqlite" -> sqliteDb(tmpDir("split_db").resolve("i.db")))
     for ((f, bytes) <- files) {
       val p = dir.resolve(f).toString
       Files.write(dir.resolve(f), bytes)
@@ -201,6 +230,29 @@ class SplitSpec extends SparkSpec {
     assert(key(auto) == key(BulkIngest.parseTree(spark, dir.toString)))
     val scans = nodes(auto).collect { case b: BatchScanExec => b.inputPartitions.length }
     assert(scans.length == 1 && scans.head > 1, scans)
+  }
+
+  test("parseTreeAuto splits a database into leaf-page batches, the rows parseTree answers") {
+    val dir = tmpDir("split_sqlite")
+    val p = dir.resolve("multi.sqlite")
+    sqliteDb(p)
+    val auto = BulkIngest.parseTreeAuto(spark, dir.toString, bigBytes = 1L, splitBatchBytes = 512L)
+    val got = key(auto)
+    assert(got == key(BulkIngest.parseTree(spark, dir.toString)))
+    assert(got.map(t => (t._3, t._5)).distinct ==
+      Seq(("items", "OK"), ("empty", "Failed"), ("wor", "Failed"), ("tags", "OK")))
+    val scans = nodes(auto).collect { case b: BatchScanExec => b.inputPartitions.length }
+    assert(scans.length == 1 && scans.head == 6, scans)
+    // AnyFile's split road: named columns, known row counts, and the
+    // empty table's named columns with no rows, as in process
+    val r = Formats.route(p.toString).get
+    def shape(as: Seq[ParserAnswer]) = as.map(a => (a.sheetName, a.parseInfo, a.knownRowCount,
+      a.data.schema.fieldNames.toSeq, a.data.collect().map(_.toSeq).toSeq))
+    val split = SplitScan.answers(spark, r)
+    assert(shape(split) == shape(Formats.decoded(spark, r)))
+    assert(split.map(a => (a.sheetName, a.knownRowCount, a.data.columns.toSeq)) == Seq(
+      ("items", Some(12L), Seq("id", "name", "body")), ("empty", Some(0L), Seq("x", "y")),
+      ("wor", Some(0L), Nil), ("tags", Some(1L), Seq("tag"))))
   }
 
   test("a PDF nested 200,000 deep answers Failed on both roads, and the JVM lives on") {

@@ -66,6 +66,16 @@ class TextImporterSpec extends SparkSpec {
     assert(a.data.collect().toSeq == Seq(Row("a", "b"), Row("c", "d")))
   }
 
+  test("a CR ends no run: CRLF lines keep the quote or tab before their CR") {
+    // Python strips runs at the very end of the string only: `"y"\r` keeps
+    // its closing quote, and `b\t\r` its tab
+    val p = writeFile(tmpDir("crlf"), "crlf.txt", "x;\"y\"\r\na;b\t\r\nc;'z'\r\n")
+    val a = graft.sources.Formats.answers(
+      spark, graft.sources.Route(p, graft.sources.Formats.text(Seq(".txt"), Some(";")), "")).head
+    assert(a.data.collect().toSeq ==
+      Seq(Row("x", "y\"\r"), Row("a", "b\t\r"), Row("c", "z'\r")))
+  }
+
   test("empty file → single Failed answer") {
     val dir = tmpDir("e")
     val p = writeFile(dir, "empty.txt", "")
